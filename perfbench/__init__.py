@@ -1,0 +1,1 @@
+"""Engine benchmark (see run.py and README.md)."""
