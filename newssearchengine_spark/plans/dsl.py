@@ -1227,18 +1227,16 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 egroups = [sorted(si.expand_fuzzy(
                     t, max_edits=_edits(t), prefix_len=pl,
                     max_expansions=mx)) for t in toks]
-                empty = si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
                 if op == "and":
                     if any(not g for g in egroups) or not egroups:
                         # a required token with no expansion matches
                         # nothing (the ES must-clause contract)
-                        return empty
+                        return si._empty()
                     out = si.search_bool(must=egroups, k=size)
                 else:
                     union = sorted({t for g in egroups for t in g})
                     if not union:
-                        return empty
+                        return si._empty()
                     out = si.search(union, size, mode=mode)
                 if boost != 1.0:
                     out = out.select(
@@ -1879,10 +1877,8 @@ def es_search(indexes, body: dict, size: int = 10, *,
             raise ValueError(
                 "terms_set needs exactly one of "
                 "minimum_should_match_field / minimum_should_match")
-        empty = si.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double")
         if not toks:
-            return empty
+            return si._empty()
         agg = (si._term_scores(toks)
                .groupBy("doc_id")
                .agg(F.countDistinct("term").alias("_n"),
@@ -1900,7 +1896,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
         else:
             m = int(msm_const)
             if m > len(toks):
-                return empty
+                return si._empty()
             agg = agg.filter(F.col("_n") >= F.lit(max(m, 1)))
         hits = si._exclude_dead(agg)
         top = hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)

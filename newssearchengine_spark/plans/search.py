@@ -41,6 +41,7 @@ from ..config import AnalyzerConfig
 from .index_build import term_bucket
 
 TOPK_SCHEMA = "doc_id bigint, score double"
+RANKED_SCHEMA = "rank bigint, doc_id bigint, score double"
 
 # Phrase-candidate rows are bounded by the min posting df of the phrase's
 # required terms (a doc containing the phrase contains every term) — known
@@ -63,11 +64,14 @@ BOOL_DRIVER_CAP = 1 << 17
 MANY_DRIVER_CAP = 1 << 21
 #: driver regime for plain taat disjunctions: when the PROVEN posting
 #: volume (sum of query-term dfs, known from the dictionary before any
-#: job) fits the cap, gather the pruned segment rows with ONE JVM-only
-#: job (no shuffle, no Python-worker stage) and run the SAME per-part
-#: scorer function on the driver. 2^19 postings decode to ~24 B/posting
-#: of int64 numpy (docs+tfs+dls) ≈ 13 MB transient — fixed-width and
-#: bounded (the element-based guard style VERDICT r4 asked for).
+#: job) fits the cap, read the pruned segment rows with a driver-local
+#: pyarrow scan of the terms' bucket directories (no Spark job) and run
+#: the SAME per-part scorer function on the driver. 2^19 postings decode
+#: to ~24 B/posting of int64 numpy (docs+tfs+dls) ≈ 13 MB transient —
+#: fixed-width and bounded (the element-based guard style VERDICT r4
+#: asked for). The calibration below was measured when the driver regime
+#: still gathered its rows with one Spark job (~85 ms of fixed cost per
+#: query that the pyarrow read removed); the cap has not been retuned.
 #: Cap calibration, measured on the 800k-doc index (warm, local[8]):
 #: the distributed single-query job is overhead-bound at ~1.15 s
 #: regardless of size (~50 small tasks of scheduling + Arrow worker
@@ -379,17 +383,29 @@ def _make_groups_taat(groups: list[list[list[str]]],
     return score_group
 
 
+def _local_frame(spark: SparkSession, pdf: pd.DataFrame,
+                 schema=RANKED_SCHEMA) -> DataFrame:
+    """A driver-built result as a DataFrame whose collect() runs no Spark
+    job: the rows go to the JVM as an Arrow table and become a local
+    relation. A frame built from a Python list (or from an EMPTY pandas
+    frame, which PySpark converts to a list) is a parallelized Python RDD
+    instead, and every collect() of it launches a Python-worker job."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pdf, preserve_index=False), schema)
+
+
 def _eager_topk(rel: DataFrame, out: DataFrame,
-                schema: str = "rank bigint, doc_id bigint, score double"
-                ) -> DataFrame:
+                schema: str = RANKED_SCHEMA) -> DataFrame:
     """Materialize a (tiny, <= k rows) top-k result and release the
     persisted intermediate `rel` — phrase/bool search persist a candidate
     relation shared by a stats action and the scoring plan, and a lazy
     return would leak that cache in long-lived sessions (e.g. the
     incremental-index stream that queries every batch)."""
-    rows = out.collect()
+    pdf = out.toPandas()
     rel.unpersist()
-    return out.sparkSession.createDataFrame(rows, schema)
+    return _local_frame(out.sparkSession, pdf, schema)
 
 
 class SegmentIndex:
@@ -506,24 +522,32 @@ class SegmentIndex:
         return {t: self._df_cache[t] for t in terms}
 
     def _term_dfs_local(self, terms: list[str]) -> dict[str, int]:
+        pdf = self._read_buckets("term_stats", terms, ["term", "df"])
+        return {t: int(d) for t, d in zip(pdf["term"], pdf["df"])}
+
+    def _read_buckets(self, table: str, terms: list[str],
+                      columns: list[str]) -> pd.DataFrame:
+        """Driver-local pyarrow read of the rows of `table` (term_stats or
+        segments) whose term is in `terms`: only the terms' bucket=<b>
+        directories are opened, and the term predicate is pushed to
+        row groups (files are term-sorted). No Spark job; repeat reads
+        are served from the OS page cache."""
+        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         n_buckets = int(self.stats["n_buckets"])
-        buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-        out: dict[str, int] = {}
-        root = os.path.join(self.index_dir, "term_stats")
-        for bkt in buckets:
+        root = os.path.join(self.index_dir, table)
+        parts = []
+        for bkt in sorted({term_bucket(t, n_buckets) for t in terms}):
             bdir = os.path.join(root, f"bucket={bkt}")
-            if not os.path.isdir(bdir):
-                continue
-            tbl = pq.read_table(
-                bdir, columns=["term", "df"],
-                filters=pc.field("term").isin(terms),
-            )
-            for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
-                out[t] = int(d)
-        return out
+            if os.path.isdir(bdir):
+                parts.append(pq.read_table(
+                    bdir, columns=columns,
+                    filters=pc.field("term").isin(terms)))
+        if not parts:
+            return pd.DataFrame(columns=columns)
+        return pa.concat_tables(parts).to_pandas()
 
     def warm(self, positions: bool = False) -> "SegmentIndex":
         """Materialize the cached segment + term-stats tables (one pass) so
@@ -614,15 +638,29 @@ class SegmentIndex:
         carrying a dense 0-based `rank` (optionally per query_id). At
         most T dead docs can precede the k-th live hit, so top-(k+T)
         over-fetch + drop + re-rank is provably the live top-k. T=0 (the
-        only state every pre-delete caller sees) short-circuits."""
-        T = self.n_deleted()
+        only state every pre-delete caller sees) short-circuits.
+
+        With the dead ids on the driver and k+T <= DELETED_ISIN_CAP, the
+        over-fetched rows are collected, the dead ones dropped against
+        the sorted id array and the rest re-ranked in pandas — a driver
+        regime result stays job-free. Otherwise a Spark window re-ranks
+        the excluded relation."""
+        T, ids, _ = self._tombstones()
         if not T:
             return run(k)
         out = run(k + T)
         cols = out.columns
+        keys = ["query_id"] if "query_id" in cols else []
+        if ids is not None and k + T <= DELETED_ISIN_CAP:
+            pdf = pd.DataFrame(out.collect(), columns=cols)
+            pdf = pdf[~np.isin(pdf["doc_id"].to_numpy(np.int64), ids)]
+            pdf = pdf.sort_values(keys + ["rank"], kind="mergesort")
+            pdf["rank"] = (pdf.groupby(keys).cumcount() if keys
+                           else np.arange(len(pdf)))
+            return _local_frame(self.spark, pdf[pdf["rank"] < k], out.schema)
         out = self._exclude_dead(out)
-        w = (Window.partitionBy("query_id") if "query_id" in cols
-             else Window).orderBy(F.asc("rank"))
+        w = (Window.partitionBy(*keys) if keys else Window).orderBy(
+            F.asc("rank"))
         return (
             out.withColumn("rank",
                            (F.row_number().over(w) - 1).cast("bigint"))
@@ -676,20 +714,20 @@ class SegmentIndex:
 
         Two regimes on the PROVEN posting volume (sum of the query
         terms' dfs, read from the dictionary before any job): taat
-        queries on a warm index under SEARCH_DRIVER_CAP gather the
-        pruned segment rows in one JVM-only job and run the same
-        per-part scorer on the driver (no shuffle, no Python-worker
-        stage — measured ~1.7x faster per warm query); above the cap,
-        with cache off, or in wand mode the distributed
+        queries on a warm index under SEARCH_DRIVER_CAP read the pruned
+        segment rows with a driver-local pyarrow scan of the terms'
+        bucket directories and run the same per-part scorer on the
+        driver — no Spark job at all (with_meta's doc-store join aside);
+        above the cap, with cache off, or in wand mode the distributed
         scan→shuffle→applyInPandas plan runs. Both regimes are
         row/score-identical (pytest-pinned).
         """
         if after is not None:
             after = (float(after[0]), int(after[1]))
         if not _raw and self.n_deleted():
-            return self._live(k, lambda kk: self.search(
-                query, kk, mode=mode, with_meta=with_meta, after=after,
-                _raw=True))
+            out = self._live(k, lambda kk: self.search(
+                query, kk, mode=mode, after=after, _raw=True))
+            return self._with_meta(out) if with_meta else out
         terms = self.analyze_query(query) if isinstance(query, str) else list(query)
         terms = sorted(set(terms))
         n_docs = float(self.stats["n_docs"])
@@ -699,36 +737,26 @@ class SegmentIndex:
 
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
         if not terms:
-            return empty
+            return self._empty()
 
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in terms}
-        buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))       # directory pruning
-            .filter(F.col("term").isin(terms))           # row-group pushdown
-            .select("doc_part", "term", "docs", "tfs", "dls",
-                    "block_last", "block_max")
-        )
         scorer = _make_scorer(idf_map, k1=k1, b=b, avgdl=avgdl, k=k,
                               mode=mode, after=after)
+        cols = ["doc_part", "term", "docs", "tfs", "dls",
+                "block_last", "block_max"]
         if (mode == "taat" and self._cache
                 and sum(int(dfs[t]) for t in terms) <= SEARCH_DRIVER_CAP):
-            # driver regime (warm engine only): ONE JVM-side job gathers
-            # the pruned segment rows (bytes blobs, ~1 B/posting), then
-            # the SAME scorer closure runs per doc_part on the driver —
-            # per-part outputs and the (raw score desc, doc_id asc)
-            # global cut are bit-identical to the distributed plan
-            # (pytest-pinned), with no shuffle and no Python-worker
-            # round-trips. Bound proven from the dictionary before any
-            # job; above the cap (every hot-term disjunction at 10^12-doc
-            # scale) the distributed plan below runs unchanged.
-            pdf = seg.toPandas()
+            # driver regime (warm engine only): the pruned segment rows
+            # (bytes blobs, ~1 B/posting) come straight from the parquet
+            # files, then the SAME scorer closure runs per doc_part on
+            # the driver — per-part outputs and the (raw score desc,
+            # doc_id asc) global cut are bit-identical to the distributed
+            # plan (pytest-pinned), with no Spark job. Bound proven from
+            # the dictionary before any read; above the cap (every
+            # hot-term disjunction at 10^12-doc scale) the distributed
+            # plan below runs unchanged.
+            pdf = self._read_buckets("segments", terms, cols)
             outs = [scorer(g) for _, g in pdf.groupby("doc_part", sort=True)]
             cand = (pd.concat(outs, ignore_index=True) if outs else
                     pd.DataFrame({
@@ -739,12 +767,15 @@ class SegmentIndex:
                                      kind="mergesort")
                     .head(k).reset_index(drop=True))
             cand.insert(0, "rank", np.arange(len(cand), dtype=np.int64))
-            out = self.spark.createDataFrame(
-                cand, "rank bigint, doc_id bigint, score double")
-            if with_meta:
-                out = (out.join(self.doc_store(), "doc_id", "left")
-                       .orderBy("rank"))
-            return out
+            out = _local_frame(self.spark, cand)
+            return self._with_meta(out) if with_meta else out
+        buckets = sorted({term_bucket(t, n_buckets) for t in terms})
+        seg = (
+            self._segments
+            .filter(F.col("bucket").isin(buckets))       # directory pruning
+            .filter(F.col("term").isin(terms))           # row-group pushdown
+            .select(*cols)
+        )
         per_part = self._by_part(seg).applyInPandas(scorer, TOPK_SCHEMA)
         topk = per_part.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -752,9 +783,16 @@ class SegmentIndex:
             (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
             "doc_id", "score",
         )
-        if with_meta:
-            out = out.join(self.doc_store(), "doc_id", "left").orderBy("rank")
-        return out
+        return self._with_meta(out) if with_meta else out
+
+    def _with_meta(self, out: DataFrame) -> DataFrame:
+        """Join a ranked result to the doc store (the hits' `_source`)."""
+        return out.join(self.doc_store(), "doc_id", "left").orderBy("rank")
+
+    def _empty(self, schema: str = RANKED_SCHEMA) -> DataFrame:
+        """An empty result. Call it only on the branch that returns it:
+        each createDataFrame is a py4j round-trip (~10-20 ms)."""
+        return self.spark.createDataFrame([], schema)
 
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Terms in the dictionary starting with `prefix`, ordered by
@@ -942,14 +980,12 @@ class SegmentIndex:
                 "needs the positional sidecar (IndexConfig.with_positions)"
             )
         if not _raw and self.n_deleted():
-            return self._live(k, lambda kk: self.search_phrase(
-                phrase, kk, with_meta=with_meta, slop=slop, _raw=True))
+            out = self._live(k, lambda kk: self.search_phrase(
+                phrase, kk, slop=slop, _raw=True))
+            return self._with_meta(out) if with_meta else out
         terms = self.analyze_query(phrase) if isinstance(phrase, str) else list(phrase)
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
         if not terms:
-            return empty
+            return self._empty()
         slop = int(slop)
         if slop < 0:
             raise ValueError("slop must be >= 0")
@@ -961,7 +997,7 @@ class SegmentIndex:
         uterms = sorted(set(terms))
         dfs = self.term_dfs(uterms)
         if any(dfs.get(t, 0) == 0 for t in uterms):
-            return empty  # a phrase containing an absent term matches nothing
+            return self._empty()  # an absent term's phrase matches nothing
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
@@ -982,9 +1018,7 @@ class SegmentIndex:
         )
         out = self._phrase_topk(cand_plan, min(dfs[t] for t in uterms),
                                 n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, k=k)
-        if with_meta:
-            out = out.join(self.doc_store(), "doc_id", "left").orderBy("rank")
-        return out
+        return self._with_meta(out) if with_meta else out
 
     def _phrase_topk(self, cand_plan: DataFrame, bound: int, *,
                      n_docs: float, avgdl: float, k1: float, b: float,
@@ -1002,15 +1036,12 @@ class SegmentIndex:
         - above the cap: persist the candidate relation, count for the
           phrase df, score distributed; eager top-k releases the cache.
         """
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
         release = None
         if bound <= PHRASE_DRIVER_CAP:
             pdf = cand_plan.toPandas()
             dfp = float(len(pdf))
             if dfp == 0:
-                return empty
+                return self._empty()
             cand = self.spark.createDataFrame(
                 pdf, "doc_id bigint, occ bigint, dl bigint"
             )
@@ -1019,7 +1050,7 @@ class SegmentIndex:
             dfp = float(cand.count())
             if dfp == 0:
                 cand.unpersist()
-                return empty
+                return self._empty()
             release = cand
         idf = float(np.log1p((n_docs - dfp + 0.5) / (dfp + 0.5)))
         scored = cand.select(
@@ -1349,14 +1380,11 @@ class SegmentIndex:
                 "(IndexConfig.with_term_vectors)"
             )
         terms = sorted(set(query_terms))
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, term string, fg_df bigint, bg_df bigint, "
-                "score double"
-        )
         dfs = self.term_dfs(terms)
         live = [t for t in terms if dfs.get(t, 0) > 0]
         if not live:
-            return empty
+            return self._empty("rank bigint, term string, fg_df bigint, "
+                               "bg_df bigint, score double")
         fg = self._term_docs(live).select("doc_id").distinct()
         fg_n = float(fg.count())
         bg_n = float(self.stats["n_docs"])
@@ -1510,9 +1538,6 @@ class SegmentIndex:
         filt_clauses, meta_clauses = self._parse_filters(filter)
         has_filter = bool(filt_clauses or meta_clauses)
         msm = int(minimum_should_match)
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
         if not must_clauses and not should and not has_filter:
             if not must_not:
                 raise ValueError(
@@ -1537,7 +1562,7 @@ class SegmentIndex:
             # ES returns an empty hit set when minimum_should_match
             # exceeds the distinct should terms — adapter-submitted
             # bodies must not crash (ADVICE r4)
-            return empty
+            return self._empty()
         # Pure metadata filter (no text terms anywhere): one Catalyst
         # path — pushed-down doc_store scan, TakeOrderedAndProject.
         constraints = must_clauses + filt_clauses
@@ -1566,7 +1591,7 @@ class SegmentIndex:
         if constraints:
             cdfs = self.term_dfs(sorted({t for c in constraints for t in c}))
             if any(all(cdfs.get(t, 0) == 0 for t in c) for c in constraints):
-                return empty  # a clause with only absent terms matches nothing
+                return self._empty()  # a clause of only absent terms: no match
             bound_ok = min(sum(cdfs.get(t, 0) for t in c)
                            for c in constraints)
         elif msm >= 2:
@@ -1574,16 +1599,16 @@ class SegmentIndex:
             bound_ok = sum(sdfs.values()) // msm
         if bound_ok is not None and bound_ok <= BOOL_DRIVER_CAP:
             return self._bool_pruned(must_clauses, should, must_not,
-                                     k=k, empty=empty, msm=msm,
+                                     k=k, msm=msm,
                                      filt_clauses=filt_clauses,
                                      meta_clauses=meta_clauses)
         return self._bool_distributed(must_clauses, should, must_not,
-                                      k=k, empty=empty, msm=msm,
+                                      k=k, msm=msm,
                                       filt_clauses=filt_clauses,
                                       meta_clauses=meta_clauses)
 
     def _bool_distributed(self, must_clauses, should, must_not, *, k,
-                          empty, msm: int = 0, filt_clauses=(),
+                          msm: int = 0, filt_clauses=(),
                           meta_clauses=()) -> DataFrame:
         """Above-cap bool regime (every must clause hot at 100x scale):
         ONE combined applyInPandas pass intersects the constraints and
@@ -1607,11 +1632,11 @@ class SegmentIndex:
         dfs = self.term_dfs(sorted(set(scoring) | set(filt_terms)))
         constraints = list(must_clauses) + list(filt_clauses)
         if any(all(dfs.get(t, 0) == 0 for t in c) for c in constraints):
-            return empty  # a clause with only absent terms matches nothing
+            return self._empty()  # a clause of only absent terms: no match
         live_scoring = [t for t in scoring if dfs.get(t, 0) > 0]
         zero_fill = not must_clauses and bool(filt_clauses or meta_clauses)
         if not live_scoring and not zero_fill:
-            return empty
+            return self._empty()
         live_filt = [t for t in filt_terms if dfs.get(t, 0) > 0]
         mn_dfs = self.term_dfs(must_not) if must_not else {}
         live_mn = [t for t in must_not if mn_dfs.get(t, 0) > 0]
@@ -1663,7 +1688,7 @@ class SegmentIndex:
         )
 
     def _bool_pruned(self, must_clauses, should, must_not, *, k,
-                     empty, msm: int = 0, filt_clauses=(),
+                     msm: int = 0, filt_clauses=(),
                      meta_clauses=()) -> DataFrame:
         """Capped-bound bool evaluation: per-part clause intersection ->
         driver candidate set -> candidate-restricted scoring -> local
@@ -1698,7 +1723,7 @@ class SegmentIndex:
         ok_pdf = self._by_part(seg).applyInPandas(
             intersector, "doc_id bigint").toPandas()
         if not len(ok_pdf):
-            return empty
+            return self._empty()
         ok = np.sort(ok_pdf["doc_id"].to_numpy(np.int64))
         if meta_clauses:
             cand = self.spark.createDataFrame(
@@ -1710,7 +1735,7 @@ class SegmentIndex:
                 .select("doc_id").toPandas()
             )
             if not len(passing):
-                return empty
+                return self._empty()
             ok = np.sort(passing["doc_id"].to_numpy(np.int64))
         scoring = sorted(set(must_terms) | set(should))
         scores_pdf = (self._scores_for_docs(scoring, ok) if scoring
@@ -1729,7 +1754,7 @@ class SegmentIndex:
                                    "score": np.zeros(missing.size)})],
                     ignore_index=True)
         if not len(scores_pdf):
-            return empty
+            return self._empty()
         scores = self.spark.createDataFrame(scores_pdf, TOPK_SCHEMA)
         rounded = scores.select("doc_id", F.round("score", 6).alias("score"))
         topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1768,11 +1793,8 @@ class SegmentIndex:
             clauses = [c for c in clauses if c]
             if clauses:
                 gs.append(clauses)
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
         if not gs:
-            return empty
+            return self._empty()
         all_terms = sorted({t for g in gs for c in g for t in c})
         dfs = self.term_dfs(all_terms)
         live_gs = []
@@ -1782,7 +1804,7 @@ class SegmentIndex:
                 continue
             live_gs.append([[t for t in c if dfs.get(t, 0) > 0] for c in g])
         if not live_gs:
-            return empty
+            return self._empty()
         scoring = sorted({t for g in live_gs for c in g for t in c})
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
@@ -1868,12 +1890,9 @@ class SegmentIndex:
         if not _raw and self.n_deleted():
             return self._live(k, lambda kk: self.search_bool_tree(
                 node, kk, _raw=True))
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
         rel = self._bool_tree_rel(node)
         if rel is None:
-            return empty
+            return self._empty()
         rounded = rel.select("doc_id", F.round("score", 6).alias("score"))
         topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -2748,11 +2767,10 @@ class SegmentIndex:
         terms = sorted(set(terms))
         out_schema = ("doc_id bigint, term string, tf bigint, dl bigint, "
                       "idf double, partial double")
-        empty = self.spark.createDataFrame([], out_schema)
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
         if not terms or not doc_ids:
-            return empty
+            return self._empty(out_schema)
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
@@ -2823,18 +2841,15 @@ class SegmentIndex:
                 phrase, kk, max_expansions=max_expansions, slop=slop,
                 _raw=True))
         terms = self.analyze_query(phrase) if isinstance(phrase, str) else list(phrase)
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
         if not terms:
-            return empty
+            return self._empty()
         slop = int(slop)
         if slop < 0:
             raise ValueError("slop must be >= 0")
         fixed, last = terms[:-1], terms[-1]
         alts = self.expand_prefix(last, max_expansions)
         if not alts:
-            return empty
+            return self._empty()
         if slop > 0 and fixed:
             if len(set(fixed)) != len(fixed):
                 raise ValueError(
@@ -2851,7 +2866,7 @@ class SegmentIndex:
         if fixed:
             dfs = self.term_dfs(sorted(set(fixed)))
             if any(dfs.get(t, 0) == 0 for t in set(fixed)):
-                return empty
+                return self._empty()
         scan_terms = sorted(set(fixed) | set(alts))
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
@@ -3167,16 +3182,14 @@ def search_cross_fields(field_indexes: dict, query, k: int, *,
     terms = (si0.analyze_query(query) if isinstance(query, str)
              else list(query))
     terms = sorted(set(terms))
-    empty = si0.spark.createDataFrame(
-        [], "rank bigint, doc_id bigint, score double")
     if not terms:
-        return empty
+        return si0._empty()
     dfs_f = {n: si.term_dfs(terms) for n, si in field_indexes.items()}
     df_b = {t: max(int(dfs_f[n].get(t, 0)) for n in field_indexes)
             for t in terms}
     terms = [t for t in terms if df_b[t] > 0]
     if not terms:
-        return empty
+        return si0._empty()
     rels = []
     for n, si in field_indexes.items():
         n_docs = float(si.stats["n_docs"])

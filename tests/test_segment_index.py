@@ -1049,35 +1049,85 @@ def test_by_part_single_exchange(spark, index_dir):
     assert int(ex[0]) > conf  # widened, not the session default
 
 
+REGIME_QUERIES = [["node", "cursor"], ["shard", "group", "stream"]]
+
+
+@pytest.fixture(scope="module")
+def tombstoned_dir(spark, index_dir, tmp_path_factory):
+    """A copy of the index with some top hits of REGIME_QUERIES deleted
+    (tombstones only, not compacted), so ranked reads go through _live."""
+    import shutil
+
+    from newssearchengine_spark.plans.delete import delete_docs
+
+    d = str(tmp_path_factory.mktemp("tomb") / "idx")
+    shutil.copytree(index_dir, d)
+    si = SegmentIndex(spark, d, cache=False)
+    dead = [7, 600]
+    for q in REGIME_QUERIES:
+        dead += [r["doc_id"] for r in si.search(q, 6).collect()][::2]
+    delete_docs(spark, d, sorted(set(dead)))
+    return d
+
+
 def test_search_driver_and_distributed_regimes_identical(
-        spark, index_dir, monkeypatch):
-    """Plain taat search has two regimes (driver gather + local scoring
-    under SEARCH_DRIVER_CAP on a warm index, distributed
+        spark, index_dir, tombstoned_dir, monkeypatch):
+    """Plain taat search has two regimes (driver pyarrow read + local
+    scoring under SEARCH_DRIVER_CAP on a warm index, distributed
     scan->shuffle->applyInPandas above it) — the SAME scorer closure
     runs in both, so results must be bit-identical. Force the
     distributed regime by zeroing the cap and compare, including the
-    search_after cursor cut and with_meta join."""
+    search_after cursor cut and with_meta join, on a clean index and on
+    a tombstoned one. On the tombstoned index _live's pandas re-rank must
+    also equal its Spark-window form (forced by zeroing
+    DELETED_ISIN_CAP)."""
     import newssearchengine_spark.plans.search as S
 
-    si = SegmentIndex(spark, index_dir)
-    queries = [["node", "cursor"], ["shard", "group", "stream"]]
-    driver = [si.search(q, 20, mode="taat").collect() for q in queries]
-    assert all(driver)
-    cur = (driver[0][4]["score"], driver[0][4]["doc_id"])
-    driver_after = si.search(queries[0], 10, mode="taat",
-                             after=cur).collect()
-    driver_meta = si.search(queries[0], 5, mode="taat",
-                            with_meta=True).collect()
-    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
-    dist = [si.search(q, 20, mode="taat").collect() for q in queries]
-    dist_after = si.search(queries[0], 10, mode="taat",
-                           after=cur).collect()
-    dist_meta = si.search(queries[0], 5, mode="taat",
-                          with_meta=True).collect()
-    monkeypatch.undo()
-    for a, b in zip(driver, dist):
-        assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert driver_after and [tuple(r) for r in driver_after] == \
-        [tuple(r) for r in dist_after]
-    assert driver_meta and [tuple(r) for r in driver_meta] == \
-        [tuple(r) for r in dist_meta]
+    def run(si, cur=None):
+        rows = [si.search(q, 20, mode="taat").collect()
+                for q in REGIME_QUERIES]
+        cur = cur or (rows[0][4]["score"], rows[0][4]["doc_id"])
+        rows.append(si.search(REGIME_QUERIES[0], 10, mode="taat",
+                              after=cur).collect())
+        rows.append(si.search(REGIME_QUERIES[0], 5, mode="taat",
+                              with_meta=True).collect())
+        assert all(rows)
+        return [[tuple(r) for r in rs] for rs in rows], cur
+
+    for d in (index_dir, tombstoned_dir):
+        si = SegmentIndex(spark, d)
+        driver, cur = run(si)
+        monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
+        assert run(si, cur)[0] == driver
+        monkeypatch.undo()
+        assert bool(si.n_deleted()) == (d == tombstoned_dir)
+        if si.n_deleted():
+            dead = set(si._tombstones()[1].tolist())
+            assert not any(r[1] in dead for rs in driver[:3] for r in rs)
+            monkeypatch.setattr(S, "DELETED_ISIN_CAP", -1)
+            assert run(si, cur)[0] == driver
+            monkeypatch.undo()
+        si.close()
+
+
+def test_search_driver_regime_runs_no_spark_job(
+        spark, index_dir, tombstoned_dir):
+    """A driver-regime search on a warm index reads its postings with
+    pyarrow and builds its result as a local relation: neither the call
+    nor collect() launches a Spark job, with or without tombstones."""
+    import time
+
+    sc = spark.sparkContext
+    for i, d in enumerate((index_dir, tombstoned_dir)):
+        si = SegmentIndex(spark, d).warm()
+        assert si.search(REGIME_QUERIES[0], 10).collect()
+        group = f"driver-regime-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            for q in REGIME_QUERIES:
+                assert si.search(q, 10).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        time.sleep(1.0)  # let the listener bus deliver any job start
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        si.close()
