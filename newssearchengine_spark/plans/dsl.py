@@ -2272,14 +2272,15 @@ def es_msearch(indexes, bodies: list[dict], size: int = 10, *,
     pay a full scatter-gather round trip each
     (netzpolitik/experiments/keyword_match_recall.py:30-43 inside a
     topic loop); ES's own batching answer is the _msearch endpoint. Here
-    the batch routes to SegmentIndex.search_many — one Spark job, each
-    doc_part decodes every posting ONCE and scores all queries,
-    duplicate bodies deduped and fanned back out — so per-query job
+    the batch routes to SegmentIndex.search_many — one pass in which
+    each doc_part decodes every posting ONCE and scores all queries,
+    duplicate bodies deduped and fanned back out: no Spark job under
+    SEARCH_DRIVER_CAP on a warm index, else ONE job, so per-query job
     overhead amortizes across the batch (the scale throughput shape).
 
     Any ranked body is accepted: plain single-field OR-matching kinds
     (match / pure-OR query_string / multi_match) BATCH — grouped per
-    target field, one search_many job per group — and every other body
+    target field, one search_many pass per group — and every other body
     (bool, dis_max, function_score, expansions, boolean grammars,
     wrapper keys like sort/rescore/collapse) falls back to its own
     es_search, exactness unchanged. Returns (query_id, rank, doc_id,

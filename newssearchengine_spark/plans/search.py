@@ -28,6 +28,7 @@ from __future__ import annotations
 import heapq
 import json
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -42,13 +43,16 @@ from .index_build import term_bucket
 
 TOPK_SCHEMA = "doc_id bigint, score double"
 RANKED_SCHEMA = "rank bigint, doc_id bigint, score double"
+PHRASE_CAND_SCHEMA = "doc_id bigint, occ bigint, dl bigint"
 
 # Phrase-candidate rows are bounded by the min posting df of the phrase's
 # required terms (a doc containing the phrase contains every term) — known
-# driver-locally from the term dictionary BEFORE any job. Under this cap
-# the candidates are gathered to the driver in ONE job and scored over a
-# local relation; above it (a hot phrase at 100x scale) the candidate
-# relation stays distributed. 2^17 rows of (3 x int64) ~ 3 MB.
+# driver-locally from the term dictionary BEFORE any job. Applies only
+# above SEARCH_DRIVER_CAP (below it the phrase paths read on the driver
+# with no job): under this cap the distributed matcher's candidates are
+# gathered to the driver in one job and scored over a local relation;
+# above it (a hot phrase at 100x scale) the candidate relation stays
+# distributed. 2^17 rows of (3 x int64) ~ 3 MB.
 PHRASE_DRIVER_CAP = 1 << 17
 
 # Bool-query candidate cap: the result set is bounded by the most
@@ -56,17 +60,24 @@ PHRASE_DRIVER_CAP = 1 << 17
 # from the term dictionary before any job); under this cap candidates
 # are intersected per part and only they are scored. Above it (every
 # must clause hot at 100x scale) the distributed semi-join plan runs.
+# Flat search_bool only; the nested-bool tree (search_bool_tree) takes
+# the SEARCH_DRIVER_CAP placement rule.
 BOOL_DRIVER_CAP = 1 << 17
 
 # search_many driver-merge cap on the PROVEN per-part top-k output bound
-# (n_parts * n_queries * k rows): under it the batch finishes with one
-# distributed stage + a driver merge; above it the per-query window runs.
+# (n_parts * n_queries * k rows). Applies only above SEARCH_DRIVER_CAP
+# (below it the batch is scored on the driver with no job): under this
+# cap the batch finishes with one distributed stage + a driver merge;
+# above it the per-query window runs.
 MANY_DRIVER_CAP = 1 << 21
-#: driver regime for plain taat disjunctions: when the PROVEN posting
-#: volume (sum of query-term dfs, known from the dictionary before any
-#: job) fits the cap, read the pruned segment rows with a driver-local
+#: driver regime — the one placement rule of search, search_many, the
+#: phrase paths and the nested-bool tree (SegmentIndex._driver_ok): on a
+#: warm handle, when the PROVEN read volume (Σdf of the terms whose
+#: postings are read, Σcf of those whose positions are read, n_docs when
+#: the doc store is read — all known from the dictionary before any job)
+#: fits the cap, read the pruned segment rows with a driver-local
 #: pyarrow scan of the terms' bucket directories (no Spark job) and run
-#: the SAME per-part scorer function on the driver. 2^19 postings decode
+#: the SAME per-part closure on the driver. 2^19 postings decode
 #: to ~24 B/posting of int64 numpy (docs+tfs+dls) ≈ 13 MB transient —
 #: fixed-width and bounded (the element-based guard style VERDICT r4
 #: asked for). The calibration below was measured when the driver regime
@@ -427,7 +438,8 @@ class SegmentIndex:
         )
         from .index_build import SEGMENT_SCHEMA
 
-        self._df_cache: dict[str, int] = {}
+        # term -> (df, cf), published as one tuple per term
+        self._term_cache: dict[str, tuple[int, int]] = {}
         self._tstats = self._read_or_empty(
             os.path.join(self.index_dir, "term_stats"),
             "term string, df bigint, cf bigint, bucket int",
@@ -449,9 +461,11 @@ class SegmentIndex:
         )
         self._cache = cache
         self._pos_cached = False
-        # tombstone memo: (sidecar file listing) -> (T, ids, dead_df)
-        self._tomb_sig: tuple | None = None
-        self._tomb: tuple = (0, None, None)
+        self._pos_lock = threading.Lock()
+        # tombstone memo: (sidecar file listing, (T, ids, dead_df)),
+        # published as ONE tuple so a concurrent reader never pairs a new
+        # listing with a stale id set
+        self._tomb_memo: tuple = (None, (0, None, None))
         if cache:
             self._tstats = self._tstats.persist()
             self._segments = self._segments.persist()
@@ -460,10 +474,11 @@ class SegmentIndex:
         """Positional segment relation (phrase paths only); persisted on
         first touch when caching is on — its lifecycle is separate from
         the hot cache so non-phrase sessions never pay its memory."""
-        if self._cache and not self._pos_cached:
-            self._pos_segments_df = self._pos_segments_df.persist()
-            self._pos_cached = True
-        return self._pos_segments_df
+        with self._pos_lock:
+            if self._cache and not self._pos_cached:
+                self._pos_segments_df = self._pos_segments_df.persist()
+                self._pos_cached = True
+            return self._pos_segments_df
 
     def close(self) -> None:
         """Release every cache this handle pinned (hot segments, term
@@ -474,12 +489,14 @@ class SegmentIndex:
         if self._cache:
             self._segments.unpersist()
             self._tstats.unpersist()
-            if self._pos_cached:
-                self._pos_segments_df.unpersist()
-                self._pos_cached = False
-        if self._tomb[2] is not None:  # distributed-dead regime relation
-            self._tomb[2].unpersist()
-            self._tomb_sig, self._tomb = None, (0, None, None)
+            with self._pos_lock:
+                if self._pos_cached:
+                    self._pos_segments_df.unpersist()
+                    self._pos_cached = False
+        dead_df = self._tomb_memo[1][2]
+        if dead_df is not None:  # distributed-dead regime relation
+            dead_df.unpersist()
+            self._tomb_memo = (None, (0, None, None))
         self._cache = False
 
     def _read_or_empty(self, path: str, schema: str):
@@ -504,26 +521,52 @@ class SegmentIndex:
         pruned to the terms' bucket partitions with the term predicate
         pushed to row groups (files are term-sorted). This is the Lucene
         term-dictionary-lookup shape — a local index structure, not a
-        cluster job — so a query costs ONE Spark job, not two. Results
-        memoize on the handle (repeat queries skip the read entirely).
+        cluster job. The same read memoizes each term's cf (the driver
+        regimes' position volume). Results memoize on the handle
+        (repeat queries skip the read entirely).
         Falls back to a pruned Spark scan if pyarrow/local-FS access is
         unavailable (e.g. a remote object-store index).
         """
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            got: dict[str, int] = {}
-            try:
-                got = self._term_dfs_local(missing)
-            except Exception:
-                rows = self._tstats.filter(F.col("term").isin(missing)).collect()
-                got = {r["term"]: int(r["df"]) for r in rows}
-            for t in missing:
-                self._df_cache[t] = got.get(t, 0)
-        return {t: self._df_cache[t] for t in terms}
+        return {t: s[0] for t, s in self._term_stats(terms).items()}
 
-    def _term_dfs_local(self, terms: list[str]) -> dict[str, int]:
-        pdf = self._read_buckets("term_stats", terms, ["term", "df"])
-        return {t: int(d) for t, d in zip(pdf["term"], pdf["df"])}
+    def _term_stats(self, terms) -> dict[str, tuple[int, int]]:
+        """(df, cf) per term, memoized on the handle — term_dfs's read."""
+        missing = [t for t in terms if t not in self._term_cache]
+        if missing:
+            cols = ["term", "df", "cf"]
+            try:
+                pdf = self._read_buckets("term_stats", missing, cols)
+            except Exception:
+                pdf = (self._tstats.filter(F.col("term").isin(missing))
+                       .select(*cols).toPandas())
+            got = {t: (int(d), int(c))
+                   for t, d, c in zip(pdf["term"], pdf["df"], pdf["cf"])}
+            for t in missing:
+                self._term_cache[t] = got.get(t, (0, 0))
+        return {t: self._term_cache[t] for t in terms}
+
+    def _driver_ok(self, terms=(), pos_terms=(), doc_store=False) -> bool:
+        """The driver regimes' one placement rule: a warm handle whose
+        read volume, proven from the dictionary before any read, fits
+        SEARCH_DRIVER_CAP — Σdf of the terms whose postings are read,
+        plus Σ(df+cf) of those whose postings and positions are read,
+        plus n_docs when the doc store is read."""
+        if not self._cache:
+            return False
+        st = self._term_stats(list(terms) + list(pos_terms))
+        vol = (sum(st[t][0] for t in terms)
+               + sum(sum(st[t]) for t in pos_terms)
+               + (int(self.stats["n_docs"]) if doc_store else 0))
+        return vol <= SEARCH_DRIVER_CAP
+
+    def _per_part_local(self, fn, terms: list[str],
+                        cols: list[str]) -> pd.DataFrame | None:
+        """The driver form of `_by_part(seg).applyInPandas(fn, ...)`: the
+        SAME per-doc_part closure over a pyarrow read of the terms'
+        segment rows. None when no row was read."""
+        pdf = self._read_buckets("segments", terms, cols)
+        outs = [fn(g) for _, g in pdf.groupby("doc_part", sort=True)]
+        return pd.concat(outs, ignore_index=True) if outs else None
 
     def _read_buckets(self, table: str, terms: list[str],
                       columns: list[str]) -> pd.DataFrame:
@@ -591,26 +634,26 @@ class SegmentIndex:
         regime between compactions), else None with dead_df a distributed
         distinct relation (the huge-backlog regime)."""
         sig = self._tombstone_listing()
-        if sig == self._tomb_sig:
-            return self._tomb
-        if not sig:
-            self._tomb_sig, self._tomb = sig, (0, None, None)
-            return self._tomb
+        memo_sig, tomb = self._tomb_memo
+        if sig == memo_sig:
+            return tomb
         tdir = os.path.join(self.index_dir, "tombstones")
-        if sum(s for _, s in sig) <= DELETED_DRIVER_BYTES_CAP:
+        if not sig:
+            tomb = (0, None, None)
+        elif sum(s for _, s in sig) <= DELETED_DRIVER_BYTES_CAP:
             import pyarrow.parquet as pq
 
             tbl = pq.read_table(tdir, columns=["doc_id"])
             ids = np.unique(tbl["doc_id"].to_numpy(zero_copy_only=False)
                             .astype(np.int64))
-            self._tomb = (int(ids.size), ids, None)
+            tomb = (int(ids.size), ids, None)
         else:
             dead_df = (self.spark.read.parquet(tdir)
                        .select(F.col("doc_id").cast("bigint").alias("doc_id"))
                        .distinct().persist())
-            self._tomb = (int(dead_df.count()), None, dead_df)
-        self._tomb_sig = sig
-        return self._tomb
+            tomb = (int(dead_df.count()), None, dead_df)
+        self._tomb_memo = (sig, tomb)
+        return tomb
 
     def n_deleted(self) -> int:
         """Distinct live tombstones (0 when none were ever written)."""
@@ -745,8 +788,7 @@ class SegmentIndex:
                               mode=mode, after=after)
         cols = ["doc_part", "term", "docs", "tfs", "dls",
                 "block_last", "block_max"]
-        if (mode == "taat" and self._cache
-                and sum(int(dfs[t]) for t in terms) <= SEARCH_DRIVER_CAP):
+        if mode == "taat" and self._driver_ok(terms):
             # driver regime (warm engine only): the pruned segment rows
             # (bytes blobs, ~1 B/posting) come straight from the parquet
             # files, then the SAME scorer closure runs per doc_part on
@@ -756,18 +798,9 @@ class SegmentIndex:
             # the dictionary before any read; above the cap (every
             # hot-term disjunction at 10^12-doc scale) the distributed
             # plan below runs unchanged.
-            pdf = self._read_buckets("segments", terms, cols)
-            outs = [scorer(g) for _, g in pdf.groupby("doc_part", sort=True)]
-            cand = (pd.concat(outs, ignore_index=True) if outs else
-                    pd.DataFrame({
-                        "doc_id": pd.Series([], dtype=np.int64),
-                        "score": pd.Series([], dtype=np.float64)}))
-            cand = (cand.sort_values(["score", "doc_id"],
-                                     ascending=[False, True],
-                                     kind="mergesort")
-                    .head(k).reset_index(drop=True))
-            cand.insert(0, "rank", np.arange(len(cand), dtype=np.int64))
-            out = _local_frame(self.spark, cand)
+            cand = self._per_part_local(scorer, terms, cols)
+            out = (self._empty() if cand is None
+                   else self._cut_topk(cand, k))
             return self._with_meta(out) if with_meta else out
         buckets = sorted({term_bucket(t, n_buckets) for t in terms})
         seg = (
@@ -790,9 +823,32 @@ class SegmentIndex:
         return out.join(self.doc_store(), "doc_id", "left").orderBy("rank")
 
     def _empty(self, schema: str = RANKED_SCHEMA) -> DataFrame:
-        """An empty result. Call it only on the branch that returns it:
-        each createDataFrame is a py4j round-trip (~10-20 ms)."""
-        return self.spark.createDataFrame([], schema)
+        """An empty result (flat DDL `schema`) built from a zero-row Arrow
+        table, so its collect() runs no Spark job. Call it only on the
+        branch that returns it: each createDataFrame is a py4j round-trip
+        (~10-20 ms)."""
+        import pyarrow as pa
+
+        names = [f.split()[0] for f in schema.split(",")]
+        return self.spark.createDataFrame(
+            pa.table({n: pa.nulls(0) for n in names}), schema)
+
+    def _cut_topk(self, cand, k: int) -> DataFrame:
+        """The driver regimes' one top-k cut: (doc_id, score) rows ordered
+        by score desc, doc_id asc, the first k numbered 0.. as `rank`, in
+        a job-free local frame. `cand` is a pandas frame or a Spark
+        projection over a local relation, whose collect() the optimizer
+        evaluates on the driver (ConvertToLocalRelation) without a job."""
+        if isinstance(cand, DataFrame):
+            rows = cand.collect()
+            cand = pd.DataFrame({
+                "doc_id": np.array([r[0] for r in rows], dtype=np.int64),
+                "score": np.array([r[1] for r in rows], dtype=np.float64)})
+        cand = (cand.sort_values(["score", "doc_id"], ascending=[False, True],
+                                 kind="mergesort")
+                .head(k).reset_index(drop=True))
+        cand.insert(0, "rank", np.arange(len(cand), dtype=np.int64))
+        return _local_frame(self.spark, cand)
 
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Terms in the dictionary starting with `prefix`, ordered by
@@ -957,13 +1013,18 @@ class SegmentIndex:
         compositional path computes N/avgdl over non-empty docs while the
         index stores corpus-wide stats).
 
-        Plan: pruned positional-segment scan -> per-doc_part occurrence
-        counting in applyInPandas (postings+positions decoded once per
-        term, fully vectorized via packed (local-doc, position) keys) ->
-        tiny persisted candidate relation (only docs containing the whole
-        phrase) -> Catalyst scoring + TakeOrderedAndProject. Two jobs
-        total (phrase-df aggregate + top-k) over the candidate relation,
-        never over the corpus.
+        Plan: the matcher counts occurrences per doc_part (postings +
+        positions decoded once per term, fully vectorized via packed
+        (local-doc, position) keys) and emits only the docs containing
+        the whole phrase; Catalyst scores those candidates and the top-k
+        is cut, never touching the corpus. Placement (_phrase_cands): on
+        a warm handle whose Σdf + Σcf of the phrase terms fits
+        SEARCH_DRIVER_CAP, the positional rows are read with pyarrow and
+        the matcher, the scoring projection over a local relation and
+        the pandas top-k cut all run on the driver — no Spark job. Above
+        it the matcher runs distributed (pruned positional-segment scan
+        -> applyInPandas) and _phrase_topk gathers or persists the
+        candidates by PHRASE_DRIVER_CAP.
 
         slop > 0 runs the SLOPPY matcher over the same scan: Lucene's
         acceptance (an assignment of one position per term whose
@@ -989,69 +1050,109 @@ class SegmentIndex:
         slop = int(slop)
         if slop < 0:
             raise ValueError("slop must be >= 0")
-        if slop > 0 and len(terms) > 1 and len(set(terms)) != len(terms):
+        plan = self._phrase_plan(terms, slop)
+        if plan is None:
+            return self._empty()  # an absent term's phrase matches nothing
+        out = self._phrase_topk(*plan, k=k)
+        return self._with_meta(out) if with_meta else out
+
+    def _phrase_plan(self, terms: list, slop: int = 0,
+                     last_alts: list | None = None):
+        """(scan_terms, matcher, bound) of a phrase — or, with last_alts
+        (the expanded alternatives of a trailing PREFIX, the
+        match_phrase_prefix shape), a phrase-prefix — or None when it
+        can match nothing (no terms / an absent required term / zero
+        expansions). bound = the PROVEN candidate bound: min fixed-term
+        df, or the sum of alt dfs for a pure-prefix phrase. Only the
+        dictionary is read."""
+        if not self.stats.get("with_positions"):
+            raise ValueError(
+                "phrase clauses need the positional sidecar "
+                "(IndexConfig.with_positions)")
+        fixed = list(terms)
+        alts = None if last_alts is None else sorted(
+            {a for a in last_alts if a})
+        if not (fixed if alts is None else alts):
+            return None
+        # a sloppy match needs an injective position assignment, which
+        # distinct terms (and expansions disjoint from them) guarantee
+        sloppy = slop > 0 and len(fixed) + (alts is not None) > 1
+        if sloppy and len(set(fixed)) != len(fixed):
             raise ValueError(
                 "sloppy phrases need distinct analyzed terms (repeated "
                 "terms would need an injective position assignment — "
                 "bipartite matching); use slop=0 or distinct terms")
-        uterms = sorted(set(terms))
-        dfs = self.term_dfs(uterms)
-        if any(dfs.get(t, 0) == 0 for t in uterms):
-            return self._empty()  # an absent term's phrase matches nothing
-        n_docs = float(self.stats["n_docs"])
-        avgdl = float(self.stats["avgdl"])
-        k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        n_buckets = int(self.stats["n_buckets"])
-        buckets = sorted({term_bucket(t, n_buckets) for t in uterms})
+        if sloppy and alts and set(alts) & set(fixed):
+            raise ValueError(
+                f"sloppy phrase-prefix where an expansion "
+                f"{sorted(set(alts) & set(fixed))} equals a fixed term is "
+                "not supported (injective position assignment would need "
+                "bipartite matching)")
+        dfs = self.term_dfs(sorted(set(fixed)))
+        if any(d == 0 for d in dfs.values()):
+            return None
+        phrase = fixed + (alts or [])[:1]
+        matcher = (_make_sloppy_phrase_matcher(phrase, slop, last_alts=alts)
+                   if sloppy else _make_phrase_matcher(phrase, last_alts=alts))
+        bound = (min(dfs.values()) if fixed
+                 else sum(self.term_dfs(alts).values()))
+        return sorted(set(fixed) | set(alts or ())), matcher, bound
 
+    def _phrase_cands(self, scan_terms: list[str], matcher):
+        """(doc_id, occ, dl) candidates of a phrase plan: a pandas frame
+        when the driver regime reads the positional rows (_driver_ok on
+        Σdf + Σcf of the scan terms — no Spark job), else the
+        distributed per-part matcher plan."""
+        cols = ["doc_part", "term", "docs", "tfs", "dls", "positions"]
+        if self._driver_ok(pos_terms=scan_terms):
+            cand = self._per_part_local(matcher, scan_terms, cols)
+            return (pd.DataFrame(columns=["doc_id", "occ", "dl"])
+                    if cand is None else cand)
+        n_buckets = int(self.stats["n_buckets"])
         seg = (
             self._pos_segments()
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(uterms))
-            .select("doc_part", "term", "docs", "tfs", "dls", "positions")
+            .filter(F.col("bucket").isin(
+                sorted({term_bucket(t, n_buckets) for t in scan_terms})))
+            .filter(F.col("term").isin(scan_terms))
+            .select(*cols)
         )
-        matcher = (_make_sloppy_phrase_matcher(list(terms), slop)
-                   if slop > 0 and len(terms) > 1
-                   else _make_phrase_matcher(list(terms)))
-        cand_plan = self._by_part(seg).applyInPandas(
-            matcher, "doc_id bigint, occ bigint, dl bigint"
-        )
-        out = self._phrase_topk(cand_plan, min(dfs[t] for t in uterms),
-                                n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, k=k)
-        return self._with_meta(out) if with_meta else out
+        return self._by_part(seg).applyInPandas(matcher, PHRASE_CAND_SCHEMA)
 
-    def _phrase_topk(self, cand_plan: DataFrame, bound: int, *,
-                     n_docs: float, avgdl: float, k1: float, b: float,
+    def _phrase_topk(self, scan_terms: list[str], matcher, bound: int, *,
                      k: int) -> DataFrame:
-        """Score + top-k a phrase-candidate relation (doc_id, occ, dl).
+        """Score + top-k a phrase plan's candidates (doc_id, occ, dl).
 
-        Two regimes on the PROVEN candidate bound:
-        - bound <= PHRASE_DRIVER_CAP: gather the candidates with ONE
-          Spark job (Arrow toPandas) and run the scoring over a LOCAL
-          relation — the Catalyst expression tree is the same either
-          way, so scores and 6dp rounding are bit-identical; no persist,
-          no second distributed job (the r3 phrase-latency fix: the old
-          persist + count + distributed-top-k tail cost ~3 job latencies
-          for a <=k-row answer).
-        - above the cap: persist the candidate relation, count for the
+        Three regimes:
+        - driver (_phrase_cands read the rows with pyarrow): the Catalyst
+          scoring projection runs over a local relation, which the
+          optimizer evaluates on the driver, and _cut_topk ranks the
+          scores in pandas — no Spark job, 6dp rounding still Spark's.
+        - PROVEN candidate bound <= PHRASE_DRIVER_CAP: gather the
+          distributed matcher's candidates with ONE Spark job (Arrow
+          toPandas) and score over a local relation — the same
+          expression tree, so scores and 6dp rounding are bit-identical.
+        - above that cap: persist the candidate relation, count for the
           phrase df, score distributed; eager top-k releases the cache.
         """
+        cand = self._phrase_cands(scan_terms, matcher)
+        local = isinstance(cand, pd.DataFrame)
         release = None
-        if bound <= PHRASE_DRIVER_CAP:
-            pdf = cand_plan.toPandas()
+        if local or bound <= PHRASE_DRIVER_CAP:
+            pdf = cand if local else cand.toPandas()
             dfp = float(len(pdf))
             if dfp == 0:
                 return self._empty()
-            cand = self.spark.createDataFrame(
-                pdf, "doc_id bigint, occ bigint, dl bigint"
-            )
+            cand = _local_frame(self.spark, pdf, PHRASE_CAND_SCHEMA)
         else:
-            cand = cand_plan.persist()
+            cand = cand.persist()
             dfp = float(cand.count())
             if dfp == 0:
                 cand.unpersist()
                 return self._empty()
             release = cand
+        n_docs = float(self.stats["n_docs"])
+        avgdl = float(self.stats["avgdl"])
+        k1, b = float(self.stats["k1"]), float(self.stats["b"])
         idf = float(np.log1p((n_docs - dfp + 0.5) / (dfp + 0.5)))
         scored = cand.select(
             "doc_id",
@@ -1062,6 +1163,8 @@ class SegmentIndex:
                 6,
             ).alias("score"),
         )
+        if local:
+            return self._cut_topk(scored, k)
         topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         out = topk.select(
@@ -1072,94 +1175,34 @@ class SegmentIndex:
             out = _eager_topk(release, out)
         return out
 
-    def _phrase_scores(self, terms: list, slop: int = 0,
-                       last_alts: list | None = None):
-        """COMPLETE (doc_id, score double) relation of a phrase clause —
-        the phrase analog of score_all, consumed by the bool-tree
-        compiler's phrase leaves (ES match_phrase — and, with
+    def _phrase_scores(self, plan, frame: bool = True):
+        """COMPLETE (doc_id, score double) relation of a phrase plan
+        (_phrase_plan) — the phrase analog of score_all, consumed by the
+        bool-tree compiler's phrase leaves (ES match_phrase — and, with
         last_alts, match_phrase_prefix — inside bool bodies). Scoring
         is the engine's phrase convention (search_phrase / _phrase_topk:
         tf = occurrence count — sloppy participating-start count when
         slop > 0 — idf over the PHRASE df), so a bool{must:[phrase]}
         body scores identically to search_phrase (pytest-pinned).
-        last_alts = the expanded alternatives of a trailing PREFIX (the
-        search_phrase_prefix shape; exclusive with slop). Returns None
-        when the phrase can match nothing (empty analysis / an absent
-        required term / zero expansions).
+        Returns None when no doc contains the phrase.
 
-        Regimes on the PROVEN candidate bound (min fixed-term df; sum
-        of alt dfs for a pure-prefix clause), like _phrase_topk: under
-        PHRASE_DRIVER_CAP the candidates gather with ONE job and df/idf
-        resolve locally (the common case — phrases are selective by
-        construction); above the cap the relation stays distributed and
-        the phrase df comes from an in-plan count aggregation
-        cross-joined back (the matcher subtree may evaluate twice —
-        accepted for the rare hot-phrase shape instead of leaking a
-        persist into the consumer's plan)."""
-        terms = [t for t in terms if t]
-        if not self.stats.get("with_positions"):
-            raise ValueError(
-                "phrase clauses need the positional sidecar "
-                "(IndexConfig.with_positions)")
-        slop = int(slop)
-        if last_alts is not None:
-            alts = sorted({a for a in last_alts if a})
-            if not alts:
-                return None
-            fixed = list(terms)
-            if slop > 0 and fixed:
-                if len(set(fixed)) != len(fixed):
-                    raise ValueError(
-                        "sloppy phrases need distinct analyzed terms")
-                overlap = set(alts) & set(fixed)
-                if overlap:
-                    raise ValueError(
-                        f"sloppy phrase-prefix where an expansion "
-                        f"{sorted(overlap)} equals a fixed term is not "
-                        "supported (injective position assignment "
-                        "would need bipartite matching)")
-            dfs = self.term_dfs(sorted(set(fixed))) if fixed else {}
-            if any(dfs.get(t, 0) == 0 for t in set(fixed)):
-                return None
-            scan_terms = sorted(set(fixed) | set(alts))
-            matcher = (_make_sloppy_phrase_matcher(fixed + [alts[0]],
-                                                   slop, last_alts=alts)
-                       if slop > 0 and fixed
-                       else _make_phrase_matcher(fixed + [alts[0]],
-                                                 last_alts=alts))
-            bound = (min(dfs[t] for t in set(fixed)) if fixed
-                     else sum(self.term_dfs(alts).values()))
-        else:
-            if not terms:
-                return None
-            if (slop > 0 and len(terms) > 1
-                    and len(set(terms)) != len(terms)):
-                raise ValueError(
-                    "sloppy phrases need distinct analyzed terms")
-            uterms = sorted(set(terms))
-            dfs = self.term_dfs(uterms)
-            if any(dfs.get(t, 0) == 0 for t in uterms):
-                return None
-            scan_terms = uterms
-            matcher = (_make_sloppy_phrase_matcher(list(terms), slop)
-                       if slop > 0 and len(terms) > 1
-                       else _make_phrase_matcher(list(terms)))
-            bound = min(dfs[t] for t in uterms)
+        Regimes like _phrase_topk: the driver regime scores in numpy with
+        no Spark job (frame=False returns its pandas frame as is, for
+        the bool tree's driver regime); under PHRASE_DRIVER_CAP the
+        candidates gather with ONE job and df/idf resolve locally (the
+        common case — phrases are selective by construction); above the
+        cap the relation stays distributed and the phrase df comes from
+        an in-plan count aggregation cross-joined back (the matcher
+        subtree may evaluate twice — accepted for the rare hot-phrase
+        shape instead of leaking a persist into the consumer's plan)."""
+        scan_terms, matcher, bound = plan
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        n_buckets = int(self.stats["n_buckets"])
-        buckets = sorted({term_bucket(t, n_buckets) for t in scan_terms})
-        seg = (
-            self._pos_segments()
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(scan_terms))
-            .select("doc_part", "term", "docs", "tfs", "dls", "positions")
-        )
-        cand_plan = self._by_part(seg).applyInPandas(
-            matcher, "doc_id bigint, occ bigint, dl bigint")
-        if bound <= PHRASE_DRIVER_CAP:
-            pdf = cand_plan.toPandas()
+        cand = self._phrase_cands(scan_terms, matcher)
+        local = isinstance(cand, pd.DataFrame)
+        if local or bound <= PHRASE_DRIVER_CAP:
+            pdf = cand if local else cand.toPandas()
             dfp = float(len(pdf))
             if dfp == 0:
                 return None
@@ -1169,12 +1212,14 @@ class SegmentIndex:
                      + k1 * (1.0 - b
                              + b * pdf["dl"].to_numpy(np.float64)
                              / avgdl)))
-            return self.spark.createDataFrame(
-                pd.DataFrame({"doc_id": pdf["doc_id"], "score": sc}),
-                TOPK_SCHEMA)
-        dfp_rel = cand_plan.agg(
+            out = pd.DataFrame({
+                "doc_id": pdf["doc_id"].to_numpy(np.int64), "score": sc})
+            if local and not frame:
+                return out
+            return _local_frame(self.spark, out, TOPK_SCHEMA)
+        dfp_rel = cand.agg(
             F.count(F.lit(1)).cast("double").alias("_dfp"))
-        scored = cand_plan.crossJoin(F.broadcast(dfp_rel)).select(
+        scored = cand.crossJoin(F.broadcast(dfp_rel)).select(
             "doc_id",
             (F.log1p((F.lit(n_docs) - F.col("_dfp") + 0.5)
                      / (F.col("_dfp") + 0.5))
@@ -1195,7 +1240,7 @@ class SegmentIndex:
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._empty(TOPK_SCHEMA)
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
@@ -1880,7 +1925,13 @@ class SegmentIndex:
         stay on the flat paths, which the DSL adapter still routes to
         whenever a body has no nested bool. Rounded 6dp before the
         (score desc, doc_id asc) top-k cut — the shared ranked-method
-        tail.
+        tail. Driver regime (_tree_flags_local): when the tree's read
+        volume (Σdf of its term leaves, Σdf + Σcf of its phrase leaves,
+        n_docs when a meta filter or must_not-only node reads the doc
+        store) fits SEARCH_DRIVER_CAP on a warm index, the clause rows
+        come from pyarrow reads, the flags are aggregated in numpy, the
+        SAME tree expressions filter and score a local relation and
+        _cut_topk ranks it — no Spark job.
 
         Reference parity: the reference's ES backend accepts nested bool
         bodies natively (es.search callers, e.g.
@@ -1890,10 +1941,12 @@ class SegmentIndex:
         if not _raw and self.n_deleted():
             return self._live(k, lambda kk: self.search_bool_tree(
                 node, kk, _raw=True))
-        rel = self._bool_tree_rel(node)
+        rel, local = self._bool_tree(node)
         if rel is None:
             return self._empty()
         rounded = rel.select("doc_id", F.round("score", 6).alias("score"))
+        if local:
+            return self._cut_topk(rounded, k)
         topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         return topk.select(
@@ -1910,21 +1963,11 @@ class SegmentIndex:
         many clauses reference its term). Absent terms emit no rows.
         `idf_override` replaces a term's idf (cross_fields blended-df
         statistics); tf norms always use THIS field's dl/avgdl."""
-        terms = sorted(set(terms))
-        dfs = self.term_dfs(terms)
-        terms = [t for t in terms if dfs.get(t, 0) > 0]
+        terms, emit = self._term_emitter(terms, idf_override)
         schema = "term string, doc_id bigint, score double"
         if not terms:
-            return self.spark.createDataFrame([], schema)
-        n_docs = float(self.stats["n_docs"])
-        avgdl = float(self.stats["avgdl"])
-        k1, b = float(self.stats["k1"]), float(self.stats["b"])
+            return self._empty(schema)
         n_buckets = int(self.stats["n_buckets"])
-        idf_map = {t: float(lucene_idf(n_docs, float(dfs[t])))
-                   for t in terms}
-        if idf_override:
-            idf_map.update({t: float(v) for t, v in idf_override.items()
-                            if t in idf_map})
         buckets = sorted({term_bucket(t, n_buckets) for t in terms})
         seg = (
             self._segments
@@ -1932,6 +1975,24 @@ class SegmentIndex:
             .filter(F.col("term").isin(terms))
             .select("doc_part", "term", "docs", "tfs", "dls")
         )
+        return self._by_part(seg).applyInPandas(emit, schema)
+
+    def _term_emitter(self, terms: list[str],
+                      idf_override: dict[str, float] | None = None):
+        """(live terms, per-doc_part closure emitting their (term, doc_id,
+        score) BM25 partials) — _term_scores's scorer, shared with the
+        bool tree's driver regime."""
+        terms = sorted(set(terms))
+        dfs = self.term_dfs(terms)
+        terms = [t for t in terms if dfs.get(t, 0) > 0]
+        n_docs = float(self.stats["n_docs"])
+        avgdl = float(self.stats["avgdl"])
+        k1, b = float(self.stats["k1"]), float(self.stats["b"])
+        idf_map = {t: float(lucene_idf(n_docs, float(dfs[t])))
+                   for t in terms}
+        if idf_override:
+            idf_map.update({t: float(v) for t, v in idf_override.items()
+                            if t in idf_map})
 
         def emit(pdf: pd.DataFrame) -> pd.DataFrame:
             outs = []
@@ -1952,14 +2013,20 @@ class SegmentIndex:
                 })
             return pd.concat(outs, ignore_index=True)
 
-        return self._by_part(seg).applyInPandas(emit, schema)
+        return terms, emit
 
     def _bool_tree_rel(self, node: dict):
         """Complete (doc_id, score) relation of a bool tree, or None for
         a tree with no effective clause (every child leniency-dropped,
         same no-op rule as the flat adapters). See search_bool_tree for
-        semantics; this is the single-scan/single-shuffle compiler:
-        clause rows -> one aggregation -> the tree as expressions."""
+        semantics and _bool_tree for the compiler."""
+        return self._bool_tree(node)[0]
+
+    def _bool_tree(self, node: dict):
+        """(relation, local) of a bool tree — the single-scan/single-
+        shuffle compiler: clause rows -> one aggregation -> the tree as
+        expressions. local = the driver regime built it: a projection
+        over a local relation whose collect() runs no Spark job."""
         from functools import reduce
         from operator import and_, or_
 
@@ -2072,7 +2139,7 @@ class SegmentIndex:
 
         root = norm(node)
         if root is None:
-            return None
+            return None, False
 
         # a node whose only children are must_nots matches every OTHER
         # doc (ES match_all-with-exclusions) — those docs may have no
@@ -2087,58 +2154,37 @@ class SegmentIndex:
                        ("must", "should", "must_not", "filter")
                        for c in x[role])
 
-        # ---- clause rows: ONE scan + broadcast fan-out + meta streams
-        # (+ one phrase relation per distinct phrase clause)
-        term_items = [(i, key) for i, key in enumerate(cids)
-                      if not (key and key[0] == _PHRASE_KEY)]
-        phrase_items = [(i, key) for i, key in enumerate(cids)
-                        if key and key[0] == _PHRASE_KEY]
-        all_terms = sorted({t for _, key in term_items for t in key})
-        parts = []
-        if all_terms:
-            fan = self.spark.createDataFrame(
-                [(t, i) for i, key in term_items for t in key],
-                "term string, cid int")
-            parts.append(
-                self._term_scores(all_terms)
-                .join(F.broadcast(fan), "term")
-                .select("doc_id", "cid", "score"))
-        for i, key in phrase_items:
-            rel = self._phrase_scores(list(key[1]), key[2],
-                                      list(key[3]) or None)
-            if rel is not None:  # None = can't match: flag stays null
-                parts.append(rel.select(
-                    "doc_id", F.lit(i).cast("int").alias("cid"),
-                    "score"))
-        for j, mcl in enumerate(metas):
-            parts.append(
-                self.doc_store().filter(_meta_filter_pred(mcl))
-                .select("doc_id", F.lit(-(j + 1)).alias("cid"),
-                        F.lit(0.0).alias("score")))
-        if needs_all(root):
-            parts.append(self.doc_store().select(
-                "doc_id", F.lit(-1000000).alias("cid"),
-                F.lit(0.0).alias("score")))
-        if not parts:
-            return None
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
+        # ---- clause rows: ONE scan + fan-out to the clauses + meta
+        # streams (+ one phrase relation per distinct phrase clause)
+        fan = [(t, i) for i, key in enumerate(cids)
+               if not (key and key[0] == _PHRASE_KEY) for t in key]
+        all_terms = sorted({t for t, _ in fan})
+        # None = can't match: the phrase flag stays null
+        phrases = [(i, self._phrase_plan([t for t in key[1] if t],
+                                         key[2], list(key[3]) or None))
+                   for i, key in enumerate(cids)
+                   if key and key[0] == _PHRASE_KEY]
+        phrases = [(i, p) for i, p in phrases if p is not None]
+        match_all = needs_all(root)
+        local = self._driver_ok(all_terms,
+                                [t for _, p in phrases for t in p[0]],
+                                bool(metas) or match_all)
+        g = (self._tree_flags_local if local else self._tree_flags)(
+            fan, all_terms, phrases, metas, match_all, len(cids))
+        if g is None:
+            return None, False
 
-        # ---- ONE aggregation: per-clause match flag + score sum
-        aggs = []
-        for i in range(len(cids)):
-            c = F.col("cid") == i
-            aggs.append(F.max(F.when(c, 1)).alias(f"_m{i}"))
-            aggs.append(F.sum(F.when(c, F.col("score")))
-                        .alias(f"_s{i}"))
-        for j in range(len(metas)):
-            aggs.append(F.max(F.when(F.col("cid") == -(j + 1), 1))
-                        .alias(f"_f{j}"))
-        g = u.groupBy("doc_id").agg(*aggs)
+        # ---- the tree as Catalyst expressions over the flags. Each
+        # node's match expression is built once and reused where score()
+        # gates on it: every Column costs py4j round-trips.
+        built: dict[int, object] = {}
 
-        # ---- the tree as Catalyst expressions over the flags
         def matched(x):
+            if id(x) not in built:
+                built[id(x)] = match_expr(x)
+            return built[id(x)]
+
+        def match_expr(x):
             if isinstance(x, tuple):
                 kind, i = x[0], x[1]
                 col = f"_m{i}" if kind == "t" else f"_f{i}"
@@ -2180,7 +2226,115 @@ class SegmentIndex:
             return total * F.lit(w) if w != 1.0 else total
 
         return (g.filter(matched(root))
-                .select("doc_id", score(root).alias("score")))
+                .select("doc_id", score(root).alias("score")), local)
+
+    def _tree_flags(self, fan, all_terms, phrases, metas, match_all: bool,
+                    n_cids: int):
+        """A bool tree's clause rows and their ONE aggregation: per doc,
+        the `_m<cid>` match flag and `_s<cid>` score sum of every clause
+        and the `_f<j>` flag of every meta filter group — or None when no
+        row source remains. Distributed: ONE pruned scan of the term
+        partials fanned to their clauses by a broadcast term->cid map,
+        the phrase relations, and pushed-down doc_store id streams."""
+        parts = []
+        if all_terms:
+            fan_df = self.spark.createDataFrame(fan, "term string, cid int")
+            parts.append(
+                self._term_scores(all_terms)
+                .join(F.broadcast(fan_df), "term")
+                .select("doc_id", "cid", "score"))
+        for i, plan in phrases:
+            rel = self._phrase_scores(plan)
+            if rel is not None:
+                parts.append(rel.select(
+                    "doc_id", F.lit(i).cast("int").alias("cid"),
+                    "score"))
+        for j, mcl in enumerate(metas):
+            parts.append(
+                self.doc_store().filter(_meta_filter_pred(mcl))
+                .select("doc_id", F.lit(-(j + 1)).alias("cid"),
+                        F.lit(0.0).alias("score")))
+        if match_all:
+            parts.append(self.doc_store().select(
+                "doc_id", F.lit(-1000000).alias("cid"),
+                F.lit(0.0).alias("score")))
+        if not parts:
+            return None
+        u = parts[0]
+        for p in parts[1:]:
+            u = u.unionByName(p)
+        aggs = []
+        for i in range(n_cids):
+            c = F.col("cid") == i
+            aggs.append(F.max(F.when(c, 1)).alias(f"_m{i}"))
+            aggs.append(F.sum(F.when(c, F.col("score")))
+                        .alias(f"_s{i}"))
+        for j in range(len(metas)):
+            aggs.append(F.max(F.when(F.col("cid") == -(j + 1), 1))
+                        .alias(f"_f{j}"))
+        return u.groupBy("doc_id").agg(*aggs)
+
+    def _tree_flags_local(self, fan, all_terms, phrases, metas,
+                          match_all: bool, n_cids: int):
+        """The driver regime of _tree_flags: the same clause rows from
+        pyarrow reads (term partials by _term_emitter's closure, phrase
+        scores) aggregated in numpy (per-doc sums in row order) into ONE
+        local relation — no Spark job. Absent clauses read 0, which the
+        tree expressions coalesce their nulls to. A meta filter or
+        must_not-only node reads the doc store: every doc gets a row, its
+        meta columns ride along, and the SAME Catalyst predicates set the
+        `_f<j>` flags as a projection over the local relation."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        rows = []
+        if all_terms:
+            live, emit = self._term_emitter(all_terms)
+            part = (self._per_part_local(
+                emit, live, ["doc_part", "term", "docs", "tfs", "dls"])
+                if live else None)
+            if part is None:
+                part = pd.DataFrame(columns=["term", "doc_id", "score"])
+            rows.append(part.merge(pd.DataFrame(fan, columns=["term", "cid"]),
+                                   on="term")[["doc_id", "cid", "score"]])
+        for i, plan in phrases:
+            sc = self._phrase_scores(plan, frame=False)
+            if sc is not None:
+                rows.append(sc.assign(cid=i))
+        if metas or match_all:
+            import pyarrow.parquet as pq
+
+            cols = sorted({c for mcl in metas for _, c, _ in mcl} - {"doc_id"})
+            store = pq.read_table(os.path.join(self.index_dir, "doc_store"),
+                                  columns=["doc_id"] + cols)
+            rows.append(pd.DataFrame({
+                "doc_id": store["doc_id"].to_numpy().astype(np.int64),
+                "cid": -1000000, "score": 0.0}))
+        if not rows:
+            return None
+        u = pd.concat(rows, ignore_index=True)
+        ids, inv = np.unique(u["doc_id"].to_numpy(np.int64),
+                             return_inverse=True)
+        cid = u["cid"].to_numpy(np.int64)
+        score = u["score"].to_numpy(np.float64)
+        flags = {"doc_id": pa.array(ids)}
+        for i in range(n_cids):
+            sel = cid == i
+            flags[f"_m{i}"] = pa.array(
+                (np.bincount(inv[sel], minlength=ids.size) > 0)
+                .astype(np.int32))
+            flags[f"_s{i}"] = pa.array(np.bincount(
+                inv[sel], weights=score[sel], minlength=ids.size))
+        if metas:
+            at = pc.index_in(flags["doc_id"],
+                             value_set=store["doc_id"].cast(pa.int64()))
+            flags.update({c: store[c].take(at) for c in cols})
+        g = self.spark.createDataFrame(pa.table(flags))
+        if not metas:
+            return g
+        return g.select("*", *[F.when(_meta_filter_pred(mcl), 1)
+                               .alias(f"_f{j}")
+                               for j, mcl in enumerate(metas)])
 
     def search_boosting(self, positive, negative, k: int, *,
                         negative_boost: float = 0.5,
@@ -2846,72 +3000,30 @@ class SegmentIndex:
         slop = int(slop)
         if slop < 0:
             raise ValueError("slop must be >= 0")
-        fixed, last = terms[:-1], terms[-1]
-        alts = self.expand_prefix(last, max_expansions)
-        if not alts:
+        # candidates contain every fixed term followed by any expansion
+        # (bound: min fixed df; a pure prefix: the expansions' summed df)
+        plan = self._phrase_plan(terms[:-1], slop,
+                                 self.expand_prefix(terms[-1], max_expansions))
+        if plan is None:
             return self._empty()
-        if slop > 0 and fixed:
-            if len(set(fixed)) != len(fixed):
-                raise ValueError(
-                    "sloppy phrases need distinct analyzed terms "
-                    "(injective position assignment); use slop=0 or "
-                    "distinct terms")
-            overlap = set(alts) & set(fixed)
-            if overlap:
-                raise ValueError(
-                    f"sloppy phrase-prefix where an expansion "
-                    f"{sorted(overlap)} equals a fixed term is not "
-                    "supported (injective position assignment would "
-                    "need bipartite matching)")
-        if fixed:
-            dfs = self.term_dfs(sorted(set(fixed)))
-            if any(dfs.get(t, 0) == 0 for t in set(fixed)):
-                return self._empty()
-        scan_terms = sorted(set(fixed) | set(alts))
-        n_docs = float(self.stats["n_docs"])
-        avgdl = float(self.stats["avgdl"])
-        k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        n_buckets = int(self.stats["n_buckets"])
-        buckets = sorted({term_bucket(t, n_buckets) for t in scan_terms})
-        seg = (
-            self._pos_segments()
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(scan_terms))
-            .select("doc_part", "term", "docs", "tfs", "dls", "positions")
-        )
-        matcher = (_make_sloppy_phrase_matcher(list(fixed) + [last], slop,
-                                               last_alts=list(alts))
-                   if slop > 0 and fixed
-                   else _make_phrase_matcher(list(fixed) + [last],
-                                             last_alts=list(alts)))
-        cand_plan = self._by_part(seg).applyInPandas(
-            matcher, "doc_id bigint, occ bigint, dl bigint"
-        )
-        # candidate bound: docs matching fixed-then-alt contain every
-        # fixed term (min df); a pure-prefix phrase is bounded by the
-        # union of the expansions' postings (sum of dfs)
-        if fixed:
-            bound = min(dfs[t] for t in set(fixed))
-        else:
-            alt_dfs = self.term_dfs(sorted(set(alts)))
-            bound = sum(alt_dfs.values())
-        return self._phrase_topk(cand_plan, bound, n_docs=n_docs,
-                                 avgdl=avgdl, k1=k1, b=b, k=k)
+        return self._phrase_topk(*plan, k=k)
 
     def search_many(self, queries: dict, k: int, mode: str = "taat",
                     _raw: bool = False) -> DataFrame:
-        """Batched retrieval: MANY queries against the warm index in ONE
-        Spark job. `queries` maps query_id -> raw text or term list.
+        """Batched retrieval: MANY queries against the warm index in one
+        pass. `queries` maps query_id -> raw text or term list.
 
         Returns (query_id string, rank bigint, doc_id bigint, score double),
         per-query top-k, identical per query to `search()` (asserted in
         tests). This is the throughput shape at scale: the reference loops
         es.search per topic (keyword_match_recall.py:39-50) and pays a full
-        scatter-gather round-trip per query; here one job scans the pruned
-        segment union once, every doc_part group scores all queries against
-        postings it decodes ONCE per term, and a single per-query window
-        takes the top-k. Per-query Spark-job overhead — the scaling-
-        efficiency killer for sequential single-query loops — is amortized
+        scatter-gather round-trip per query; here the pruned segment union
+        is scanned once, every doc_part group scores all queries against
+        postings it decodes ONCE per term, and a per-query merge takes the
+        top-k. Under SEARCH_DRIVER_CAP on a warm index (taat) that pass
+        runs on the driver over a pyarrow read with no Spark job; above
+        it ONE job amortizes the per-query Spark-job overhead — the
+        scaling-efficiency killer for sequential single-query loops —
         across the whole batch.
         """
         if not _raw and self.n_deleted():
@@ -2949,86 +3061,94 @@ class SegmentIndex:
                  for qid, ts in qterms.items()}
         qlive = {qid: ts for qid, ts in qlive.items() if ts}
         if not qlive:
-            return self.spark.createDataFrame([], out_schema)
+            return self._empty(out_schema)
 
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in live}
-        buckets = sorted({term_bucket(t, n_buckets) for t in live})
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(live))
-            .select("doc_part", "term", "docs", "tfs", "dls",
-                    "block_last", "block_max")
-        )
+        doc_range = int(self.stats["doc_range"])
         scorer = _make_multi_scorer(qlive, idf_map, k1=k1, b=b,
                                     avgdl=avgdl, k=k, mode=mode,
-                                    doc_range=int(self.stats["doc_range"]))
-        per_part = self._by_part(seg).applyInPandas(
-            scorer, "query_id string, doc_id bigint, score double"
-        )
+                                    doc_range=doc_range)
+        cols = ["doc_part", "term", "docs", "tfs", "dls",
+                "block_last", "block_max"]
         # Per-part output is already top-k per query, so the global answer
         # is a merge of <= n_parts * n_queries * k rows — a PROVEN bound
-        # known before any job. Under the cap, merge on the driver: the
-        # whole batch costs ONE distributed stage (scan -> shuffle ->
-        # score), skipping the per-query window exchange whose ~n_queries
-        # distinct keys skew and cap reduce-side parallelism (the r3
-        # batch-scaling bottleneck). Above the cap (10^12-doc part
-        # counts), the distributed window runs.
-        doc_range = int(self.stats["doc_range"])
+        # known before any job. Driver regime (taat, warm, Σdf under
+        # SEARCH_DRIVER_CAP): the SAME per-part scorer runs over a pyarrow
+        # read and the merge below finishes the batch — no Spark job.
+        # Otherwise, under MANY_DRIVER_CAP, merge on the driver after ONE
+        # distributed stage (scan -> shuffle -> score), skipping the
+        # per-query window exchange whose ~n_queries distinct keys skew
+        # and cap reduce-side parallelism (the r3 batch-scaling
+        # bottleneck). Above it (10^12-doc part counts), the distributed
+        # window runs.
         n_parts = -(-int(self.stats["n_docs"]) // max(1, doc_range))
-        if max(1, n_parts) * len(qlive) * k <= MANY_DRIVER_CAP:
+        if mode == "taat" and self._driver_ok(live):
+            pdf = self._per_part_local(scorer, live, cols)
+        else:
+            buckets = sorted({term_bucket(t, n_buckets) for t in live})
+            seg = (
+                self._segments
+                .filter(F.col("bucket").isin(buckets))
+                .filter(F.col("term").isin(live))
+                .select(*cols)
+            )
+            per_part = self._by_part(seg).applyInPandas(
+                scorer, "query_id string, doc_id bigint, score double"
+            )
+            if max(1, n_parts) * len(qlive) * k > MANY_DRIVER_CAP:
+                w = Window.partitionBy("query_id").orderBy(
+                    F.desc("score"), F.asc("doc_id")
+                )
+                out = (
+                    per_part
+                    .withColumn("rank",
+                                (F.row_number().over(w) - 1).cast("bigint"))
+                    .filter(F.col("rank") < k)
+                    .select("query_id", "rank", "doc_id", "score")
+                )
+                if alias:
+                    amap = self.spark.createDataFrame(
+                        [(a, c) for a, c in alias.items()],
+                        "alias_id string, query_id string",
+                    )
+                    dup = out.join(F.broadcast(amap), "query_id").select(
+                        F.col("alias_id").alias("query_id"), "rank", "doc_id",
+                        "score",
+                    )
+                    out = out.unionByName(dup)
+                return out
             pdf = per_part.toPandas()
-            if not len(pdf):
-                return self.spark.createDataFrame([], out_schema)
-            # numpy merge: hash-factorize the query ids (no string sort),
-            # one lexsort by (query, score desc, doc_id asc), vectorized
-            # within-query ranks — a pandas sort_values over ~1M rows was
-            # the measured single-threaded floor of the batch path
-            qcode, _ = pd.factorize(pdf["query_id"], sort=False)
-            scores = pdf["score"].to_numpy(np.float64)
-            doc_ids = pdf["doc_id"].to_numpy(np.int64)
-            order = np.lexsort((doc_ids, -scores, qcode))
-            qs = qcode[order]
-            first = np.concatenate(([0], np.flatnonzero(np.diff(qs)) + 1))
-            counts = np.diff(np.append(first, qs.size))
-            ranks = np.arange(qs.size) - np.repeat(first, counts)
-            sel = order[ranks < k]
-            top = pd.DataFrame({
-                "query_id": pdf["query_id"].to_numpy()[sel],
-                "rank": ranks[ranks < k],
-                "doc_id": doc_ids[sel],
-                "score": scores[sel],
-            })
-            if alias:
-                frames = [top]
-                for a, c in alias.items():
-                    dup = top[top["query_id"] == c].copy()
-                    dup["query_id"] = a
-                    frames.append(dup)
-                top = pd.concat(frames, ignore_index=True)
-            return self.spark.createDataFrame(
-                top[["query_id", "rank", "doc_id", "score"]], out_schema
-            )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        out = (
-            per_part
-            .withColumn("rank", (F.row_number().over(w) - 1).cast("bigint"))
-            .filter(F.col("rank") < k)
-            .select("query_id", "rank", "doc_id", "score")
-        )
+        if pdf is None or not len(pdf):
+            return self._empty(out_schema)
+        # numpy merge: hash-factorize the query ids (no string sort),
+        # one lexsort by (query, score desc, doc_id asc), vectorized
+        # within-query ranks — a pandas sort_values over ~1M rows was
+        # the measured single-threaded floor of the batch path
+        qcode, _ = pd.factorize(pdf["query_id"], sort=False)
+        scores = pdf["score"].to_numpy(np.float64)
+        doc_ids = pdf["doc_id"].to_numpy(np.int64)
+        order = np.lexsort((doc_ids, -scores, qcode))
+        qs = qcode[order]
+        first = np.concatenate(([0], np.flatnonzero(np.diff(qs)) + 1))
+        counts = np.diff(np.append(first, qs.size))
+        ranks = np.arange(qs.size) - np.repeat(first, counts)
+        sel = order[ranks < k]
+        top = pd.DataFrame({
+            "query_id": pdf["query_id"].to_numpy()[sel],
+            "rank": ranks[ranks < k],
+            "doc_id": doc_ids[sel],
+            "score": scores[sel],
+        })
         if alias:
-            amap = self.spark.createDataFrame(
-                [(a, c) for a, c in alias.items()],
-                "alias_id string, query_id string",
-            )
-            dup = out.join(F.broadcast(amap), "query_id").select(
-                F.col("alias_id").alias("query_id"), "rank", "doc_id",
-                "score",
-            )
-            out = out.unionByName(dup)
-        return out
+            frames = [top]
+            for a, c in alias.items():
+                dup = top[top["query_id"] == c].copy()
+                dup["query_id"] = a
+                frames.append(dup)
+            top = pd.concat(frames, ignore_index=True)
+        return _local_frame(self.spark,
+                            top[["query_id", "rank", "doc_id", "score"]],
+                            out_schema)
 
 
 def search_dismax(field_indexes: dict, query, k: int, *,
@@ -3356,9 +3476,10 @@ def search_dismax_phrase(field_indexes: dict, text: str, k: int, *,
                                            max_expansions=max_expansions))
             if not alts:
                 continue  # zero expansions: no hits in this field
-            rel = si._phrase_scores(ts[:-1], int(slop), alts)
+            plan = si._phrase_plan(ts[:-1], int(slop), alts)
         else:
-            rel = si._phrase_scores(ts, int(slop))
+            plan = si._phrase_plan(ts, int(slop))
+        rel = None if plan is None else si._phrase_scores(plan)
         if rel is None:
             continue
         rel = si._exclude_dead(rel)

@@ -231,9 +231,10 @@ def test_search_many_dedupes_repeated_queries(spark, index_dir,
     si = SegmentIndex(spark, index_dir)
     base = {f"q{i}": q for i, (q, _) in enumerate(QUERIES[:2])}
     batch = {f"{qid}_rep{r}": q for qid, q in base.items() for r in range(4)}
-    for cap in (None, -1):
+    # driver regime, then driver merge, then the distributed window
+    for cap in (None, "SEARCH_DRIVER_CAP", "MANY_DRIVER_CAP"):
         if cap is not None:
-            monkeypatch.setattr(S, "MANY_DRIVER_CAP", cap)
+            monkeypatch.setattr(S, cap, -1)
         got = si.search_many(batch, 15).collect()
         by_q: dict = {}
         for r in got:
@@ -266,18 +267,22 @@ def test_search_many_dense_equals_sparse_scorer(spark, index_dir,
 
 def test_search_many_driver_merge_equals_window(spark, index_dir,
                                                 monkeypatch):
-    """search_many's two regimes (driver merge under MANY_DRIVER_CAP,
-    distributed per-query window above it) must be row-identical — same
-    raw scores, same (score desc, doc_id asc) order, same ranks."""
+    """search_many's three regimes (pyarrow driver read under
+    SEARCH_DRIVER_CAP; above it a driver merge under MANY_DRIVER_CAP or
+    the distributed per-query window) must be row-identical — same raw
+    scores, same (score desc, doc_id asc) order, same ranks."""
     import newssearchengine_spark.plans.search as S
 
     si = SegmentIndex(spark, index_dir)
     queries = {f"q{i}": q for i, (q, _) in enumerate(QUERIES)}
     a = si.search_many(queries, 25).collect()
-    monkeypatch.setattr(S, "MANY_DRIVER_CAP", -1)
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
     b = si.search_many(queries, 25).collect()
+    monkeypatch.setattr(S, "MANY_DRIVER_CAP", -1)
+    c = si.search_many(queries, 25).collect()
     monkeypatch.undo()
-    assert a and sorted(map(tuple, a)) == sorted(map(tuple, b))
+    assert a and sorted(map(tuple, a)) == sorted(map(tuple, b)) \
+        == sorted(map(tuple, c))
 
 
 def test_prefix_expansion_and_search(spark, index_dir, oracle):
@@ -366,26 +371,30 @@ def test_phrase_indexed_equals_compositional(spark, corpus, index_dir):
 
 def test_phrase_driver_and_distributed_regimes_identical(
         spark, index_dir, monkeypatch):
-    """The phrase top-k has two regimes (driver gather under
-    PHRASE_DRIVER_CAP, persisted distributed relation above it) — same
+    """The phrase top-k has three regimes (pyarrow driver read under
+    SEARCH_DRIVER_CAP; above it a one-job gather under
+    PHRASE_DRIVER_CAP, or a persisted distributed relation) — same
     Catalyst scoring expressions, so results must be bit-identical. Force
-    the distributed regime by zeroing the cap and compare."""
+    the other regimes by zeroing the caps and compare."""
     import newssearchengine_spark.plans.search as S
 
     si = SegmentIndex(spark, index_dir)
     cases = [["node", "cursor"], ["shard", "group"]]
-    driver = [si.search_phrase(p, 20).collect() for p in cases]
-    driver_pfx = si.search_phrase_prefix(["node", "c"], 20,
-                                         max_expansions=5).collect()
+
+    def run():
+        return ([si.search_phrase(p, 20).collect() for p in cases]
+                + [si.search_phrase_prefix(["node", "c"], 20,
+                                           max_expansions=5).collect()])
+
+    driver = run()
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
+    gather = run()
     monkeypatch.setattr(S, "PHRASE_DRIVER_CAP", -1)
-    dist = [si.search_phrase(p, 20).collect() for p in cases]
-    dist_pfx = si.search_phrase_prefix(["node", "c"], 20,
-                                       max_expansions=5).collect()
+    dist = run()
     monkeypatch.undo()
-    for a, b in zip(driver, dist):
-        assert a and [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert driver_pfx and [tuple(r) for r in driver_pfx] == \
-        [tuple(r) for r in dist_pfx]
+    for a, b, c in zip(driver, gather, dist):
+        assert a and [tuple(r) for r in a] == [tuple(r) for r in b] \
+            == [tuple(r) for r in c]
 
 
 def test_phrase_needs_positions(spark, corpus, tmp_path):
@@ -839,17 +848,25 @@ def test_indexed_significant_terms_matches_compositional(spark, corpus,
                   for r in b]
 
 
-def test_hot_cache_excludes_positions(spark, corpus, index_dir):
+def test_hot_cache_excludes_positions(spark, corpus, index_dir,
+                                     monkeypatch):
     """Cache split: disjunction queries never touch the positional
     sidecar — the hot persisted segment relation has no positions column,
-    and the positional cache only materializes on the first phrase query
-    (column pruning that reaches executor MEMORY, not just the scan)."""
+    and the positional cache only materializes on the first DISTRIBUTED
+    phrase query (column pruning that reaches executor MEMORY, not just
+    the scan); a driver-regime phrase reads positions with pyarrow and
+    leaves it lazy."""
+    import newssearchengine_spark.plans.search as S
+
     si = SegmentIndex(spark, index_dir).warm()
     assert "positions" not in si._segments.columns
     assert not si._pos_cached
     assert si.search(["node", "cursor"], 5).count() > 0
     assert si.search_bool(must=["node"], k=5).count() >= 0
     assert not si._pos_cached  # still lazy after non-phrase traffic
+    assert si.search_phrase(["node", "cursor"], 5).count() >= 0
+    assert not si._pos_cached  # driver regime: no executor cache
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
     assert si.search_phrase(["node", "cursor"], 5).count() >= 0
     assert si._pos_cached
     assert "positions" in si._pos_segments().columns
@@ -1050,6 +1067,26 @@ def test_by_part_single_exchange(spark, index_dir):
 
 
 REGIME_QUERIES = [["node", "cursor"], ["shard", "group", "stream"]]
+REGIME_BATCH = {"a": ["node", "cursor"], "b": ["shard", "group", "stream"],
+                "c": ["node", "cursor"]}
+# one call per driver-regime path beyond plain search: phrase at slop 0
+# and > 0, the serve benchmark's nested bool (nested should + should +
+# a `term: lang` filter), a bool with a phrase leaf, a must_not-only node
+# and search_many with duplicate bodies at k 100/300
+REGIME_CALLS = [
+    lambda si: si.search_phrase(["node", "cursor"], 20),
+    lambda si: si.search_phrase(["shard", "group"], 20, slop=2),
+    lambda si: si.search_bool_tree(
+        {"must": [{"should": [["node"], ["cursor"]]}],
+         "should": [["shard", "group"]],
+         "filter": [{"term": {"lang": "py"}}]}, 20),
+    lambda si: si.search_bool_tree(
+        {"must": [{"phrase": ["node", "cursor"]}], "should": [["shard"]]},
+        20),
+    lambda si: si.search_bool_tree({"must_not": [["node", "cursor"]]}, 20),
+    lambda si: si.search_many(REGIME_BATCH, 100),
+    lambda si: si.search_many(REGIME_BATCH, 300),
+]
 
 
 @pytest.fixture(scope="module")
@@ -1072,15 +1109,15 @@ def tombstoned_dir(spark, index_dir, tmp_path_factory):
 
 def test_search_driver_and_distributed_regimes_identical(
         spark, index_dir, tombstoned_dir, monkeypatch):
-    """Plain taat search has two regimes (driver pyarrow read + local
-    scoring under SEARCH_DRIVER_CAP on a warm index, distributed
-    scan->shuffle->applyInPandas above it) — the SAME scorer closure
-    runs in both, so results must be bit-identical. Force the
-    distributed regime by zeroing the cap and compare, including the
-    search_after cursor cut and with_meta join, on a clean index and on
-    a tombstoned one. On the tombstoned index _live's pandas re-rank must
-    also equal its Spark-window form (forced by zeroing
-    DELETED_ISIN_CAP)."""
+    """Plain taat search, the phrase paths, the nested-bool tree and
+    search_many each have a driver regime (pyarrow read + the SAME
+    per-part closure on the driver under SEARCH_DRIVER_CAP on a warm
+    index) and distributed plans above it, so results must be
+    identical. Force the distributed regimes by zeroing the cap and
+    compare, including the search_after cursor cut and with_meta join,
+    on a clean index and on a tombstoned one. On the tombstoned index
+    _live's pandas re-rank must also equal its Spark-window form (forced
+    by zeroing DELETED_ISIN_CAP)."""
     import newssearchengine_spark.plans.search as S
 
     def run(si, cur=None):
@@ -1091,6 +1128,9 @@ def test_search_driver_and_distributed_regimes_identical(
                               after=cur).collect())
         rows.append(si.search(REGIME_QUERIES[0], 5, mode="taat",
                               with_meta=True).collect())
+        # ranks are in the rows, so sorting (search_many's window regime
+        # returns no fixed order) still pins the ranking
+        rows += [sorted(call(si).collect()) for call in REGIME_CALLS]
         assert all(rows)
         return [[tuple(r) for r in rs] for rs in rows], cur
 
@@ -1112,11 +1152,22 @@ def test_search_driver_and_distributed_regimes_identical(
 
 def test_search_driver_regime_runs_no_spark_job(
         spark, index_dir, tombstoned_dir):
-    """A driver-regime search on a warm index reads its postings with
-    pyarrow and builds its result as a local relation: neither the call
-    nor collect() launches a Spark job, with or without tombstones."""
+    """A driver-regime search, phrase, nested bool or search_many on a
+    warm index reads its postings (and doc-store columns) with pyarrow
+    and builds its result as a local relation: neither the call nor
+    collect() launches a Spark job, with or without tombstones. Empty
+    answers (an absent phrase term, an unsatisfiable msm, a batch of
+    absent terms) are zero-row Arrow tables, job-free too."""
     import time
 
+    empty_calls = [
+        lambda si: si.search_phrase(["node", "zzz_absent"], 10),
+        lambda si: si.search_bool(should=["node", "cursor"], k=10,
+                                  minimum_should_match=3),
+        lambda si: si.search_bool_tree(
+            {"should": [["node"]], "minimum_should_match": 2}, 10),
+        lambda si: si.search_many({"a": ["zzz_absent"]}, 10),
+    ]
     sc = spark.sparkContext
     for i, d in enumerate((index_dir, tombstoned_dir)):
         si = SegmentIndex(spark, d).warm()
@@ -1126,8 +1177,66 @@ def test_search_driver_regime_runs_no_spark_job(
         try:
             for q in REGIME_QUERIES:
                 assert si.search(q, 10).collect()
+            for call in REGIME_CALLS:
+                assert call(si).collect()
+            for call in empty_calls:
+                assert not call(si).collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         time.sleep(1.0)  # let the listener bus deliver any job start
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         si.close()
+
+
+def test_tombstone_memo_consistent_under_threads(spark, index_dir,
+                                                 tmp_path):
+    """Reader threads refresh the tombstone memo while deletes land (the
+    serve_mixed shape: clients share one handle). Every _tombstones()
+    call must return an id set holding every id whose sidecar file was
+    in place when the call began — a reader must never pair a new
+    listing with a stale id set — and T must be that set's size."""
+    import shutil
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(index_dir, d)
+    si = SegmentIndex(spark, d, cache=False)
+    tdir = os.path.join(d, "tombstones")
+    os.makedirs(tdir, exist_ok=True)
+    written: list[int] = []   # ids whose file is in place
+    done = threading.Event()
+    bad = []
+
+    def reader():
+        while not done.is_set():
+            before = set(written[:])
+            T, ids, _ = si._tombstones()
+            got = set() if ids is None else set(ids.tolist())
+            if T != len(got) or not before <= got:
+                bad.append((len(before), T))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=reader)
+               for _ in range(2 * (os.cpu_count() or 2))]
+    try:
+        for t in threads:
+            t.start()
+        for i in range(150):
+            tmp = os.path.join(tdir, f".tmp-{i}")
+            pq.write_table(pa.table({"doc_id": pa.array([i], pa.int64())}),
+                           tmp)
+            os.replace(tmp, os.path.join(tdir, f"del-{i:04d}.parquet"))
+            written.append(i)
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not bad, bad[:5]
+    assert si.n_deleted() == 150
