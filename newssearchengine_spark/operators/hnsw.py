@@ -17,13 +17,21 @@ Algorithms 1-5) with Spark-native plumbing:
   At 100 TB the shard count is chosen so one shard's vectors fit an
   executor (1-10M vectors), the build is a single hash shuffle, and the
   graph rows persist `partitionBy(shard)` so a probe prunes partitions.
-- **Search = per-shard beam search + exact Catalyst re-score.** The
-  query descends each shard's graph (greedy on upper layers, ef-beam on
+- **Search = per-shard beam search + exact re-score.** The query
+  descends each shard's graph (greedy on upper layers, ef-beam on
   layer 0) to produce per-shard candidates; the FINAL scores come from
-  the same Catalyst `cosine` + `F.round(.., 6)` expression as
-  `brute_force_knn`, so scores are bit-identical to the exact path and
-  the graph contributes candidates only — recall is the only
-  approximation, never the numbers.
+  the same cosine + round(6) contract as `brute_force_knn`, so scores
+  are bit-identical to the exact path and the graph contributes
+  candidates only — recall is the only approximation, never the
+  numbers. Two regimes share one shard decoder (`_decode_shard`) and
+  one beam (`_beam`): the distributed probe (`hnsw_candidates`, one
+  applyInPandas group per shard, re-scored in Catalyst) and the driver
+  regime (`driver_graph` + `driver_candidates`): a graph frame served
+  from Spark's cache, with rows x dim <= DRIVER_ELEMS_CAP proven first,
+  is decoded ONCE on the driver and every later probe beams over the
+  decoded shards with no Spark job (the in-process hnswlib graph of
+  the reference); the caller re-scores with the bit-identical numpy
+  folds of operators.similarity.
 - **Determinism.** Level assignment replaces hnswlib's RNG with a
   splitmix64 hash of the vector id (same geometric distribution,
   reproducible across runs/routes); insertion order is ascending
@@ -47,6 +55,7 @@ import heapq
 import json
 import math
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -54,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .similarity import as_double, cosine
+from .similarity import DriverMemo, as_double, cosine
 
 _M64 = (1 << 64) - 1
 
@@ -141,8 +150,10 @@ def _insert_nodes(new_idxs: list[int], ids: np.ndarray, vecs: np.ndarray,
                   max_level: int, m: int,
                   ef_construction: int) -> tuple[list, int, int]:
     """Algorithm 1 insertion of `new_idxs` (in order) into an existing
-    layered adjacency. Returns the grown (adj, entry, max_level).
-    Shared by the cold build and the incremental `hnsw_add`."""
+    layered adjacency (empty: [dict()], entry -1, max_level -1). Returns
+    the grown (adj, entry, max_level). Shared by the cold build and the
+    incremental `hnsw_add`; ids ascending is the deterministic cold-build
+    insertion order."""
     m_l = 1.0 / math.log(m) if m > 1 else 1.0
     m_max, m_max0 = m, 2 * m
     for idx in new_idxs:
@@ -179,19 +190,46 @@ def _insert_nodes(new_idxs: list[int], ids: np.ndarray, vecs: np.ndarray,
     return adj, entry, max_level
 
 
-def _build_shard(ids: np.ndarray, vecs: np.ndarray, m: int,
-                 ef_construction: int) -> list[tuple[int, int, list[int]]]:
-    """Build one shard's HNSW graph. Returns (vec_id, level, nbr_ids)
-    rows, one per (node, layer). vecs must be unit-normalized float64;
-    ids ascending (the deterministic insertion order)."""
-    adj, _, _ = _insert_nodes(list(range(len(ids))), ids, vecs, [dict()],
-                              -1, -1, m, ef_construction)
-    rows = []
-    for lc, layer in enumerate(adj):
-        for node, nbrs in layer.items():
-            rows.append((int(ids[node]), lc,
-                         [int(ids[nb]) for nb in nbrs]))
-    return rows
+def _unit_rows(v) -> np.ndarray:
+    """Row-normalize vectors to float64 unit length (zero rows stay 0)."""
+    vecs = np.array(v, dtype=np.float64)
+    nrm = np.sqrt((vecs * vecs).sum(axis=1))
+    nrm[nrm == 0.0] = 1.0
+    return vecs / nrm[:, None]
+
+
+def _shard_frame(shard: int, ids: np.ndarray, vecs: np.ndarray,
+                 adj: list[dict[int, list[int]]]) -> pd.DataFrame:
+    """One shard's adjacency as graph rows, one per (node, layer); the
+    unit vector rides on level-0 rows only."""
+    rows = [(int(ids[node]), lc, [int(ids[nb]) for nb in nbrs],
+             vecs[node].tolist() if lc == 0 else None)
+            for lc, layer in enumerate(adj) for node, nbrs in layer.items()]
+    return pd.DataFrame({
+        "shard": [shard] * len(rows),
+        "vec_id": [r[0] for r in rows],
+        "level": [r[1] for r in rows],
+        "nbrs": [r[2] for r in rows],
+        "uv": [r[3] for r in rows],
+    })
+
+
+def _decode_shard(pdf: pd.DataFrame) -> tuple:
+    """One shard's graph rows -> (ids ascending, unit vectors, per-level
+    adjacency over row positions, entry position, top level) — the one
+    decoder behind the distributed probe, hnsw_add and the driver memo.
+    Positions follow vec_id order, so heap ties break on id whatever
+    order the rows arrive in. Entry = the top layer's min-id node."""
+    l0 = pdf[pdf["level"] == 0].sort_values("vec_id")
+    ids = l0["vec_id"].to_numpy(dtype=np.int64)
+    vecs = np.array(l0["uv"].tolist(), dtype=np.float64)
+    pos = {int(v): j for j, v in enumerate(ids)}
+    max_level = int(pdf["level"].max())
+    adj: list[dict[int, list[int]]] = [dict() for _ in range(max_level + 1)]
+    for lvl, vid, nbrs in zip(pdf["level"], pdf["vec_id"], pdf["nbrs"]):
+        adj[int(lvl)][pos[int(vid)]] = [pos[int(n)] for n in nbrs]
+    entry = min(adj[max_level].keys(), key=lambda j: ids[j])
+    return ids, vecs, adj, entry, max_level
 
 
 _GRAPH_SCHEMA = T.StructType([
@@ -216,20 +254,10 @@ def hnsw_build(emb: DataFrame, *, n_shards: int = 4, m: int = 16,
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        vecs = np.array(pdf["v"].tolist(), dtype=np.float64)
-        nrm = np.sqrt((vecs * vecs).sum(axis=1))
-        nrm[nrm == 0.0] = 1.0
-        vecs = vecs / nrm[:, None]
-        rows = _build_shard(ids, vecs, m, ef_construction)
-        shard = int(pdf["shard"].iloc[0])
-        uv_by_id = {int(i): vecs[j].tolist() for j, i in enumerate(ids)}
-        return pd.DataFrame({
-            "shard": [shard] * len(rows),
-            "vec_id": [r[0] for r in rows],
-            "level": [r[1] for r in rows],
-            "nbrs": [r[2] for r in rows],
-            "uv": [uv_by_id[r[0]] if r[1] == 0 else None for r in rows],
-        })
+        vecs = _unit_rows(pdf["v"].tolist())
+        adj, _, _ = _insert_nodes(list(range(len(ids))), ids, vecs,
+                                  [dict()], -1, -1, m, ef_construction)
+        return _shard_frame(int(pdf["shard"].iloc[0]), ids, vecs, adj)
 
     base = emb.select(
         F.col(id_col).cast("long").alias("vec_id"),
@@ -259,51 +287,22 @@ def hnsw_add(graph: DataFrame, new_emb: DataFrame, *, n_shards: int,
     def grow(gpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
         if len(npdf) == 0:
             return gpdf
-        shard = int(npdf["shard"].iloc[0])
         npdf = npdf.sort_values("vec_id").reset_index(drop=True)
-        nvecs = np.array(npdf["v"].tolist(), dtype=np.float64)
-        nrm = np.sqrt((nvecs * nvecs).sum(axis=1))
-        nrm[nrm == 0.0] = 1.0
-        nvecs = nvecs / nrm[:, None]
-        if len(gpdf) == 0:
-            ids = npdf["vec_id"].to_numpy(dtype=np.int64)
-            rows = _build_shard(ids, nvecs, m, ef_construction)
-            uv = {int(i): nvecs[j].tolist() for j, i in enumerate(ids)}
-        else:
-            l0 = gpdf[gpdf["level"] == 0].sort_values("vec_id")
-            old_ids = l0["vec_id"].to_numpy(dtype=np.int64)
-            dup = set(old_ids.tolist()) & set(npdf["vec_id"].tolist())
+        ids = npdf["vec_id"].to_numpy(dtype=np.int64)
+        vecs = _unit_rows(npdf["v"].tolist())
+        adj, entry, max_level, n_old = [dict()], -1, -1, 0
+        if len(gpdf):
+            old_ids, old_vecs, adj, entry, max_level = _decode_shard(gpdf)
+            dup = set(old_ids.tolist()) & set(ids.tolist())
             if dup:
                 raise ValueError(f"hnsw_add: ids already indexed: "
                                  f"{sorted(dup)[:5]}")
-            ids = np.concatenate(
-                [old_ids, npdf["vec_id"].to_numpy(dtype=np.int64)])
-            vecs = np.vstack([np.array(l0["uv"].tolist(),
-                                       dtype=np.float64), nvecs])
-            pos = {int(v): j for j, v in enumerate(ids)}
-            max_level = int(gpdf["level"].max())
-            adj: list[dict[int, list[int]]] = \
-                [dict() for _ in range(max_level + 1)]
-            for lvl, vid, nbrs in zip(gpdf["level"], gpdf["vec_id"],
-                                      gpdf["nbrs"]):
-                adj[int(lvl)][pos[int(vid)]] = [pos[int(n)] for n in nbrs]
-            entry = min(adj[max_level].keys(), key=lambda j: ids[j])
-            adj, _, _ = _insert_nodes(
-                list(range(len(old_ids), len(ids))), ids, vecs, adj,
-                entry, max_level, m, ef_construction)
-            rows = []
-            for lc, layer in enumerate(adj):
-                for node, nbrs in layer.items():
-                    rows.append((int(ids[node]), lc,
-                                 [int(ids[nb]) for nb in nbrs]))
-            uv = {int(i): vecs[j].tolist() for j, i in enumerate(ids)}
-        return pd.DataFrame({
-            "shard": [shard] * len(rows),
-            "vec_id": [r[0] for r in rows],
-            "level": [r[1] for r in rows],
-            "nbrs": [r[2] for r in rows],
-            "uv": [uv[r[0]] if r[1] == 0 else None for r in rows],
-        })
+            n_old = len(old_ids)
+            ids = np.concatenate([old_ids, ids])
+            vecs = np.vstack([old_vecs, vecs])
+        adj, _, _ = _insert_nodes(list(range(n_old, len(ids))), ids, vecs,
+                                  adj, entry, max_level, m, ef_construction)
+        return _shard_frame(int(npdf["shard"].iloc[0]), ids, vecs, adj)
 
     new_base = new_emb.select(
         F.col(id_col).cast("long").alias("vec_id"),
@@ -334,26 +333,25 @@ def hnsw_load(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
 
 # --------------------------------------------------------------- search
 
-def _search_shard(pdf: pd.DataFrame, qv: np.ndarray, ef: int,
-                  exclude: int) -> list[tuple[int, float]]:
-    """Beam-search one shard's graph rows for the ef closest candidates.
-    Returns (vec_id, -dist) pairs; final scoring happens in Catalyst."""
-    l0 = pdf[pdf["level"] == 0]
-    ids = l0["vec_id"].to_numpy(dtype=np.int64)
-    pos = {int(v): j for j, v in enumerate(ids)}
-    vecs = np.array(l0["uv"].tolist(), dtype=np.float64)
-    max_level = int(pdf["level"].max())
-    adj = [dict() for _ in range(max_level + 1)]
-    for lvl, vid, nbrs in zip(pdf["level"], pdf["vec_id"], pdf["nbrs"]):
-        adj[int(lvl)][pos[int(vid)]] = [pos[int(n)] for n in nbrs]
-    # entry point: a node on the top layer (min id — deterministic)
-    entry = min(adj[max_level].keys(), key=lambda j: ids[j])
+def _beam(shard: tuple, qv: np.ndarray, ef: int,
+          exclude: int) -> list[tuple[int, float]]:
+    """Beam-search one decoded shard (`_decode_shard`) for the ef closest
+    candidates: greedy descent on the upper layers, an ef-beam on layer
+    0. Returns (vec_id, -dist) pairs; final scoring happens elsewhere."""
+    ids, vecs, adj, entry, max_level = shard
     dists: dict[int, float] = {}
     eps = [entry]
     for lc in range(max_level, 0, -1):
         eps = [_search_layer(qv, eps, 1, adj[lc], vecs, dists)[0][1]]
     w = _search_layer(qv, eps, ef, adj[0], vecs, dists)
     return [(int(ids[j]), -dq) for dq, j in w if int(ids[j]) != exclude]
+
+
+def _unit_query(qvec) -> np.ndarray:
+    """A literal query vector as float64 unit length (zero stays zero)."""
+    qv = np.asarray([float(x) for x in qvec], dtype=np.float64)
+    n = float(np.sqrt(qv @ qv))
+    return qv / (n or 1.0)
 
 
 def hnsw_knn(graph: DataFrame, emb: DataFrame, query_id: int, k: int, *,
@@ -391,11 +389,7 @@ def hnsw_knn_many(graph: DataFrame, emb: DataFrame, query_ids: list[int],
     if not qrows:
         return spark.createDataFrame(
             [], "query_id long, rank long, vec_id long, cos double")
-    qmat = {int(r["query_id"]):
-            np.asarray(r["qv"], dtype=np.float64) for r in qrows}
-    for qid, qv in qmat.items():
-        n = float(np.sqrt(np.dot(qv, qv)))
-        qmat[qid] = qv / (n or 1.0)
+    qmat = {int(r["query_id"]): _unit_query(r["qv"]) for r in qrows}
     bq = spark.sparkContext.broadcast(
         {q: v.tolist() for q, v in qmat.items()})
     ef_eff = max(int(ef), int(k))
@@ -403,9 +397,10 @@ def hnsw_knn_many(graph: DataFrame, emb: DataFrame, query_ids: list[int],
     def probe(pdf: pd.DataFrame) -> pd.DataFrame:
         qs = {q: np.asarray(v, dtype=np.float64)
               for q, v in bq.value.items()}
+        shard = _decode_shard(pdf)
         out_q, out_id = [], []
         for qid, qv in sorted(qs.items()):
-            for vid, _ in _search_shard(pdf, qv, ef_eff, qid):
+            for vid, _ in _beam(shard, qv, ef_eff, qid):
                 out_q.append(qid)
                 out_id.append(vid)
         return pd.DataFrame({"query_id": out_q, "vec_id": out_id})
@@ -439,18 +434,55 @@ def hnsw_candidates(graph: DataFrame, qvec, *, ef: int = 64,
     bigger ef = higher recall, more scanned). Scores are NOT returned:
     the caller re-scores the candidate set exactly in Catalyst (the
     same contract as hnsw_knn_many, so ANN-vs-exact differences are
-    recall-only, never score drift)."""
+    recall-only, never score drift). The distributed form of
+    `driver_candidates`."""
     spark = graph.sparkSession
-    qv = np.asarray([float(x) for x in qvec], dtype=np.float64)
-    n = float(np.sqrt(qv @ qv))
-    bq = spark.sparkContext.broadcast((qv / (n or 1.0)).tolist())
+    bq = spark.sparkContext.broadcast(_unit_query(qvec).tolist())
     ef = int(ef)
 
     def probe(pdf: pd.DataFrame) -> pd.DataFrame:
         qu = np.asarray(bq.value, dtype=np.float64)
         return pd.DataFrame(
             {"vec_id": [vid for vid, _
-                        in _search_shard(pdf, qu, ef, int(exclude))]})
+                        in _beam(_decode_shard(pdf), qu, ef,
+                                 int(exclude))]})
 
     return (graph.groupBy("shard").applyInPandas(probe, "vec_id long")
             .distinct())
+
+
+class DriverGraph(NamedTuple):
+    """A graph frame decoded on the driver: one `_decode_shard` tuple per
+    shard (shard order) and the frame's rows x dim."""
+    shards: tuple
+    elems: int
+
+
+_GRAPHS = DriverMemo()
+
+
+def _decode_graph(graph: DataFrame) -> DriverGraph:
+    pdf = graph.select("shard", "vec_id", "level", "nbrs", "uv").toPandas()
+    n, dim = len(pdf), max((len(u) for u in pdf["uv"] if u is not None),
+                           default=0)
+    return DriverGraph(tuple(_decode_shard(g) for _, g
+                             in pdf.groupby("shard", sort=True)),
+                       n * max(1, dim))
+
+
+def driver_graph(graph: DataFrame) -> DriverGraph | None:
+    """The driver-resident decode of a cache-served graph frame (decoded
+    once, under the DriverMemo rules: served from Spark's cache, rows x
+    dim <= DRIVER_ELEMS_CAP proven first), or None when it stays
+    distributed."""
+    return _GRAPHS.get(graph, "graph", "uv", lambda: _decode_graph(graph))
+
+
+def driver_candidates(dg: DriverGraph, qvec, *, ef: int,
+                      exclude: int = -1) -> np.ndarray:
+    """hnsw_candidates on a decoded graph: the union of the SAME per-shard
+    ef-beams, as ascending unique vec_ids. No Spark job."""
+    qu = _unit_query(qvec)
+    got = [vid for shard in dg.shards
+           for vid, _ in _beam(shard, qu, int(ef), int(exclude))]
+    return np.unique(np.asarray(got, dtype=np.int64))

@@ -21,6 +21,10 @@ the table is written partitionBy(cell).
 
 from __future__ import annotations
 
+import threading
+import weakref
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -101,6 +105,101 @@ def _n_and_dim(emb: DataFrame, vec_col: str) -> tuple[int, int]:
     row = emb.agg(F.count(F.lit(1)).alias("n"),
                   F.max(F.size(F.col(vec_col))).alias("d")).first()
     return int(row["n"]), int(row["d"] or 0)
+
+
+def _cache_served(df: DataFrame) -> bool:
+    """True when Spark serves `df` from its cache: every leaf of the plan,
+    after cache substitution, is an InMemoryRelation or a LocalRelation
+    (the frame's rows are a fixed snapshot, like a warm SegmentIndex).
+    A list-built frame (LogicalRDD) or a file scan (LogicalRelation) is
+    not. Costs a few py4j calls, so callers check it once per frame."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return all(leaves.apply(i).nodeName() in ("InMemoryRelation",
+                                              "LocalRelation")
+               for i in range(leaves.size()))
+
+
+class DriverMemo:
+    """First-touch driver decodes of cache-served frames, keyed weakly by
+    the caller's DataFrame object (a dropped frame frees its entry).
+
+    `get` decodes a frame at most once per key: it proves the frame is
+    served from Spark's cache and holds rows x dim <= DRIVER_ELEMS_CAP
+    (one `_n_and_dim` job) before the gather, under a lock with a
+    double-checked lookup, and publishes one immutable object per frame
+    (a fresh dict; entries are never mutated). A refused frame is
+    remembered as None so it never pays the checks again. Decoded
+    objects carry `elems`, re-checked against the current cap per call."""
+
+    def __init__(self):
+        self._memo: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+        self._lock = threading.Lock()
+
+    def get(self, df: DataFrame, key, vec_col: str, decode):
+        got = self._memo.get(df, {}).get(key, self)
+        if got is self:
+            with self._lock:
+                per = self._memo.get(df, {})
+                got = per.get(key, self)
+                if got is self:
+                    got = None
+                    if _cache_served(df):
+                        n, dim = _n_and_dim(df, vec_col)
+                        if n * max(1, dim) <= DRIVER_ELEMS_CAP:
+                            got = decode()
+                    self._memo[df] = {**per, key: got}
+        if got is None or got.elems > DRIVER_ELEMS_CAP:
+            return None
+        return got
+
+
+class DriverVectors(NamedTuple):
+    """A vectors frame decoded on the driver: ids ascending (unique), the
+    float64 matrix V in id order, its `_fold_norm` row norms (all > 0),
+    the uniform dim and rows x dim."""
+    ids: "np.ndarray"
+    V: "np.ndarray"
+    norms: "np.ndarray"
+    dim: int
+    elems: int
+
+
+_VECTORS = DriverMemo()
+
+
+def _decode_vectors(df: DataFrame, id_col: str,
+                    vec_col: str) -> DriverVectors | None:
+    """Gather (id, vector) to the driver; None unless ids are non-null and
+    unique and every vector is non-null, finite, non-zero and of one
+    length (the frames the driver knn path mirrors exactly; the rest stay
+    distributed)."""
+    import numpy as np
+
+    pdf = df.select(F.col(id_col).cast("bigint").alias("id"),
+                    as_double(F.col(vec_col)).alias("v")).toPandas()
+    vs = pdf["v"].tolist()
+    if (not len(vs) or pdf["id"].isna().any()
+            or any(v is None for v in vs)
+            or len({len(v) for v in vs}) != 1):
+        return None
+    ids = pdf["id"].to_numpy(np.int64)
+    if np.unique(ids).size != ids.size:
+        return None
+    order = np.argsort(ids, kind="stable")
+    V = np.array(vs, dtype=np.float64)[order]
+    norms = _fold_norm(V)
+    if not V.shape[1] or not norms.all() or not np.isfinite(V).all():
+        return None
+    return DriverVectors(ids[order], V, norms, int(V.shape[1]),
+                         int(V.size))
+
+
+def driver_vectors(df: DataFrame, id_col: str,
+                   vec_col: str) -> DriverVectors | None:
+    """The driver-resident decode of a cache-served vectors frame, or
+    None when the frame stays distributed (see DriverMemo)."""
+    return _VECTORS.get(df, (id_col, vec_col), vec_col,
+                        lambda: _decode_vectors(df, id_col, vec_col))
 
 
 def _round_half_up(arr, nd: int):

@@ -55,7 +55,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .search import SegmentIndex, search_dismax
+from .search import (TOPK_SCHEMA, SegmentIndex, _local_frame,
+                     search_dismax)
 
 def _split_on(toks: list[str], op: str) -> list[list[str]]:
     """Split a token list on an operator token, dropping empty segments
@@ -653,10 +654,29 @@ def _query_match_set(index, q: dict):
         "range / exists / terms_set / rank_feature / match_all)")
 
 
+#: ES's 400 reasons for a malformed knn query_vector
+_ZERO_MAGNITUDE = ("The [cosine] similarity does not support vectors "
+                   "with zero magnitude")
+_DIMS = ("The query vector has a different number of dimensions [{}] "
+         "than the document vectors [")
+
+
+def _knn_section(spec: dict) -> tuple[str, list[float], int, float]:
+    """(field, query vector, k, boost) of one ES 8 knn section. A query
+    vector of zero magnitude (the cosine denominator) is ES's 400,
+    raised before any plan or decode."""
+    qvec = [float(x) for x in spec["query_vector"]]
+    if sum(x * x for x in qvec) == 0.0:
+        raise ValueError(_ZERO_MAGNITUDE)
+    return (str(spec.get("field", "embedding")), qvec,
+            int(spec.get("k", 10)), float(spec.get("boost", 1.0)))
+
+
 def _knn_contrib(index, vectors: DataFrame, spec: dict, *,
                  vec_id_col: str = "doc_id",
                  ann: DataFrame | None = None) -> DataFrame:
-    """One ES 8 knn section -> its (doc_id, kscore) hit contribution.
+    """One ES 8 knn section -> its (doc_id, kscore) hit contribution —
+    the distributed regime (`_knn_local` is the driver one).
 
     Global top-k by the ES cosine dense_vector similarity score
     (1 + cos) / 2 (rounded 6 dp, doc_id tie-break), filter clauses
@@ -672,13 +692,12 @@ def _knn_contrib(index, vectors: DataFrame, spec: dict, *,
     filtered section stays exact even when ann is given: ES searches
     the graph WITH the filter (deepening until k pass), and a
     post-filtered beam would silently under-return instead — exactness
-    is the honest substitute."""
+    is the honest substitute. A zero-magnitude query vector raises
+    ValueError here; a scored vector of another dimension fails the
+    plan with ES's dimension reason (an assert_true guard)."""
     from ..operators.similarity import as_double, cosine
 
-    field = str(spec.get("field", "embedding"))
-    qvec = [float(x) for x in spec["query_vector"]]
-    k = int(spec.get("k", 10))
-    boost = float(spec.get("boost", 1.0))
+    field, qvec, k, boost = _knn_section(spec)
     rel = vectors.select(
         F.col(vec_id_col).cast("bigint").alias("doc_id"),
         as_double(F.col(field)).alias("__v"))
@@ -697,10 +716,15 @@ def _knn_contrib(index, vectors: DataFrame, spec: dict, *,
                        "doc_id", "left_semi")
     rel = index._exclude_dead(rel)
     qlit = F.lit(qvec).cast("array<double>")
+    dims_ok = F.col("__v").isNull() | (F.size("__v") == len(qvec))
+    reason = F.concat(F.lit(_DIMS.format(len(qvec))),
+                      F.size("__v").cast("string"), F.lit("]"))
     scored = rel.select(
         "doc_id",
-        F.round((F.lit(1.0) + cosine(F.col("__v"), qlit)) / F.lit(2.0), 6)
-        .alias("kscore"))
+        F.coalesce(
+            F.assert_true(dims_ok, reason),
+            F.round((F.lit(1.0) + cosine(F.col("__v"), qlit))
+                    / F.lit(2.0), 6)).alias("kscore"))
     topk = scored.orderBy(F.desc("kscore"), F.asc("doc_id")).limit(k)
     if boost != 1.0:
         topk = topk.select(
@@ -708,21 +732,110 @@ def _knn_contrib(index, vectors: DataFrame, spec: dict, *,
     return topk
 
 
+def _live_ids(index):
+    """(ok, dead ids or None): ok when the index's tombstones are on the
+    driver (or there are none) — a driver regime's precondition."""
+    T, ids, _ = index._tombstones()
+    return (not T or ids is not None), (ids if T else None)
+
+
+def _knn_local(index, vectors: DataFrame, secs: list[dict], qside, *,
+               vec_id_col: str, ann: DataFrame | None, size: int):
+    """The driver regime of a knn body: its ranked hits in a job-free
+    local frame, or None when a gate fails and the distributed plan
+    runs. Gates: no section has a filter; the query side (if any) ran
+    in a driver regime (`qside` holds pandas scores); every index's
+    tombstones are on the driver; and `vectors` (and `ann`) are decoded
+    in the driver memo (operators.similarity.driver_vectors /
+    operators.hnsw.driver_graph: served from Spark's cache, rows x dim
+    <= DRIVER_ELEMS_CAP proven before the one decode).
+
+    Mirrors the distributed plan exactly: candidates are every live row
+    (exact) or the union of the SAME per-shard beams at
+    ef = max(num_candidates, k); kscore = round6((1 + cos) / 2) with the
+    bit-identical sequential folds; each section cut to k by (kscore
+    desc, doc_id asc), then boost-scaled without re-rounding; per-doc
+    sums in section order (the query side last), rounded 6 dp, cut to
+    `size` by `_cut_topk`."""
+    import numpy as np
+    import pandas as pd
+
+    from ..operators.hnsw import driver_candidates, driver_graph
+    from ..operators.similarity import (_fold_dot, _fold_norm,
+                                        _round_half_up, driver_vectors)
+
+    if any(s.get("filter") is not None for s in secs):
+        return None
+    if qside is not None and not isinstance(qside[1], pd.DataFrame):
+        return None
+    ok, dead = _live_ids(index)
+    qok, qdead = _live_ids(qside[0]) if qside is not None else (True, None)
+    if not (ok and qok):
+        return None
+    dg = driver_graph(ann) if ann is not None else None
+    if ann is not None and dg is None:
+        return None
+    parsed = [_knn_section(s) for s in secs]
+    dvs = [driver_vectors(vectors, vec_id_col, p[0]) for p in parsed]
+    if any(dv is None for dv in dvs):
+        return None
+    parts = []
+    for spec, (_, qvec, k, boost), dv in zip(secs, parsed, dvs):
+        if len(qvec) != dv.dim:
+            raise ValueError(_DIMS.format(len(qvec)) + f"{dv.dim}]")
+        if dg is None:
+            pos = np.arange(dv.ids.size)
+        else:
+            ef = max(int(spec.get("num_candidates", 0) or 0), k)
+            pos = np.flatnonzero(np.isin(
+                dv.ids, driver_candidates(dg, qvec, ef=ef)))
+        if dead is not None:
+            pos = pos[~np.isin(dv.ids[pos], dead)]
+        q = np.asarray([qvec], dtype=np.float64)
+        cos = (_fold_dot(dv.V[pos], q)[:, 0]
+               / (dv.norms[pos] * _fold_norm(q)[0]))
+        ks = _round_half_up((1.0 + cos) / 2.0, 6)
+        top = np.lexsort((dv.ids[pos], -ks))[:k]
+        parts.append((dv.ids[pos][top],
+                      ks[top] * boost if boost != 1.0 else ks[top]))
+    if qside is not None:
+        qs = qside[1]
+        if qdead is not None:
+            qs = qs[~np.isin(qs["doc_id"].to_numpy(np.int64), qdead)]
+        parts.append((qs["doc_id"].to_numpy(np.int64),
+                      qs["score"].to_numpy(np.float64)))
+    ids = np.unique(np.concatenate([p[0] for p in parts]))
+    acc = np.zeros(ids.size)
+    for pid, val in parts:  # ids within a part are unique
+        acc[np.searchsorted(ids, pid)] += val
+    return index._cut_topk(
+        pd.DataFrame({"doc_id": ids, "score": _round_half_up(acc, 6)}),
+        size)
+
+
 def _query_scores_full(indexes, q: dict):
-    """Complete ROUNDED (doc_id, score) relation of the query section of
-    a hybrid knn body — every matching doc, 6 dp. ES combines knn with
-    the query disjunctively over the query's FULL match set (not its
-    top-size page), so a doc ranked past `size` on text alone can still
-    enter the combined top hits. Returns (relation, index)."""
+    """The query section of a hybrid knn body: (index, its complete
+    ROUNDED (doc_id, score) rows — every matching doc, 6 dp). ES
+    combines knn with the query disjunctively over the query's FULL
+    match set (not its top-size page), so a doc ranked past `size` on
+    text alone can still enter the combined top hits. The rows are a
+    pandas frame when the query side ran in a driver regime
+    (SegmentIndex._score_all_local, or a bool tree's local form), else a
+    DataFrame."""
+    import numpy as np
+
+    from ..operators.similarity import _round_half_up
+    from .search import _score_rows
+
     kind, spec = next(iter(q.items()))
     si = (next(iter(indexes.values()))
           if isinstance(indexes, dict) else indexes)
     if kind == "bool":
-        rel = si._bool_tree_rel(_bool_to_tree(si, spec))
+        rel, local = si._bool_tree(_bool_to_tree(si, spec))
         if rel is None:
-            rel = si.spark.createDataFrame([], "doc_id bigint, score double")
-        return rel.select(
-            "doc_id", F.round(F.col("score"), 6).alias("score")), si
+            return si, _score_rows([])
+        rel = rel.select("doc_id", F.round(F.col("score"), 6).alias("score"))
+        return si, (_score_rows(rel.collect()) if local else rel)
     if kind in ("match", "query_string", "multi_match"):
         if kind == "match":
             field, text = _field_text(spec)
@@ -740,8 +853,12 @@ def _query_scores_full(indexes, q: dict):
                 raise ValueError(
                     "hybrid knn+query supports OR text queries")
             text = parts[0]
-        return si.score_all(text).select(
-            "doc_id", F.round("score", 6).alias("score")), si
+        pdf = si._score_all_local(text)
+        if pdf is None:
+            return si, si.score_all(text).select(
+                "doc_id", F.round("score", 6).alias("score"))
+        return si, pdf.assign(score=_round_half_up(
+            pdf["score"].to_numpy(np.float64), 6))
     raise ValueError(f"hybrid knn+query: unsupported query kind {kind} "
                      "(match / query_string / multi_match / bool)")
 
@@ -773,7 +890,15 @@ def es_search(indexes, body: dict, size: int = 10, *,
     knn is exact by default; pass `ann=` (an operators.hnsw graph over
     the same vectors) to run unfiltered sections approximately with
     `num_candidates` as the per-shard beam width (ES's approximate
-    engine — recall/latency trade, scores on hits unchanged).
+    engine — recall/latency trade, scores on hits unchanged). Two
+    regimes, row-identical: when `vectors` (and `ann`) are served from
+    Spark's cache and fit DRIVER_ELEMS_CAP they are decoded once on the
+    driver, and a body with no knn filter whose query side and
+    tombstones are driver-side too runs with no Spark job
+    (`_knn_local`); otherwise the distributed plan (`_knn_contrib` +
+    one union/aggregate/top-k) runs. A zero-magnitude or
+    wrong-dimension query_vector is ES's 400 (ValueError; a distributed
+    plan fails with the same dimension reason).
 
     ES pagination: a top-level `from` in the body (or a `from_` key)
     skips that many hits — the engine evaluates top-(from+size) and
@@ -868,11 +993,21 @@ def es_search(indexes, body: dict, size: int = 10, *,
         si0 = (next(iter(indexes.values()))
                if isinstance(indexes, dict) else indexes)
         secs = knn_raw if isinstance(knn_raw, list) else [knn_raw]
+        for s in secs:
+            _knn_section(s)  # ES's 400s before any plan or decode
+        qside = (_query_scores_full(indexes, body["query"])
+                 if body.get("query") is not None else None)
+        hits = _knn_local(si0, vectors, secs, qside, vec_id_col=vec_id_col,
+                          ann=ann, size=size)
+        if hits is not None:
+            return hits
         rels = [_knn_contrib(si0, vectors, s, vec_id_col=vec_id_col,
                              ann=ann)
                 for s in secs]
-        if body.get("query") is not None:
-            qrel, siq = _query_scores_full(indexes, body["query"])
+        if qside is not None:
+            siq, qrel = qside
+            if not isinstance(qrel, DataFrame):
+                qrel = _local_frame(siq.spark, qrel, TOPK_SCHEMA)
             rels.append(siq._exclude_dead(qrel).select(
                 "doc_id", F.col("score").alias("kscore")))
         # combine = UNION + one hash aggregate, not a cascade of full

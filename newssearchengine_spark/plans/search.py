@@ -43,6 +43,9 @@ from .index_build import term_bucket
 
 TOPK_SCHEMA = "doc_id bigint, score double"
 RANKED_SCHEMA = "rank bigint, doc_id bigint, score double"
+# the segment columns the taat scorers read
+_SCORE_COLS = ("doc_part", "term", "docs", "tfs", "dls", "block_last",
+               "block_max")
 PHRASE_CAND_SCHEMA = "doc_id bigint, occ bigint, dl bigint"
 
 # Phrase-candidate rows are bounded by the min posting df of the phrase's
@@ -405,6 +408,13 @@ def _local_frame(spark: SparkSession, pdf: pd.DataFrame,
 
     return spark.createDataFrame(
         pa.Table.from_pandas(pdf, preserve_index=False), schema)
+
+
+def _score_rows(rows) -> pd.DataFrame:
+    """Collected (doc_id, score) rows as a typed pandas frame."""
+    return pd.DataFrame({
+        "doc_id": np.array([r[0] for r in rows], dtype=np.int64),
+        "score": np.array([r[1] for r in rows], dtype=np.float64)})
 
 
 def _eager_topk(rel: DataFrame, out: DataFrame,
@@ -786,8 +796,7 @@ class SegmentIndex:
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in terms}
         scorer = _make_scorer(idf_map, k1=k1, b=b, avgdl=avgdl, k=k,
                               mode=mode, after=after)
-        cols = ["doc_part", "term", "docs", "tfs", "dls",
-                "block_last", "block_max"]
+        cols = list(_SCORE_COLS)
         if mode == "taat" and self._driver_ok(terms):
             # driver regime (warm engine only): the pruned segment rows
             # (bytes blobs, ~1 B/posting) come straight from the parquet
@@ -840,10 +849,7 @@ class SegmentIndex:
         projection over a local relation, whose collect() the optimizer
         evaluates on the driver (ConvertToLocalRelation) without a job."""
         if isinstance(cand, DataFrame):
-            rows = cand.collect()
-            cand = pd.DataFrame({
-                "doc_id": np.array([r[0] for r in rows], dtype=np.int64),
-                "score": np.array([r[1] for r in rows], dtype=np.float64)})
+            cand = _score_rows(cand.collect())
         cand = (cand.sort_values(["score", "doc_id"], ascending=[False, True],
                                  kind="mergesort")
                 .head(k).reset_index(drop=True))
@@ -1232,31 +1238,53 @@ class SegmentIndex:
     def score_all(self, query) -> DataFrame:
         """Complete (doc_id, score double) relation for an OR-disjunction —
         every matching doc, no top-k cut. The full-score form multi-field
-        DisMax and LTR feature pipelines consume. Same pruned segment scan
-        as search(); exact taat accumulation (per-doc ranges are disjoint,
-        so per-part scores are complete)."""
-        terms = self.analyze_query(query) if isinstance(query, str) else list(query)
-        terms = sorted(set(terms))
-        dfs = self.term_dfs(terms)
-        terms = [t for t in terms if dfs.get(t, 0) > 0]
-        if not terms:
-            return self._empty(TOPK_SCHEMA)
-        n_docs = float(self.stats["n_docs"])
-        avgdl = float(self.stats["avgdl"])
-        k1, b = float(self.stats["k1"]), float(self.stats["b"])
+        DisMax, hybrid knn and LTR feature pipelines consume. Same pruned
+        segment scan as search(); exact taat accumulation (per-doc ranges
+        are disjoint, so per-part scores are complete). Under the driver
+        rule (`_driver_ok`, as in search) the scores come from
+        `_score_all_local` in a job-free local frame; otherwise the
+        distributed scan→shuffle→applyInPandas plan runs. Both regimes
+        are row/score-identical."""
+        pdf = self._score_all_local(query)
+        if pdf is not None:
+            return (_local_frame(self.spark, pdf, TOPK_SCHEMA) if len(pdf)
+                    else self._empty(TOPK_SCHEMA))
+        terms, scorer = self._full_scorer(query)
         n_buckets = int(self.stats["n_buckets"])
-        idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in terms}
         buckets = sorted({term_bucket(t, n_buckets) for t in terms})
         seg = (
             self._segments
             .filter(F.col("bucket").isin(buckets))
             .filter(F.col("term").isin(terms))
-            .select("doc_part", "term", "docs", "tfs", "dls",
-                    "block_last", "block_max")
+            .select(*_SCORE_COLS)
         )
-        scorer = _make_scorer(idf_map, k1=k1, b=b, avgdl=avgdl, k=None,
-                              mode="taat")
         return self._by_part(seg).applyInPandas(scorer, TOPK_SCHEMA)
+
+    def _score_all_local(self, query) -> pd.DataFrame | None:
+        """The driver regime of score_all: its complete (doc_id, score)
+        rows as a pandas frame — the SAME per-part scorer over a pyarrow
+        read of the terms' segment rows, no Spark job — or None when the
+        proven posting volume fails `_driver_ok` (cold handle or above
+        SEARCH_DRIVER_CAP)."""
+        terms, scorer = self._full_scorer(query)
+        if not terms:
+            return _score_rows([])
+        if not self._driver_ok(terms):
+            return None
+        cand = self._per_part_local(scorer, terms, list(_SCORE_COLS))
+        return _score_rows([]) if cand is None else cand
+
+    def _full_scorer(self, query) -> tuple[list[str], object]:
+        """(terms present in the dictionary, their no-cut taat scorer)."""
+        terms = self.analyze_query(query) if isinstance(query, str) else list(query)
+        terms = sorted(set(terms))
+        dfs = self.term_dfs(terms)
+        terms = [t for t in terms if dfs.get(t, 0) > 0]
+        n_docs = float(self.stats["n_docs"])
+        idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in terms}
+        return terms, _make_scorer(
+            idf_map, k1=float(self.stats["k1"]), b=float(self.stats["b"]),
+            avgdl=float(self.stats["avgdl"]), k=None, mode="taat")
 
     def _scores_for_docs(self, terms: list[str],
                          doc_ids: "np.ndarray") -> pd.DataFrame:
@@ -1294,8 +1322,7 @@ class SegmentIndex:
         # candidate mask does the rest
         if len(parts) <= 4096:
             seg = seg.filter(F.col("doc_part").isin(parts))
-        seg = seg.select("doc_part", "term", "docs", "tfs", "dls",
-                         "block_last", "block_max")
+        seg = seg.select(*_SCORE_COLS)
         scorer = _make_scorer(idf_map, k1=k1, b=b, avgdl=avgdl, k=None,
                               mode="taat", only_docs=only)
         return self._by_part(seg).applyInPandas(
@@ -3068,8 +3095,7 @@ class SegmentIndex:
         scorer = _make_multi_scorer(qlive, idf_map, k1=k1, b=b,
                                     avgdl=avgdl, k=k, mode=mode,
                                     doc_range=doc_range)
-        cols = ["doc_part", "term", "docs", "tfs", "dls",
-                "block_last", "block_max"]
+        cols = list(_SCORE_COLS)
         # Per-part output is already top-k per query, so the global answer
         # is a merge of <= n_parts * n_queries * k rows — a PROVEN bound
         # known before any job. Driver regime (taat, warm, Σdf under

@@ -331,3 +331,245 @@ def test_knn_ann_filtered_section_stays_exact(corpus, graph):
                               ann=graph).collect()]
     want = _np_topk(_np_knn_scores(V, V[1], ids=keep), 5)
     assert got == want
+
+
+# ---- driver regime: graph + vectors decoded once on the driver ---------
+
+@pytest.fixture(scope="module")
+def served(spark, corpus):
+    """The same vectors as `vecs`, but served from Spark's cache (the
+    driver regime's precondition), with an HNSW graph over them."""
+    from newssearchengine_spark.operators.hnsw import hnsw_build
+
+    _, _, V, _ = corpus
+    vecs_p = spark.createDataFrame(
+        [(i, [float(x) for x in V[i]]) for i in range(N_DOCS)],
+        "doc_id bigint, embedding array<float>").persist()
+    graph_p = hnsw_build(vecs_p.select(F.col("doc_id").alias("vec_id"),
+                                       "embedding"),
+                         n_shards=2, m=8, ef_construction=64).persist()
+    return vecs_p, graph_p
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark, corpus, tmp_path_factory):
+    """A copy of the index with some top knn and text hits deleted
+    (tombstones only, not compacted)."""
+    import shutil
+
+    from newssearchengine_spark.plans.delete import delete_docs
+
+    si, _, V, _ = corpus
+    d = str(tmp_path_factory.mktemp("esknn_tomb") / "idx")
+    shutil.copytree(si.index_dir, d)
+    dead = [d_ for d_, _ in _np_topk(_np_knn_scores(V, V[0]), 6)][::2]
+    dead += [r["doc_id"] for r in SegmentIndex(spark, d, cache=False)
+             .search(HYBRID_TEXT, 6).collect()][::2]
+    delete_docs(spark, d, sorted(set(dead)))
+    return SegmentIndex(spark, d)
+
+
+HYBRID_TEXT = "nodeCursor shardGroup streamSort"
+
+
+def _regime_bodies(V) -> list[tuple[dict, bool]]:
+    """(body, uses ann) — the shapes the driver regime serves."""
+    def qv(i):
+        return [float(x) for x in V[i]]
+
+    return [
+        ({"knn": {"field": "embedding", "query_vector": qv(0), "k": 10}},
+         False),
+        ({"knn": {"field": "embedding", "query_vector": qv(13), "k": 10,
+                  "num_candidates": 10}}, True),
+        ({"knn": {"field": "embedding", "query_vector": qv(12), "k": 10,
+                  "num_candidates": 2 * N_DOCS}}, True),
+        ({"query": {"match": {"text": HYBRID_TEXT}},
+          "knn": {"field": "embedding", "query_vector": qv(5), "k": 8,
+                  "num_candidates": 10, "boost": 0.5}}, True),
+        ({"query": {"match": {"text": HYBRID_TEXT}},
+          "knn": {"field": "embedding", "query_vector": qv(0), "k": 8}},
+         False),
+        ({"knn": [{"field": "embedding", "query_vector": qv(4), "k": 6},
+                  {"field": "embedding", "query_vector": qv(9), "k": 6,
+                   "boost": 2.0}]}, False),
+        ({"knn": {"field": "embedding", "query_vector": qv(7), "k": 10},
+          "from": 4}, False),
+    ]
+
+
+def _hits(si, body, vecs, graph):
+    return [tuple(r) for r in es_search(si, body, size=10, vectors=vecs,
+                                        ann=graph).collect()]
+
+
+def test_knn_driver_and_distributed_regimes_identical(
+        corpus, served, tombstoned, monkeypatch):
+    """A knn body over cache-served vectors (and graph) runs on the
+    driver with the same beams and bit-identical folds, so its hits must
+    equal the distributed plan's, forced by zeroing DRIVER_ELEMS_CAP —
+    on a clean index and on a tombstoned copy. The list-built `vecs` is
+    not cache-served and stays distributed."""
+    import newssearchengine_spark.operators.similarity as S
+    from newssearchengine_spark.operators.hnsw import driver_graph
+
+    si, vecs, V, _ = corpus
+    vecs_p, graph_p = served
+    assert S.driver_vectors(vecs, "doc_id", "embedding") is None
+    for idx in (si, tombstoned):
+        for body, ann in _regime_bodies(V):
+            g = graph_p if ann else None
+            drv = _hits(idx, body, vecs_p, g)
+            assert S.driver_vectors(vecs_p, "doc_id", "embedding")
+            assert not ann or driver_graph(graph_p)
+            with monkeypatch.context() as m:
+                m.setattr(S, "DRIVER_ELEMS_CAP", -1)
+                assert S.driver_vectors(vecs_p, "doc_id", "embedding") is None
+                dist = _hits(idx, body, vecs_p, g)
+            assert drv and drv == dist, body
+            if not ann:
+                assert drv == _hits(idx, body, vecs, None), body
+    dead = set(tombstoned._tombstones()[1].tolist())
+    for body, ann in _regime_bodies(V):
+        got = _hits(tombstoned, body, vecs_p, graph_p if ann else None)
+        assert not dead & {d for _, d, _ in got}
+
+
+def test_knn_driver_regime_runs_no_spark_job(spark, corpus, served,
+                                             tombstoned):
+    """On a warm memo, knn-only, ann, hybrid, multi-section and paged
+    bodies answer without launching a Spark job, with or without
+    tombstones: the graph and vectors are decoded on the driver, the
+    text side is score_all's driver regime and the cut is a local
+    frame."""
+    import time
+
+    si, _, V, _ = corpus
+    vecs_p, graph_p = served
+    sc = spark.sparkContext
+    for i, idx in enumerate((si, tombstoned)):
+        bodies = [(b, graph_p if ann else None)
+                  for b, ann in _regime_bodies(V)]
+        for body, g in bodies:  # first touch: decode + warm
+            _hits(idx, body, vecs_p, g)
+        group = f"knn-driver-regime-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            for body, g in bodies:
+                assert _hits(idx, body, vecs_p, g)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        time.sleep(1.0)  # let the listener bus deliver any job start
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("rows", [
+    [(0, [1.0, 2.0]), (1, [0.0, 0.0])],             # zero-norm vector
+    [(0, [1.0, 2.0]), (1, [1.0, 2.0, 3.0])],        # ragged dims
+    [(0, [1.0, 2.0]), (0, [2.0, 1.0])],             # duplicate id
+    [(0, [1.0, 2.0]), (1, None)],                   # null vector
+    [(0, [1.0, 2.0]), (None, [2.0, 1.0])],          # null id
+    [(0, [1.0, 2.0]), (1, [float("nan"), 1.0])],    # non-finite element
+])
+def test_driver_vectors_refuses_frames_it_cannot_mirror(spark, rows):
+    """A cache-served vectors frame whose rows the driver regime would
+    score differently from the Catalyst plan stays distributed."""
+    import newssearchengine_spark.operators.similarity as S
+
+    df = spark.createDataFrame(
+        rows, "doc_id bigint, embedding array<double>").persist()
+    assert S.driver_vectors(df, "doc_id", "embedding") is None
+    ok = spark.createDataFrame(
+        rows[:1], "doc_id bigint, embedding array<double>").persist()
+    assert S.driver_vectors(ok, "doc_id", "embedding") is not None
+
+
+@pytest.mark.parametrize("regime", ["driver", "distributed"])
+def test_knn_zero_magnitude_query_vector_is_rejected(corpus, served,
+                                                     regime):
+    """ES answers 400 to an all-zero cosine query vector; the engine
+    raises ValueError before any plan (it used to fail a task with
+    DIVIDE_BY_ZERO)."""
+    si, vecs, _, _ = corpus
+    v = served[0] if regime == "driver" else vecs
+    body = {"knn": {"field": "embedding", "query_vector": [0.0] * DIM,
+                    "k": 3}}
+    with pytest.raises(ValueError, match="zero magnitude"):
+        es_search(si, body, size=3, vectors=v).collect()
+
+
+@pytest.mark.parametrize("dim", [4, 12])
+def test_knn_query_vector_dimension_mismatch_is_rejected(corpus, served,
+                                                         dim):
+    """ES answers 400 to a query vector whose dimension differs from the
+    field's; the engine used to return k hits with null scores. The
+    driver regime raises ValueError from the memo's dim; the distributed
+    plan fails with the same reason."""
+    import re
+
+    si, vecs, _, _ = corpus
+    reason = re.escape(
+        f"The query vector has a different number of dimensions [{dim}] "
+        f"than the document vectors [{DIM}]")
+    body = {"knn": {"field": "embedding", "query_vector": [1.0] * dim,
+                    "k": 3}}
+    with pytest.raises(ValueError, match=reason):
+        es_search(si, body, size=3, vectors=served[0]).collect()
+    with pytest.raises(Exception, match=reason):
+        es_search(si, body, size=3, vectors=vecs).collect()
+
+
+def test_knn_memo_decodes_once_under_threads(corpus, served, monkeypatch):
+    """8 threads send their first knn request on a fresh memo at once:
+    the graph and the vectors are each decoded exactly once, and every
+    answer equals the distributed one."""
+    import sys
+    import threading
+
+    import newssearchengine_spark.operators.hnsw as H
+    import newssearchengine_spark.operators.similarity as S
+
+    si, vecs, V, _ = corpus
+    vecs_p, graph_p = served
+    body = _regime_bodies(V)[3][0]
+    want = _hits(si, body, vecs, graph_p)  # list-built vecs: distributed
+    monkeypatch.setattr(S, "_VECTORS", S.DriverMemo())
+    monkeypatch.setattr(H, "_GRAPHS", S.DriverMemo())
+    calls = {"vectors": 0, "graph": 0}
+    lock = threading.Lock()
+
+    def counted(name, fn):
+        def run(*a, **kw):
+            with lock:
+                calls[name] += 1
+            return fn(*a, **kw)
+        return run
+
+    monkeypatch.setattr(S, "_decode_vectors",
+                        counted("vectors", S._decode_vectors))
+    monkeypatch.setattr(H, "_decode_graph", counted("graph", H._decode_graph))
+    start = threading.Barrier(8)
+    got, errs = [], []
+
+    def client():
+        try:
+            start.wait()
+            got.append(_hits(si, body, vecs_p, graph_p))
+        except Exception as e:  # noqa: BLE001 — reported below
+            errs.append(e)
+
+    threads = [threading.Thread(target=client) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs
+    assert calls == {"vectors": 1, "graph": 1}
+    assert S.driver_vectors(vecs_p, "doc_id", "embedding") is not None
+    assert got == [want] * 8
