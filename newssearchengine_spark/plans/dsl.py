@@ -55,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .search import (TOPK_SCHEMA, SegmentIndex, _local_frame,
+from .search import (MANY_SCHEMA, TOPK_SCHEMA, LocalFrame, SegmentIndex,
                      search_dismax)
 
 def _split_on(toks: list[str], op: str) -> list[list[str]]:
@@ -741,14 +741,15 @@ def _live_ids(index):
 
 def _knn_local(index, vectors: DataFrame, secs: list[dict], qside, *,
                vec_id_col: str, ann: DataFrame | None, size: int):
-    """The driver regime of a knn body: its ranked hits in a job-free
-    local frame, or None when a gate fails and the distributed plan
-    runs. Gates: no section has a filter; the query side (if any) ran
-    in a driver regime (`qside` holds pandas scores); every index's
-    tombstones are on the driver; and `vectors` (and `ann`) are decoded
-    in the driver memo (operators.similarity.driver_vectors /
-    operators.hnsw.driver_graph: served from Spark's cache, rows x dim
-    <= DRIVER_ELEMS_CAP proven before the one decode).
+    """The driver regime of a knn body: its ranked hits in a LocalFrame
+    (no Spark job and no JVM call), or None when a gate fails and the
+    distributed plan runs. Gates: no section has a filter; the query
+    side (if any) ran in a driver regime (`qside` holds a LocalFrame);
+    every index's tombstones are on the driver; and `vectors` (and
+    `ann`) are decoded in the driver memo
+    (operators.similarity.driver_vectors / operators.hnsw.driver_graph:
+    served from Spark's cache, rows x dim <= DRIVER_ELEMS_CAP proven
+    before the one decode).
 
     Mirrors the distributed plan exactly: candidates are every live row
     (exact) or the union of the SAME per-shard beams at
@@ -766,7 +767,7 @@ def _knn_local(index, vectors: DataFrame, secs: list[dict], qside, *,
 
     if any(s.get("filter") is not None for s in secs):
         return None
-    if qside is not None and not isinstance(qside[1], pd.DataFrame):
+    if qside is not None and not isinstance(qside[1], LocalFrame):
         return None
     ok, dead = _live_ids(index)
     qok, qdead = _live_ids(qside[0]) if qside is not None else (True, None)
@@ -799,7 +800,7 @@ def _knn_local(index, vectors: DataFrame, secs: list[dict], qside, *,
         parts.append((dv.ids[pos][top],
                       ks[top] * boost if boost != 1.0 else ks[top]))
     if qside is not None:
-        qs = qside[1]
+        qs = qside[1].toPandas()
         if qdead is not None:
             qs = qs[~np.isin(qs["doc_id"].to_numpy(np.int64), qdead)]
         parts.append((qs["doc_id"].to_numpy(np.int64),
@@ -815,13 +816,12 @@ def _knn_local(index, vectors: DataFrame, secs: list[dict], qside, *,
 
 def _query_scores_full(indexes, q: dict):
     """The query section of a hybrid knn body: (index, its complete
-    ROUNDED (doc_id, score) rows — every matching doc, 6 dp). ES
+    ROUNDED (doc_id, score) relation — every matching doc, 6 dp). ES
     combines knn with the query disjunctively over the query's FULL
     match set (not its top-size page), so a doc ranked past `size` on
-    text alone can still enter the combined top hits. The rows are a
-    pandas frame when the query side ran in a driver regime
-    (SegmentIndex._score_all_local, or a bool tree's local form), else a
-    DataFrame."""
+    text alone can still enter the combined top hits. The relation is a
+    LocalFrame when the query side ran in a driver regime (score_all's,
+    or a bool tree's local form)."""
     import numpy as np
 
     from ..operators.similarity import _round_half_up
@@ -833,9 +833,10 @@ def _query_scores_full(indexes, q: dict):
     if kind == "bool":
         rel, local = si._bool_tree(_bool_to_tree(si, spec))
         if rel is None:
-            return si, _score_rows([])
+            return si, si._empty(TOPK_SCHEMA)
         rel = rel.select("doc_id", F.round(F.col("score"), 6).alias("score"))
-        return si, (_score_rows(rel.collect()) if local else rel)
+        return si, (LocalFrame(si.spark, _score_rows(rel.collect()),
+                               TOPK_SCHEMA) if local else rel)
     if kind in ("match", "query_string", "multi_match"):
         if kind == "match":
             field, text = _field_text(spec)
@@ -853,14 +854,26 @@ def _query_scores_full(indexes, q: dict):
                 raise ValueError(
                     "hybrid knn+query supports OR text queries")
             text = parts[0]
-        pdf = si._score_all_local(text)
-        if pdf is None:
-            return si, si.score_all(text).select(
+        out = si.score_all(text)
+        if not isinstance(out, LocalFrame):
+            return si, out.select(
                 "doc_id", F.round("score", 6).alias("score"))
-        return si, pdf.assign(score=_round_half_up(
-            pdf["score"].to_numpy(np.float64), 6))
+        pdf = out.toPandas()
+        return si, LocalFrame(si.spark, pdf.assign(score=_round_half_up(
+            pdf["score"].to_numpy(np.float64), 6)), TOPK_SCHEMA)
     raise ValueError(f"hybrid knn+query: unsupported query kind {kind} "
                      "(match / query_string / multi_match / bool)")
+
+
+def _page_offset(body: dict, size: int) -> int:
+    """A body's `from` (or `from_`) offset. A negative `size` or `from`
+    is ES's 400, raised before any plan."""
+    offset = int(body.get("from", body.get("from_", 0)) or 0)
+    for name, v in (("size", size), ("from", offset)):
+        if v < 0:
+            raise ValueError(
+                f"[{name}] parameter cannot be negative, found [{v}]")
+    return offset
 
 
 def es_search(indexes, body: dict, size: int = 10, *,
@@ -894,15 +907,21 @@ def es_search(indexes, body: dict, size: int = 10, *,
     regimes, row-identical: when `vectors` (and `ann`) are served from
     Spark's cache and fit DRIVER_ELEMS_CAP they are decoded once on the
     driver, and a body with no knn filter whose query side and
-    tombstones are driver-side too runs with no Spark job
-    (`_knn_local`); otherwise the distributed plan (`_knn_contrib` +
+    tombstones are driver-side too runs with no Spark job and no JVM
+    call (`_knn_local`); otherwise the distributed plan (`_knn_contrib` +
     one union/aggregate/top-k) runs. A zero-magnitude or
     wrong-dimension query_vector is ES's 400 (ValueError; a distributed
     plan fails with the same dimension reason).
 
     ES pagination: a top-level `from` in the body (or a `from_` key)
     skips that many hits — the engine evaluates top-(from+size) and
-    drops the first `from` ranks, re-ranking from 0 like an ES page.
+    drops the first `from` ranks, re-ranking from 0 like an ES page (in
+    pandas when the page is a LocalFrame). A negative `size` or `from`
+    raises ES's 400 reason as ValueError before any plan.
+
+    Driver-regime answers come back as a LocalFrame
+    (plans.search.LocalFrame): collect()/toPandas()/count() run no
+    Spark job and make no JVM call; composing one builds its JVM frame.
 
     ES highlight: a top-level `highlight` in the body tags the query
     terms in the hit field and extracts a first-match fragment
@@ -913,6 +932,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
     so the fetch phase is a broadcast join of the k hits against the
     source scan.
     """
+    offset = _page_offset(body, size)
     q = body.get("query", body)
     # highlight is checked FIRST so it wraps rescore/collapse: the inner
     # recursion produces the FINAL ranked hits, then tags them (ES
@@ -962,7 +982,6 @@ def es_search(indexes, body: dict, size: int = 10, *,
         return (out.orderBy(F.asc("rank"))
                 .select("rank", "doc_id", "score",
                         "highlighted", "fragment"))
-    offset = int(body.get("from", body.get("from_", 0)) or 0)
     if offset:
         inner = (dict(body) if ("query" in body or "knn" in body)
                  else {"query": q})
@@ -973,6 +992,12 @@ def es_search(indexes, body: dict, size: int = 10, *,
                          vectors=vectors, vec_id_col=vec_id_col, ann=ann)
         if "rank" not in page.columns:  # term lookup has no rank order
             raise ValueError("from/size pagination needs a ranked query")
+        if isinstance(page, LocalFrame):  # ranked: `rank` comes first
+            pdf = page.toPandas()
+            pdf = pdf[pdf["rank"] >= offset]
+            return LocalFrame(page.sparkSession,
+                              pdf.assign(rank=pdf["rank"] - offset),
+                              page.schema)
         return page.filter(F.col("rank") >= offset).select(
             (F.col("rank") - offset).alias("rank"),
             *[c for c in page.columns if c != "rank"],
@@ -1006,8 +1031,6 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 for s in secs]
         if qside is not None:
             siq, qrel = qside
-            if not isinstance(qrel, DataFrame):
-                qrel = _local_frame(siq.spark, qrel, TOPK_SCHEMA)
             rels.append(siq._exclude_dead(qrel).select(
                 "doc_id", F.col("score").alias("kscore")))
         # combine = UNION + one hash aggregate, not a cascade of full
@@ -1243,8 +1266,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             si = one(names[0] if names else None)
             toks = sorted(set(si.analyze_query(text)))
             if not toks:
-                return si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
+                return si._empty()
             out = si.search_bool(must=[[t] for t in toks], k=size)
             bf = boosts.get(names[0], 1.0) if names else 1.0
             if bf != 1.0:
@@ -1285,9 +1307,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             clauses = [si.analyze_query(p) for p in parts]
             clauses = [c for c in clauses if c]
             if not clauses:
-                return si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double"
-                )
+                return si._empty()
             out = si.search_bool(must=clauses, k=size)
             bf = boosts.get(names[0], 1.0) if names else 1.0
             if bf != 1.0:
@@ -1386,8 +1406,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                         "minimum_should_match is a no-op under "
                         "operator:'and' (ES ignores it); drop one")
                 if not toks:
-                    return si.spark.createDataFrame(
-                        [], "rank bigint, doc_id bigint, score double")
+                    return si._empty()
                 # every token required, scored by the summed BM25 of
                 # all tokens — one must clause per token
                 out = si.search_bool(must=[[t] for t in toks], k=size)
@@ -1448,13 +1467,11 @@ def es_search(indexes, body: dict, size: int = 10, *,
         si = one(field)
         toks = si.analyze_query(text)
         if not toks:
-            return si.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return si._empty()
         exp = si.expand_prefix(toks[-1], max_expansions=mx)
         should = sorted(set(toks[:-1]) | set(exp))
         if not should:
-            return si.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return si._empty()
         return si.search_bool(should=should, k=size)
 
     if kind == "bool":
@@ -1606,8 +1623,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 min_df=int(spec.get("min_doc_freq", 5)),
                 top_n=int(spec.get("max_query_terms", 25)))
             if not terms:
-                return si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
+                return si._empty()
             out = si.search(sorted(set(terms)), size + len(ids),
                             mode=mode)
             out = out.filter(~F.col("doc_id").isin(ids))
@@ -1627,8 +1643,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 min_df=int(spec.get("min_doc_freq", 5)),
                 top_n=int(spec.get("max_query_terms", 25)))
             if not terms:
-                return si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
+                return si._empty()
             return si.search(sorted(set(terms)), size, mode=mode)
         if not ids:
             raise ValueError(
@@ -1641,8 +1656,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             top_n=int(spec.get("max_query_terms", 25)))
         terms = sorted({r["term"] for r in kw.collect()})
         if not terms:
-            return si.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return si._empty()
         out = si.search(terms, size + len(ids), mode=mode)
         out = out.filter(~F.col("doc_id").isin(ids))
         w = Window.orderBy(F.asc("rank"))
@@ -1876,8 +1890,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
         si = one(names[0] if names else None)
         node = _sqs_tree(si, text, dop)
         if node is None:
-            return si.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return si._empty()
         return si.search_bool_tree(node, k=size)
 
     if kind == "exists":
@@ -2409,9 +2422,10 @@ def es_msearch(indexes, bodies: list[dict], size: int = 10, *,
     topic loop); ES's own batching answer is the _msearch endpoint. Here
     the batch routes to SegmentIndex.search_many — one pass in which
     each doc_part decodes every posting ONCE and scores all queries,
-    duplicate bodies deduped and fanned back out: no Spark job under
-    SEARCH_DRIVER_CAP on a warm index, else ONE job, so per-query job
-    overhead amortizes across the batch (the scale throughput shape).
+    duplicate bodies deduped and fanned back out: no Spark job and no
+    JVM call under SEARCH_DRIVER_CAP on a warm index, else ONE job, so
+    per-query job overhead amortizes across the batch (the scale
+    throughput shape).
 
     Any ranked body is accepted: plain single-field OR-matching kinds
     (match / pure-OR query_string / multi_match) BATCH — grouped per
@@ -2423,9 +2437,16 @@ def es_msearch(indexes, bodies: list[dict], size: int = 10, *,
     responses-array order), each query's block identical to its own
     es_search (pytest-pinned). Bodies whose es_search output is not the
     ranked (rank, doc_id, score) shape (highlight's tagged column,
-    sort's sort-column output) are rejected: one relation, one schema."""
+    sort's sort-column output) are rejected: one relation, one schema.
+    A negative `size` or body `from` is ES's 400 (ValueError), raised
+    before any body runs. When every part is a LocalFrame (each body
+    ran in a driver regime) the parts combine in pandas, in part order,
+    into one LocalFrame — no Spark job and no JVM call, except
+    composition; otherwise they union as DataFrames."""
     if not bodies:
         raise ValueError("msearch needs at least one body")
+    for b in bodies:
+        _page_offset(b, size)
     _WRAPPERS = ("sort", "search_after", "rescore", "collapse",
                  "highlight", "from", "from_", "suggest", "aggs",
                  "aggregations", "knn")
@@ -2479,8 +2500,18 @@ def es_msearch(indexes, bodies: list[dict], size: int = 10, *,
                 "msearch bodies must produce ranked (rank, doc_id, "
                 "score) responses — run highlight/sort bodies through "
                 "es_search directly")
-        outs.append(out.select(
-            F.lit(qid).alias("query_id"), "rank", "doc_id", "score"))
+        if isinstance(out, LocalFrame):
+            pdf = out.toPandas()[["rank", "doc_id", "score"]]
+            pdf.insert(0, "query_id", qid)
+            outs.append(LocalFrame(out.sparkSession, pdf, MANY_SCHEMA))
+        else:
+            outs.append(out.select(
+                F.lit(qid).alias("query_id"), "rank", "doc_id", "score"))
+    if all(isinstance(o, LocalFrame) for o in outs):
+        import pandas as pd
+
+        return LocalFrame(outs[0].sparkSession, pd.concat(
+            [o.toPandas() for o in outs], ignore_index=True), MANY_SCHEMA)
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o)

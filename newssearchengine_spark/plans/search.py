@@ -32,8 +32,11 @@ import threading
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.types import (DoubleType, LongType, StringType,
+                               StructField, StructType, _create_row)
 
 from ..functions.codec import (decode_positions, decode_postings, lucene_idf,
                                tf_norm)
@@ -43,6 +46,7 @@ from .index_build import term_bucket
 
 TOPK_SCHEMA = "doc_id bigint, score double"
 RANKED_SCHEMA = "rank bigint, doc_id bigint, score double"
+MANY_SCHEMA = "query_id string, rank bigint, doc_id bigint, score double"
 # the segment columns the taat scorers read
 _SCORE_COLS = ("doc_part", "term", "docs", "tfs", "dls", "block_last",
                "block_max")
@@ -397,17 +401,85 @@ def _make_groups_taat(groups: list[list[list[str]]],
     return score_group
 
 
-def _local_frame(spark: SparkSession, pdf: pd.DataFrame,
-                 schema=RANKED_SCHEMA) -> DataFrame:
-    """A driver-built result as a DataFrame whose collect() runs no Spark
-    job: the rows go to the JVM as an Arrow table and become a local
-    relation. A frame built from a Python list (or from an EMPTY pandas
-    frame, which PySpark converts to a list) is a parallelized Python RDD
-    instead, and every collect() of it launches a Python-worker job."""
-    import pyarrow as pa
+#: Spark SQL type -> (its type, the dtype a JVM frame's toPandas() gives)
+_DDL_TYPES = {"bigint": (LongType(), np.int64),
+              "double": (DoubleType(), np.float64),
+              "string": (StringType(), object)}
 
-    return spark.createDataFrame(
-        pa.Table.from_pandas(pdf, preserve_index=False), schema)
+
+def _struct(schema) -> StructType:
+    """A flat DDL string ("name type, ...") as a StructType, parsed in
+    Python — pyspark's own DDL parser is a JVM call."""
+    if isinstance(schema, StructType):
+        return schema
+    return StructType([StructField(n, _DDL_TYPES[t][0])
+                       for n, t in (f.split() for f in schema.split(","))])
+
+
+class LocalFrame(ClassicDataFrame):
+    """A driver regime's result: its rows stay a pandas frame on the
+    driver, and the DataFrame API reads them without a JVM call.
+
+    collect(), toPandas(), count(), columns and schema answer from the
+    pandas rows with today's frame's types: collect() gives Rows of
+    Python int/float/str with a NaN read as None (the null an Arrow
+    conversion makes of it), toPandas() gives int64/float64/object
+    columns, empty frames included. Any other DataFrame method composes
+    the frame (filter/select/join/unionByName/F.broadcast/persist…): it
+    reads `_jdf`, which builds the JVM half once, from an Arrow table
+    (a local relation, so its collect() runs no Spark job either)."""
+
+    def __new__(cls, *args, **kwargs):
+        # pyspark's DataFrame.__new__ takes (jdf, session) and calls
+        # __init__ itself
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, pdf: pd.DataFrame,
+                 schema=RANKED_SCHEMA):
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._local_schema = _struct(schema)
+        names = [f.name for f in self._local_schema.fields]
+        self._pdf = pd.DataFrame({
+            f.name: pdf[f.name].to_numpy(
+                _DDL_TYPES[f.dataType.simpleString()][1])
+            for f in self._local_schema.fields}, columns=names)
+        self._jdf_lock = threading.Lock()
+        self._built = None
+
+    @property
+    def _jdf(self):
+        with self._jdf_lock:
+            if self._built is None:
+                import pyarrow as pa
+
+                self._built = self._session.createDataFrame(
+                    pa.Table.from_pandas(self._pdf, preserve_index=False),
+                    self._local_schema)._jdf
+            return self._built
+
+    @property
+    def schema(self) -> StructType:
+        return self._local_schema
+
+    def count(self) -> int:
+        return len(self._pdf)
+
+    def toPandas(self) -> pd.DataFrame:
+        return self._pdf.copy()
+
+    def collect(self) -> list[Row]:
+        cols = []
+        for c in self._pdf.columns:
+            arr = self._pdf[c].to_numpy()
+            vals = arr.astype(object)
+            if arr.dtype.kind == "f":
+                vals[np.isnan(arr)] = None
+            cols.append(vals)
+        names = list(self._pdf.columns)
+        return [_create_row(names, r) for r in zip(*cols)]
 
 
 def _score_rows(rows) -> pd.DataFrame:
@@ -426,7 +498,7 @@ def _eager_topk(rel: DataFrame, out: DataFrame,
     incremental-index stream that queries every batch)."""
     pdf = out.toPandas()
     rel.unpersist()
-    return _local_frame(out.sparkSession, pdf, schema)
+    return LocalFrame(out.sparkSession, pdf, schema)
 
 
 class SegmentIndex:
@@ -694,10 +766,11 @@ class SegmentIndex:
         only state every pre-delete caller sees) short-circuits.
 
         With the dead ids on the driver and k+T <= DELETED_ISIN_CAP, the
-        over-fetched rows are collected, the dead ones dropped against
-        the sorted id array and the rest re-ranked in pandas — a driver
-        regime result stays job-free. Otherwise a Spark window re-ranks
-        the excluded relation."""
+        over-fetched rows are read as pandas (a LocalFrame's own rows,
+        with no JVM call), the dead ones dropped against the sorted id
+        array and the rest re-ranked in a LocalFrame — a driver regime
+        result stays job-free. Otherwise a Spark window re-ranks the
+        excluded relation."""
         T, ids, _ = self._tombstones()
         if not T:
             return run(k)
@@ -705,12 +778,12 @@ class SegmentIndex:
         cols = out.columns
         keys = ["query_id"] if "query_id" in cols else []
         if ids is not None and k + T <= DELETED_ISIN_CAP:
-            pdf = pd.DataFrame(out.collect(), columns=cols)
+            pdf = out.toPandas()
             pdf = pdf[~np.isin(pdf["doc_id"].to_numpy(np.int64), ids)]
             pdf = pdf.sort_values(keys + ["rank"], kind="mergesort")
             pdf["rank"] = (pdf.groupby(keys).cumcount() if keys
                            else np.arange(len(pdf)))
-            return _local_frame(self.spark, pdf[pdf["rank"] < k], out.schema)
+            return LocalFrame(self.spark, pdf[pdf["rank"] < k], out.schema)
         out = self._exclude_dead(out)
         w = (Window.partitionBy(*keys) if keys else Window).orderBy(
             F.asc("rank"))
@@ -770,7 +843,8 @@ class SegmentIndex:
         queries on a warm index under SEARCH_DRIVER_CAP read the pruned
         segment rows with a driver-local pyarrow scan of the terms'
         bucket directories and run the same per-part scorer on the
-        driver — no Spark job at all (with_meta's doc-store join aside);
+        driver, returning a LocalFrame — no Spark job and no JVM call
+        (with_meta's doc-store join and other composition aside);
         above the cap, with cache off, or in wand mode the distributed
         scan→shuffle→applyInPandas plan runs. Both regimes are
         row/score-identical (pytest-pinned).
@@ -832,29 +906,26 @@ class SegmentIndex:
         return out.join(self.doc_store(), "doc_id", "left").orderBy("rank")
 
     def _empty(self, schema: str = RANKED_SCHEMA) -> DataFrame:
-        """An empty result (flat DDL `schema`) built from a zero-row Arrow
-        table, so its collect() runs no Spark job. Call it only on the
-        branch that returns it: each createDataFrame is a py4j round-trip
-        (~10-20 ms)."""
-        import pyarrow as pa
-
-        names = [f.split()[0] for f in schema.split(",")]
-        return self.spark.createDataFrame(
-            pa.table({n: pa.nulls(0) for n in names}), schema)
+        """An empty result (flat DDL `schema`): a LocalFrame over typed
+        zero-row columns — no Spark job and no JVM call, except
+        composition."""
+        return LocalFrame(self.spark, pd.DataFrame(
+            columns=[f.split()[0] for f in schema.split(",")]), schema)
 
     def _cut_topk(self, cand, k: int) -> DataFrame:
         """The driver regimes' one top-k cut: (doc_id, score) rows ordered
         by score desc, doc_id asc, the first k numbered 0.. as `rank`, in
-        a job-free local frame. `cand` is a pandas frame or a Spark
-        projection over a local relation, whose collect() the optimizer
-        evaluates on the driver (ConvertToLocalRelation) without a job."""
+        a LocalFrame — no Spark job and no JVM call. `cand` is a pandas
+        frame, or (the bool tree only) a Spark projection over a local
+        relation, whose collect() the optimizer evaluates on the driver
+        (ConvertToLocalRelation) without a job."""
         if isinstance(cand, DataFrame):
             cand = _score_rows(cand.collect())
         cand = (cand.sort_values(["score", "doc_id"], ascending=[False, True],
                                  kind="mergesort")
                 .head(k).reset_index(drop=True))
         cand.insert(0, "rank", np.arange(len(cand), dtype=np.int64))
-        return _local_frame(self.spark, cand)
+        return LocalFrame(self.spark, cand)
 
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Terms in the dictionary starting with `prefix`, ordered by
@@ -882,9 +953,7 @@ class SegmentIndex:
         query into the whole vocabulary."""
         terms = self.expand_prefix(prefix, max_expansions)
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double"
-            )
+            return self._empty()
         return self.search(terms, k, mode=mode)
 
     def expand_wildcard(self, pattern: str,
@@ -919,9 +988,7 @@ class SegmentIndex:
         term dictionary, then BM25 over the expansion (bounded like ES)."""
         terms = self.expand_wildcard(pattern, max_expansions)
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double"
-            )
+            return self._empty()
         return self.search(terms, k, mode=mode)
 
     def expand_regexp(self, pattern: str,
@@ -961,9 +1028,7 @@ class SegmentIndex:
         term / prefix / fuzzy / wildcard / regexp."""
         terms = self.expand_regexp(pattern, max_expansions)
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double"
-            )
+            return self._empty()
         return self.search(terms, k, mode=mode)
 
     def expand_fuzzy(self, term: str, *, max_edits: int = 1,
@@ -998,9 +1063,7 @@ class SegmentIndex:
                                   prefix_len=prefix_len,
                                   max_expansions=max_expansions)
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double"
-            )
+            return self._empty()
         return self.search(terms, k, mode=mode)
 
     def search_phrase(self, phrase, k: int, with_meta: bool = False,
@@ -1022,15 +1085,16 @@ class SegmentIndex:
         Plan: the matcher counts occurrences per doc_part (postings +
         positions decoded once per term, fully vectorized via packed
         (local-doc, position) keys) and emits only the docs containing
-        the whole phrase; Catalyst scores those candidates and the top-k
-        is cut, never touching the corpus. Placement (_phrase_cands): on
-        a warm handle whose Σdf + Σcf of the phrase terms fits
+        the whole phrase; those candidates are scored and the top-k is
+        cut, never touching the corpus. Placement (_phrase_cands): on a
+        warm handle whose Σdf + Σcf of the phrase terms fits
         SEARCH_DRIVER_CAP, the positional rows are read with pyarrow and
-        the matcher, the scoring projection over a local relation and
-        the pandas top-k cut all run on the driver — no Spark job. Above
-        it the matcher runs distributed (pruned positional-segment scan
-        -> applyInPandas) and _phrase_topk gathers or persists the
-        candidates by PHRASE_DRIVER_CAP.
+        the matcher, the numpy scoring and the pandas top-k cut all run
+        on the driver, returning a LocalFrame — no Spark job and no JVM
+        call, except composition. Above it the matcher runs distributed
+        (pruned positional-segment scan -> applyInPandas), Catalyst
+        scores, and _phrase_topk gathers or persists the candidates by
+        PHRASE_DRIVER_CAP.
 
         slop > 0 runs the SLOPPY matcher over the same scan: Lucene's
         acceptance (an assignment of one position per term whose
@@ -1059,7 +1123,7 @@ class SegmentIndex:
         plan = self._phrase_plan(terms, slop)
         if plan is None:
             return self._empty()  # an absent term's phrase matches nothing
-        out = self._phrase_topk(*plan, k=k)
+        out = self._phrase_topk(plan, k=k)
         return self._with_meta(out) if with_meta else out
 
     def _phrase_plan(self, terms: list, slop: int = 0,
@@ -1124,31 +1188,39 @@ class SegmentIndex:
         )
         return self._by_part(seg).applyInPandas(matcher, PHRASE_CAND_SCHEMA)
 
-    def _phrase_topk(self, scan_terms: list[str], matcher, bound: int, *,
-                     k: int) -> DataFrame:
-        """Score + top-k a phrase plan's candidates (doc_id, occ, dl).
+    def _phrase_topk(self, plan, *, k: int) -> DataFrame:
+        """Score + top-k a phrase plan's (_phrase_plan) candidates
+        (doc_id, occ, dl).
 
         Three regimes:
-        - driver (_phrase_cands read the rows with pyarrow): the Catalyst
-          scoring projection runs over a local relation, which the
-          optimizer evaluates on the driver, and _cut_topk ranks the
-          scores in pandas — no Spark job, 6dp rounding still Spark's.
+        - driver (_phrase_cands read the rows with pyarrow):
+          _phrase_scores scores them in numpy, _round_half_up rounds 6 dp
+          like Spark's F.round and _cut_topk ranks them in a LocalFrame —
+          no Spark job and no JVM call.
         - PROVEN candidate bound <= PHRASE_DRIVER_CAP: gather the
           distributed matcher's candidates with ONE Spark job (Arrow
-          toPandas) and score over a local relation — the same
-          expression tree, so scores and 6dp rounding are bit-identical.
+          toPandas) and score them with Catalyst over a local relation.
         - above that cap: persist the candidate relation, count for the
           phrase df, score distributed; eager top-k releases the cache.
+        All three give bit-identical rows (pytest-pinned).
         """
+        from ..operators.similarity import _round_half_up
+
+        scan_terms, matcher, bound = plan
         cand = self._phrase_cands(scan_terms, matcher)
-        local = isinstance(cand, pd.DataFrame)
+        if isinstance(cand, pd.DataFrame):
+            sc = self._phrase_scores(plan, frame=False, cand=cand)
+            if sc is None:
+                return self._empty()
+            return self._cut_topk(sc.assign(score=_round_half_up(
+                sc["score"].to_numpy(np.float64), 6)), k)
         release = None
-        if local or bound <= PHRASE_DRIVER_CAP:
-            pdf = cand if local else cand.toPandas()
+        if bound <= PHRASE_DRIVER_CAP:
+            pdf = cand.toPandas()
             dfp = float(len(pdf))
             if dfp == 0:
                 return self._empty()
-            cand = _local_frame(self.spark, pdf, PHRASE_CAND_SCHEMA)
+            cand = LocalFrame(self.spark, pdf, PHRASE_CAND_SCHEMA)
         else:
             cand = cand.persist()
             dfp = float(cand.count())
@@ -1169,8 +1241,6 @@ class SegmentIndex:
                 6,
             ).alias("score"),
         )
-        if local:
-            return self._cut_topk(scored, k)
         topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         out = topk.select(
@@ -1181,7 +1251,7 @@ class SegmentIndex:
             out = _eager_topk(release, out)
         return out
 
-    def _phrase_scores(self, plan, frame: bool = True):
+    def _phrase_scores(self, plan, frame: bool = True, cand=None):
         """COMPLETE (doc_id, score double) relation of a phrase plan
         (_phrase_plan) — the phrase analog of score_all, consumed by the
         bool-tree compiler's phrase leaves (ES match_phrase — and, with
@@ -1194,7 +1264,8 @@ class SegmentIndex:
 
         Regimes like _phrase_topk: the driver regime scores in numpy with
         no Spark job (frame=False returns its pandas frame as is, for
-        the bool tree's driver regime); under PHRASE_DRIVER_CAP the
+        _phrase_topk and the bool tree's driver regime; `cand` passes in
+        candidates _phrase_cands already read); under PHRASE_DRIVER_CAP the
         candidates gather with ONE job and df/idf resolve locally (the
         common case — phrases are selective by construction); above the
         cap the relation stays distributed and the phrase df comes from
@@ -1205,7 +1276,8 @@ class SegmentIndex:
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        cand = self._phrase_cands(scan_terms, matcher)
+        if cand is None:
+            cand = self._phrase_cands(scan_terms, matcher)
         local = isinstance(cand, pd.DataFrame)
         if local or bound <= PHRASE_DRIVER_CAP:
             pdf = cand if local else cand.toPandas()
@@ -1222,7 +1294,7 @@ class SegmentIndex:
                 "doc_id": pdf["doc_id"].to_numpy(np.int64), "score": sc})
             if local and not frame:
                 return out
-            return _local_frame(self.spark, out, TOPK_SCHEMA)
+            return LocalFrame(self.spark, out, TOPK_SCHEMA)
         dfp_rel = cand.agg(
             F.count(F.lit(1)).cast("double").alias("_dfp"))
         scored = cand.crossJoin(F.broadcast(dfp_rel)).select(
@@ -1241,15 +1313,19 @@ class SegmentIndex:
         DisMax, hybrid knn and LTR feature pipelines consume. Same pruned
         segment scan as search(); exact taat accumulation (per-doc ranges
         are disjoint, so per-part scores are complete). Under the driver
-        rule (`_driver_ok`, as in search) the scores come from
-        `_score_all_local` in a job-free local frame; otherwise the
-        distributed scan→shuffle→applyInPandas plan runs. Both regimes
-        are row/score-identical."""
-        pdf = self._score_all_local(query)
-        if pdf is not None:
-            return (_local_frame(self.spark, pdf, TOPK_SCHEMA) if len(pdf)
-                    else self._empty(TOPK_SCHEMA))
+        rule (`_driver_ok`, as in search) the SAME per-part scorer runs
+        over a pyarrow read of the terms' segment rows and the scores
+        come back in a LocalFrame — no Spark job and no JVM call, except
+        composition; otherwise the distributed
+        scan→shuffle→applyInPandas plan runs. Both regimes are
+        row/score-identical."""
         terms, scorer = self._full_scorer(query)
+        if not terms:
+            return self._empty(TOPK_SCHEMA)
+        if self._driver_ok(terms):
+            cand = self._per_part_local(scorer, terms, list(_SCORE_COLS))
+            return (self._empty(TOPK_SCHEMA) if cand is None
+                    else LocalFrame(self.spark, cand, TOPK_SCHEMA))
         n_buckets = int(self.stats["n_buckets"])
         buckets = sorted({term_bucket(t, n_buckets) for t in terms})
         seg = (
@@ -1259,20 +1335,6 @@ class SegmentIndex:
             .select(*_SCORE_COLS)
         )
         return self._by_part(seg).applyInPandas(scorer, TOPK_SCHEMA)
-
-    def _score_all_local(self, query) -> pd.DataFrame | None:
-        """The driver regime of score_all: its complete (doc_id, score)
-        rows as a pandas frame — the SAME per-part scorer over a pyarrow
-        read of the terms' segment rows, no Spark job — or None when the
-        proven posting volume fails `_driver_ok` (cold handle or above
-        SEARCH_DRIVER_CAP)."""
-        terms, scorer = self._full_scorer(query)
-        if not terms:
-            return _score_rows([])
-        if not self._driver_ok(terms):
-            return None
-        cand = self._per_part_local(scorer, terms, list(_SCORE_COLS))
-        return _score_rows([]) if cand is None else cand
 
     def _full_scorer(self, query) -> tuple[list[str], object]:
         """(terms present in the dictionary, their no-cut taat scorer)."""
@@ -2412,8 +2474,7 @@ class SegmentIndex:
         dfs = self.term_dfs(pos)
         pos = [t for t in pos if dfs.get(t, 0) > 0]
         if not pos:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return self._empty()
         ndfs = self.term_dfs(sorted(set(neg)))
         neg = sorted(t for t in set(neg) if ndfs.get(t, 0) > 0)
         # sum of positive dfs >= distinct positive matches: when it fits
@@ -2507,8 +2568,7 @@ class SegmentIndex:
             # relation joined to the factor column is exact — no probe
             rel = self._bool_tree_rel(query)
             if rel is None:
-                return self.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
+                return self._empty()
             return self._function_tail(rel.join(store, "doc_id", "left"),
                                        boost_mode, k)
         terms = (self.analyze_query(query) if isinstance(query, str)
@@ -2517,8 +2577,7 @@ class SegmentIndex:
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return self._empty()
         pos_bound = sum(int(dfs[t]) for t in terms)
         if pos_bound <= BOOL_DRIVER_CAP:
             row = store.agg(F.min("fval").alias("lo"),
@@ -2687,8 +2746,7 @@ class SegmentIndex:
             # no pruned regime needed
             rel = self._bool_tree_rel(query)
             if rel is None:
-                return self.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
+                return self._empty()
             return self._functions_over_rel(rel, parsed, ws, score_mode,
                                             boost_mode, mb, k)
         terms = (self.analyze_query(query) if isinstance(query, str)
@@ -2697,8 +2755,7 @@ class SegmentIndex:
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return self._empty()
         pos_bound = sum(int(dfs[t]) for t in terms)
         prunable = (pos_bound <= BOOL_DRIVER_CAP
                     and all(w >= 0.0 for w in ws) and not has_fvf)
@@ -3033,7 +3090,7 @@ class SegmentIndex:
                                  self.expand_prefix(terms[-1], max_expansions))
         if plan is None:
             return self._empty()
-        return self._phrase_topk(*plan, k=k)
+        return self._phrase_topk(plan, k=k)
 
     def search_many(self, queries: dict, k: int, mode: str = "taat",
                     _raw: bool = False) -> DataFrame:
@@ -3048,7 +3105,8 @@ class SegmentIndex:
         is scanned once, every doc_part group scores all queries against
         postings it decodes ONCE per term, and a per-query merge takes the
         top-k. Under SEARCH_DRIVER_CAP on a warm index (taat) that pass
-        runs on the driver over a pyarrow read with no Spark job; above
+        runs on the driver over a pyarrow read and returns a LocalFrame —
+        no Spark job and no JVM call, except composition; above
         it ONE job amortizes the per-query Spark-job overhead — the
         scaling-efficiency killer for sequential single-query loops —
         across the whole batch.
@@ -3082,13 +3140,12 @@ class SegmentIndex:
 
         dfs = self.term_dfs(all_terms)
         live = sorted(t for t in all_terms if dfs.get(t, 0) > 0)
-        out_schema = "query_id string, rank bigint, doc_id bigint, score double"
         live_set = set(live)
         qlive = {qid: [t for t in ts if t in live_set]
                  for qid, ts in qterms.items()}
         qlive = {qid: ts for qid, ts in qlive.items() if ts}
         if not qlive:
-            return self._empty(out_schema)
+            return self._empty(MANY_SCHEMA)
 
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in live}
         doc_range = int(self.stats["doc_range"])
@@ -3145,7 +3202,7 @@ class SegmentIndex:
                 return out
             pdf = per_part.toPandas()
         if pdf is None or not len(pdf):
-            return self._empty(out_schema)
+            return self._empty(MANY_SCHEMA)
         # numpy merge: hash-factorize the query ids (no string sort),
         # one lexsort by (query, score desc, doc_id asc), vectorized
         # within-query ranks — a pandas sort_values over ~1M rows was
@@ -3172,9 +3229,7 @@ class SegmentIndex:
                 dup["query_id"] = a
                 frames.append(dup)
             top = pd.concat(frames, ignore_index=True)
-        return _local_frame(self.spark,
-                            top[["query_id", "rank", "doc_id", "score"]],
-                            out_schema)
+        return LocalFrame(self.spark, top, MANY_SCHEMA)
 
 
 def search_dismax(field_indexes: dict, query, k: int, *,

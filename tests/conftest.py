@@ -15,3 +15,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_tiny() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def py4j_commands(monkeypatch):
+    """A callable giving the number of py4j commands this thread has sent
+    to the JVM since the fixture started: every JVM call is one. Object
+    releases (py4j's memory commands, which the Python GC triggers at
+    any time, on any thread) are not counted."""
+    import threading
+
+    from py4j import clientserver, java_gateway, protocol
+
+    me = threading.get_ident()
+    sent = [0]
+
+    def counting(orig):
+        def send_command(self, command, *args, **kwargs):
+            if (threading.get_ident() == me
+                    and not command.startswith(protocol.MEMORY_COMMAND_NAME)):
+                sent[0] += 1
+            return orig(self, command, *args, **kwargs)
+        return send_command
+
+    for cls in (clientserver.ClientServerConnection,
+                java_gateway.GatewayConnection):
+        monkeypatch.setattr(cls, "send_command", counting(cls.send_command))
+    return lambda: sent[0]

@@ -436,12 +436,12 @@ def test_knn_driver_and_distributed_regimes_identical(
 
 
 def test_knn_driver_regime_runs_no_spark_job(spark, corpus, served,
-                                             tombstoned):
+                                             tombstoned, py4j_commands):
     """On a warm memo, knn-only, ann, hybrid, multi-section and paged
-    bodies answer without launching a Spark job, with or without
-    tombstones: the graph and vectors are decoded on the driver, the
-    text side is score_all's driver regime and the cut is a local
-    frame."""
+    bodies answer without launching a Spark job or making a JVM call,
+    with or without tombstones: the graph and vectors are decoded on the
+    driver, the text side is score_all's driver regime, and the cut and
+    the `from` page are LocalFrames."""
     import time
 
     si, _, V, _ = corpus
@@ -456,7 +456,9 @@ def test_knn_driver_regime_runs_no_spark_job(spark, corpus, served,
         sc.setJobGroup(group, group)
         try:
             for body, g in bodies:
+                n = py4j_commands()
                 assert _hits(idx, body, vecs_p, g)
+                assert py4j_commands() == n, body
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         time.sleep(1.0)  # let the listener bus deliver any job start

@@ -1087,6 +1087,9 @@ REGIME_CALLS = [
     lambda si: si.search_many(REGIME_BATCH, 100),
     lambda si: si.search_many(REGIME_BATCH, 300),
 ]
+# the nested-bool tree's expressions still run in Catalyst over a local
+# relation: no Spark job, but JVM calls
+TREE_CALLS = REGIME_CALLS[2:5]
 
 
 @pytest.fixture(scope="module")
@@ -1151,23 +1154,34 @@ def test_search_driver_and_distributed_regimes_identical(
 
 
 def test_search_driver_regime_runs_no_spark_job(
-        spark, index_dir, tombstoned_dir):
+        spark, index_dir, tombstoned_dir, py4j_commands):
     """A driver-regime search, phrase, nested bool or search_many on a
     warm index reads its postings (and doc-store columns) with pyarrow
-    and builds its result as a local relation: neither the call nor
-    collect() launches a Spark job, with or without tombstones. Empty
-    answers (an absent phrase term, an unsatisfiable msm, a batch of
-    absent terms) are zero-row Arrow tables, job-free too."""
+    and returns a LocalFrame: neither the call nor collect() launches a
+    Spark job, with or without tombstones. Empty answers (an absent
+    phrase term, an unsatisfiable msm, a batch of absent terms) are
+    empty LocalFrames, job-free too. Except for the nested-bool tree
+    (TREE_CALLS and the empty tree call), whose expressions still run
+    in Catalyst, neither the call nor collect() makes a JVM call."""
     import time
 
+    tree_empty = lambda si: si.search_bool_tree(  # noqa: E731
+        {"should": [["node"]], "minimum_should_match": 2}, 10)
     empty_calls = [
         lambda si: si.search_phrase(["node", "zzz_absent"], 10),
         lambda si: si.search_bool(should=["node", "cursor"], k=10,
                                   minimum_should_match=3),
-        lambda si: si.search_bool_tree(
-            {"should": [["node"]], "minimum_should_match": 2}, 10),
+        tree_empty,
         lambda si: si.search_many({"a": ["zzz_absent"]}, 10),
     ]
+
+    def rows(call, si):
+        n = py4j_commands()
+        out = call(si).collect()
+        if call not in TREE_CALLS and call is not tree_empty:
+            assert py4j_commands() == n
+        return out
+
     sc = spark.sparkContext
     for i, d in enumerate((index_dir, tombstoned_dir)):
         si = SegmentIndex(spark, d).warm()
@@ -1176,16 +1190,95 @@ def test_search_driver_regime_runs_no_spark_job(
         sc.setJobGroup(group, group)
         try:
             for q in REGIME_QUERIES:
-                assert si.search(q, 10).collect()
+                assert rows(lambda si: si.search(q, 10), si)
             for call in REGIME_CALLS:
-                assert call(si).collect()
+                assert rows(call, si)
             for call in empty_calls:
-                assert not call(si).collect()
+                assert not rows(call, si)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         time.sleep(1.0)  # let the listener bus deliver any job start
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         si.close()
+
+
+MIXED_BATCH = [
+    {"query": {"match": {"content": "node cursor"}}},
+    {"query": {"match_phrase": {"content": "node cursor"}}},
+    {"query": {"bool": {
+        "must": [{"bool": {"should": [{"match": {"content": "shard"}},
+                                      {"match": {"content": "group"}}]}}],
+        "should": [{"match": {"content": "stream"}}]}}},
+    {"query": {"match": {"content": "zzz_absent"}}},
+]
+
+
+def test_msearch_mixed_batch_runs_no_spark_job(spark, index_dir,
+                                               tombstoned_dir):
+    """An msearch batch mixing a match, a match_phrase, a nested bool
+    and an absent-term match runs each part in a driver regime, and the
+    parts combine in pandas, in part order: no Spark job, and each
+    body's block equals its own es_search."""
+    import time
+
+    from newssearchengine_spark.plans.dsl import es_msearch, es_search
+    from newssearchengine_spark.plans.search import LocalFrame
+
+    sc = spark.sparkContext
+    for i, d in enumerate((index_dir, tombstoned_dir)):
+        si = SegmentIndex(spark, d).warm(positions=True)
+        want = [(str(q), *r) for q, b in enumerate(MIXED_BATCH)
+                for r in es_search(si, b, size=7).collect()]
+        assert {q for q, *_ in want} == {"0", "1", "2"}
+        group = f"msearch-mixed-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            out = es_msearch(si, MIXED_BATCH, size=7)
+            got = out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        time.sleep(1.0)  # let the listener bus deliver any job start
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert isinstance(out, LocalFrame)
+        assert sorted(tuple(r) for r in got) == sorted(want)
+        # part order: the batched match group ("0"; "3" has no hit),
+        # then "1" and "2" in body order
+        qids = [r["query_id"] for r in got]
+        assert qids == sorted(qids)
+        si.close()
+
+
+@pytest.mark.parametrize("regime", ["driver", "distributed"])
+def test_negative_size_and_from_are_rejected(spark, index_dir, regime,
+                                             monkeypatch, py4j_commands):
+    """A negative `size` or `from` is ES's 400, raised by es_search and
+    es_msearch before any plan (no JVM call) in either regime — not a
+    truncated page, a numpy error, a Spark limit error or a hit ranked
+    at the negative offset."""
+    import re
+
+    import newssearchengine_spark.plans.search as S
+    from newssearchengine_spark.plans.dsl import es_msearch, es_search
+
+    si = SegmentIndex(spark, index_dir).warm()
+    modes = ["taat"]
+    if regime == "distributed":
+        monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
+        modes.append("wand")
+    body = {"query": {"match": {"content": "node cursor"}}}
+    size_msg = re.escape("[size] parameter cannot be negative, found [-1]")
+    from_msg = re.escape("[from] parameter cannot be negative, found [-2]")
+    n = py4j_commands()
+    for mode in modes:
+        with pytest.raises(ValueError, match=size_msg):
+            es_search(si, body, size=-1, mode=mode)
+        with pytest.raises(ValueError, match=from_msg):
+            es_search(si, {**body, "from": -2}, mode=mode)
+        with pytest.raises(ValueError, match=size_msg):
+            es_msearch(si, [body, body], size=-1, mode=mode)
+        with pytest.raises(ValueError, match=from_msg):
+            es_msearch(si, [body, {**body, "from": -2}], mode=mode)
+    assert py4j_commands() == n
 
 
 def test_tombstone_memo_consistent_under_threads(spark, index_dir,
