@@ -2121,11 +2121,11 @@ FROM sc ORDER BY score DESC, doc_id ASC LIMIT {k}"""
 def ft_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES boosting query through the REAL engine: positive OR-disjunction
     scores BM25, negative-matching docs demoted by negative_boost —
-    exact over the FULL positive match set via search_boosting's
-    WAND-probed stop proof (demotion can promote docs from arbitrarily
+    exact over the FULL positive match set: search_boosting scores
+    every positive match (demotion can promote docs from arbitrarily
     deep, so a fixed over-fetch would be wrong; the oracle scores every
-    match). tests/test_es_dsl.py pins that the demotion actually
-    reorders this corpus and that both regimes are row-identical."""
+    match too). tests/test_es_dsl.py pins that the demotion actually
+    reorders this corpus and that both placements are row-identical."""
     from ..plans.dsl import es_search
 
     si = _gate_index(spark, sf_dir)
@@ -2231,7 +2231,7 @@ parts AS (
 raw AS (SELECT doc_id, sum(p) AS s FROM parts GROUP BY doc_id),
 sc AS (
   SELECT r.doc_id,
-         round(r.s * ln(1 + {factor} * d2.n_chars), 6) AS score
+         round(r.s * log10(1 + {factor} * d2.n_chars), 6) AS score
   FROM raw r JOIN documents d2 USING (doc_id)
 )
 SELECT (row_number() OVER (ORDER BY score DESC, doc_id ASC) - 1)::BIGINT AS rank,
@@ -2244,11 +2244,10 @@ FROM sc ORDER BY score DESC, doc_id ASC LIMIT {k}"""
 def ft_function_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES function_score with field_value_factor through the REAL
     engine: final = bm25(query) * log1p(factor * n_chars) over EVERY
-    matching doc (the boost-by-popularity shape). Per-doc factors can
-    promote docs from arbitrarily deep, so the engine's WAND-probed
-    bound (unscanned final <= s_m * corpus-max factor) proves the
-    rounded top-k without scoring the full match set; the oracle scores
-    everything. Regime parity pinned in tests/test_es_dsl.py."""
+    matching doc (the boost-by-popularity shape), where ES's log1p is
+    the common logarithm log10(1 + x). Per-doc factors can promote docs
+    from arbitrarily deep, so the engine and the oracle both score the
+    full match set. Placement parity pinned in tests/test_es_dsl.py."""
     from ..plans.dsl import es_search
 
     si = _gate_index(spark, sf_dir)
@@ -2313,11 +2312,10 @@ def ft_function_score_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     firing weights, capped at max_boost, boost_mode=multiply applying
     the cap to BM25 — docs matched by no function keep their query
     score (the ES no-match contract; the oracle's CASE product is 1
-    there and the cap >= 1 never touches it). The engine's WAND-probed
-    bound (unscanned final <= s_m * max combined weight) proves the
-    rounded top-k without scoring the full match set; the oracle scores
-    everything. Regime parity + all five score_modes pinned against a
-    pure-python oracle in tests/test_es_dsl.py."""
+    there and the cap >= 1 never touches it). The engine and the oracle
+    both score the full match set. Placement parity + all five
+    score_modes pinned against a pure-python oracle in
+    tests/test_es_dsl.py."""
     from ..plans.dsl import es_search
 
     si = _gate_index(spark, sf_dir)

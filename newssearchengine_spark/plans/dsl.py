@@ -22,7 +22,7 @@ bodies onto the engine so the queries run UNCHANGED:
 - match_all / constant_score (filter context at a constant boost) /
   boosting (negative_boost demotion, exact over the full positive
   match set) / function_score with field_value_factor (boost by a
-  doc field, exact via the same bounded-probe design) / multi_match
+  doc field, exact over the full match set) / multi_match
   type best_fields|most_fields with tie_breaker / explicit dis_max
   with per-sub-query texts / simple_query_string (the unambiguous
   subset) / whole-query exists — the remaining ES compound-query
@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .search import (MANY_SCHEMA, TOPK_SCHEMA, LocalFrame, SegmentIndex,
-                     search_dismax)
+                     _rank_topk, search_dismax)
 
 def _split_on(toks: list[str], op: str) -> list[list[str]]:
     """Split a token list on an operator token, dropping empty segments
@@ -1047,11 +1047,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             total = total.unionByName(r)
         scored = (total.groupBy("doc_id")
                   .agg(F.round(F.sum("kscore"), 6).alias("score")))
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _rank_topk(scored, size)
     kind, spec = next(iter(q.items()))
     multi = indexes if isinstance(indexes, dict) else None
 
@@ -1489,7 +1485,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
 
         if _bool_is_nested(spec):
             # nested bool: the general single-scan tree evaluator; flat
-            # bodies keep the WAND/driver-pruned fast path below
+            # bodies keep the candidate-pruned flat path below
             return _bscale(
                 si.search_bool_tree(_bool_to_tree(si, spec), k=size))
 
@@ -1707,7 +1703,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
     if kind == "boosting":
         # positive scores BM25; negative-matching docs are demoted by
         # negative_boost — exact over the full positive match set
-        # (SegmentIndex.search_boosting's WAND-probed stop proof)
+        # (SegmentIndex.search_boosting)
         nb = float(spec.get("negative_boost", 0.5))
         try:
             pos_t = _or_query_text(spec["positive"])
@@ -1767,15 +1763,11 @@ def es_search(indexes, body: dict, size: int = 10, *,
             "doc_id",
             F.round(cosine(F.col("__v"), qlit) + F.lit(const), 6)
             .alias("score"))
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _rank_topk(scored, size)
 
     if kind == "function_score":
         # relevance combined with per-doc boosts — exact over the full
-        # match set via the engine's bounded probes. Two ES shapes:
+        # match set. Two ES shapes:
         # a functions LIST of filter+weight functions (score_mode /
         # boost_mode / max_boost), or a single field_value_factor.
         inner = spec.get("query")
@@ -1788,7 +1780,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             ik, ispec = next(iter(inner.items()))
             # a bool inner query routes as its tree (served exactly off
             # the complete single-scan tree relation); OR-matching kinds
-            # keep the WAND-probed regime
+            # score through score_all
             iq = (_bool_to_tree(si, ispec) if ik == "bool"
                   else _or_query_text(inner))
             return si.search_function_score_fns(
@@ -1963,7 +1955,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
         # pivot. To COMBINE with relevance the way ES users put
         # rank_feature in bool.should, use function_score
         # (field_value_factor / functions list, boost_mode=sum) — same
-        # algebra, served by the WAND-probed exact regimes.
+        # algebra, served exactly over the complete match set.
         feat = str(spec["field"])
         boost = float(spec.get("boost", 1.0))
         x = F.col(feat).cast("double")
@@ -1989,11 +1981,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                   .filter(x.isNotNull())
                   .select("doc_id",
                           F.round(F.lit(boost) * fx, 6).alias("score")))
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _rank_topk(scored, size)
 
     if kind == "terms_set":
         # ES terms_set: {"terms_set": {field: {"terms": [...],
@@ -2047,11 +2035,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 return si._empty()
             agg = agg.filter(F.col("_n") >= F.lit(max(m, 1)))
         hits = si._exclude_dead(agg)
-        top = hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _rank_topk(hits, size)
 
     if kind == "pinned":
         # ES pinned query: the listed ids rank FIRST, in list order,
@@ -2208,11 +2192,7 @@ def _es_collapse(indexes, body: dict, col_spec: dict,
     wg = Window.partitionBy(fld).orderBy(F.desc("score"), F.asc("doc_id"))
     best = (j.withColumn("_rn", F.row_number().over(wg))
             .filter(F.col("_rn") == 1).drop("_rn"))
-    topk = best.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk.select(
-        (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-        "doc_id", "score", fld)
+    return _rank_topk(best, size, fld)
 
 
 def es_suggest(index: SegmentIndex, body: dict) -> DataFrame:

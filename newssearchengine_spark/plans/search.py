@@ -52,44 +52,21 @@ _SCORE_COLS = ("doc_part", "term", "docs", "tfs", "dls", "block_last",
                "block_max")
 PHRASE_CAND_SCHEMA = "doc_id bigint, occ bigint, dl bigint"
 
-# Phrase-candidate rows are bounded by the min posting df of the phrase's
-# required terms (a doc containing the phrase contains every term) — known
-# driver-locally from the term dictionary BEFORE any job. Applies only
-# above SEARCH_DRIVER_CAP (below it the phrase paths read on the driver
-# with no job): under this cap the distributed matcher's candidates are
-# gathered to the driver in one job and scored over a local relation;
-# above it (a hot phrase at 100x scale) the candidate relation stays
-# distributed. 2^17 rows of (3 x int64) ~ 3 MB.
-PHRASE_DRIVER_CAP = 1 << 17
-
-# Bool-query candidate cap: the result set is bounded by the most
-# selective must clause's doc coverage (sum of its terms' dfs — known
-# from the term dictionary before any job); under this cap candidates
-# are intersected per part and only they are scored. Above it (every
-# must clause hot at 100x scale) the distributed semi-join plan runs.
-# Flat search_bool only; the nested-bool tree (search_bool_tree) takes
-# the SEARCH_DRIVER_CAP placement rule.
-BOOL_DRIVER_CAP = 1 << 17
-
-# search_many driver-merge cap on the PROVEN per-part top-k output bound
-# (n_parts * n_queries * k rows). Applies only above SEARCH_DRIVER_CAP
-# (below it the batch is scored on the driver with no job): under this
-# cap the batch finishes with one distributed stage + a driver merge;
-# above it the per-query window runs.
-MANY_DRIVER_CAP = 1 << 21
-#: driver regime — the one placement rule of search, search_many, the
-#: phrase paths and the nested-bool tree (SegmentIndex._driver_ok): on a
-#: warm handle, when the PROVEN read volume (Σdf of the terms whose
+#: The one query-placement cap (SegmentIndex._driver_ok). Every
+#: per-doc_part scorer — search, search_many, score_all, the phrase
+#: paths, flat and nested bool, search_mixed — runs on the driver on a
+#: warm handle when the PROVEN read volume (Σdf of the terms whose
 #: postings are read, Σcf of those whose positions are read, n_docs when
-#: the doc store is read — all known from the dictionary before any job)
-#: fits the cap, read the pruned segment rows with a driver-local
-#: pyarrow scan of the terms' bucket directories (no Spark job) and run
-#: the SAME per-part closure on the driver. 2^19 postings decode
-#: to ~24 B/posting of int64 numpy (docs+tfs+dls) ≈ 13 MB transient —
-#: fixed-width and bounded (the element-based guard style VERDICT r4
-#: asked for). The calibration below was measured when the driver regime
-#: still gathered its rows with one Spark job (~85 ms of fixed cost per
-#: query that the pyarrow read removed); the cap has not been retuned.
+#: the doc store is read — all known from the dictionary before any
+#: read) fits the cap: the terms' segment rows come from a driver-local
+#: pyarrow read of their bucket directories (no Spark job) and the SAME
+#: closure runs per doc_part. Above the cap, cold, or in wand mode the
+#: closure runs in its one distributed applyInPandas plan. 2^19 postings
+#: decode to ~24 B/posting of int64 numpy (docs+tfs+dls) ≈ 13 MB
+#: transient — fixed-width and bounded. The calibration below was
+#: measured when the driver regime still gathered its rows with one
+#: Spark job (~85 ms of fixed cost per query that the pyarrow read
+#: removed); the cap has not been retuned.
 #: Cap calibration, measured on the 800k-doc index (warm, local[8]):
 #: the distributed single-query job is overhead-bound at ~1.15 s
 #: regardless of size (~50 small tasks of scheduling + Arrow worker
@@ -100,8 +77,8 @@ MANY_DRIVER_CAP = 1 << 21
 #: queries ran driver-side and 8-submitter throughput at local[8] FELL
 #: 1.03 -> 0.62 qps while local[2] rose 0.56 -> 0.72 (the crossover
 #: depends on cores the guard cannot see). 2^19 keeps typical queries
-#: (the sf0.1 suite's whole dictionary is far below it) on the ~0.35 s
-#: driver floor and routes hot disjunctions to the distributed plan,
+#: (the sf0.1 suite's whole dictionary is far below it) on the driver
+#: and routes hot disjunctions to the distributed plan,
 #: which scales with executors — the only shape that matters at
 #: 10^12-doc scale, where every hot term exceeds any driver cap anyway.
 #: WAND stays distributed at EVERY size: its per-part block loop is
@@ -118,51 +95,6 @@ DELETED_ISIN_CAP = 1 << 14
 # the dead set stays a distributed relation (an operational smell —
 # compact_index is the cure — but never a wrong answer).
 DELETED_DRIVER_BYTES_CAP = 1 << 28
-
-
-def _make_clause_intersector(must_clauses: list[list[str]],
-                             must_not: list[str],
-                             should: list[str] | None = None,
-                             msm: int = 0):
-    """Per-doc_part bool-candidate emitter for applyInPandas: decode the
-    scanned terms' postings once, emit docs containing >= 1 term of EVERY
-    must clause, >= msm distinct `should` terms (when msm > 0), and none
-    of must_not. A doc's postings all live in one doc_part, so every
-    constraint is per-part decidable (the same locality the phrase
-    matcher uses) — candidates flow out, postings never shuffle."""
-
-    def intersect_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64)})
-        docsets: dict[str, np.ndarray] = {}
-        for row in pdf.itertuples(index=False):
-            ids, _, _ = decode_postings(row.docs, row.tfs, row.dls)
-            docsets[row.term] = ids
-        cur = None
-        for clause in must_clauses:
-            arrs = [docsets[t] for t in clause if t in docsets]
-            if not arrs:
-                return empty  # no clause term in this range -> no matches
-            cd = arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
-            cur = cd if cur is None else cur[np.isin(cur, cd)]
-            if cur.size == 0:
-                return empty
-        if msm > 0:
-            # posting doc-ids are unique per term, so concat counts ==
-            # distinct-should-term matches per doc
-            arrs = [docsets[t] for t in (should or []) if t in docsets]
-            if len(arrs) < msm:
-                return empty
-            uniq, cnt = np.unique(np.concatenate(arrs), return_counts=True)
-            qual = uniq[cnt >= msm]
-            cur = qual if cur is None else cur[np.isin(cur, qual)]
-            if cur.size == 0:
-                return empty
-        for t in must_not:
-            if t in docsets and cur.size:
-                cur = cur[~np.isin(cur, docsets[t])]
-        return pd.DataFrame({"doc_id": cur})
-
-    return intersect_group
 
 
 def _meta_filter_pred(meta_clauses: list[tuple]):
@@ -197,15 +129,28 @@ def _meta_filter_pred(meta_clauses: list[tuple]):
     return out
 
 
+def _field_value_factor(field: str, factor: float, modifier: str,
+                        missing: float):
+    """ES field_value_factor as a Catalyst column: modifier(factor *
+    coalesce(field, missing)), modifier in {none, log1p, sqrt} — ES's
+    log1p is the COMMON logarithm, log10(1 + x)."""
+    v = F.lit(float(factor)) * F.coalesce(F.col(field).cast("double"),
+                                          F.lit(float(missing)))
+    if modifier == "log1p":
+        return F.log10(F.lit(1.0) + v)
+    return F.sqrt(v) if modifier == "sqrt" else v
+
+
 def _make_bool_taat(must_clauses: list[list[str]], must_not: list[str],
                     should: list[str], msm: int, scoring_terms: list[str],
                     idf_map: dict[str, float], *, k1: float, b: float,
                     avgdl: float, k: int | None, cogrouped: bool = False,
                     zero_fill: bool = False):
     """Combined constraint-intersection + candidate-restricted scoring for
-    the ABOVE-CAP bool regime (VERDICT r4 #1): one applyInPandas pass per
-    doc_part that (a) decodes every scanned term's postings ONCE, (b)
-    intersects the bool constraints into a candidate doc set, (c)
+    flat bool, one closure for both placements (on the driver under
+    SEARCH_DRIVER_CAP, else one applyInPandas pass): per doc_part it (a)
+    decodes every scanned term's postings ONCE, (b) intersects the bool
+    constraints into a candidate doc set, (c)
     accumulates BM25 over the scoring terms restricted to candidates — in
     sorted-term order, so surviving docs' float64 sums are bit-identical
     to score_all / _scores_for_docs — and (d) cuts to a margin-safe
@@ -489,16 +434,15 @@ def _score_rows(rows) -> pd.DataFrame:
         "score": np.array([r[1] for r in rows], dtype=np.float64)})
 
 
-def _eager_topk(rel: DataFrame, out: DataFrame,
-                schema: str = RANKED_SCHEMA) -> DataFrame:
-    """Materialize a (tiny, <= k rows) top-k result and release the
-    persisted intermediate `rel` — phrase/bool search persist a candidate
-    relation shared by a stats action and the scoring plan, and a lazy
-    return would leak that cache in long-lived sessions (e.g. the
-    incremental-index stream that queries every batch)."""
-    pdf = out.toPandas()
-    rel.unpersist()
-    return LocalFrame(out.sparkSession, pdf, schema)
+def _rank_topk(scored: DataFrame, k: int, *cols: str) -> DataFrame:
+    """The distributed plans' one top-k tail (SegmentIndex._cut_topk is
+    the driver's): (doc_id, score, *cols) rows ordered by score desc,
+    doc_id asc, the first k numbered 0.. as `rank` — a
+    TakeOrderedAndProject under a single-partition window."""
+    order = (F.desc("score"), F.asc("doc_id"))
+    return scored.orderBy(*order).limit(k).select(
+        (F.row_number().over(Window.orderBy(*order)) - 1)
+        .cast("bigint").alias("rank"), "doc_id", "score", *cols)
 
 
 class SegmentIndex:
@@ -628,7 +572,7 @@ class SegmentIndex:
         return {t: self._term_cache[t] for t in terms}
 
     def _driver_ok(self, terms=(), pos_terms=(), doc_store=False) -> bool:
-        """The driver regimes' one placement rule: a warm handle whose
+        """The one query-placement rule: a warm handle whose
         read volume, proven from the dictionary before any read, fits
         SEARCH_DRIVER_CAP — Σdf of the terms whose postings are read,
         plus Σ(df+cf) of those whose postings and positions are read,
@@ -641,14 +585,51 @@ class SegmentIndex:
                + (int(self.stats["n_docs"]) if doc_store else 0))
         return vol <= SEARCH_DRIVER_CAP
 
-    def _per_part_local(self, fn, terms: list[str],
-                        cols: list[str]) -> pd.DataFrame | None:
+    def _per_part_local(self, fn, terms: list[str], cols: list[str],
+                        allowed=None) -> pd.DataFrame | None:
         """The driver form of `_by_part(seg).applyInPandas(fn, ...)`: the
         SAME per-doc_part closure over a pyarrow read of the terms'
-        segment rows. None when no row was read."""
+        segment rows. With `allowed` (sorted doc ids a metadata filter
+        admits) it is the driver form of the cogroup with the admitted
+        (doc_part, doc_id) stream: fn(segment rows, admitted rows) runs
+        for every part either side holds. None when no part was read."""
         pdf = self._read_buckets("segments", terms, cols)
-        outs = [fn(g) for _, g in pdf.groupby("doc_part", sort=True)]
+        if allowed is None:
+            outs = [fn(g) for _, g in pdf.groupby("doc_part", sort=True)]
+        else:
+            right = pd.DataFrame({
+                "doc_part": allowed // int(self.stats["doc_range"]),
+                "doc_id": allowed})
+            lg = dict(list(pdf.groupby("doc_part")))
+            rg = dict(list(right.groupby("doc_part")))
+            outs = [fn(lg.get(p, pdf.iloc[:0]), rg.get(p, right.iloc[:0]))
+                    for p in sorted(set(lg) | set(rg))]
         return pd.concat(outs, ignore_index=True) if outs else None
+
+    def _per_part(self, fn, terms: list[str], cols: list[str], schema: str,
+                  local: bool, positions: bool = False):
+        """One per-doc_part closure, two placements: on the driver
+        (`local`, decided by _driver_ok) over a pyarrow read — a pandas
+        frame, None when no row was read — else applyInPandas over the
+        pruned distributed scan (_scan), a DataFrame of `schema`. The
+        same closure over the same rows gives the same frame."""
+        if local:
+            return self._per_part_local(fn, terms, cols)
+        return self._by_part(self._scan(terms, cols, positions)
+                             ).applyInPandas(fn, schema)
+
+    def _scan(self, terms, cols, positions: bool = False) -> DataFrame:
+        """The pruned segment scan the distributed plans read: only the
+        terms' bucket=<b> directories (partition pruning), the term
+        predicate pushed to parquet row groups (files are term-sorted),
+        projected to `cols`; positions=True reads the positional
+        relation."""
+        n_buckets = int(self.stats["n_buckets"])
+        src = self._pos_segments() if positions else self._segments
+        return (src.filter(F.col("bucket").isin(
+                    sorted({term_bucket(t, n_buckets) for t in terms})))
+                .filter(F.col("term").isin(list(terms)))
+                .select(*cols))
 
     def _read_buckets(self, table: str, terms: list[str],
                       columns: list[str]) -> pd.DataFrame:
@@ -860,8 +841,6 @@ class SegmentIndex:
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        n_buckets = int(self.stats["n_buckets"])
-
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
         if not terms:
@@ -870,35 +849,12 @@ class SegmentIndex:
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in terms}
         scorer = _make_scorer(idf_map, k1=k1, b=b, avgdl=avgdl, k=k,
                               mode=mode, after=after)
-        cols = list(_SCORE_COLS)
-        if mode == "taat" and self._driver_ok(terms):
-            # driver regime (warm engine only): the pruned segment rows
-            # (bytes blobs, ~1 B/posting) come straight from the parquet
-            # files, then the SAME scorer closure runs per doc_part on
-            # the driver — per-part outputs and the (raw score desc,
-            # doc_id asc) global cut are bit-identical to the distributed
-            # plan (pytest-pinned), with no Spark job. Bound proven from
-            # the dictionary before any read; above the cap (every
-            # hot-term disjunction at 10^12-doc scale) the distributed
-            # plan below runs unchanged.
-            cand = self._per_part_local(scorer, terms, cols)
-            out = (self._empty() if cand is None
-                   else self._cut_topk(cand, k))
-            return self._with_meta(out) if with_meta else out
-        buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))       # directory pruning
-            .filter(F.col("term").isin(terms))           # row-group pushdown
-            .select(*cols)
-        )
-        per_part = self._by_part(seg).applyInPandas(scorer, TOPK_SCHEMA)
-        topk = per_part.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        # bound proven from the dictionary before any read; the driver
+        # placement's per-part outputs and (raw score desc, doc_id asc)
+        # cut are bit-identical to the distributed plan (pytest-pinned)
+        local = mode == "taat" and self._driver_ok(terms)
+        out = self._cut_topk(self._per_part(
+            scorer, terms, list(_SCORE_COLS), TOPK_SCHEMA, local), k)
         return self._with_meta(out) if with_meta else out
 
     def _with_meta(self, out: DataFrame) -> DataFrame:
@@ -913,19 +869,34 @@ class SegmentIndex:
             columns=[f.split()[0] for f in schema.split(",")]), schema)
 
     def _cut_topk(self, cand, k: int) -> DataFrame:
-        """The driver regimes' one top-k cut: (doc_id, score) rows ordered
-        by score desc, doc_id asc, the first k numbered 0.. as `rank`, in
-        a LocalFrame — no Spark job and no JVM call. `cand` is a pandas
-        frame, or (the bool tree only) a Spark projection over a local
-        relation, whose collect() the optimizer evaluates on the driver
-        (ConvertToLocalRelation) without a job."""
+        """The one top-k cut of both placements: (doc_id, score) rows
+        ordered by score desc, doc_id asc, the first k numbered 0.. as
+        `rank`. A pandas frame (the driver placement) is cut into a
+        LocalFrame — no Spark job and no JVM call; a DataFrame (a
+        distributed plan) takes _rank_topk; None (no row read) is an
+        empty result."""
+        if cand is None:
+            return self._empty()
         if isinstance(cand, DataFrame):
-            cand = _score_rows(cand.collect())
+            return _rank_topk(cand, k)
         cand = (cand.sort_values(["score", "doc_id"], ascending=[False, True],
                                  kind="mergesort")
                 .head(k).reset_index(drop=True))
         cand.insert(0, "rank", np.arange(len(cand), dtype=np.int64))
         return LocalFrame(self.spark, cand)
+
+    def _round_cut(self, cand, k: int) -> DataFrame:
+        """_cut_topk over scores rounded 6 dp HALF_UP: _round_half_up on
+        the driver, Catalyst's F.round — the same values — in a
+        distributed plan."""
+        from ..operators.similarity import _round_half_up
+
+        if isinstance(cand, pd.DataFrame):
+            cand = cand.assign(score=_round_half_up(
+                cand["score"].to_numpy(np.float64), 6))
+        elif cand is not None:
+            cand = cand.select("doc_id", F.round("score", 6).alias("score"))
+        return self._cut_topk(cand, k)
 
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Terms in the dictionary starting with `prefix`, ordered by
@@ -1092,9 +1063,8 @@ class SegmentIndex:
         the matcher, the numpy scoring and the pandas top-k cut all run
         on the driver, returning a LocalFrame — no Spark job and no JVM
         call, except composition. Above it the matcher runs distributed
-        (pruned positional-segment scan -> applyInPandas), Catalyst
-        scores, and _phrase_topk gathers or persists the candidates by
-        PHRASE_DRIVER_CAP.
+        (pruned positional-segment scan -> applyInPandas) and Catalyst
+        scores and ranks the candidates (_phrase_scores, _rank_topk).
 
         slop > 0 runs the SLOPPY matcher over the same scan: Lucene's
         acceptance (an assignment of one position per term whose
@@ -1128,13 +1098,11 @@ class SegmentIndex:
 
     def _phrase_plan(self, terms: list, slop: int = 0,
                      last_alts: list | None = None):
-        """(scan_terms, matcher, bound) of a phrase — or, with last_alts
-        (the expanded alternatives of a trailing PREFIX, the
+        """(scan_terms, matcher) of a phrase — or, with last_alts (the
+        expanded alternatives of a trailing PREFIX, the
         match_phrase_prefix shape), a phrase-prefix — or None when it
         can match nothing (no terms / an absent required term / zero
-        expansions). bound = the PROVEN candidate bound: min fixed-term
-        df, or the sum of alt dfs for a pure-prefix phrase. Only the
-        dictionary is read."""
+        expansions). Only the dictionary is read."""
         if not self.stats.get("with_positions"):
             raise ValueError(
                 "phrase clauses need the positional sidecar "
@@ -1164,148 +1132,74 @@ class SegmentIndex:
         phrase = fixed + (alts or [])[:1]
         matcher = (_make_sloppy_phrase_matcher(phrase, slop, last_alts=alts)
                    if sloppy else _make_phrase_matcher(phrase, last_alts=alts))
-        bound = (min(dfs.values()) if fixed
-                 else sum(self.term_dfs(alts).values()))
-        return sorted(set(fixed) | set(alts or ())), matcher, bound
+        return sorted(set(fixed) | set(alts or ())), matcher
 
     def _phrase_cands(self, scan_terms: list[str], matcher):
         """(doc_id, occ, dl) candidates of a phrase plan: a pandas frame
-        when the driver regime reads the positional rows (_driver_ok on
-        Σdf + Σcf of the scan terms — no Spark job), else the
+        when the driver placement reads the positional rows (_driver_ok
+        on Σdf + Σcf of the scan terms — no Spark job), else the
         distributed per-part matcher plan."""
         cols = ["doc_part", "term", "docs", "tfs", "dls", "positions"]
-        if self._driver_ok(pos_terms=scan_terms):
-            cand = self._per_part_local(matcher, scan_terms, cols)
-            return (pd.DataFrame(columns=["doc_id", "occ", "dl"])
-                    if cand is None else cand)
-        n_buckets = int(self.stats["n_buckets"])
-        seg = (
-            self._pos_segments()
-            .filter(F.col("bucket").isin(
-                sorted({term_bucket(t, n_buckets) for t in scan_terms})))
-            .filter(F.col("term").isin(scan_terms))
-            .select(*cols)
-        )
-        return self._by_part(seg).applyInPandas(matcher, PHRASE_CAND_SCHEMA)
+        cand = self._per_part(matcher, scan_terms, cols, PHRASE_CAND_SCHEMA,
+                              self._driver_ok(pos_terms=scan_terms),
+                              positions=True)
+        return (pd.DataFrame(columns=["doc_id", "occ", "dl"])
+                if cand is None else cand)
 
     def _phrase_topk(self, plan, *, k: int) -> DataFrame:
-        """Score + top-k a phrase plan's (_phrase_plan) candidates
-        (doc_id, occ, dl).
+        """Score + top-k a phrase plan (_phrase_plan): _phrase_scores in
+        its placement, then _round_cut — on the driver numpy scores,
+        _round_half_up and a LocalFrame cut (no Spark job and no JVM
+        call); above the cap Catalyst scores, rounds and ranks. Both
+        placements give bit-identical rows (pytest-pinned)."""
+        return self._round_cut(self._phrase_scores(plan, frame=False), k)
 
-        Three regimes:
-        - driver (_phrase_cands read the rows with pyarrow):
-          _phrase_scores scores them in numpy, _round_half_up rounds 6 dp
-          like Spark's F.round and _cut_topk ranks them in a LocalFrame —
-          no Spark job and no JVM call.
-        - PROVEN candidate bound <= PHRASE_DRIVER_CAP: gather the
-          distributed matcher's candidates with ONE Spark job (Arrow
-          toPandas) and score them with Catalyst over a local relation.
-        - above that cap: persist the candidate relation, count for the
-          phrase df, score distributed; eager top-k releases the cache.
-        All three give bit-identical rows (pytest-pinned).
-        """
-        from ..operators.similarity import _round_half_up
-
-        scan_terms, matcher, bound = plan
-        cand = self._phrase_cands(scan_terms, matcher)
-        if isinstance(cand, pd.DataFrame):
-            sc = self._phrase_scores(plan, frame=False, cand=cand)
-            if sc is None:
-                return self._empty()
-            return self._cut_topk(sc.assign(score=_round_half_up(
-                sc["score"].to_numpy(np.float64), 6)), k)
-        release = None
-        if bound <= PHRASE_DRIVER_CAP:
-            pdf = cand.toPandas()
-            dfp = float(len(pdf))
-            if dfp == 0:
-                return self._empty()
-            cand = LocalFrame(self.spark, pdf, PHRASE_CAND_SCHEMA)
-        else:
-            cand = cand.persist()
-            dfp = float(cand.count())
-            if dfp == 0:
-                cand.unpersist()
-                return self._empty()
-            release = cand
-        n_docs = float(self.stats["n_docs"])
-        avgdl = float(self.stats["avgdl"])
-        k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        idf = float(np.log1p((n_docs - dfp + 0.5) / (dfp + 0.5)))
-        scored = cand.select(
-            "doc_id",
-            F.round(
-                F.lit(idf) * (F.col("occ") * (k1 + 1.0))
-                / (F.col("occ")
-                   + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))),
-                6,
-            ).alias("score"),
-        )
-        topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
-        if release is not None:
-            out = _eager_topk(release, out)
-        return out
-
-    def _phrase_scores(self, plan, frame: bool = True, cand=None):
+    def _phrase_scores(self, plan, frame: bool = True):
         """COMPLETE (doc_id, score double) relation of a phrase plan
-        (_phrase_plan) — the phrase analog of score_all, consumed by the
-        bool-tree compiler's phrase leaves (ES match_phrase — and, with
-        last_alts, match_phrase_prefix — inside bool bodies). Scoring
-        is the engine's phrase convention (search_phrase / _phrase_topk:
-        tf = occurrence count — sloppy participating-start count when
-        slop > 0 — idf over the PHRASE df), so a bool{must:[phrase]}
-        body scores identically to search_phrase (pytest-pinned).
-        Returns None when no doc contains the phrase.
+        (_phrase_plan) — the phrase analog of score_all, consumed by
+        _phrase_topk, the bool-tree compiler's phrase leaves (ES
+        match_phrase — and, with last_alts, match_phrase_prefix — inside
+        bool bodies) and the phrase DisMax. Scoring is the engine's
+        phrase convention (tf = occurrence count — sloppy
+        participating-start count when slop > 0 — idf over the PHRASE
+        df), so a bool{must:[phrase]} body scores identically to
+        search_phrase (pytest-pinned).
 
-        Regimes like _phrase_topk: the driver regime scores in numpy with
-        no Spark job (frame=False returns its pandas frame as is, for
-        _phrase_topk and the bool tree's driver regime; `cand` passes in
-        candidates _phrase_cands already read); under PHRASE_DRIVER_CAP the
-        candidates gather with ONE job and df/idf resolve locally (the
-        common case — phrases are selective by construction); above the
-        cap the relation stays distributed and the phrase df comes from
-        an in-plan count aggregation cross-joined back (the matcher
-        subtree may evaluate twice — accepted for the rare hot-phrase
-        shape instead of leaking a persist into the consumer's plan)."""
-        scan_terms, matcher, bound = plan
+        Placed like _phrase_cands. On the driver the candidates score in
+        numpy with no Spark job — None when no doc contains the phrase,
+        else a LocalFrame, or with frame=False the pandas frame as is.
+        Above the cap the relation stays distributed and the phrase df
+        comes from an in-plan count aggregation cross-joined back (the
+        matcher subtree may evaluate twice — accepted for the rare
+        hot-phrase shape instead of leaking a persist into the
+        consumer's plan)."""
+        scan_terms, matcher = plan
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        if cand is None:
-            cand = self._phrase_cands(scan_terms, matcher)
-        local = isinstance(cand, pd.DataFrame)
-        if local or bound <= PHRASE_DRIVER_CAP:
-            pdf = cand if local else cand.toPandas()
-            dfp = float(len(pdf))
-            if dfp == 0:
-                return None
-            idf = float(np.log1p((n_docs - dfp + 0.5) / (dfp + 0.5)))
-            sc = (idf * (pdf["occ"].to_numpy(np.float64) * (k1 + 1.0))
-                  / (pdf["occ"].to_numpy(np.float64)
-                     + k1 * (1.0 - b
-                             + b * pdf["dl"].to_numpy(np.float64)
+        cand = self._phrase_cands(scan_terms, matcher)
+        if isinstance(cand, DataFrame):
+            dfp_rel = cand.agg(
+                F.count(F.lit(1)).cast("double").alias("_dfp"))
+            return cand.crossJoin(F.broadcast(dfp_rel)).select(
+                "doc_id",
+                (F.log1p((F.lit(n_docs) - F.col("_dfp") + 0.5)
+                         / (F.col("_dfp") + 0.5))
+                 * (F.col("occ") * (k1 + 1.0))
+                 / (F.col("occ")
+                    + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
+                 ).alias("score"))
+        dfp = float(len(cand))
+        if dfp == 0:
+            return None
+        idf = float(np.log1p((n_docs - dfp + 0.5) / (dfp + 0.5)))
+        occ = cand["occ"].to_numpy(np.float64)
+        sc = (idf * (occ * (k1 + 1.0))
+              / (occ + k1 * (1.0 - b + b * cand["dl"].to_numpy(np.float64)
                              / avgdl)))
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(np.int64), "score": sc})
-            if local and not frame:
-                return out
-            return LocalFrame(self.spark, out, TOPK_SCHEMA)
-        dfp_rel = cand.agg(
-            F.count(F.lit(1)).cast("double").alias("_dfp"))
-        scored = cand.crossJoin(F.broadcast(dfp_rel)).select(
-            "doc_id",
-            (F.log1p((F.lit(n_docs) - F.col("_dfp") + 0.5)
-                     / (F.col("_dfp") + 0.5))
-             * (F.col("occ") * (k1 + 1.0))
-             / (F.col("occ")
-                + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-             ).alias("score"))
-        return scored
+        out = pd.DataFrame({
+            "doc_id": cand["doc_id"].to_numpy(np.int64), "score": sc})
+        return LocalFrame(self.spark, out, TOPK_SCHEMA) if frame else out
 
     def score_all(self, query) -> DataFrame:
         """Complete (doc_id, score double) relation for an OR-disjunction —
@@ -1322,19 +1216,13 @@ class SegmentIndex:
         terms, scorer = self._full_scorer(query)
         if not terms:
             return self._empty(TOPK_SCHEMA)
-        if self._driver_ok(terms):
-            cand = self._per_part_local(scorer, terms, list(_SCORE_COLS))
-            return (self._empty(TOPK_SCHEMA) if cand is None
-                    else LocalFrame(self.spark, cand, TOPK_SCHEMA))
-        n_buckets = int(self.stats["n_buckets"])
-        buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-            .select(*_SCORE_COLS)
-        )
-        return self._by_part(seg).applyInPandas(scorer, TOPK_SCHEMA)
+        cand = self._per_part(scorer, terms, list(_SCORE_COLS), TOPK_SCHEMA,
+                              self._driver_ok(terms))
+        if cand is None:
+            return self._empty(TOPK_SCHEMA)
+        if isinstance(cand, pd.DataFrame):
+            return LocalFrame(self.spark, cand, TOPK_SCHEMA)
+        return cand
 
     def _full_scorer(self, query) -> tuple[list[str], object]:
         """(terms present in the dictionary, their no-cut taat scorer)."""
@@ -1368,23 +1256,16 @@ class SegmentIndex:
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        n_buckets = int(self.stats["n_buckets"])
         doc_range = int(self.stats["doc_range"])
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in terms}
-        buckets = sorted({term_bucket(t, n_buckets) for t in terms})
         only = np.unique(np.asarray(doc_ids, dtype=np.int64))
         parts = sorted({int(d) // doc_range for d in only})
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-        )
+        seg = self._scan(terms, _SCORE_COLS)
         # an isin literal over millions of parts would bloat the plan;
         # above the cap the term filter alone prunes and the scorer's
         # candidate mask does the rest
         if len(parts) <= 4096:
             seg = seg.filter(F.col("doc_part").isin(parts))
-        seg = seg.select(*_SCORE_COLS)
         scorer = _make_scorer(idf_map, k1=k1, b=b, avgdl=avgdl, k=None,
                               mode="taat", only_docs=only)
         return self._by_part(seg).applyInPandas(
@@ -1554,15 +1435,8 @@ class SegmentIndex:
         """(term, doc_id) membership relation for the given terms — the
         raw postings-doc sets, decoded from the pruned segment scan (the
         set-operand form bool constraints consume)."""
-        terms = sorted(set(terms))
-        n_buckets = int(self.stats["n_buckets"])
-        buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-            .select("doc_part", "term", "docs", "tfs", "dls")
-        )
+        seg = self._scan(sorted(set(terms)),
+                         ["doc_part", "term", "docs", "tfs", "dls"])
 
         def emit(pdf: pd.DataFrame) -> pd.DataFrame:
             outs = []
@@ -1648,14 +1522,20 @@ class SegmentIndex:
         every scored doc, doc_id asc). A filter-only bool returns its
         matches at score 0.0 in doc_id order.
 
-        Plan: one score_all pass over the scoring terms' postings, the
-        per-clause constraint as a countDistinct(clause) against the
-        decoded postings doc sets joined to a broadcast term->clause map,
-        must_not as a left_anti — all index reads, no corpus scan.
-        Metadata filters read ONLY their columns + doc_id from the
-        doc_store (predicate pushed to parquet) and flow as a
-        doc_part-cogrouped admitted-id stream into the scoring pass —
-        8 bytes per admitted doc on the wire, never a corpus scan."""
+        Plan: one per-doc_part pass (_make_bool_taat) decodes the
+        scanned terms' postings once, intersects the constraint clauses
+        (must, filter term clauses, msm, must_not) into candidates and
+        scores only them, with a margin-safe per-part top-k cut. A
+        metadata filter adds the doc ids it admits, per part. Placement
+        is _driver_ok over the scanned terms' Σdf, plus n_docs with a
+        metadata filter: on a warm handle under SEARCH_DRIVER_CAP the pass
+        runs on the driver over pyarrow reads (_doc_store_local for the
+        metadata columns, filtered by the same Catalyst predicates) and
+        the result is a LocalFrame — no Spark job. Above it the pass is
+        one applyInPandas plan, cogrouped with the
+        pushed-down doc_store (doc_part, doc_id) stream when a metadata
+        filter is present, then the Catalyst round + top-k tail. Both
+        placements give identical rows (pytest-pinned)."""
         if not _raw and self.n_deleted():
             return self._live(k, lambda kk: self.search_bool(
                 must=must, should=should, must_not=must_not, k=kk,
@@ -1683,92 +1563,31 @@ class SegmentIndex:
             # convention, doc_id asc.
             excl = (self._term_docs(must_not).select("doc_id")
                     .distinct())
-            hits = (self.doc_store().select("doc_id")
-                    .join(excl, "doc_id", "left_anti")
-                    .select("doc_id", F.lit(0.0).alias("score"))
-                    .orderBy(F.asc("doc_id")).limit(k))
-            w = Window.orderBy(F.asc("doc_id"))
-            return hits.select(
-                (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-                "doc_id", "score",
-            )
+            return _rank_topk(
+                self.doc_store().select("doc_id")
+                .join(excl, "doc_id", "left_anti")
+                .select("doc_id", F.lit(0.0).alias("score")), k)
         if msm > len(should):
             # ES returns an empty hit set when minimum_should_match
             # exceeds the distinct should terms — adapter-submitted
             # bodies must not crash (ADVICE r4)
             return self._empty()
-        # Pure metadata filter (no text terms anywhere): one Catalyst
-        # path — pushed-down doc_store scan, TakeOrderedAndProject.
         constraints = must_clauses + filt_clauses
-        if (not constraints and not should and not must_not
-                and meta_clauses):
-            hits = (self.doc_store()
-                    .filter(_meta_filter_pred(meta_clauses))
-                    .select("doc_id", F.lit(0.0).alias("score"))
-                    .orderBy(F.asc("doc_id")).limit(k))
-            w = Window.orderBy(F.asc("doc_id"))
-            return hits.select(
-                (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-                "doc_id", "score",
-            )
-        # Rank-safe pruned regime: the result set is bounded by the most
-        # selective constraint clause's doc coverage (sum of its terms'
-        # dfs; filter term clauses constrain exactly like must), or — for
-        # a pure-should query with msm >= 2 — by sum(should dfs)/msm
-        # (every result consumes >= msm posting memberships). When the
-        # PROVEN bound fits on the driver, candidates are intersected per
-        # doc_part (one job, no posting shuffle), then ONLY they are
-        # scored (scan pruned to their parts, hot should-terms never
-        # materialize full score relations). A metadata filter never
-        # loosens a bound, so the regime choice stays proven with it.
-        bound_ok = None
-        if constraints:
-            cdfs = self.term_dfs(sorted({t for c in constraints for t in c}))
-            if any(all(cdfs.get(t, 0) == 0 for t in c) for c in constraints):
-                return self._empty()  # a clause of only absent terms: no match
-            bound_ok = min(sum(cdfs.get(t, 0) for t in c)
-                           for c in constraints)
-        elif msm >= 2:
-            sdfs = self.term_dfs(should)
-            bound_ok = sum(sdfs.values()) // msm
-        if bound_ok is not None and bound_ok <= BOOL_DRIVER_CAP:
-            return self._bool_pruned(must_clauses, should, must_not,
-                                     k=k, msm=msm,
-                                     filt_clauses=filt_clauses,
-                                     meta_clauses=meta_clauses)
-        return self._bool_distributed(must_clauses, should, must_not,
-                                      k=k, msm=msm,
-                                      filt_clauses=filt_clauses,
-                                      meta_clauses=meta_clauses)
-
-    def _bool_distributed(self, must_clauses, should, must_not, *, k,
-                          msm: int = 0, filt_clauses=(),
-                          meta_clauses=()) -> DataFrame:
-        """Above-cap bool regime (every must clause hot at 100x scale):
-        ONE combined applyInPandas pass intersects the constraints and
-        scores ONLY the surviving candidates per doc_part, with a
-        margin-safe per-part top-k cut (_make_bool_taat) — replacing the
-        r4 plan (full score_all relation + per-constraint _term_docs
-        semi-joins), which decoded hot postings up to three times and
-        shuffled every matching doc's score. Per-doc ranges are disjoint,
-        so per-part candidate sets and scores are complete; the shared
-        Catalyst round + top-k tail keeps rows bit-identical to the
-        driver-pruned regime (pytest-pinned).
-
-        Filter-context term clauses ride the same pass as non-scoring
-        constraint clauses. A metadata filter cogroups the pass with the
-        doc_store rows passing the pushed-down predicate, projected to
-        (doc_part, doc_id) — the shuffle carries 8 bytes per admitted
-        doc, and the filter applies BEFORE the top-k cut."""
-        must_terms = sorted({t for c in must_clauses for t in c})
+        if not constraints and not should and not must_not and meta_clauses:
+            # pure metadata filter (no text terms anywhere): one Catalyst
+            # path — pushed-down doc_store scan, TakeOrderedAndProject
+            return _rank_topk(
+                self.doc_store().filter(_meta_filter_pred(meta_clauses))
+                .select("doc_id", F.lit(0.0).alias("score")), k)
         scoring = sorted(set(must_terms) | set(should))
         filt_terms = sorted({t for c in filt_clauses for t in c})
         dfs = self.term_dfs(sorted(set(scoring) | set(filt_terms)))
-        constraints = list(must_clauses) + list(filt_clauses)
         if any(all(dfs.get(t, 0) == 0 for t in c) for c in constraints):
             return self._empty()  # a clause of only absent terms: no match
         live_scoring = [t for t in scoring if dfs.get(t, 0) > 0]
-        zero_fill = not must_clauses and bool(filt_clauses or meta_clauses)
+        # ES filter context: with no must, filter-admitted docs matching
+        # no should term are hits at score 0
+        zero_fill = not must_clauses and has_filter
         if not live_scoring and not zero_fill:
             return self._empty()
         live_filt = [t for t in filt_terms if dfs.get(t, 0) > 0]
@@ -1777,126 +1596,37 @@ class SegmentIndex:
         scan_terms = sorted(set(live_scoring) | set(live_filt)
                             | set(live_mn))
         n_docs = float(self.stats["n_docs"])
-        avgdl = float(self.stats["avgdl"])
-        k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        n_buckets = int(self.stats["n_buckets"])
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t])))
                    for t in live_scoring}
-        buckets = sorted({term_bucket(t, n_buckets) for t in scan_terms})
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(scan_terms))
-            .select("doc_part", "term", "docs", "tfs", "dls")
-        )
         live_set = set(scan_terms)
         scorer = _make_bool_taat(
             [sorted(set(c) & live_set) for c in constraints],
             live_mn, [t for t in should if t in idf_map], msm,
-            live_scoring, idf_map, k1=k1, b=b, avgdl=avgdl, k=k,
+            live_scoring, idf_map, k1=float(self.stats["k1"]),
+            b=float(self.stats["b"]), avgdl=float(self.stats["avgdl"]), k=k,
             cogrouped=bool(meta_clauses), zero_fill=zero_fill,
         )
-        if meta_clauses:
-            doc_range = int(self.stats["doc_range"])
-            allowed = (
-                self.doc_store()
-                .filter(_meta_filter_pred(list(meta_clauses)))
-                .select(
-                    (F.col("doc_id") / doc_range).cast("bigint")
-                    .alias("doc_part"),
-                    "doc_id",
-                )
-            )
-            scores = self._by_part(seg).cogroup(
-                self._by_part(allowed)
-            ).applyInPandas(scorer, TOPK_SCHEMA)
-        else:
-            scores = self._by_part(seg).applyInPandas(
-                scorer, TOPK_SCHEMA)
-        rounded = scores.select("doc_id", F.round("score", 6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
-
-    def _bool_pruned(self, must_clauses, should, must_not, *, k,
-                     msm: int = 0, filt_clauses=(),
-                     meta_clauses=()) -> DataFrame:
-        """Capped-bound bool evaluation: per-part clause intersection ->
-        driver candidate set -> candidate-restricted scoring -> local
-        top-k. Scores and rounding go through the SAME Catalyst
-        expressions as the distributed tail, so results are identical
-        (asserted in tests against the unpruned path).
-
-        Filter-context term clauses intersect alongside must clauses
-        (non-scoring). A metadata filter refines the <= cap candidate set
-        with ONE extra job: the pushed-down doc_store scan broadcast-
-        semi-joined against the candidates. Zero-score hits (no must,
-        filter present) are appended on the driver — BM25 partials are
-        strictly positive, so only the k smallest unscored candidates
-        can reach the top-k."""
-        must_terms = sorted({t for c in must_clauses for t in c})
-        constraints = list(must_clauses) + list(filt_clauses)
-        filt_terms = sorted({t for c in filt_clauses for t in c})
-        mn_dfs = self.term_dfs(must_not) if must_not else {}
-        live_mn = [t for t in must_not if mn_dfs.get(t, 0) > 0]
-        scan_terms = sorted(set(must_terms) | set(filt_terms) | set(live_mn)
-                            | (set(should) if msm > 0 else set()))
-        n_buckets = int(self.stats["n_buckets"])
-        buckets = sorted({term_bucket(t, n_buckets) for t in scan_terms})
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(scan_terms))
-            .select("doc_part", "term", "docs", "tfs", "dls")
-        )
-        intersector = _make_clause_intersector(constraints, live_mn,
-                                               should=should, msm=msm)
-        ok_pdf = self._by_part(seg).applyInPandas(
-            intersector, "doc_id bigint").toPandas()
-        if not len(ok_pdf):
-            return self._empty()
-        ok = np.sort(ok_pdf["doc_id"].to_numpy(np.int64))
-        if meta_clauses:
-            cand = self.spark.createDataFrame(
-                pd.DataFrame({"doc_id": ok}), "doc_id bigint")
-            passing = (
-                self.doc_store()
-                .filter(_meta_filter_pred(list(meta_clauses)))
-                .join(F.broadcast(cand), "doc_id", "left_semi")
-                .select("doc_id").toPandas()
-            )
-            if not len(passing):
-                return self._empty()
-            ok = np.sort(passing["doc_id"].to_numpy(np.int64))
-        scoring = sorted(set(must_terms) | set(should))
-        scores_pdf = (self._scores_for_docs(scoring, ok) if scoring
-                      else pd.DataFrame({
-                          "doc_id": pd.Series([], dtype=np.int64),
-                          "score": pd.Series([], dtype=np.float64)}))
-        if not must_clauses and (filt_clauses or meta_clauses):
-            # zero-score hits: candidates matching no scoring term (ES
-            # filter context, msm defaults to 0 with a filter present)
-            missing = ok[~np.isin(ok, scores_pdf["doc_id"]
-                                  .to_numpy(np.int64))][:k]
-            if missing.size:
-                scores_pdf = pd.concat(
-                    [scores_pdf,
-                     pd.DataFrame({"doc_id": missing,
-                                   "score": np.zeros(missing.size)})],
-                    ignore_index=True)
-        if not len(scores_pdf):
-            return self._empty()
-        scores = self.spark.createDataFrame(scores_pdf, TOPK_SCHEMA)
-        rounded = scores.select("doc_id", F.round("score", 6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        cols = ["doc_part", "term", "docs", "tfs", "dls"]
+        if self._driver_ok(scan_terms, doc_store=bool(meta_clauses)):
+            allowed = None
+            if meta_clauses:
+                rows = (self.spark.createDataFrame(
+                    self._doc_store_local([meta_clauses]))
+                    .filter(_meta_filter_pred(meta_clauses))
+                    .select("doc_id").collect())
+                allowed = np.sort(np.array([r[0] for r in rows],
+                                           dtype=np.int64))
+            return self._round_cut(self._per_part_local(
+                scorer, scan_terms, cols, allowed), k)
+        seg = self._by_part(self._scan(scan_terms, cols))
+        if not meta_clauses:
+            return self._round_cut(seg.applyInPandas(scorer, TOPK_SCHEMA), k)
+        doc_range = int(self.stats["doc_range"])
+        allowed = (self.doc_store().filter(_meta_filter_pred(meta_clauses))
+                   .select((F.col("doc_id") / doc_range).cast("bigint")
+                           .alias("doc_part"), "doc_id"))
+        return self._round_cut(seg.cogroup(self._by_part(allowed))
+                               .applyInPandas(scorer, TOPK_SCHEMA), k)
 
     def search_mixed(self, groups, k: int, _raw: bool = False) -> DataFrame:
         """OR of AND-groups — the ES mixed AND/OR query_string shape
@@ -1910,11 +1640,14 @@ class SegmentIndex:
         dedup across should clauses). Rounded 6dp before the (score
         desc, doc_id asc) top-k cut.
 
-        Plan: one pruned segment scan over every live token ->
-        per-doc_part group-intersection + candidate-restricted
-        accumulation with a margin-safe per-part top-k cut
-        (_make_groups_taat; per-doc ranges are disjoint so per-part
-        results are complete) -> shared Catalyst round + top-k tail.
+        Plan: the live tokens' segment rows -> per-doc_part
+        group-intersection + candidate-restricted accumulation with a
+        margin-safe per-part top-k cut (_make_groups_taat; per-doc
+        ranges are disjoint so per-part results are complete) -> round
+        6 dp + top-k. Placed by _driver_ok like search_bool: on the
+        driver over a pyarrow read (a LocalFrame, no Spark job) under
+        SEARCH_DRIVER_CAP, else one applyInPandas plan and the Catalyst
+        tail.
         A single group degenerates to search_bool(must=...); singleton
         groups degenerate to search() — both pytest-pinned."""
         if not _raw and self.n_deleted():
@@ -1941,28 +1674,14 @@ class SegmentIndex:
             return self._empty()
         scoring = sorted({t for g in live_gs for c in g for t in c})
         n_docs = float(self.stats["n_docs"])
-        avgdl = float(self.stats["avgdl"])
-        k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        n_buckets = int(self.stats["n_buckets"])
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t])))
                    for t in scoring}
-        buckets = sorted({term_bucket(t, n_buckets) for t in scoring})
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(scoring))
-            .select("doc_part", "term", "docs", "tfs", "dls")
-        )
-        scorer = _make_groups_taat(live_gs, idf_map, k1=k1, b=b,
-                                   avgdl=avgdl, k=k)
-        scores = self._by_part(seg).applyInPandas(scorer, TOPK_SCHEMA)
-        rounded = scores.select("doc_id", F.round("score", 6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        scorer = _make_groups_taat(
+            live_gs, idf_map, k1=float(self.stats["k1"]),
+            b=float(self.stats["b"]), avgdl=float(self.stats["avgdl"]), k=k)
+        return self._round_cut(self._per_part(
+            scorer, scoring, ["doc_part", "term", "docs", "tfs", "dls"],
+            TOPK_SCHEMA, self._driver_ok(scoring)), k)
 
     def search_bool_tree(self, node: dict, k: int,
                          _raw: bool = False) -> DataFrame:
@@ -2010,11 +1729,12 @@ class SegmentIndex:
         matching scoring children, a nested child gated by its own
         matched expression). No per-node aggregation, no per-leaf
         re-scan. At 100x scale a nested tree still scores every posting
-        of its scoring terms exactly once — WAND/driver-pruned regimes
-        stay on the flat paths, which the DSL adapter still routes to
-        whenever a body has no nested bool. Rounded 6dp before the
-        (score desc, doc_id asc) top-k cut — the shared ranked-method
-        tail. Driver regime (_tree_flags_local): when the tree's read
+        of its scoring terms exactly once; the per-part candidate
+        pruning of _make_bool_taat stays on the flat paths, which the
+        DSL adapter still routes to whenever a body has no nested bool.
+        Rounded 6dp before the (score desc, doc_id asc) top-k cut — the
+        shared ranked-method tail. Driver regime (_tree_flags_local):
+        when the tree's read
         volume (Σdf of its term leaves, Σdf + Σcf of its phrase leaves,
         n_docs when a meta filter or must_not-only node reads the doc
         store) fits SEARCH_DRIVER_CAP on a warm index, the clause rows
@@ -2034,14 +1754,10 @@ class SegmentIndex:
         if rel is None:
             return self._empty()
         rounded = rel.select("doc_id", F.round("score", 6).alias("score"))
-        if local:
-            return self._cut_topk(rounded, k)
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        # the driver regime's projection over a local relation: its
+        # collect() is evaluated on the driver (ConvertToLocalRelation)
+        return self._cut_topk(
+            _score_rows(rounded.collect()) if local else rounded, k)
 
     def _term_scores(self, terms: list[str],
                      idf_override: dict[str, float] | None = None
@@ -2056,15 +1772,9 @@ class SegmentIndex:
         schema = "term string, doc_id bigint, score double"
         if not terms:
             return self._empty(schema)
-        n_buckets = int(self.stats["n_buckets"])
-        buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-            .select("doc_part", "term", "docs", "tfs", "dls")
-        )
-        return self._by_part(seg).applyInPandas(emit, schema)
+        return self._per_part(emit, terms,
+                              ["doc_part", "term", "docs", "tfs", "dls"],
+                              schema, local=False)
 
     def _term_emitter(self, terms: list[str],
                       idf_override: dict[str, float] | None = None):
@@ -2370,9 +2080,10 @@ class SegmentIndex:
         scores) aggregated in numpy (per-doc sums in row order) into ONE
         local relation — no Spark job. Absent clauses read 0, which the
         tree expressions coalesce their nulls to. A meta filter or
-        must_not-only node reads the doc store: every doc gets a row, its
-        meta columns ride along, and the SAME Catalyst predicates set the
-        `_f<j>` flags as a projection over the local relation."""
+        must_not-only node reads the doc store (_doc_store_local): every
+        doc gets a row, its meta columns ride along, and the SAME
+        Catalyst predicates set the `_f<j>` flags as a projection over
+        the local relation."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -2391,11 +2102,7 @@ class SegmentIndex:
             if sc is not None:
                 rows.append(sc.assign(cid=i))
         if metas or match_all:
-            import pyarrow.parquet as pq
-
-            cols = sorted({c for mcl in metas for _, c, _ in mcl} - {"doc_id"})
-            store = pq.read_table(os.path.join(self.index_dir, "doc_store"),
-                                  columns=["doc_id"] + cols)
+            store = self._doc_store_local(metas)
             rows.append(pd.DataFrame({
                 "doc_id": store["doc_id"].to_numpy().astype(np.int64),
                 "cid": -1000000, "score": 0.0}))
@@ -2417,13 +2124,36 @@ class SegmentIndex:
         if metas:
             at = pc.index_in(flags["doc_id"],
                              value_set=store["doc_id"].cast(pa.int64()))
-            flags.update({c: store[c].take(at) for c in cols})
+            flags.update({c: store[c].take(at)
+                          for c in store.column_names[1:]})
         g = self.spark.createDataFrame(pa.table(flags))
         if not metas:
             return g
         return g.select("*", *[F.when(_meta_filter_pred(mcl), 1)
                                .alias(f"_f{j}")
                                for j, mcl in enumerate(metas)])
+
+    def _doc_store_local(self, metas: list):
+        """The doc store's doc_id and the columns of `metas` (meta-clause
+        groups), read on the driver with pyarrow: the rows a
+        driver-placed metadata filter evaluates _meta_filter_pred over,
+        as a local relation (no Spark job)."""
+        import pyarrow.parquet as pq
+
+        cols = sorted({c for mcl in metas for _, c, _ in mcl} - {"doc_id"})
+        return pq.read_table(os.path.join(self.index_dir, "doc_store"),
+                             columns=["doc_id"] + cols)
+
+    def _match_rel(self, query):
+        """The COMPLETE (doc_id, score) match relation the
+        boosting/function_score tails consume: a bool-tree dict's
+        (_bool_tree_rel), else the OR-disjunction's score_all (placed by
+        _driver_ok). None when nothing can match — an empty driver-placed
+        relation, told apart with no Spark job."""
+        if isinstance(query, dict):
+            return self._bool_tree_rel(query)
+        rel = self.score_all(query)
+        return None if isinstance(rel, LocalFrame) and not rel.count() else rel
 
     def search_boosting(self, positive, negative, k: int, *,
                         negative_boost: float = 0.5,
@@ -2437,28 +2167,11 @@ class SegmentIndex:
         surrounding ES surface a switching user expects.
 
         Demotion can promote docs from arbitrarily deep in the positive
-        ranking, so a fixed over-fetch is NOT exact. Two regimes:
-
-        - pruned (default, negative_boost <= 1): probe positive top-m
-          (block-max WAND) with doubling m; negative membership is
-          fetched ONLY for the m candidates via the candidate-part-
-          pruned scan (_scores_for_docs — a hot negative term never
-          contributes its full posting relation). Stop proof: WAND order
-          gives every unscanned doc raw positive score <= the m-th
-          scanned score s_m, and factor <= 1 keeps final <= raw
-          positive; once s_m < (k-th best candidate final) - 1e-6, 6dp
-          HALF_UP rounding (monotone, moves a value < 5e-7) puts every
-          unscanned doc strictly below the rounded top-k, ties included
-          (the _part_topk margin argument). Positive exhausted (< m
-          rows) is also exact: the candidate set is complete.
-        - distributed fallback (pool would exceed BOOL_DRIVER_CAP
-          rows, or negative_boost > 1 where "demotion" is promotion and
-          the bound inverts): complete score_all(positive) relation
-          left-joined to the distinct negative membership — every
-          positive match scored exactly once, no driver gather.
-
-        Both regimes share one Catalyst tail (_boosting_tail), so
-        scores and 6dp rounding are bit-identical (pytest-pinned).
+        ranking, so a fixed over-fetch is NOT exact: the complete
+        score_all(positive) relation (placed by _driver_ok) is
+        left-joined to the distinct negative membership and a Catalyst
+        tail demotes, rounds and ranks — every positive match scored
+        exactly once.
         """
         nb = float(negative_boost)
         if nb < 0:
@@ -2466,46 +2179,13 @@ class SegmentIndex:
         if not _raw and self.n_deleted():
             return self._live(k, lambda kk: self.search_boosting(
                 positive, negative, kk, negative_boost=nb, _raw=True))
-        pos = (self.analyze_query(positive) if isinstance(positive, str)
-               else list(positive))
+        rel = self._match_rel(positive)
+        if rel is None:
+            return self._empty()
         neg = (self.analyze_query(negative) if isinstance(negative, str)
                else list(negative))
-        pos = sorted(set(pos))
-        dfs = self.term_dfs(pos)
-        pos = [t for t in pos if dfs.get(t, 0) > 0]
-        if not pos:
-            return self._empty()
         ndfs = self.term_dfs(sorted(set(neg)))
         neg = sorted(t for t in set(neg) if ndfs.get(t, 0) > 0)
-        # sum of positive dfs >= distinct positive matches: when it fits
-        # the driver cap the probe loop is guaranteed to terminate exactly
-        pos_bound = sum(int(dfs[t]) for t in pos)
-        if nb <= 1.0:
-            cap = min(BOOL_DRIVER_CAP, pos_bound)
-            m = min(max(4 * k, 64), cap)
-            while m > 0:
-                cand = (self.search(pos, m, mode="wand", _raw=True)
-                        .toPandas().sort_values("rank"))
-                exhausted = len(cand) < m or m >= pos_bound
-                ids = cand["doc_id"].to_numpy(np.int64)
-                raw = cand["score"].to_numpy(np.float64)
-                is_neg = (np.isin(ids, self._scores_for_docs(neg, ids)
-                                  ["doc_id"].to_numpy(np.int64))
-                          if neg and len(ids) else
-                          np.zeros(len(ids), dtype=bool))
-                final = raw * np.where(is_neg, nb, 1.0)
-                proven = (len(final) >= k and raw[-1] < np.partition(
-                    final, len(final) - k)[len(final) - k] - 1e-6)
-                if exhausted or proven:
-                    rel = self.spark.createDataFrame(
-                        pd.DataFrame({"doc_id": ids, "score": raw,
-                                      "neg": is_neg}),
-                        "doc_id bigint, score double, neg boolean")
-                    return self._boosting_tail(rel, nb, k)
-                if m >= cap:
-                    break
-                m = min(m * 8, cap)
-        rel = self.score_all(pos)
         if neg:
             negdocs = (self._term_docs(neg).select("doc_id").distinct()
                        .withColumn("neg", F.lit(True)))
@@ -2513,7 +2193,10 @@ class SegmentIndex:
                    .na.fill({"neg": False}))
         else:
             rel = rel.withColumn("neg", F.lit(False))
-        return self._boosting_tail(rel, nb, k)
+        return _rank_topk(rel.select("doc_id", F.round(
+            F.col("score")
+            * F.when(F.col("neg"), F.lit(nb)).otherwise(F.lit(1.0)),
+            6).alias("score")), k)
 
     def search_function_score(self, query, field: str, k: int, *,
                               factor: float = 1.0, modifier: str = "none",
@@ -2523,29 +2206,17 @@ class SegmentIndex:
         """ES `function_score` with a `field_value_factor` function:
         final = round(bm25(query) OP f(doc_field), 6) over EVERY
         matching doc, where f = modifier(factor * coalesce(field,
-        missing)), modifier in {none, log1p, sqrt}, OP = boost_mode
-        {multiply, sum} — the boost-by-popularity/recency shape an ES
-        user reaches for next after plain relevance.
+        missing)), modifier in {none, log1p, sqrt} (ES's: log1p is the
+        common logarithm log10(1 + x)), OP = boost_mode {multiply, sum}
+        — the boost-by-popularity/recency shape an ES user reaches for
+        next after plain relevance.
 
         Like `boosting`, the per-doc factor can promote docs from
         arbitrarily deep in the BM25 ranking, so a fixed over-fetch is
-        not exact. Regimes:
-
-        - pruned: one tiny agg reads the corpus-wide min/max of f off
-          the doc store (a column min/max — parquet-footer statistics at
-          scale), then a WAND-probed candidate loop: for multiply (needs
-          f >= 0 corpus-wide, checked against the min) every unscanned
-          doc's final <= s_m * F_max; for sum, <= s_m + F_max — once
-          that bound falls 1e-6 below the k-th candidate final the
-          rounded top-k is proven (same margin argument as
-          search_boosting). Candidate field values arrive via a
-          broadcast join of <= m rows against the doc store.
-        - distributed fallback (pool exceeds BOOL_DRIVER_CAP, or
-          f < 0 somewhere under multiply): complete score_all(query)
-          joined to the doc store's (doc_id, field) columns.
-
-        Both regimes share one Catalyst tail so scores and 6dp rounding
-        are bit-identical (pytest-pinned).
+        not exact: the complete score_all(query) relation (placed by
+        _driver_ok) — or a bool-tree query's complete relation — is
+        joined to the doc store's factor column and a Catalyst tail
+        combines, rounds and ranks.
         """
         if boost_mode not in ("multiply", "sum"):
             raise ValueError("boost_mode must be multiply or sum")
@@ -2555,85 +2226,16 @@ class SegmentIndex:
             return self._live(k, lambda kk: self.search_function_score(
                 query, field, kk, factor=factor, modifier=modifier,
                 missing=missing, boost_mode=boost_mode, _raw=True))
-        fexpr = F.lit(float(factor)) * F.coalesce(
-            F.col(field).cast("double"), F.lit(float(missing)))
-        if modifier == "log1p":
-            fexpr = F.log1p(fexpr)
-        elif modifier == "sqrt":
-            fexpr = F.sqrt(fexpr)
-        store = self.doc_store().select(
-            "doc_id", fexpr.alias("fval"))
-        if isinstance(query, dict):
-            # bool-TREE inner query: the complete single-scan tree
-            # relation joined to the factor column is exact — no probe
-            rel = self._bool_tree_rel(query)
-            if rel is None:
-                return self._empty()
-            return self._function_tail(rel.join(store, "doc_id", "left"),
-                                       boost_mode, k)
-        terms = (self.analyze_query(query) if isinstance(query, str)
-                 else list(query))
-        terms = sorted(set(terms))
-        dfs = self.term_dfs(terms)
-        terms = [t for t in terms if dfs.get(t, 0) > 0]
-        if not terms:
+        store = self.doc_store().select("doc_id", _field_value_factor(
+            field, factor, modifier, missing).alias("fval"))
+        rel = self._match_rel(query)
+        if rel is None:
             return self._empty()
-        pos_bound = sum(int(dfs[t]) for t in terms)
-        if pos_bound <= BOOL_DRIVER_CAP:
-            row = store.agg(F.min("fval").alias("lo"),
-                            F.max("fval").alias("hi")).collect()[0]
-            f_lo = float(row["lo"]) if row["lo"] is not None else 0.0
-            f_hi = float(row["hi"]) if row["hi"] is not None else 0.0
-            prunable = boost_mode == "sum" or f_lo >= 0.0
-            m = min(max(4 * k, 64), pos_bound)
-            while prunable and m > 0:
-                cand = (self.search(terms, m, mode="wand", _raw=True)
-                        .toPandas().sort_values("rank"))
-                exhausted = len(cand) < m or m >= pos_bound
-                ids = cand["doc_id"].to_numpy(np.int64)
-                raw = cand["score"].to_numpy(np.float64)
-                cdf = self.spark.createDataFrame(
-                    pd.DataFrame({"doc_id": ids}), "doc_id bigint")
-                fv = {r["doc_id"]: r["fval"] for r in store.join(
-                    F.broadcast(cdf), "doc_id", "left_semi").collect()}
-                fvals = np.array([fv.get(int(i), 0.0) for i in ids])
-                final = (raw * fvals if boost_mode == "multiply"
-                         else raw + fvals)
-                if len(final) >= k:
-                    theta = np.partition(
-                        final, len(final) - k)[len(final) - k]
-                    bound = (raw[-1] * f_hi if boost_mode == "multiply"
-                             else raw[-1] + f_hi)
-                    proven = bound < theta - 1e-6
-                else:
-                    proven = False
-                if exhausted or proven:
-                    rel = self.spark.createDataFrame(
-                        pd.DataFrame({"doc_id": ids, "score": raw,
-                                      "fval": fvals}),
-                        "doc_id bigint, score double, fval double")
-                    return self._function_tail(rel, boost_mode, k)
-                if m >= pos_bound:
-                    break
-                m = min(m * 8, pos_bound)
-        rel = self.score_all(terms).join(store, "doc_id", "left")
-        return self._function_tail(rel, boost_mode, k)
-
-    def _function_tail(self, rel: DataFrame, boost_mode: str,
-                       k: int) -> DataFrame:
-        """Shared combine + round + top-k tail over (doc_id, score,
-        fval) — both search_function_score regimes run these exact
-        expressions."""
         fv = F.coalesce(F.col("fval"), F.lit(0.0))
         combined = (F.col("score") * fv if boost_mode == "multiply"
                     else F.col("score") + fv)
-        rounded = rel.select(
-            "doc_id", F.round(combined, 6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _rank_topk(rel.join(store, "doc_id", "left").select(
+            "doc_id", F.round(combined, 6).alias("score")), k)
 
     def search_function_score_fns(self, query, functions, k: int, *,
                                   score_mode: str = "multiply",
@@ -2665,28 +2267,10 @@ class SegmentIndex:
         nothing matches ALL docs (same leniency as the bool adapter).
 
         Like field_value_factor, a weight can promote docs from
-        arbitrarily deep in the BM25 ranking, so regimes mirror
-        search_function_score:
-
-        - pruned (pos_bound <= BOOL_DRIVER_CAP, every weight >= 0, and
-          NO field_value_factor function — a per-doc factor needs the
-          complete relation, like search_function_score's fallback):
-          WAND-probed candidate loop; the max achievable combined
-          factor F_hi is computed from the weights alone on the driver
-          (multiply: product of weights > 1; sum: total; max/min/first:
-          max weight — all upper bounds over non-empty firing subsets
-          when weights are non-negative, then capped at max_boost and
-          floored at the no-match factor), so every unscanned doc's
-          final <= s_m * max(F_hi, 1) (multiply) or s_m + max(F_hi, 0)
-          (sum) — once that falls 1e-6 below the k-th candidate final
-          the rounded top-k is proven. Candidate membership arrives via
-          broadcast semi-joins of <= m ids against the pruned postings
-          scan / doc_store.
-        - distributed fallback: complete score_all(query) left-joined
-          to each function's full membership relation.
-
-        Both regimes share one Catalyst tail (_functions_tail) so
-        scores and 6dp rounding are bit-identical (pytest-pinned).
+        arbitrarily deep in the BM25 ranking: the complete match
+        relation (_match_rel) is left-joined to each function's full
+        membership relation and the Catalyst tail (_functions_tail)
+        combines, caps, rounds and ranks.
         """
         if boost_mode not in ("multiply", "sum"):
             raise ValueError("boost_mode must be multiply or sum")
@@ -2731,167 +2315,29 @@ class SegmentIndex:
             raise ValueError(
                 "score_mode 'avg' needs every weight > 0 (ES's "
                 "weighted mean is undefined at zero total weight)")
-        has_fvf = any(p[3] is not None for p in parsed)
         mb = float(max_boost) if max_boost is not None else None
         if not _raw and self.n_deleted():
             return self._live(k, lambda kk: self.search_function_score_fns(
                 query, functions, kk, score_mode=score_mode,
                 boost_mode=boost_mode, max_boost=max_boost, _raw=True))
-        n = len(parsed)
-        if isinstance(query, dict):
-            # bool-TREE inner query (the ES function_score-over-bool
-            # composition): the single-scan tree relation is already the
-            # COMPLETE match set with exact scores, so the membership
-            # join + shared tail below is exact without any probe —
-            # no pruned regime needed
-            rel = self._bool_tree_rel(query)
-            if rel is None:
-                return self._empty()
-            return self._functions_over_rel(rel, parsed, ws, score_mode,
-                                            boost_mode, mb, k)
-        terms = (self.analyze_query(query) if isinstance(query, str)
-                 else list(query))
-        terms = sorted(set(terms))
-        dfs = self.term_dfs(terms)
-        terms = [t for t in terms if dfs.get(t, 0) > 0]
-        if not terms:
+        rel = self._match_rel(query)
+        if rel is None:
             return self._empty()
-        pos_bound = sum(int(dfs[t]) for t in terms)
-        prunable = (pos_bound <= BOOL_DRIVER_CAP
-                    and all(w >= 0.0 for w in ws) and not has_fvf)
-        if prunable:
-            if score_mode == "multiply":
-                gt1 = [w for w in ws if w > 1.0]
-                f_hi = max(ws)
-                if gt1:
-                    f_hi = 1.0
-                    for w in gt1:
-                        f_hi *= w
-            elif score_mode == "sum":
-                f_hi = sum(ws)
-            elif score_mode == "avg":
-                # weighted mean of weight-only contributions (u_i = 1)
-                # is exactly 1 over any firing subset
-                f_hi = 1.0
-            else:
-                f_hi = max(ws)
-            if mb is not None:
-                f_hi = min(f_hi, mb)
-            hi_eff = (max(f_hi, 1.0) if boost_mode == "multiply"
-                      else max(f_hi, 0.0))
-            m = min(max(4 * k, 64), pos_bound)
-            while m > 0:
-                cand = (self.search(terms, m, mode="wand", _raw=True)
-                        .toPandas().sort_values("rank"))
-                exhausted = len(cand) < m or m >= pos_bound
-                ids = cand["doc_id"].to_numpy(np.int64)
-                raw = cand["score"].to_numpy(np.float64)
-                cdf = F.broadcast(self.spark.createDataFrame(
-                    pd.DataFrame({"doc_id": ids}), "doc_id bigint"))
-                flags = []
-                for w, fc, mc, _fvf in parsed:
-                    if not fc and not mc:
-                        flags.append(np.ones(len(ids), dtype=bool))
-                        continue
-                    member = None
-                    for toks in fc:
-                        got = {r["doc_id"] for r in self._term_docs(toks)
-                               .select("doc_id").distinct()
-                               .join(cdf, "doc_id", "left_semi").collect()}
-                        member = got if member is None else (member & got)
-                    if mc:
-                        got = {r["doc_id"] for r in self.doc_store()
-                               .filter(_meta_filter_pred(mc))
-                               .select("doc_id")
-                               .join(cdf, "doc_id", "left_semi").collect()}
-                        member = got if member is None else (member & got)
-                    if member:
-                        arr = np.fromiter(member, np.int64, len(member))
-                        flags.append(np.isin(ids, arr))
-                    else:
-                        flags.append(np.zeros(len(ids), dtype=bool))
-                matched = np.zeros(len(ids), dtype=bool)
-                for f in flags:
-                    matched |= f
-                if score_mode == "multiply":
-                    comb = np.ones(len(ids))
-                    for f, w in zip(flags, ws):
-                        comb *= np.where(f, w, 1.0)
-                elif score_mode == "sum":
-                    comb = np.zeros(len(ids))
-                    for f, w in zip(flags, ws):
-                        comb += np.where(f, w, 0.0)
-                elif score_mode == "max":
-                    comb = np.full(len(ids), -np.inf)
-                    for f, w in zip(flags, ws):
-                        comb = np.maximum(comb, np.where(f, w, -np.inf))
-                elif score_mode == "min":
-                    comb = np.full(len(ids), np.inf)
-                    for f, w in zip(flags, ws):
-                        comb = np.minimum(comb, np.where(f, w, np.inf))
-                elif score_mode == "avg":
-                    # weight-only (fvf never reaches this regime):
-                    # sum(w*1)/sum(w) over firing = 1 wherever matched
-                    comb = np.ones(len(ids))
-                else:  # first
-                    comb = np.zeros(len(ids))
-                    assigned = np.zeros(len(ids), dtype=bool)
-                    for f, w in zip(flags, ws):
-                        take = f & ~assigned
-                        comb[take] = w
-                        assigned |= f
-                if mb is not None:
-                    comb = np.minimum(comb, mb)
-                final = np.where(
-                    matched,
-                    raw * comb if boost_mode == "multiply" else raw + comb,
-                    raw)
-                if len(final) >= k:
-                    theta = np.partition(
-                        final, len(final) - k)[len(final) - k]
-                    bound = (raw[-1] * hi_eff
-                             if boost_mode == "multiply"
-                             else raw[-1] + hi_eff)
-                    proven = bound < theta - 1e-6
-                else:
-                    proven = False
-                if exhausted or proven:
-                    pdf = pd.DataFrame({"doc_id": ids, "score": raw})
-                    for i, f in enumerate(flags):
-                        pdf[f"f{i}"] = f
-                    schema = ("doc_id bigint, score double, "
-                              + ", ".join(f"f{i} boolean"
-                                          for i in range(n)))
-                    rel = self.spark.createDataFrame(pdf, schema)
-                    return self._functions_tail(
-                        rel, parsed, score_mode, boost_mode, mb, k)
-                if m >= pos_bound:
-                    break
-                m = min(m * 8, pos_bound)
-        return self._functions_over_rel(self.score_all(terms), parsed, ws,
-                                        score_mode, boost_mode, mb, k)
+        return self._functions_tail(rel, parsed, score_mode, boost_mode,
+                                    mb, k)
 
-    def _functions_over_rel(self, rel: DataFrame, parsed: list, ws: list,
-                            score_mode: str, boost_mode: str, mb,
-                            k: int) -> DataFrame:
+    def _functions_tail(self, rel: DataFrame, parsed: list,
+                        score_mode: str, boost_mode: str, mb,
+                        k: int) -> DataFrame:
         """Exact function_score over a COMPLETE (doc_id, score) match
         relation: left-join each function's full membership relation as
-        a boolean flag (plus, for field_value_factor functions, ONE
+        a boolean f{i} flag (plus, for field_value_factor functions, ONE
         doc-store join carrying every needed v{i} value column), then
-        the shared Catalyst tail."""
-        vcols = []
-        for i, p in enumerate(parsed):
-            fvf = p[3]
-            if fvf is None:
-                continue
-            field, factor, modifier, missing = fvf
-            vexpr = F.lit(factor) * F.coalesce(
-                F.col(field).cast("double"), F.lit(missing))
-            if modifier == "log1p":
-                vexpr = F.log1p(vexpr)
-            elif modifier == "sqrt":
-                vexpr = F.sqrt(vexpr)
-            vcols.append(vexpr.alias(f"v{i}"))
+        combine + round + top-k in Catalyst. Function i contributes
+        s_i = w_i * u_i (u_i = v{i} or 1). A doc with no firing function
+        keeps its query score (uncapped — the ES no-match contract)."""
+        vcols = [_field_value_factor(*p[3]).alias(f"v{i}")
+                 for i, p in enumerate(parsed) if p[3] is not None]
         if vcols:
             rel = rel.join(self.doc_store().select("doc_id", *vcols),
                            "doc_id", "left")
@@ -2911,19 +2357,6 @@ class SegmentIndex:
                                                      "left_semi")
             rel = rel.join(mem.withColumn(f"f{i}", F.lit(True)),
                            "doc_id", "left")
-        return self._functions_tail(rel, parsed, score_mode, boost_mode,
-                                    mb, k)
-
-    def _functions_tail(self, rel: DataFrame, parsed: list,
-                        score_mode: str, boost_mode: str, mb,
-                        k: int) -> DataFrame:
-        """Shared combine + round + top-k tail over (doc_id, score,
-        f0..f{n-1} boolean [, v{i} double for field_value_factor
-        functions]) — both search_function_score_fns regimes run these
-        exact expressions, so scores are bit-identical across regimes.
-        Function i contributes s_i = w_i * u_i (u_i = v{i} or 1). A doc
-        with no firing function keeps its query score (uncapped — the
-        ES no-match contract)."""
         n = len(parsed)
         ws = [p[0] for p in parsed]
         flags = [F.coalesce(F.col(f"f{i}"), F.lit(False)) for i in range(n)]
@@ -2966,30 +2399,9 @@ class SegmentIndex:
             combined = F.least(combined, F.lit(float(mb)))
         op = (F.col("score") * combined if boost_mode == "multiply"
               else F.col("score") + combined)
-        rounded = rel.select(
-            "doc_id",
-            F.round(F.when(matched, op).otherwise(F.col("score")),
-                    6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
-
-    def _boosting_tail(self, rel: DataFrame, nb: float, k: int) -> DataFrame:
-        """Shared demote + round + top-k tail over (doc_id, score, neg) —
-        both search_boosting regimes run these exact expressions."""
-        rounded = rel.select(
-            "doc_id",
-            F.round(
-                F.col("score")
-                * F.when(F.col("neg"), F.lit(nb)).otherwise(F.lit(1.0)),
-                6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _rank_topk(rel.select("doc_id", F.round(
+            F.when(matched, op).otherwise(F.col("score")), 6).alias("score")),
+            k)
 
     def explain(self, query, doc_ids: list[int]) -> DataFrame:
         """Per-term BM25 score breakdown for specific docs — the engine-path
@@ -3012,16 +2424,9 @@ class SegmentIndex:
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        n_buckets = int(self.stats["n_buckets"])
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in terms}
-        buckets = sorted({term_bucket(t, n_buckets) for t in terms})
         want = np.array(sorted(set(int(d) for d in doc_ids)), dtype=np.int64)
-        seg = (
-            self._segments
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-            .select("doc_part", "term", "docs", "tfs", "dls")
-        )
+        seg = self._scan(terms, ["doc_part", "term", "docs", "tfs", "dls"])
 
         def explain_group(pdf: pd.DataFrame) -> pd.DataFrame:
             outs = []
@@ -3085,7 +2490,6 @@ class SegmentIndex:
         if slop < 0:
             raise ValueError("slop must be >= 0")
         # candidates contain every fixed term followed by any expansion
-        # (bound: min fixed df; a pure prefix: the expansions' summed df)
         plan = self._phrase_plan(terms[:-1], slop,
                                  self.expand_prefix(terms[-1], max_expansions))
         if plan is None:
@@ -3106,8 +2510,9 @@ class SegmentIndex:
         postings it decodes ONCE per term, and a per-query merge takes the
         top-k. Under SEARCH_DRIVER_CAP on a warm index (taat) that pass
         runs on the driver over a pyarrow read and returns a LocalFrame —
-        no Spark job and no JVM call, except composition; above
-        it ONE job amortizes the per-query Spark-job overhead — the
+        no Spark job and no JVM call, except composition; above it ONE
+        distributed plan (the scoring stage plus a per-query window)
+        amortizes the per-query Spark-job overhead — the
         scaling-efficiency killer for sequential single-query loops —
         across the whole batch.
         """
@@ -3136,7 +2541,6 @@ class SegmentIndex:
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        n_buckets = int(self.stats["n_buckets"])
 
         dfs = self.term_dfs(all_terms)
         live = sorted(t for t in all_terms if dfs.get(t, 0) > 0)
@@ -3152,55 +2556,31 @@ class SegmentIndex:
         scorer = _make_multi_scorer(qlive, idf_map, k1=k1, b=b,
                                     avgdl=avgdl, k=k, mode=mode,
                                     doc_range=doc_range)
-        cols = list(_SCORE_COLS)
-        # Per-part output is already top-k per query, so the global answer
-        # is a merge of <= n_parts * n_queries * k rows — a PROVEN bound
-        # known before any job. Driver regime (taat, warm, Σdf under
-        # SEARCH_DRIVER_CAP): the SAME per-part scorer runs over a pyarrow
-        # read and the merge below finishes the batch — no Spark job.
-        # Otherwise, under MANY_DRIVER_CAP, merge on the driver after ONE
-        # distributed stage (scan -> shuffle -> score), skipping the
-        # per-query window exchange whose ~n_queries distinct keys skew
-        # and cap reduce-side parallelism (the r3 batch-scaling
-        # bottleneck). Above it (10^12-doc part counts), the distributed
-        # window runs.
-        n_parts = -(-int(self.stats["n_docs"]) // max(1, doc_range))
-        if mode == "taat" and self._driver_ok(live):
-            pdf = self._per_part_local(scorer, live, cols)
-        else:
-            buckets = sorted({term_bucket(t, n_buckets) for t in live})
-            seg = (
-                self._segments
-                .filter(F.col("bucket").isin(buckets))
-                .filter(F.col("term").isin(live))
-                .select(*cols)
-            )
-            per_part = self._by_part(seg).applyInPandas(
-                scorer, "query_id string, doc_id bigint, score double"
-            )
-            if max(1, n_parts) * len(qlive) * k > MANY_DRIVER_CAP:
-                w = Window.partitionBy("query_id").orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                )
-                out = (
-                    per_part
-                    .withColumn("rank",
-                                (F.row_number().over(w) - 1).cast("bigint"))
-                    .filter(F.col("rank") < k)
-                    .select("query_id", "rank", "doc_id", "score")
-                )
-                if alias:
-                    amap = self.spark.createDataFrame(
-                        [(a, c) for a, c in alias.items()],
-                        "alias_id string, query_id string",
-                    )
-                    dup = out.join(F.broadcast(amap), "query_id").select(
-                        F.col("alias_id").alias("query_id"), "rank", "doc_id",
-                        "score",
-                    )
-                    out = out.unionByName(dup)
-                return out
-            pdf = per_part.toPandas()
+        # Per-part output is already top-k per query. Driver placement
+        # (taat, warm, Σdf under SEARCH_DRIVER_CAP): the SAME per-part
+        # scorer runs over a pyarrow read and the numpy merge below
+        # finishes the batch — no Spark job. Otherwise ONE distributed
+        # stage scores the batch and a per-query window takes each
+        # top-k — the bounded-memory form at any batch and part count.
+        local = mode == "taat" and self._driver_ok(live)
+        pdf = self._per_part(scorer, live, list(_SCORE_COLS),
+                             "query_id string, doc_id bigint, score double",
+                             local)
+        if not local:
+            w = Window.partitionBy("query_id").orderBy(
+                F.desc("score"), F.asc("doc_id"))
+            out = (pdf.withColumn("rank",
+                                  (F.row_number().over(w) - 1).cast("bigint"))
+                   .filter(F.col("rank") < k)
+                   .select("query_id", "rank", "doc_id", "score"))
+            if alias:
+                amap = self.spark.createDataFrame(
+                    list(alias.items()), "alias_id string, query_id string")
+                out = out.unionByName(
+                    out.join(F.broadcast(amap), "query_id").select(
+                        F.col("alias_id").alias("query_id"), "rank",
+                        "doc_id", "score"))
+            return out
         if pdf is None or not len(pdf):
             return self._empty(MANY_SCHEMA)
         # numpy merge: hash-factorize the query ids (no string sort),
@@ -3323,13 +2703,7 @@ def _combine_dismax(filled: DataFrame, cols: list[str],
     combined = F.round(
         best + F.lit(float(tie_breaker)) * (total - best), 6
     ).alias("score")
-    out = filled.select("doc_id", combined)
-    topk = out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk.select(
-        (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-        "doc_id", "score",
-    )
+    return _rank_topk(filled.select("doc_id", combined), k)
 
 
 def search_cross_fields(field_indexes: dict, query, k: int, *,
@@ -3412,13 +2786,8 @@ def search_cross_fields(field_indexes: dict, query, k: int, *,
         "doc_id",
         (F.col("mx") + F.lit(tb) * (F.col("sm") - F.col("mx")))
         .alias("s"))
-    scored = (blended.groupBy("doc_id")
-              .agg(F.round(F.sum("s"), 6).alias("score")))
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return top.select(
-        (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-        "doc_id", "score")
+    return _rank_topk(blended.groupBy("doc_id")
+                      .agg(F.round(F.sum("s"), 6).alias("score")), k)
 
 
 def _dismax_full(field_indexes: dict, query, k: int, *,

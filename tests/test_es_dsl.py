@@ -772,8 +772,8 @@ def test_match_all_and_constant_score(two_field):
 
 def test_boosting_demotes_and_regimes_agree(two_field, monkeypatch):
     """ES boosting: negative-matching docs demoted by negative_boost.
-    The WAND-probed pruned regime and the distributed score_all fallback
-    are row-identical; the demotion actually reorders this corpus."""
+    The driver-placed score_all and the forced-distributed plan are
+    row-identical; the demotion actually reorders this corpus."""
     from newssearchengine_spark.plans import search as search_mod
 
     _, idxs = two_field
@@ -794,8 +794,8 @@ def test_boosting_demotes_and_regimes_agree(two_field, monkeypatch):
     assert [r["doc_id"] for r in got] != [r["doc_id"] for r in plain]
     assert any(r["doc_id"] in negdocs for r in got)
 
-    # regime parity: force the distributed score_all fallback
-    monkeypatch.setattr(search_mod, "BOOL_DRIVER_CAP", 0)
+    # placement parity: force the distributed score_all plan
+    monkeypatch.setattr(search_mod, "SEARCH_DRIVER_CAP", -1)
     dist = es_search(si, body, size=15).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in dist]
     monkeypatch.undo()
@@ -916,7 +916,7 @@ def test_es_aggs_histogram_range_percentiles(spark, two_field):
 def test_function_score_and_exists(two_field, monkeypatch):
     """function_score/field_value_factor: final = bm25 * f(field) over
     the FULL match set (a doc can be promoted from below the plain
-    top-k); probe and distributed regimes are row-identical; sum mode
+    top-k); driver and distributed placements are row-identical; sum mode
     and whole-query exists work."""
     from newssearchengine_spark.plans import search as search_mod
 
@@ -934,7 +934,7 @@ def test_function_score_and_exists(two_field, monkeypatch):
     plain = si.search(["cursor", "node"], 15).collect()
     assert [r["doc_id"] for r in got] != [r["doc_id"] for r in plain]
 
-    monkeypatch.setattr(search_mod, "BOOL_DRIVER_CAP", 0)
+    monkeypatch.setattr(search_mod, "SEARCH_DRIVER_CAP", -1)
     dist = es_search(si, body, size=15).collect()
     monkeypatch.undo()
     assert [tuple(r) for r in got] == [tuple(r) for r in dist]
@@ -945,7 +945,7 @@ def test_function_score_and_exists(two_field, monkeypatch):
         "boost_mode": "sum",
     }}}
     got_sum = es_search(si, body_sum, size=15).collect()
-    monkeypatch.setattr(search_mod, "BOOL_DRIVER_CAP", 0)
+    monkeypatch.setattr(search_mod, "SEARCH_DRIVER_CAP", -1)
     dist_sum = es_search(si, body_sum, size=15).collect()
     monkeypatch.undo()
     assert got_sum and [tuple(r) for r in got_sum] == \
@@ -955,6 +955,39 @@ def test_function_score_and_exists(two_field, monkeypatch):
     assert n == two.count()
     with pytest.raises(ValueError, match="boost_mode"):
         si.search_function_score("node", "content_len", 5, boost_mode="max")
+
+
+def test_field_value_factor_log1p_is_common_log(two_field):
+    """ES field_value_factor `modifier: "log1p"` adds 1 to the field
+    value and takes the COMMON logarithm: final = bm25 * log10(1 +
+    factor * value), in the single-function form and in a functions
+    list. Expected scores come from ES's formula over the pure-python
+    BM25 oracle."""
+    import math
+
+    from newssearchengine_spark.oracle import pure
+
+    two, idxs = two_field
+    si = idxs["text"]
+    raw = {r["doc_id"]: r["text"]
+           for r in two.select("doc_id", "text").collect()}
+    oidx = pure.OracleIndex.build(raw, si.analyzer)
+    qterms = sorted(set(pure.analyze("node cursor", si.analyzer)))
+    match = [d for d in raw
+             if set(qterms) & set(pure.analyze(raw[d], si.analyzer))]
+    factor, k = 0.5, 15
+    want = sorted(
+        ((d, oidx.score(qterms, d) * math.log10(1 + factor * len(raw[d])))
+         for d in match), key=lambda t: (-round(t[1], 6), t[0]))[:k]
+    fvf = {"field": "content_len", "factor": factor, "modifier": "log1p"}
+    query = {"match": {"text": "node cursor"}}
+    for fs in ({"query": query, "field_value_factor": fvf},
+               {"query": query, "functions": [{"field_value_factor": fvf}]}):
+        got = es_search(si, {"query": {"function_score": fs}},
+                        size=k).collect()
+        assert [r["doc_id"] for r in got] == [d for d, _ in want], fs
+        for r, (_, fin) in zip(got, want):
+            assert r["score"] == pytest.approx(fin, abs=2e-6)
 
 
 def test_match_operator_and_msm_boost(two_field):
@@ -1316,8 +1349,8 @@ def test_bool_clause_object_form_options(two_field):
 def test_function_score_functions_list(two_field, monkeypatch):
     """function_score FUNCTIONS list (filter+weight): every score_mode
     matches an independent pure-python oracle (pure.OracleIndex BM25 +
-    python membership + python combine), the pruned WAND-probe regime
-    is row-identical to the forced-distributed regime, docs matched by
+    python membership + python combine), the driver-placed score_all
+    is row-identical to the forced-distributed plan, docs matched by
     no function keep their query score, and the rejection surface
     (avg / bad keys / bad boost_mode) raises."""
     from newssearchengine_spark.oracle import pure
@@ -1359,7 +1392,7 @@ def test_function_score_functions_list(two_field, monkeypatch):
             }}}
             got = es_search(si, body, size=k).collect()
             # forced-distributed regime: identical rows
-            monkeypatch.setattr(search_mod, "BOOL_DRIVER_CAP", -1)
+            monkeypatch.setattr(search_mod, "SEARCH_DRIVER_CAP", -1)
             dist = es_search(si, body, size=k).collect()
             monkeypatch.undo()
             assert [tuple(r) for r in got] == [tuple(r) for r in dist], \

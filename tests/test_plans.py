@@ -108,8 +108,8 @@ def test_phrase_plan_is_jvm_side(spark, sf_tiny):
 
 def test_multi_query_batch_prunes_buckets(spark, tmp_path, monkeypatch):
     """search_many scans only the union of the queries' term buckets
-    (inspected on the distributed-window regime — the driver-merge
-    regime executes eagerly and returns a local relation)."""
+    (inspected on the distributed plan — the driver placement reads
+    with pyarrow and returns a local relation)."""
     import newssearchengine_spark.plans.search as S
     from newssearchengine_spark.datagen import source_files
     from newssearchengine_spark.plans.index_build import build_index, term_bucket
@@ -121,7 +121,7 @@ def test_multi_query_batch_prunes_buckets(spark, tmp_path, monkeypatch):
     d = str(tmp_path / "idx_many")
     build_index(corpus, d, IndexConfig(n_buckets=8, doc_range=128))
     si = SegmentIndex(spark, d, cache=False)
-    monkeypatch.setattr(S, "MANY_DRIVER_CAP", -1)
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
     q = si.search_many({"a": ["cache"], "b": ["index"]}, 10)
     p = plan(q)
     assert "PartitionFilters" in p and "bucket" in p
@@ -253,7 +253,7 @@ def test_function_score_fns_distributed_plan(spark, tmp_path, monkeypatch):
     build_index(corpus, d, IndexConfig(n_buckets=4, doc_range=128),
                 resume=False)
     si = SegmentIndex(spark, d, cache=False)
-    monkeypatch.setattr(search_mod, "BOOL_DRIVER_CAP", -1)
+    monkeypatch.setattr(search_mod, "SEARCH_DRIVER_CAP", -1)
     out = si.search_function_score_fns(
         "node cursor",
         [{"filter": {"range": {"content_len": {"gte": 150}}},

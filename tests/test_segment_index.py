@@ -16,6 +16,7 @@ import pytest
 from newssearchengine_spark.config import IndexConfig
 from newssearchengine_spark.datagen import source_files
 from newssearchengine_spark.oracle import pure
+from newssearchengine_spark.plans.dsl import es_search
 from newssearchengine_spark.plans.index_build import build_index, completed_buckets
 from newssearchengine_spark.plans.search import SegmentIndex
 from newssearchengine_spark.sources.corpus import assign_doc_ids
@@ -231,8 +232,8 @@ def test_search_many_dedupes_repeated_queries(spark, index_dir,
     si = SegmentIndex(spark, index_dir)
     base = {f"q{i}": q for i, (q, _) in enumerate(QUERIES[:2])}
     batch = {f"{qid}_rep{r}": q for qid, q in base.items() for r in range(4)}
-    # driver regime, then driver merge, then the distributed window
-    for cap in (None, "SEARCH_DRIVER_CAP", "MANY_DRIVER_CAP"):
+    # driver regime, then the distributed per-query window
+    for cap in (None, "SEARCH_DRIVER_CAP"):
         if cap is not None:
             monkeypatch.setattr(S, cap, -1)
         got = si.search_many(batch, 15).collect()
@@ -265,12 +266,11 @@ def test_search_many_dense_equals_sparse_scorer(spark, index_dir,
     assert dense and sorted(map(tuple, dense)) == sorted(map(tuple, sparse))
 
 
-def test_search_many_driver_merge_equals_window(spark, index_dir,
-                                                monkeypatch):
-    """search_many's three regimes (pyarrow driver read under
-    SEARCH_DRIVER_CAP; above it a driver merge under MANY_DRIVER_CAP or
-    the distributed per-query window) must be row-identical — same raw
-    scores, same (score desc, doc_id asc) order, same ranks."""
+def test_search_many_driver_equals_window(spark, index_dir, monkeypatch):
+    """search_many's two placements (pyarrow driver read and numpy merge
+    under SEARCH_DRIVER_CAP; above it the distributed per-query window)
+    must be row-identical — same raw scores, same (score desc, doc_id
+    asc) order, same ranks."""
     import newssearchengine_spark.plans.search as S
 
     si = SegmentIndex(spark, index_dir)
@@ -278,11 +278,8 @@ def test_search_many_driver_merge_equals_window(spark, index_dir,
     a = si.search_many(queries, 25).collect()
     monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
     b = si.search_many(queries, 25).collect()
-    monkeypatch.setattr(S, "MANY_DRIVER_CAP", -1)
-    c = si.search_many(queries, 25).collect()
     monkeypatch.undo()
-    assert a and sorted(map(tuple, a)) == sorted(map(tuple, b)) \
-        == sorted(map(tuple, c))
+    assert a and sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_prefix_expansion_and_search(spark, index_dir, oracle):
@@ -371,11 +368,11 @@ def test_phrase_indexed_equals_compositional(spark, corpus, index_dir):
 
 def test_phrase_driver_and_distributed_regimes_identical(
         spark, index_dir, monkeypatch):
-    """The phrase top-k has three regimes (pyarrow driver read under
-    SEARCH_DRIVER_CAP; above it a one-job gather under
-    PHRASE_DRIVER_CAP, or a persisted distributed relation) — same
-    Catalyst scoring expressions, so results must be bit-identical. Force
-    the other regimes by zeroing the caps and compare."""
+    """The phrase top-k has two placements (pyarrow driver read and numpy
+    scoring under SEARCH_DRIVER_CAP; above it the distributed matcher and
+    Catalyst scoring) — the same phrase BM25 and 6 dp HALF_UP rounding,
+    so results must be bit-identical. Force the distributed plan by
+    zeroing the cap and compare."""
     import newssearchengine_spark.plans.search as S
 
     si = SegmentIndex(spark, index_dir)
@@ -388,13 +385,10 @@ def test_phrase_driver_and_distributed_regimes_identical(
 
     driver = run()
     monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
-    gather = run()
-    monkeypatch.setattr(S, "PHRASE_DRIVER_CAP", -1)
     dist = run()
     monkeypatch.undo()
-    for a, b, c in zip(driver, gather, dist):
-        assert a and [tuple(r) for r in a] == [tuple(r) for r in b] \
-            == [tuple(r) for r in c]
+    for a, b in zip(driver, dist):
+        assert a and [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
 def test_phrase_needs_positions(spark, corpus, tmp_path):
@@ -576,7 +570,7 @@ def test_bool_minimum_should_match(spark, index_dir, oracle, monkeypatch):
         for r in res[m]:
             assert r["score"] == base[r["doc_id"]]
     assert len(res[0]) > len(res[2]) > len(res[3])  # constraint bites
-    monkeypatch.setattr(S, "BOOL_DRIVER_CAP", -1)
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
     dist = si.search_bool(should=should, k=N_DOCS + 1,
                           minimum_should_match=2).collect()
     monkeypatch.undo()
@@ -584,7 +578,7 @@ def test_bool_minimum_should_match(spark, index_dir, oracle, monkeypatch):
     # msm composes with must + must_not through both regimes
     a = si.search_bool(must=["node"], should=should, must_not=["proto"],
                        k=50, minimum_should_match=2).collect()
-    monkeypatch.setattr(S, "BOOL_DRIVER_CAP", -1)
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
     b = si.search_bool(must=["node"], should=should, must_not=["proto"],
                        k=50, minimum_should_match=2).collect()
     monkeypatch.undo()
@@ -678,9 +672,10 @@ def test_dismax_threshold_proof_failure_escalates_then_falls_back(
     assert got2 and [tuple(r) for r in got2] == [tuple(r) for r in want]
 
 
-def test_bool_pruned_equals_distributed(spark, index_dir, monkeypatch):
-    """The capped bool path (per-part clause intersection + candidate
-    scoring) equals the distributed semi-join plan exactly."""
+def test_bool_driver_equals_distributed(spark, index_dir, monkeypatch):
+    """Flat bool's driver placement (the per-part intersection + candidate
+    scoring closure over a pyarrow read) equals its distributed
+    applyInPandas plan exactly."""
     import newssearchengine_spark.plans.search as S
 
     si = SegmentIndex(spark, index_dir)
@@ -689,13 +684,13 @@ def test_bool_pruned_equals_distributed(spark, index_dir, monkeypatch):
         ([["node", "shard"], "cursor"], ["group"], []),
         (["group"], [], ["proto"]),
     ]
-    pruned = [si.search_bool(must=m, should=s, must_not=n, k=25).collect()
+    driver = [si.search_bool(must=m, should=s, must_not=n, k=25).collect()
               for m, s, n in cases]
-    monkeypatch.setattr(S, "BOOL_DRIVER_CAP", -1)
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
     dist = [si.search_bool(must=m, should=s, must_not=n, k=25).collect()
             for m, s, n in cases]
     monkeypatch.undo()
-    for a, b, c in zip(pruned, dist, cases):
+    for a, b, c in zip(driver, dist, cases):
         assert a and [tuple(r) for r in a] == [tuple(r) for r in b], c
 
 
@@ -933,7 +928,7 @@ def test_bool_filter_context(spark, corpus, index_dir, oracle, monkeypatch):
     # filters bit: the unfiltered top-25 differs
     assert {r["doc_id"] for r in base[:25]} != {r["doc_id"] for r in got}
 
-    monkeypatch.setattr(S, "BOOL_DRIVER_CAP", -1)
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
     dist = si.search_bool(must=["node"], should=["cursor"], k=25,
                           filter=filt).collect()
     monkeypatch.undo()
@@ -1034,7 +1029,7 @@ def test_bool_filter_only_and_edges(spark, corpus, index_dir, oracle):
                        filter=[{"term": {"lang": "py"}}]).collect()
     import pytest as _pytest
     mp = _pytest.MonkeyPatch()
-    mp.setattr(S, "BOOL_DRIVER_CAP", -1)
+    mp.setattr(S, "SEARCH_DRIVER_CAP", -1)
     b = si.search_bool(should=["node", "cursor", "shard"], k=40,
                        minimum_should_match=2,
                        filter=[{"term": {"lang": "py"}}]).collect()
@@ -1090,6 +1085,33 @@ REGIME_CALLS = [
 # the nested-bool tree's expressions still run in Catalyst over a local
 # relation: no Spark job, but JVM calls
 TREE_CALLS = REGIME_CALLS[2:5]
+# flat bool (must + should + must_not, must + msm + must_not, filter term
+# clauses, a zero-filled filter, a meta filter with and without msm, a
+# zero-filled meta filter), query_string AND and search_mixed
+FLAT_CALLS = [
+    lambda si: si.search_bool(must=["node", "cursor"], should=["shard"],
+                              must_not=["stream"], k=20),
+    lambda si: si.search_bool(
+        must=["node"], should=["node", "cursor", "shard", "stream"],
+        must_not=["proto"], k=20, minimum_should_match=2),
+    lambda si: si.search_bool(must=["node"], should=["cursor"],
+                              filter=[["shard", "stream"]], k=20),
+    lambda si: si.search_bool(should=["node"], filter=[["proto"]], k=20),
+    lambda si: si.search_bool(must=["node"], should=["cursor"],
+                              filter=[{"term": {"lang": "py"}}], k=20),
+    lambda si: si.search_bool(should=["node", "cursor", "shard"],
+                              minimum_should_match=2,
+                              filter=[{"term": {"lang": "py"}}], k=20),
+    lambda si: si.search_bool(should=["zzz_absent"],
+                              filter=[{"term": {"lang": "py"}}], k=20),
+    lambda si: es_search(si, {"query": {"query_string": {
+        "query": "node AND cursor"}}}, size=20),
+    lambda si: si.search_mixed(
+        [[["node"], ["cursor"]], [["shard"], ["stream"]]], k=20),
+]
+# a meta filter's predicates run in Catalyst over the doc store's local
+# relation: no Spark job, but JVM calls
+META_CALLS = FLAT_CALLS[4:7]
 
 
 @pytest.fixture(scope="module")
@@ -1112,11 +1134,11 @@ def tombstoned_dir(spark, index_dir, tmp_path_factory):
 
 def test_search_driver_and_distributed_regimes_identical(
         spark, index_dir, tombstoned_dir, monkeypatch):
-    """Plain taat search, the phrase paths, the nested-bool tree and
-    search_many each have a driver regime (pyarrow read + the SAME
-    per-part closure on the driver under SEARCH_DRIVER_CAP on a warm
-    index) and distributed plans above it, so results must be
-    identical. Force the distributed regimes by zeroing the cap and
+    """Plain taat search, the phrase paths, the nested-bool tree,
+    search_many, flat bool, query_string AND and search_mixed each have
+    a driver regime (pyarrow read + the SAME per-part closure on the
+    driver under SEARCH_DRIVER_CAP on a warm index) and distributed
+    plans above it, so results must be identical. Force the distributed regimes by zeroing the cap and
     compare, including the search_after cursor cut and with_meta join,
     on a clean index and on a tombstoned one. On the tombstoned index
     _live's pandas re-rank must also equal its Spark-window form (forced
@@ -1133,7 +1155,8 @@ def test_search_driver_and_distributed_regimes_identical(
                               with_meta=True).collect())
         # ranks are in the rows, so sorting (search_many's window regime
         # returns no fixed order) still pins the ranking
-        rows += [sorted(call(si).collect()) for call in REGIME_CALLS]
+        rows += [sorted(call(si).collect())
+                 for call in REGIME_CALLS + FLAT_CALLS]
         assert all(rows)
         return [[tuple(r) for r in rs] for rs in rows], cur
 
@@ -1155,14 +1178,17 @@ def test_search_driver_and_distributed_regimes_identical(
 
 def test_search_driver_regime_runs_no_spark_job(
         spark, index_dir, tombstoned_dir, py4j_commands):
-    """A driver-regime search, phrase, nested bool or search_many on a
-    warm index reads its postings (and doc-store columns) with pyarrow
-    and returns a LocalFrame: neither the call nor collect() launches a
-    Spark job, with or without tombstones. Empty answers (an absent
-    phrase term, an unsatisfiable msm, a batch of absent terms) are
-    empty LocalFrames, job-free too. Except for the nested-bool tree
-    (TREE_CALLS and the empty tree call), whose expressions still run
-    in Catalyst, neither the call nor collect() makes a JVM call."""
+    """A driver-regime search, phrase, nested bool, search_many, flat
+    bool (with or without a meta filter), query_string AND or
+    search_mixed on a warm index reads its postings (and doc-store
+    columns) with pyarrow and returns a LocalFrame: neither the call nor
+    collect() launches a Spark job, with or without tombstones. Empty
+    answers (an absent phrase term, an unsatisfiable msm, a batch of
+    absent terms) are empty LocalFrames, job-free too. Except for the
+    nested-bool tree (TREE_CALLS and the empty tree call), whose
+    expressions still run in Catalyst, and the meta filters
+    (META_CALLS), whose predicates do, neither the call nor collect()
+    makes a JVM call."""
     import time
 
     tree_empty = lambda si: si.search_bool_tree(  # noqa: E731
@@ -1178,7 +1204,7 @@ def test_search_driver_regime_runs_no_spark_job(
     def rows(call, si):
         n = py4j_commands()
         out = call(si).collect()
-        if call not in TREE_CALLS and call is not tree_empty:
+        if call not in TREE_CALLS + META_CALLS and call is not tree_empty:
             assert py4j_commands() == n
         return out
 
@@ -1191,7 +1217,7 @@ def test_search_driver_regime_runs_no_spark_job(
         try:
             for q in REGIME_QUERIES:
                 assert rows(lambda si: si.search(q, 10), si)
-            for call in REGIME_CALLS:
+            for call in REGIME_CALLS + FLAT_CALLS:
                 assert rows(call, si)
             for call in empty_calls:
                 assert not rows(call, si)

@@ -7,6 +7,11 @@ verify determinism; this tool hunts beyond them).
     python tools/fuzz_sweep.py slop  [--seeds 5000:5006] [--per 10]
     python tools/fuzz_sweep.py exp   [--seeds 11000:11001] [--per 120]
 
+The bool and qs sweeps run every drawn body in both placements — the
+default (driver under SEARCH_DRIVER_CAP on a warm handle), then the
+distributed plan forced by SEARCH_DRIVER_CAP=-1 — and count a
+disagreement between them as a failure before checking the oracle.
+
 Prints one line per mismatch and a final `SWEEP DONE fails=N`.
 The round-5 closing sweep of these three (plus an msearch variant)
 covered ~650 bodies over 30+ seeds and surfaced exactly one seam —
@@ -17,12 +22,14 @@ complement — fixed and pinned in tests/test_es_fuzz.py.
 from __future__ import annotations
 
 import argparse
+import os
 import random
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
 
 def _spark():
@@ -61,6 +68,20 @@ def _fuzz_fixture(spark):
     return T, si, raw, oidx, dt
 
 
+def _both_placements(run):
+    """(rows of run() in the default placement, whether the distributed
+    plan forced by SEARCH_DRIVER_CAP=-1 returns the same rows)."""
+    import newssearchengine_spark.plans.search as S
+
+    rows = sorted(tuple(r) for r in run().collect())
+    cap, S.SEARCH_DRIVER_CAP = S.SEARCH_DRIVER_CAP, -1
+    try:
+        dist = sorted(tuple(r) for r in run().collect())
+    finally:
+        S.SEARCH_DRIVER_CAP = cap
+    return rows, rows == dist
+
+
 def sweep_bool(seeds, per) -> int:
     from newssearchengine_spark.plans.dsl import es_search
 
@@ -73,9 +94,13 @@ def sweep_bool(seeds, per) -> int:
         rng = random.Random(seed)
         for i in range(per):
             bspec = T._gen_bool(rng, vocab)
-            got = {r["doc_id"]: r["score"] for r in es_search(
-                si, {"query": {"bool": bspec}},
-                size=len(raw) + 10).collect()}
+            rows, same = _both_placements(lambda: es_search(
+                si, {"query": {"bool": bspec}}, size=len(raw) + 10))
+            if not same:
+                fails += 1
+                print(f"PLACEMENT seed={seed}#{i}: {bspec}")
+                continue
+            got = {d: sc for _, d, sc in rows}
             rb = float(bspec.get("boost", 1.0))
             want = {}
             for dd in raw:
@@ -117,11 +142,17 @@ def sweep_qs(seeds, per) -> int:
             boost = rng.choice([1.0, 2.0, 0.5])
             field = "text" if boost == 1.0 else f"text^{boost:g}"
             dop = rng.choice(["or", "and"])
-            got = {r["doc_id"]: r["score"] for r in es_search(
+            rows, same = _both_placements(lambda: es_search(
                 si, {"query": {"query_string": {
                     "query": grammar, "fields": [field],
                     "default_operator": dop}}},
-                size=len(raw) + 10).collect()}
+                size=len(raw) + 10))
+            if not same:
+                fails += 1
+                print(f"QS PLACEMENT seed={seed}#{i} dop={dop}: "
+                      f"{grammar!r}")
+                continue
+            got = {d: sc for _, d, sc in rows}
             groups = []
             for seg in grammar.split(" OR "):
                 ands = []
