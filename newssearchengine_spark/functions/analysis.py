@@ -60,19 +60,6 @@ def analyze_expr(col: Column, cfg: AnalyzerConfig | None = None) -> Column:
     )
 
 
-def doc_tokens(df: DataFrame, text_col: str = "content",
-               id_col: str = "doc_id", cfg: AnalyzerConfig | None = None) -> DataFrame:
-    """(id, text) -> exploded (doc_id, term) with one row per occurrence.
-
-    Downstream groupBy(doc_id, term).count() gets map-side partial
-    aggregation from Catalyst — the occurrences never shuffle raw.
-    """
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(analyze_expr(F.col(text_col), cfg)).alias("term"),
-    )
-
-
 def doc_term_freqs(df: DataFrame, text_col: str = "content",
                    id_col: str = "doc_id", cfg: AnalyzerConfig | None = None) -> DataFrame:
     """(id, text) -> (doc_id, term, tf int, dl int).

@@ -132,9 +132,20 @@ def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     docs_blob = vb_encode(deltas.astype(np.uint64))
     tfs_blob = vb_encode((tfs - 1).astype(np.uint64))
     dls_blob = vb_encode(dls.astype(np.uint64))
+    return (docs_blob, tfs_blob, dls_blob,
+            *block_meta(doc_ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
+                        block_size=block_size))
 
-    tfn = tf_norm(tfs.astype(np.float64), dls.astype(np.float64), k1=k1, b=b, avgdl=avgdl)
-    n = doc_ids.size
+
+def block_meta(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+               *, k1: float, b: float, avgdl: float,
+               block_size: int) -> tuple[np.ndarray, np.ndarray]:
+    """(block_last, block_max_tfn) of sorted postings — encode_postings'
+    block metadata, alone for a rewrite whose postings (so blobs) are
+    unchanged but whose avgdl moved."""
+    tfn = tf_norm(np.asarray(tfs, np.float64), np.asarray(dls, np.float64),
+                  k1=k1, b=b, avgdl=avgdl)
+    n = len(doc_ids)
     n_blocks = (n + block_size - 1) // block_size
     block_last = np.empty(n_blocks, dtype=np.int64)
     block_max = np.empty(n_blocks, dtype=np.float32)
@@ -145,7 +156,7 @@ def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
         block_max[i] = np.nextafter(
             np.float32(tfn[lo:hi].max()), np.float32(np.inf)
         )
-    return docs_blob, tfs_blob, dls_blob, block_last, block_max
+    return block_last, block_max
 
 
 def decode_postings(docs_blob: bytes, tfs_blob: bytes, dls_blob: bytes
@@ -184,6 +195,19 @@ def encode_positions(flat_pos: np.ndarray, tfs: np.ndarray) -> bytes:
     if (deltas < 0).any():
         raise ValueError("positions must be strictly increasing per doc")
     return vb_encode(deltas.astype(np.uint64))
+
+
+def pack_positions(flat_pos: np.ndarray, tfs: np.ndarray) -> list[bytes]:
+    """encode_positions cut per posting: blob i holds posting i's
+    positions, bit-identical to positions_pack_expr on its array (the
+    driver-placed build's form of the pre-shuffle pack). Their
+    doc-order concatenation is encode_positions(flat_pos, tfs)."""
+    blob = encode_positions(flat_pos, tfs)
+    # a varbyte value ends at the byte whose continuation bit is clear;
+    # a posting ends with its tf-th value
+    ends = np.flatnonzero((np.frombuffer(blob, np.uint8) & 0x80) == 0) + 1
+    cut = np.r_[0, ends[np.cumsum(np.asarray(tfs, np.int64)) - 1]]
+    return [blob[a:b] for a, b in zip(cut[:-1].tolist(), cut[1:].tolist())]
 
 
 def decode_positions(blob: bytes, tfs: np.ndarray) -> np.ndarray:

@@ -112,22 +112,3 @@ class OracleIndex:
         scored.sort(key=lambda x: (-x[1], x[0]))
         return scored[:k]
 
-
-def tfidf_keywords(docs: dict[int, str], *, min_tf: int, min_df: int, top_n: int,
-                   cfg: AnalyzerConfig | None = None) -> dict[int, list[str]]:
-    """Per-doc tf-idf top terms — the reference's keyword-query formulation
-    (wapo/parser.py:10-47: ES termvectors with min_term_freq/min_doc_freq/
-    max_num_terms filters). Score = tf * idf; tie-break score desc, term asc.
-    """
-    idx = OracleIndex.build(docs, cfg)
-    out: dict[int, list[str]] = {}
-    for doc_id, text in docs.items():
-        toks = Counter(analyze(text, cfg))
-        scored = []
-        for term, tf in toks.items():
-            df = len(idx.postings.get(term, {}))
-            if tf >= min_tf and df >= min_df:
-                scored.append((term, tf * idx.idf(term)))
-        scored.sort(key=lambda x: (-x[1], x[0]))
-        out[doc_id] = [t for t, _ in scored[:top_n]]
-    return out

@@ -15,18 +15,25 @@ missing docs are re-added via single-doc upserts, wapo/index_es.py:187-192
   cheap: a ranked query for top-k over-fetches top-(k + T) (T = live
   tombstone count; at most T dead docs can precede the k-th live hit —
   a proven bound), drops dead ids, and re-ranks. At T = 0 the wrapper
-  short-circuits to the unwrapped plan.
+  short-circuits to the unwrapped plan. ``dead_ids`` is the one driver
+  read of the sidecar (delete counts, compaction, SegmentIndex).
 
 - ``compact_index`` physically expunges tombstones into a new index dir:
-  chunk rows join their doc-part's dead list (broadcast when small, a
-  plain shuffle join at scale), each chunk re-encodes locally (drop dead
-  postings, recompute df/cf and the block-max bounds under the NEW
-  avgdl), term_stats re-aggregate from the rewritten segments, and the
-  doc store / term vectors anti-join the dead set. No groupBy is needed
-  for the segment rewrite — a chunk is a self-contained (bucket,
-  doc_part, term) row, so the rewrite is a mapInPandas with NO shuffle.
-  The output is identical (rank AND score) to a from-scratch build over
-  the live corpus — pytest-pinned in tests/test_delete.py.
+  each (bucket, doc_part, term) chunk drops its dead postings and
+  re-encodes under the NEW avgdl (the ``_make_rewriter`` closure),
+  term_stats re-aggregate from the rewritten segments, and the doc store
+  / term vectors drop the dead set. The output is identical (rank AND
+  score) to a from-scratch build over the live corpus — pytest-pinned in
+  tests/test_delete.py. Two placements of the same closure
+  (index_build.write_on_driver): when the input's n_docs and
+  total_tokens (stats.json, scaled by positions and term vectors) prove
+  the volume fits SEARCH_DRIVER_CAP and the dead ids fit the driver
+  read, it runs on the driver over pyarrow reads and writes each table
+  to a hidden temp directory renamed into place (index_build.write_table)
+  — no Spark job. Above it, the Spark plan: chunk rows join their
+  doc-part's dead list (broadcast when small, a plain shuffle join at
+  scale) and rewrite in a mapInPandas with NO shuffle, since a chunk is
+  a self-contained row.
 """
 
 from __future__ import annotations
@@ -35,16 +42,22 @@ import json
 import os
 import time
 import uuid
+import zlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codec import (decode_positions, decode_postings,
+from ..functions.codec import (block_meta, decode_positions, decode_postings,
                                encode_positions, encode_postings)
-from .index_build import (SEGMENT_SCHEMA, _atomic_write_json, _manifest_path,
-                          bucket_expr)
+from .index_build import (SEGMENT_ARROW, SEGMENT_SCHEMA, TERM_VECTORS_ARROW,
+                          TERM_VECTORS_SCHEMA, _atomic_write_json,
+                          _manifest_path, bucket_expr, frame_table,
+                          read_frame, write_on_driver, write_segments,
+                          write_table)
 
 TOMBSTONE_DIR = "tombstones"
 
@@ -58,6 +71,37 @@ def tombstone_dir(index_dir: str) -> str:
     return os.path.join(index_dir, TOMBSTONE_DIR)
 
 
+def tombstone_listing(index_dir: str) -> tuple:
+    """(name, bytes) of the sidecar's parquet files, sorted: the identity
+    a memo of the dead set keys on (a new delete changes it)."""
+    try:
+        return tuple(sorted(
+            (e.name, e.stat().st_size)
+            for e in os.scandir(tombstone_dir(index_dir))
+            if e.name.endswith(".parquet")))
+    except FileNotFoundError:
+        return ()
+
+
+def dead_ids(index_dir: str, listing: tuple | None = None):
+    """Sorted distinct int64 ids of the tombstone sidecar, read on the
+    driver with pyarrow (empty when nothing was deleted), or None when
+    the sidecar's parquet files (`listing`, read when not given) exceed
+    plans.search.DELETED_DRIVER_BYTES_CAP — the caller then keeps the
+    dead set as a distributed relation."""
+    from .search import DELETED_DRIVER_BYTES_CAP
+
+    if listing is None:
+        listing = tombstone_listing(index_dir)
+    if not listing:
+        return np.empty(0, dtype=np.int64)
+    if sum(size for _, size in listing) > DELETED_DRIVER_BYTES_CAP:
+        return None
+    tbl = pq.read_table(tombstone_dir(index_dir), columns=["doc_id"])
+    return np.unique(tbl["doc_id"].to_numpy(zero_copy_only=False)
+                     .astype(np.int64))
+
+
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     """Mark docs deleted (es.delete / delete_by_query analog).
 
@@ -69,7 +113,9 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     committer for the DataFrame path). Idempotent: re-deleting an id or
     deleting an id the index never held is harmless.
 
-    Returns the number of DISTINCT live tombstones after the append.
+    Returns the number of DISTINCT live tombstones after the append,
+    counted by dead_ids (no Spark job) unless the sidecar exceeds the
+    driver read.
     """
     tdir = tombstone_dir(index_dir)
     os.makedirs(tdir, exist_ok=True)
@@ -77,14 +123,14 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
         (doc_ids.select(F.col("doc_id").cast("bigint"))
                 .write.mode("append").parquet(tdir))
     else:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         ids = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
         tbl = pa.table({"doc_id": pa.array(ids, type=pa.int64())})
         tmp = os.path.join(tdir, f".tmp-{uuid.uuid4().hex}")
         pq.write_table(tbl, tmp)
         os.replace(tmp, os.path.join(tdir, f"del-{uuid.uuid4().hex}.parquet"))
+    dead = dead_ids(index_dir)
+    if dead is not None:
+        return int(dead.size)
     return int(
         spark.read.parquet(tdir).select("doc_id").distinct().count()
     )
@@ -105,15 +151,59 @@ def delete_by_query(si, body: dict, *, max_docs: int | None = None) -> int:
 
 
 def _dead_relation(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    tdir = tombstone_dir(index_dir)
-    try:
-        files = [f for f in os.listdir(tdir) if f.endswith(".parquet")]
-    except FileNotFoundError:
+    if not tombstone_listing(index_dir):
         return None
-    if not files:
-        return None
-    return spark.read.parquet(tdir).select(
+    return spark.read.parquet(tombstone_dir(index_dir)).select(
         F.col("doc_id").cast("bigint").alias("doc_id")).distinct()
+
+
+def _make_rewriter(stats: dict, avgdl: float):
+    """Compaction's chunk rewrite, for mapInPandas over segment rows
+    joined with their doc_part's `dead_ids` (None when the part lost
+    nothing) — or called with [frame] on the driver: drop the dead
+    postings (and their positions) and re-encode, recompute every
+    chunk's block-max bounds under the new avgdl, and drop chunks left
+    empty."""
+    k1, b = float(stats["k1"]), float(stats["b"])
+    block_size = int(stats["block_size"])
+    with_positions = bool(stats.get("with_positions", False))
+    out_cols = [c.strip().split(" ")[0] for c in SEGMENT_SCHEMA.split(",")]
+
+    def rewrite(batches):
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                ids, tfs, dls = decode_postings(r.docs, r.tfs, r.dls)
+                keep = (~np.isin(ids, np.asarray(r.dead_ids, dtype=np.int64))
+                        if isinstance(r.dead_ids, (list, np.ndarray))
+                        and len(r.dead_ids) else None)
+                if keep is None or keep.all():
+                    # no posting dropped: the blobs stand, only the
+                    # block-max bounds move with avgdl
+                    enc = (r.docs, r.tfs, r.dls,
+                           *block_meta(ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
+                                       block_size=block_size))
+                    pos_b = r.positions if with_positions else None
+                elif not keep.any():
+                    continue
+                else:
+                    if with_positions:
+                        flat = decode_positions(r.positions or b"", tfs)
+                        per_post = np.split(flat, np.cumsum(tfs)[:-1])
+                        kept = [p for p, kp in zip(per_post, keep) if kp]
+                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+                    enc = encode_postings(ids, tfs, dls, k1=k1, b=b,
+                                          avgdl=avgdl, block_size=block_size)
+                    pos_b = (encode_positions(np.concatenate(kept), tfs)
+                             if with_positions else None)
+                rows.append(
+                    (int(r.bucket), int(r.doc_part), r.term,
+                     int(ids.size), int(tfs.sum()), *enc[:3],
+                     enc[3].tolist(), enc[4].astype(np.float32).tolist(),
+                     pos_b))
+            yield pd.DataFrame(rows, columns=out_cols)
+
+    return rewrite
 
 
 def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
@@ -122,34 +212,96 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     Equal to a from-scratch build over the live corpus: N/avgdl/df and
     every chunk's block-max bounds are recomputed, empty chunks/terms
     drop out, positions (if stored) are rewritten per surviving posting.
-    Returns compaction metrics. With zero tombstones this still produces
-    a valid copy (re-encoded under the identical stats).
+    Runs on the driver when write_on_driver proves the input index small
+    from its stats.json and dead_ids reads the dead set, else as Spark
+    plans. Returns compaction metrics. With zero tombstones this still
+    produces a valid copy (re-encoded under the identical stats).
     """
     t0 = time.time()
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
-    k1, b = float(stats["k1"]), float(stats["b"])
-    block_size = int(stats["block_size"])
+    dead = (dead_ids(index_dir) if write_on_driver(
+        int(stats["n_docs"]), int(stats["total_tokens"]),
+        stats.get("with_positions", False),
+        stats.get("with_term_vectors", False)) else None)
+    os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
+    if dead is None:
+        n_dead, dead_sig, n_docs, total_tokens = _compact_spark(
+            spark, index_dir, out_dir, stats)
+    else:
+        # the Spark plan's signature: Σ crc32 of the ids' decimal strings
+        n_dead = int(dead.size)
+        dead_sig = sum(zlib.crc32(str(i).encode()) for i in dead.tolist())
+        n_docs, total_tokens = _compact_local(index_dir, out_dir, stats,
+                                              dead)
+    avgdl = total_tokens / n_docs if n_docs else 0.0
+    # deterministic, order-independent signature of the dead set for the
+    # output fingerprint (drives resume identity downstream)
+    fp = f"compact:{stats['input_fingerprint']}:{n_dead}:{dead_sig}"
+
+    new_stats = dict(stats)
+    new_stats.update(n_docs=n_docs, avgdl=avgdl, total_tokens=total_tokens,
+                     input_fingerprint=fp)
+    _atomic_write_json(os.path.join(out_dir, "stats.json"), new_stats)
+    for bkt in range(int(stats["n_buckets"])):
+        _atomic_write_json(
+            _manifest_path(out_dir, bkt),
+            {"bucket": bkt, "input_fingerprint": fp, "status": "complete",
+             "compacted_from": index_dir, "n_deleted": n_dead,
+             "elapsed_sec": round(time.time() - t0, 3)})
+    return {"n_docs": n_docs, "avgdl": avgdl, "n_deleted": n_dead,
+            "elapsed_sec": round(time.time() - t0, 3)}
+
+
+def _compact_local(index_dir: str, out_dir: str, stats: dict,
+                   dead: np.ndarray) -> tuple[int, int]:
+    """The driver placement: pyarrow reads, the rewrite closure over the
+    whole segment table at once, write_table writes. Returns the live
+    (n_docs, total_tokens)."""
+    store = pq.read_table(os.path.join(index_dir, "doc_store"))
+    live = store.filter(pa.array(
+        ~np.isin(store["doc_id"].to_numpy(zero_copy_only=False), dead)))
+    n_docs = live.num_rows
+    total_tokens = int(np.asarray(live["dl"], dtype=np.int64).sum())
+    write_table(live, os.path.join(out_dir, "doc_store"))
+    avgdl = total_tokens / n_docs if n_docs else 0.0
+
+    doc_range = int(stats["doc_range"])
+    parts = dead // doc_range
+    cuts = np.flatnonzero(np.diff(parts)) + 1
+    per_part = dict(zip(parts[np.r_[0, cuts]].tolist() if dead.size else [],
+                        np.split(dead, cuts)))
+    seg = read_frame(os.path.join(index_dir, "segments"), SEGMENT_ARROW,
+                     "bucket")
+    seg["dead_ids"] = [per_part.get(p) for p in seg["doc_part"]]
+    (out,) = _make_rewriter(stats, avgdl)([seg])
+    write_segments(out, out_dir, int(stats["n_buckets"]))
+    if stats.get("with_term_vectors", False):
+        tv = read_frame(os.path.join(index_dir, "term_vectors"),
+                        TERM_VECTORS_ARROW, "doc_part")
+        tv = tv[~np.isin(tv["doc_id"].to_numpy(np.int64), dead)]
+        write_table(frame_table(tv.sort_values(["doc_id", "term"]),
+                                TERM_VECTORS_ARROW),
+                    os.path.join(out_dir, "term_vectors"), "doc_part")
+    return n_docs, total_tokens
+
+
+def _compact_spark(spark: SparkSession, index_dir: str, out_dir: str,
+                   stats: dict) -> tuple[int, int, int, int]:
+    """The Spark placement. Returns (n_dead, dead signature, live
+    n_docs, live total_tokens)."""
     doc_range = int(stats["doc_range"])
     n_buckets = int(stats["n_buckets"])
-    with_positions = bool(stats.get("with_positions", False))
-    with_term_vectors = bool(stats.get("with_term_vectors", False))
-
     dead = _dead_relation(spark, index_dir)
     if dead is None:
         dead = spark.createDataFrame([], "doc_id bigint")
     dead = dead.persist()
-    # deterministic, order-independent signature of the dead set for the
-    # output fingerprint (drives resume identity downstream)
     sig_row = dead.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.crc32(F.col("doc_id").cast("string"))), F.lit(0))
         .alias("sig"),
     ).collect()[0]
     n_dead, dead_sig = int(sig_row["n"]), int(sig_row["sig"])
-    fp = f"compact:{stats['input_fingerprint']}:{n_dead}:{dead_sig}"
-
-    os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
 
     # ---- doc store: anti-join the dead set; new global stats ----------
     store = spark.read.parquet(os.path.join(index_dir, "doc_store"))
@@ -178,46 +330,8 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     seg = spark.read.schema(SEGMENT_SCHEMA).parquet(
         os.path.join(index_dir, "segments"))
     joined = seg.join(dead_per_part, "doc_part", "left")
-
-    out_cols = [c.strip().split(" ")[0] for c in SEGMENT_SCHEMA.split(",")]
-
-    def rewrite(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                ids, tfs, dls = decode_postings(r.docs, r.tfs, r.dls)
-                dead_arr = (np.asarray(r.dead_ids, dtype=np.int64)
-                            if isinstance(r.dead_ids, (list, np.ndarray))
-                            and len(r.dead_ids) else None)
-                if dead_arr is not None:
-                    keep = ~np.isin(ids, dead_arr)
-                else:
-                    keep = None
-                if with_positions:
-                    flat = decode_positions(r.positions or b"", tfs)
-                    per_post = np.split(flat, np.cumsum(tfs)[:-1])
-                if keep is not None:
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    if with_positions:
-                        per_post = [p for p, kp in zip(per_post, keep) if kp]
-                if not ids.size:
-                    continue
-                docs_b, tfs_b, dls_b, blast, bmax = encode_postings(
-                    ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
-                    block_size=block_size)
-                pos_b = (encode_positions(
-                    np.concatenate(per_post) if ids.size
-                    else np.empty(0, dtype=np.int64), tfs)
-                    if with_positions else None)
-                rows.append(
-                    (int(r.bucket), int(r.doc_part), r.term,
-                     int(ids.size), int(tfs.sum()), docs_b, tfs_b, dls_b,
-                     blast.tolist(), bmax.astype(np.float32).tolist(),
-                     pos_b))
-            yield pd.DataFrame(rows, columns=out_cols)
-
     (
-        joined.mapInPandas(rewrite, schema=SEGMENT_SCHEMA)
+        joined.mapInPandas(_make_rewriter(stats, avgdl), schema=SEGMENT_SCHEMA)
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(os.path.join(out_dir, "segments"))
     )
@@ -236,10 +350,8 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     )
 
     # ---- forward index ------------------------------------------------
-    if with_term_vectors:
-        tv_schema = ("doc_id bigint, term string, tf int, dl int, "
-                     "doc_part bigint")
-        tv = spark.read.schema(tv_schema).parquet(
+    if stats.get("with_term_vectors", False):
+        tv = spark.read.schema(TERM_VECTORS_SCHEMA).parquet(
             os.path.join(index_dir, "term_vectors"))
         (
             tv.join(dead, "doc_id", "left_anti")
@@ -247,18 +359,6 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
             .write.mode("overwrite").partitionBy("doc_part")
             .parquet(os.path.join(out_dir, "term_vectors"))
         )
-
-    new_stats = dict(stats)
-    new_stats.update(n_docs=n_docs, avgdl=avgdl, total_tokens=total_tokens,
-                     input_fingerprint=fp)
-    _atomic_write_json(os.path.join(out_dir, "stats.json"), new_stats)
-    for bkt in range(n_buckets):
-        _atomic_write_json(
-            _manifest_path(out_dir, bkt),
-            {"bucket": bkt, "input_fingerprint": fp, "status": "complete",
-             "compacted_from": index_dir, "n_deleted": n_dead,
-             "elapsed_sec": round(time.time() - t0, 3)})
     dead.unpersist()
     live_store.unpersist()
-    return {"n_docs": n_docs, "avgdl": avgdl, "n_deleted": n_dead,
-            "elapsed_sec": round(time.time() - t0, 3)}
+    return n_dead, dead_sig, n_docs, total_tokens

@@ -2,10 +2,10 @@
 
 The reference's incremental path is a single-doc upsert into ES
 (/root/reference/wapo/index_es.py:187-192 — re-adding v2 docs missing from
-v3); Lucene merges segments in the background. Our explicit Spark analog:
+v3); Lucene merges segments in the background. Our explicit analog:
 index the new docs as their own (small) index, then MERGE — cheaper than
 rebuilding because the big side's postings are already analyzed, encoded,
-and bucketed; the merge shuffles compressed chunk rows, not raw tokens.
+and bucketed; the merge moves compressed chunk rows, not raw tokens.
 
 Semantics that make this more than a file concat:
 - global stats change: N, avgdl, and per-term df are re-aggregated, and
@@ -13,26 +13,99 @@ Semantics that make this more than a file concat:
   avgdl (BM25 length norms move — scores after merge must equal a
   from-scratch build over the union corpus; asserted in tests).
 - chunks with the same (bucket, term, doc_part) from both sides are
-  merge-sorted into one chunk (doc-id spaces must be disjoint — validated).
-- skew story is unchanged: the shuffle key is (bucket, doc_part), so hot
+  merge-sorted into one chunk by the ``_make_remerger`` closure (doc-id
+  spaces must be disjoint — validated).
+- skew story is unchanged: the unit of work is (bucket, doc_part), so hot
   terms stay chunked across doc ranges.
+
+Two placements of the same closure (index_build.write_on_driver): when
+both sides' n_docs and total_tokens (stats.json, scaled by positions and
+term vectors) prove the merged volume fits SEARCH_DRIVER_CAP, the merge
+runs on the driver over pyarrow reads, grouping with pandas, and writes
+each table to a hidden temp directory renamed into place
+(index_build.write_table) — no Spark job. Above it, one Spark shuffle on
+(bucket, doc_part) runs the closure in applyInPandas.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codec import (decode_positions, decode_postings,
+from ..functions.codec import (block_meta, decode_positions, decode_postings,
                                encode_positions, encode_postings)
-from .index_build import (SEGMENT_SCHEMA, _atomic_write_json, _manifest_path,
-                          bucket_expr)
+from .index_build import (SEGMENT_ARROW, SEGMENT_SCHEMA, TERM_STATS_SCHEMA,
+                          TERM_VECTORS_ARROW, TERM_VECTORS_SCHEMA,
+                          _atomic_write_json, _manifest_path, bucket_expr,
+                          frame_table, read_frame, write_on_driver,
+                          write_segments, write_table)
+
+
+def _make_remerger(stats: dict, avgdl: float):
+    """The merge's per-(bucket, doc_part) closure: a term's chunks from
+    both sides decoded, merge-sorted by doc id (positions kept with
+    their posting) and re-encoded; every chunk's block-max bounds
+    recomputed under the merged avgdl."""
+    k1, b = stats["k1"], stats["b"]
+    block_size = stats["block_size"]
+    with_positions = bool(stats.get("with_positions", False))
+
+    # no annotations: pyspark cannot classify the two-arg (key, pdf)
+    # grouped-map signature from hints and warns on any annotated fn
+    def remerge(key, pdf):
+        bucket, doc_part = int(key[0]), int(key[1])
+        pdf = pdf.sort_values("term", kind="mergesort")
+        terms = pdf["term"].to_numpy()
+        docs, tfs_c, dls_c = (pdf[c].to_numpy() for c in ("docs", "tfs", "dls"))
+        poss = pdf["positions"].to_numpy() if with_positions else None
+        bounds = np.flatnonzero(terms[1:] != terms[:-1]) + 1
+        rows = []
+        for lo, hi in zip(np.r_[0, bounds], np.r_[bounds, terms.size]):
+            if lo == hi:  # an empty group
+                continue
+            if hi - lo == 1:
+                # one side holds the term here: its blobs stand, only
+                # the block-max bounds move with avgdl
+                ids, tfs, dls = decode_postings(docs[lo], tfs_c[lo], dls_c[lo])
+                enc = (docs[lo], tfs_c[lo], dls_c[lo],
+                       *block_meta(ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
+                                   block_size=block_size))
+                pos_b = poss[lo] if with_positions else None
+            else:
+                ids_l, tfs_l, dls_l, pos_l = [], [], [], []
+                for j in range(lo, hi):
+                    i, t, d = decode_postings(docs[j], tfs_c[j], dls_c[j])
+                    ids_l.append(i); tfs_l.append(t); dls_l.append(d)
+                    if with_positions:
+                        flat = decode_positions(poss[j] or b"", t)
+                        # split back into per-posting lists so doc
+                        # reordering keeps each doc's positions with it
+                        pos_l.extend(np.split(flat, np.cumsum(t)[:-1]))
+                order = np.argsort(np.concatenate(ids_l), kind="mergesort")
+                ids, tfs, dls = (np.concatenate(x)[order]
+                                 for x in (ids_l, tfs_l, dls_l))
+                enc = encode_postings(ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
+                                      block_size=block_size)
+                pos_b = (encode_positions(
+                    np.concatenate([pos_l[j] for j in order]), tfs)
+                    if with_positions else None)
+            rows.append(
+                (bucket, doc_part, terms[lo], int(ids.size), int(tfs.sum()),
+                 *enc[:3], enc[3].tolist(), enc[4].astype(np.float32).tolist(),
+                 pos_b)
+            )
+        return pd.DataFrame(rows, columns=SEGMENT_ARROW.names)
+
+    return remerge
 
 
 def merge_indexes(spark: SparkSession, index_a: str, index_b: str,
@@ -47,60 +120,43 @@ def merge_indexes(spark: SparkSession, index_a: str, index_b: str,
                 "min_token_len", "stopwords"):
         if sa[key] != sb[key]:
             raise ValueError(f"incompatible indexes: {key} differs")
+    # an index older than the analyzer modes was built in code mode
+    if sa.get("analyzer_mode", "code") != sb.get("analyzer_mode", "code"):
+        raise ValueError("incompatible indexes: analyzer_mode differs")
     if sa.get("with_positions", False) != sb.get("with_positions", False):
         raise ValueError("incompatible indexes: with_positions differs")
     if sa.get("with_term_vectors", False) != sb.get("with_term_vectors", False):
         raise ValueError("incompatible indexes: with_term_vectors differs")
-    with_positions = bool(sa.get("with_positions", False))
     with_term_vectors = bool(sa.get("with_term_vectors", False))
-
-    store_a = spark.read.parquet(os.path.join(index_a, "doc_store"))
-    store_b = spark.read.parquet(os.path.join(index_b, "doc_store"))
-    overlap = store_a.select("doc_id").join(store_b.select("doc_id"), "doc_id").count()
-    if overlap:
-        raise ValueError(f"doc_id spaces overlap: {overlap} shared ids")
 
     n_docs = sa["n_docs"] + sb["n_docs"]
     total_tokens = sa["total_tokens"] + sb["total_tokens"]
     avgdl = total_tokens / n_docs if n_docs else 0.0
-    k1, b, block_size = sa["k1"], sa["b"], sa["block_size"]
+    local = write_on_driver(n_docs, total_tokens,
+                            sa.get("with_positions", False), with_term_vectors)
+
+    if local:
+        ids_a, ids_b = (pq.read_table(os.path.join(d, "doc_store"),
+                                      columns=["doc_id"])["doc_id"]
+                        .to_numpy(zero_copy_only=False)
+                        for d in (index_a, index_b))
+        overlap = int(np.intersect1d(ids_a, ids_b).size)
+    else:
+        store_a = spark.read.parquet(os.path.join(index_a, "doc_store"))
+        store_b = spark.read.parquet(os.path.join(index_b, "doc_store"))
+        overlap = store_a.select("doc_id").join(store_b.select("doc_id"),
+                                                "doc_id").count()
+    if overlap:
+        raise ValueError(f"doc_id spaces overlap: {overlap} shared ids")
 
     os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
     fp = f"merge:{sa['input_fingerprint']}+{sb['input_fingerprint']}"
-
-    store_a.unionByName(store_b).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "doc_store")
-    )
-    ts_a = spark.read.parquet(os.path.join(index_a, "term_stats"))
-    ts_b = spark.read.parquet(os.path.join(index_b, "term_stats"))
-    (
-        ts_a.unionByName(ts_b)
-        .groupBy("term")
-        .agg(F.sum("df").cast("bigint").alias("df"),
-             F.sum("cf").cast("bigint").alias("cf"))
-        .withColumn("bucket", bucket_expr(F.col("term"), int(sa["n_buckets"])))
-        .repartition("bucket").sortWithinPartitions("term")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(os.path.join(out_dir, "term_stats"))
-    )
-
-    # forward index: doc-id spaces are disjoint (checked above), so the
-    # merged term_vectors is a plain union re-partitioned by doc_part —
-    # without this, the merged stats would advertise with_term_vectors
-    # while term_vectors()/keywords_tf_idf()/significant_terms() die on a
-    # missing parquet path.
-    if with_term_vectors:
-        tv_schema = "doc_id bigint, term string, tf int, dl int, doc_part bigint"
-        tv_a = spark.read.schema(tv_schema).parquet(
-            os.path.join(index_a, "term_vectors"))
-        tv_b = spark.read.schema(tv_schema).parquet(
-            os.path.join(index_b, "term_vectors"))
-        (
-            tv_a.unionByName(tv_b)
-            .repartition("doc_part").sortWithinPartitions("doc_id", "term")
-            .write.mode("overwrite").partitionBy("doc_part")
-            .parquet(os.path.join(out_dir, "term_vectors"))
-        )
+    remerge = _make_remerger(sa, avgdl)
+    if local:
+        _merge_local(index_a, index_b, out_dir, sa, remerge)
+    else:
+        _merge_spark(spark, store_a.unionByName(store_b), index_a, index_b,
+                     out_dir, sa, remerge)
 
     stats = dict(sa)
     stats.update(
@@ -108,59 +164,6 @@ def merge_indexes(spark: SparkSession, index_a: str, index_b: str,
         input_fingerprint=fp,
     )
     _atomic_write_json(os.path.join(out_dir, "stats.json"), stats)
-
-    seg_a = spark.read.schema(SEGMENT_SCHEMA).parquet(os.path.join(index_a, "segments"))
-    seg_b = spark.read.schema(SEGMENT_SCHEMA).parquet(os.path.join(index_b, "segments"))
-
-    # no annotations: pyspark cannot classify the two-arg (key, pdf)
-    # grouped-map signature from hints and warns on any annotated fn
-    def remerge(key, pdf):
-        bucket, doc_part = int(key[0]), int(key[1])
-        rows = []
-        for term, grp in pdf.groupby("term", sort=True):
-            ids_l, tfs_l, dls_l, pos_l = [], [], [], []
-            for r in grp.itertuples(index=False):
-                i, t, d = decode_postings(r.docs, r.tfs, r.dls)
-                ids_l.append(i); tfs_l.append(t); dls_l.append(d)
-                if with_positions:
-                    flat = decode_positions(r.positions or b"", t)
-                    # split back into per-posting lists so doc reordering
-                    # keeps each doc's positions attached to it
-                    pos_l.extend(np.split(flat, np.cumsum(t)[:-1]))
-            ids = np.concatenate(ids_l)
-            tfs = np.concatenate(tfs_l)
-            dls = np.concatenate(dls_l)
-            order = np.argsort(ids, kind="mergesort")
-            ids, tfs, dls = ids[order], tfs[order], dls[order]
-            docs_b, tfs_b, dls_b, blast, bmax = encode_postings(
-                ids, tfs, dls, k1=k1, b=b, avgdl=avgdl, block_size=block_size
-            )
-            if with_positions:
-                flat = np.concatenate([pos_l[j] for j in order]) \
-                    if ids.size else np.empty(0, dtype=np.int64)
-                pos_b = encode_positions(flat, tfs)
-            else:
-                pos_b = None
-            rows.append(
-                (bucket, doc_part, term, int(ids.size), int(tfs.sum()),
-                 docs_b, tfs_b, dls_b, blast.tolist(),
-                 bmax.astype(np.float32).tolist(), pos_b)
-            )
-        return pd.DataFrame(
-            rows, columns=["bucket", "doc_part", "term", "df", "cf",
-                           "docs", "tfs", "dls", "block_last", "block_max",
-                           "positions"])
-
-    merged = (
-        seg_a.unionByName(seg_b)
-        .groupBy("bucket", "doc_part")
-        .applyInPandas(remerge, schema=SEGMENT_SCHEMA)
-        .sortWithinPartitions("term", "doc_part")
-    )
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_dir, "segments")
-    )
-
     for bkt in range(int(sa["n_buckets"])):
         _atomic_write_json(
             _manifest_path(out_dir, bkt),
@@ -172,8 +175,6 @@ def merge_indexes(spark: SparkSession, index_a: str, index_b: str,
     # tombstones (plans.delete) survive a merge: deleted docs must not
     # resurface in the merged index — copy both sidecars forward (stats
     # stay frozen-with-deletes, consistent with the unmerged handles)
-    import shutil
-
     for side, src in (("a", index_a), ("b", index_b)):
         tdir = os.path.join(src, "tombstones")
         if os.path.isdir(tdir):
@@ -188,3 +189,85 @@ def merge_indexes(spark: SparkSession, index_a: str, index_b: str,
         "avgdl": avgdl,
         "elapsed_sec": round(time.time() - t0, 3),
     }
+
+
+def _merge_local(index_a: str, index_b: str, out_dir: str, stats: dict,
+                 remerge) -> None:
+    """The driver placement: pyarrow reads of both sides, the remerge
+    closure per (bucket, doc_part) group of their union, write_table
+    writes; term_stats are summed from the merged segments."""
+    sides = (index_a, index_b)
+    store_a, store_b = (pq.read_table(os.path.join(d, "doc_store"))
+                        for d in sides)
+    # unionByName: B's columns in A's order
+    store_b = store_b.select(store_a.column_names).cast(store_a.schema)
+    write_table(pa.concat_tables([store_a, store_b]),
+                os.path.join(out_dir, "doc_store"))
+
+    if stats.get("with_term_vectors", False):
+        tv = pd.concat([read_frame(os.path.join(d, "term_vectors"),
+                                   TERM_VECTORS_ARROW, "doc_part")
+                        for d in sides], ignore_index=True)
+        write_table(frame_table(tv.sort_values(["doc_id", "term"]),
+                                TERM_VECTORS_ARROW),
+                    os.path.join(out_dir, "term_vectors"), "doc_part")
+
+    seg = pd.concat([read_frame(os.path.join(d, "segments"), SEGMENT_ARROW,
+                                "bucket") for d in sides], ignore_index=True)
+    out = [remerge(key, grp)
+           for key, grp in seg.groupby(["bucket", "doc_part"], sort=True)]
+    write_segments(pd.concat(out, ignore_index=True) if out
+                   else pd.DataFrame(columns=SEGMENT_ARROW.names),
+                   out_dir, int(stats["n_buckets"]))
+
+
+def _merge_spark(spark: SparkSession, store, index_a: str, index_b: str,
+                 out_dir: str, stats: dict, remerge) -> None:
+    """The Spark placement: union + re-aggregate per table, and one
+    shuffle on (bucket, doc_part) running remerge in applyInPandas."""
+    store.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_store"))
+    # explicit schema: an empty index's term_stats holds no file
+    ts_a, ts_b = (spark.read.schema(TERM_STATS_SCHEMA).parquet(
+        os.path.join(d, "term_stats")) for d in (index_a, index_b))
+    (
+        ts_a.unionByName(ts_b)
+        .groupBy("term")
+        .agg(F.sum("df").cast("bigint").alias("df"),
+             F.sum("cf").cast("bigint").alias("cf"))
+        .withColumn("bucket", bucket_expr(F.col("term"),
+                                          int(stats["n_buckets"])))
+        .repartition("bucket").sortWithinPartitions("term")
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(os.path.join(out_dir, "term_stats"))
+    )
+
+    # forward index: doc-id spaces are disjoint (checked by the caller),
+    # so the merged term_vectors is a plain union re-partitioned by
+    # doc_part — without this, the merged stats would advertise
+    # with_term_vectors while term_vectors()/keywords_tf_idf()/
+    # significant_terms() die on a missing parquet path.
+    if stats.get("with_term_vectors", False):
+        tv_a = spark.read.schema(TERM_VECTORS_SCHEMA).parquet(
+            os.path.join(index_a, "term_vectors"))
+        tv_b = spark.read.schema(TERM_VECTORS_SCHEMA).parquet(
+            os.path.join(index_b, "term_vectors"))
+        (
+            tv_a.unionByName(tv_b)
+            .repartition("doc_part").sortWithinPartitions("doc_id", "term")
+            .write.mode("overwrite").partitionBy("doc_part")
+            .parquet(os.path.join(out_dir, "term_vectors"))
+        )
+
+    seg_a = spark.read.schema(SEGMENT_SCHEMA).parquet(
+        os.path.join(index_a, "segments"))
+    seg_b = spark.read.schema(SEGMENT_SCHEMA).parquet(
+        os.path.join(index_b, "segments"))
+    merged = (
+        seg_a.unionByName(seg_b)
+        .groupBy("bucket", "doc_part")
+        .applyInPandas(remerge, schema=SEGMENT_SCHEMA)
+        .sortWithinPartitions("term", "doc_part")
+    )
+    merged.write.mode("overwrite").partitionBy("bucket").parquet(
+        os.path.join(out_dir, "segments")
+    )

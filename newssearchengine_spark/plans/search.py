@@ -42,7 +42,9 @@ from ..functions.codec import (decode_positions, decode_postings, lucene_idf,
                                tf_norm)
 from ..oracle import pure
 from ..config import AnalyzerConfig
-from .index_build import term_bucket
+from .delete import dead_ids, tombstone_dir, tombstone_listing
+from .index_build import (TERM_STATS_SCHEMA, TERM_VECTORS_SCHEMA,
+                          term_bucket)
 
 TOPK_SCHEMA = "doc_id bigint, score double"
 RANKED_SCHEMA = "rank bigint, doc_id bigint, score double"
@@ -84,6 +86,16 @@ PHRASE_CAND_SCHEMA = "doc_id bigint, occ bigint, dl bigint"
 #: WAND stays distributed at EVERY size: its per-part block loop is
 #: Python-sequential and needs executor parallelism (measured 2.4-6 s
 #: driver-side vs 1.15 s distributed — rejected by measurement).
+#: The same cap places WRITES (index_build.write_on_driver): a build,
+#: compaction or merge runs on the driver when n_docs + tokens x (1 +
+#: positions + term vectors) fits — tokens bounded by the input's
+#: characters for a build (its fingerprint aggregate), by stats.json's
+#: total_tokens for a compaction or merge. The driver holds ~300 B per
+#: token at peak (gathered text, token strings, decoded postings as
+#: pandas/numpy objects; measured +28 MB peak RSS building 100k tokens
+#: from 721k characters), and a token is at least one unit of volume:
+#: ≲ 300 B per unit, ≲ 160 MB transient at the cap. Setting it to -1
+#: forces every read AND write onto Spark.
 SEARCH_DRIVER_CAP = 1 << 19
 
 # Tombstone exclusion regimes (plans.delete): dead ids inline as an isin
@@ -468,7 +480,7 @@ class SegmentIndex:
         self._term_cache: dict[str, tuple[int, int]] = {}
         self._tstats = self._read_or_empty(
             os.path.join(self.index_dir, "term_stats"),
-            "term string, df bigint, cf bigint, bucket int",
+            TERM_STATS_SCHEMA,
         )
         full = self._read_or_empty(
             os.path.join(self.index_dir, "segments"), SEGMENT_SCHEMA
@@ -679,39 +691,26 @@ class SegmentIndex:
         return self._exclude_dead(out)
 
     # -- deletes (plans.delete tombstone sidecar) ---------------------------
-    def _tombstone_listing(self) -> tuple:
-        tdir = os.path.join(self.index_dir, "tombstones")
-        try:
-            return tuple(sorted(
-                (e.name, e.stat().st_size) for e in os.scandir(tdir)
-                if e.name.endswith(".parquet")))
-        except FileNotFoundError:
-            return ()
-
     def _tombstones(self) -> tuple:
         """(T, ids, dead_df) for the index's tombstone sidecar, memoized
         on the sidecar's file listing (a new delete invalidates it).
 
         T = distinct tombstone count. ids = sorted int64 numpy of the
         dead ids when the sidecar fits the driver gather cap (the normal
-        regime between compactions), else None with dead_df a distributed
-        distinct relation (the huge-backlog regime)."""
-        sig = self._tombstone_listing()
+        regime between compactions, read by plans.delete.dead_ids), else
+        None with dead_df a distributed distinct relation (the
+        huge-backlog regime)."""
+        sig = tombstone_listing(self.index_dir)
         memo_sig, tomb = self._tomb_memo
         if sig == memo_sig:
             return tomb
-        tdir = os.path.join(self.index_dir, "tombstones")
+        ids = dead_ids(self.index_dir, sig)
         if not sig:
             tomb = (0, None, None)
-        elif sum(s for _, s in sig) <= DELETED_DRIVER_BYTES_CAP:
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(tdir, columns=["doc_id"])
-            ids = np.unique(tbl["doc_id"].to_numpy(zero_copy_only=False)
-                            .astype(np.int64))
+        elif ids is not None:
             tomb = (int(ids.size), ids, None)
         else:
-            dead_df = (self.spark.read.parquet(tdir)
+            dead_df = (self.spark.read.parquet(tombstone_dir(self.index_dir))
                        .select(F.col("doc_id").cast("bigint").alias("doc_id"))
                        .distinct().persist())
             tomb = (int(dead_df.count()), None, dead_df)
@@ -1289,7 +1288,7 @@ class SegmentIndex:
         parts = sorted({d // doc_range for d in ids})
         return (
             self.spark.read
-            .schema("doc_id bigint, term string, tf int, dl int, doc_part bigint")
+            .schema(TERM_VECTORS_SCHEMA)
             .parquet(os.path.join(self.index_dir, "term_vectors"))
             .filter(F.col("doc_part").isin(parts))
             .filter(F.col("doc_id").isin(ids))
@@ -1403,9 +1402,8 @@ class SegmentIndex:
         fg = self._term_docs(live).select("doc_id").distinct()
         fg_n = float(fg.count())
         bg_n = float(self.stats["n_docs"])
-        tv = self.spark.read.schema(
-            "doc_id bigint, term string, tf int, dl int, doc_part bigint"
-        ).parquet(os.path.join(self.index_dir, "term_vectors"))
+        tv = self.spark.read.schema(TERM_VECTORS_SCHEMA).parquet(
+            os.path.join(self.index_dir, "term_vectors"))
         fg_df = (
             tv.join(fg, "doc_id", "left_semi")
             .groupBy("term").agg(F.count(F.lit(1)).alias("fg_df"))

@@ -42,3 +42,16 @@ def py4j_commands(monkeypatch):
                 java_gateway.GatewayConnection):
         monkeypatch.setattr(cls, "send_command", counting(cls.send_command))
     return lambda: sent[0]
+
+
+@pytest.fixture(params=["driver", "spark"])
+def write_placement(request, monkeypatch):
+    """Runs a test once per write placement: SEARCH_DRIVER_CAP raised
+    past every tier-1 volume puts each build, compaction and merge on
+    the driver; -1 puts them on the Spark plans. Queries follow the same
+    cap."""
+    from newssearchengine_spark.plans import search
+
+    monkeypatch.setattr(search, "SEARCH_DRIVER_CAP",
+                        1 << 40 if request.param == "driver" else -1)
+    return request.param

@@ -120,15 +120,44 @@ def test_get_docs_404_and_idempotence(del_setup):
         [(r["doc_id"], r["score"]) for r in after]
 
 
-def test_compact_equals_fresh_build(del_setup):
+def test_id_delete_counts_without_spark_job(spark, tmp_path):
+    """An id-list delete on a small index counts its distinct tombstones
+    with a driver read of the sidecar — no Spark job — and returns what
+    the Spark count of that sidecar returns."""
+    import time
+
+    from newssearchengine_spark.plans.delete import tombstone_dir
+
+    docs = assign_doc_ids(source_files(spark, 80, seed=13, partitions=2),
+                          num_partitions=2)
+    d = str(tmp_path / "idx")
+    build_index(docs, d, IndexConfig(n_buckets=4, doc_range=64,
+                                     block_size=16))
+    sc = spark.sparkContext
+    counts = []
+    for i, ids in enumerate(([3, 3, 9, 10 ** 9], [9, 11])):
+        group = f"id-delete-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            counts.append(delete_docs(spark, d, ids))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        time.sleep(1.0)  # let the listener bus deliver any job start
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert counts[-1] == spark.read.parquet(tombstone_dir(d)).select(
+            "doc_id").distinct().count()
+    assert counts == [3, 4]
+
+
+def test_compact_equals_fresh_build(del_setup, write_placement):
     spark, corpus, idx, si, dead, raw, root = del_setup
-    compacted = os.path.join(root, "compacted")
+    compacted = os.path.join(root, f"compacted-{write_placement}")
     metrics = compact_index(spark, idx, compacted)
     # idempotence test may have added an unknown id — read the live count
     assert metrics["n_deleted"] == si.n_deleted()
     assert metrics["n_deleted"] >= len(dead)
 
-    fresh_dir = os.path.join(root, "fresh")
+    fresh_dir = os.path.join(root, f"fresh-{write_placement}")
     live = corpus.filter(~corpus.doc_id.isin([int(d) for d in dead]))
     build_index(live, fresh_dir, CFG)
 

@@ -20,17 +20,26 @@ from newssearchengine_spark.sources.corpus import assign_doc_ids
 CFG = IndexConfig(n_buckets=8, doc_range=128, block_size=16)
 
 
-@pytest.fixture(scope="module")
-def merged_setup(spark, tmp_path_factory):
+@pytest.fixture(scope="module", params=["driver", "spark"])
+def merged_setup(spark, tmp_path_factory, request):
+    """Both sides built and merged in one write placement: on the driver
+    (SEARCH_DRIVER_CAP raised past the volume) or on Spark (-1)."""
+    from newssearchengine_spark.plans import search
+
     root = tmp_path_factory.mktemp("merge")
     corpus = assign_doc_ids(source_files(spark, 900, seed=11, partitions=4),
                             num_partitions=4).persist()
     a = corpus.filter("doc_id < 600")
     b = corpus.filter("doc_id >= 600")
     da, db, dm = str(root / "a"), str(root / "b"), str(root / "m")
-    build_index(a, da, CFG)
-    build_index(b, db, CFG)
-    metrics = merge_indexes(spark, da, db, dm)
+    cap = search.SEARCH_DRIVER_CAP
+    search.SEARCH_DRIVER_CAP = 1 << 40 if request.param == "driver" else -1
+    try:
+        build_index(a, da, CFG)
+        build_index(b, db, CFG)
+        metrics = merge_indexes(spark, da, db, dm)
+    finally:
+        search.SEARCH_DRIVER_CAP = cap
     raw = {r["doc_id"]: r["content"]
            for r in corpus.select("doc_id", "content").collect()}
     return dm, metrics, raw
@@ -136,7 +145,8 @@ def test_merged_phrase_search_equals_cold_build(spark, merged_setup, tmp_path):
         assert a, f"fixture phrase {phrase} should match some docs"
 
 
-def test_merged_term_vectors_serves_forward_index(spark, tmp_path):
+def test_merged_term_vectors_serves_forward_index(spark, tmp_path,
+                                                  write_placement):
     """ADVICE fix: merging two with_term_vectors indexes must carry the
     forward index through — term_vectors()/keywords_tf_idf() on the merged
     index must work and match a cold build over the union corpus. Also:
@@ -172,4 +182,36 @@ def test_merged_term_vectors_serves_forward_index(spark, tmp_path):
     build_index(b, dn, cfg_no)
     with pytest.raises(ValueError, match="with_term_vectors"):
         merge_indexes(spark, da, dn, str(tmp_path / "x"))
+    corpus.unpersist()
+
+
+def test_merge_rejects_analyzer_mode_mismatch(spark, tmp_path):
+    """A news-mode (Porter) index must not merge into a code-mode one
+    that shares its stoplist and min_token_len: the merged index would
+    analyze queries one side's way, leaving the other side's terms
+    unreachable. An index whose stats.json predates analyzer_mode
+    counts as code mode."""
+    from newssearchengine_spark.config import AnalyzerConfig
+
+    corpus = assign_doc_ids(source_files(spark, 60, seed=5, partitions=2),
+                            num_partitions=2).persist()
+    a, b = corpus.filter("doc_id < 40"), corpus.filter("doc_id >= 40")
+    code = IndexConfig(n_buckets=4, doc_range=64, block_size=16)
+    news = IndexConfig(n_buckets=4, doc_range=64, block_size=16,
+                       analyzer=AnalyzerConfig(mode="news"))
+    dc, dn, dold = (str(tmp_path / x) for x in ("code", "news", "old"))
+    build_index(a, dc, code)
+    build_index(b, dn, news)
+    with pytest.raises(ValueError, match="analyzer_mode"):
+        merge_indexes(spark, dc, dn, str(tmp_path / "x"))
+
+    build_index(b, dold, code)
+    with open(os.path.join(dold, "stats.json")) as f:
+        stats = json.load(f)
+    del stats["analyzer_mode"]
+    with open(os.path.join(dold, "stats.json"), "w") as f:
+        json.dump(stats, f)
+    assert merge_indexes(spark, dc, dold, str(tmp_path / "y"))["n_docs"] == 60
+    with pytest.raises(ValueError, match="analyzer_mode"):
+        merge_indexes(spark, dold, dn, str(tmp_path / "z"))
     corpus.unpersist()

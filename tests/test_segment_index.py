@@ -89,9 +89,11 @@ def test_sha256_invariant(spark, corpus, index_dir):
     assert store.count() == N_DOCS
 
 
-def test_resume_zero_recomputation(spark, corpus, oracle, tmp_path):
+def test_resume_zero_recomputation(spark, corpus, oracle, tmp_path,
+                                   write_placement):
     """Interrupted build (3 of 8 buckets) resumes: completed bucket files
-    untouched (mtime+size), final index equals a cold build row-for-row."""
+    untouched (mtime+size), final index equals a cold build row-for-row —
+    in both write placements."""
     d = str(tmp_path / "partial")
     m1 = build_index(corpus, d, CFG, max_buckets=3)
     assert m1["buckets_built"] == 3
@@ -122,8 +124,10 @@ def test_resume_zero_recomputation(spark, corpus, oracle, tmp_path):
     assert rows_a == rows_c
 
 
-def test_fingerprint_invalidates_resume(spark, corpus, tmp_path):
-    """A changed input invalidates manifests: nothing is skipped."""
+def test_fingerprint_invalidates_resume(spark, corpus, tmp_path,
+                                        write_placement):
+    """A changed input invalidates manifests: nothing is skipped — in
+    both write placements."""
     from pyspark.sql import functions as F
 
     d = str(tmp_path / "idx")

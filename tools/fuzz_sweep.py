@@ -6,11 +6,19 @@ verify determinism; this tool hunts beyond them).
     python tools/fuzz_sweep.py qs    [--seeds 3000:3020] [--per 6]
     python tools/fuzz_sweep.py slop  [--seeds 5000:5006] [--per 10]
     python tools/fuzz_sweep.py exp   [--seeds 11000:11001] [--per 120]
+    python tools/fuzz_sweep.py write [--seeds 13000:13010] [--per 6]
 
 The bool and qs sweeps run every drawn body in both placements — the
 default (driver under SEARCH_DRIVER_CAP on a warm handle), then the
 distributed plan forced by SEARCH_DRIVER_CAP=-1 — and count a
 disagreement between them as a failure before checking the oracle.
+The write sweep draws a corpus size, analyzer mode, positions / term
+vectors and a delete fraction per seed, runs build -> delete -> compact
+-> delta build -> merge on the driver and then on the Spark plans
+(SEARCH_DRIVER_CAP=-1), diffs every table, stats.json and manifest of
+the two, diffs the merged tables against a fresh build of the live
+union, and checks `--per` top-k queries over the merged index against
+oracle/pure.py.
 
 Prints one line per mismatch and a final `SWEEP DONE fails=N`.
 The round-5 closing sweep of these three (plus an msearch variant)
@@ -305,14 +313,104 @@ def sweep_exp(seeds, per) -> int:
     return fails
 
 
+def sweep_write(seeds, per) -> int:
+    import test_write_placement as W
+    from newssearchengine_spark.config import (AnalyzerConfig, IndexConfig,
+                                               news_analyzer)
+    from newssearchengine_spark.datagen import source_files
+    from newssearchengine_spark.oracle import pure
+    from newssearchengine_spark.plans import search as S
+    from newssearchengine_spark.plans.delete import compact_index, delete_docs
+    from newssearchengine_spark.plans.index_build import build_index
+    from newssearchengine_spark.plans.merge import merge_indexes
+
+    spark = _spark()
+    pool = [r["content"] for r in
+            source_files(spark, 400, seed=29, partitions=2).collect()]
+    fails = 0
+    for seed in seeds:
+        rng = random.Random(seed)
+        n = rng.choice([0, rng.randint(1, 30), rng.randint(30, 250)])
+        n_delta = rng.choice([0, rng.randint(1, 60)])
+        texts = (W.SPECIAL + rng.sample(pool, n + n_delta))[:n + n_delta]
+        rows = [(i, rng.choice(["py", "go"]), t) for i, t in enumerate(texts)]
+        base, delta = rows[:n], rows[n:]
+        cfg = IndexConfig(
+            n_buckets=rng.choice([2, 4, 8]),
+            doc_range=rng.choice([16, 64, 1024]),
+            block_size=rng.choice([4, 16]),
+            with_positions=rng.random() < 0.5,
+            with_term_vectors=rng.random() < 0.5,
+            analyzer=news_analyzer() if rng.random() < 0.4
+            else AnalyzerConfig())
+        frac = rng.choice([0.0, 0.05, 0.3])
+        dead = rng.sample(range(n), int(n * frac)) + [10 ** 9]
+        label = (f"seed={seed} n={n} delta={n_delta} "
+                 f"mode={cfg.analyzer.mode} pos={cfg.with_positions} "
+                 f"tv={cfg.with_term_vectors} deleted={len(dead) - 1}")
+        root = tempfile.mkdtemp(prefix="write_sweep_")
+        snaps, dirs = {}, {}
+        for placement, cap in (("driver", 1 << 40), ("spark", -1)):
+            d = {k: os.path.join(root, placement, k) for k in "abcm"}
+            old, S.SEARCH_DRIVER_CAP = S.SEARCH_DRIVER_CAP, cap
+            try:
+                build_index(spark.createDataFrame(base, W.SCHEMA), d["a"],
+                            cfg, meta_cols=("lang",))
+                delete_docs(spark, d["a"], dead)
+                compact_index(spark, d["a"], d["c"])
+                build_index(spark.createDataFrame(delta, W.SCHEMA), d["b"],
+                            cfg, meta_cols=("lang",))
+                merge_indexes(spark, d["c"], d["b"], d["m"])
+            finally:
+                S.SEARCH_DRIVER_CAP = old
+            snaps[placement] = {k: W._snapshot(spark, d[k]) for k in "abcm"}
+            dirs[placement] = d
+        diff = [k for k in "abcm" if snaps["driver"][k] != snaps["spark"][k]]
+        if diff:
+            fails += 1
+            print(f"WRITE PLACEMENT {label}: differs in {diff}")
+            continue
+        gone = set(dead)
+        fresh = os.path.join(root, "fresh")
+        build_index(spark.createDataFrame(
+            [r for r in rows if r[0] not in gone], W.SCHEMA), fresh, cfg,
+            meta_cols=("lang",))
+        if W._snapshot(spark, fresh)[2] != snaps["driver"]["m"][2]:
+            fails += 1
+            print(f"WRITE FRESH {label}: merged tables differ from a "
+                  f"fresh build of the live union")
+            continue
+        live = {i: t or "" for i, _, t in rows if i not in gone}
+        if not live:
+            continue
+        si = S.SegmentIndex(spark, dirs["driver"]["m"])
+        oidx = pure.OracleIndex.build(live, si.analyzer)
+        toks = {i: pure.analyze(t, si.analyzer) for i, t in live.items()}
+        pool_ids = [i for i, tk in toks.items() if tk]
+        for j in range(per if pool_ids else 0):
+            tk = toks[rng.choice(pool_ids)]
+            terms = rng.sample(tk, min(len(tk), rng.randint(1, 3)))
+            got = [(r["doc_id"], r["score"])
+                   for r in si.search(terms, 10).collect()]
+            want = oidx.search(terms, 10)
+            if ([d for d, _ in got] != [d for d, _ in want]
+                    or any(abs(a - b) > 1e-9
+                           for (_, a), (_, b) in zip(got, want))):
+                fails += 1
+                print(f"WRITE ORACLE {label} #{j}: {terms}")
+        si.close()
+    return fails
+
+
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("what", choices=["bool", "qs", "slop", "exp"])
+    ap.add_argument("what", choices=["bool", "qs", "slop", "exp", "write"])
     ap.add_argument("--seeds", default="")
     ap.add_argument("--per", type=int, default=0)
     args = ap.parse_args()
     defaults = {"bool": ("1000:1012", 8), "qs": ("3000:3020", 6),
-                "slop": ("5000:5006", 10), "exp": ("11000:11001", 120)}
+                "slop": ("5000:5006", 10), "exp": ("11000:11001", 120),
+                "write": ("13000:13010", 6)}
     srange, per = defaults[args.what]
     if args.seeds:
         srange = args.seeds
@@ -320,7 +418,8 @@ def main():
         per = args.per
     lo, hi = (int(x) for x in srange.split(":"))
     fails = {"bool": sweep_bool, "qs": sweep_qs, "slop": sweep_slop,
-             "exp": sweep_exp}[args.what](range(lo, hi), per)
+             "exp": sweep_exp, "write": sweep_write}[args.what](
+                 range(lo, hi), per)
     print(f"SWEEP DONE fails={fails}")
     sys.exit(1 if fails else 0)
 
