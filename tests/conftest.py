@@ -44,14 +44,29 @@ def py4j_commands(monkeypatch):
     return lambda: sent[0]
 
 
-@pytest.fixture(params=["driver", "spark"])
-def write_placement(request, monkeypatch):
-    """Runs a test once per write placement: SEARCH_DRIVER_CAP raised
-    past every tier-1 volume puts each build, compaction and merge on
-    the driver; -1 puts them on the Spark plans. Queries follow the same
-    cap."""
+@pytest.fixture(scope="session")
+def placed():
+    """A context manager factory: inside ``with placed("driver"):`` each
+    build, compaction and merge runs on the driver (SEARCH_DRIVER_CAP
+    raised past every tier-1 volume); inside ``with placed("spark"):``
+    each runs the Spark plans (-1). Queries follow the same cap."""
+    import contextlib
+
     from newssearchengine_spark.plans import search
 
-    monkeypatch.setattr(search, "SEARCH_DRIVER_CAP",
-                        1 << 40 if request.param == "driver" else -1)
-    return request.param
+    @contextlib.contextmanager
+    def place(placement):
+        cap = search.SEARCH_DRIVER_CAP
+        search.SEARCH_DRIVER_CAP = 1 << 40 if placement == "driver" else -1
+        try:
+            yield placement
+        finally:
+            search.SEARCH_DRIVER_CAP = cap
+    return place
+
+
+@pytest.fixture(params=["driver", "spark"])
+def write_placement(request, placed):
+    """Runs a test once per write placement (see ``placed``)."""
+    with placed(request.param):
+        yield request.param

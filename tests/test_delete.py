@@ -149,15 +149,23 @@ def test_id_delete_counts_without_spark_job(spark, tmp_path):
     assert counts == [3, 4]
 
 
-def test_compact_equals_fresh_build(del_setup, write_placement):
+def test_compact_equals_fresh_build(del_setup, placed):
+    """Compaction equals a fresh build over the live corpus, in both
+    write placements."""
+    for placement in ("driver", "spark"):
+        with placed(placement):
+            _check_compact_equals_fresh_build(del_setup, placement)
+
+
+def _check_compact_equals_fresh_build(del_setup, placement):
     spark, corpus, idx, si, dead, raw, root = del_setup
-    compacted = os.path.join(root, f"compacted-{write_placement}")
+    compacted = os.path.join(root, f"compacted-{placement}")
     metrics = compact_index(spark, idx, compacted)
     # idempotence test may have added an unknown id — read the live count
     assert metrics["n_deleted"] == si.n_deleted()
     assert metrics["n_deleted"] >= len(dead)
 
-    fresh_dir = os.path.join(root, f"fresh-{write_placement}")
+    fresh_dir = os.path.join(root, f"fresh-{placement}")
     live = corpus.filter(~corpus.doc_id.isin([int(d) for d in dead]))
     build_index(live, fresh_dir, CFG)
 

@@ -20,53 +20,56 @@ from newssearchengine_spark.sources.corpus import assign_doc_ids
 CFG = IndexConfig(n_buckets=8, doc_range=128, block_size=16)
 
 
-@pytest.fixture(scope="module", params=["driver", "spark"])
-def merged_setup(spark, tmp_path_factory, request):
-    """Both sides built and merged in one write placement: on the driver
-    (SEARCH_DRIVER_CAP raised past the volume) or on Spark (-1)."""
-    from newssearchengine_spark.plans import search
+PLACEMENTS = ("driver", "spark")
 
+
+@pytest.fixture(scope="module")
+def merged_setup(spark, tmp_path_factory, placed):
+    """Both sides built and merged once per write placement: on the
+    driver and on the Spark plans. Maps each placement to its merged
+    index directory and merge metrics."""
     root = tmp_path_factory.mktemp("merge")
     corpus = assign_doc_ids(source_files(spark, 900, seed=11, partitions=4),
                             num_partitions=4).persist()
     a = corpus.filter("doc_id < 600")
     b = corpus.filter("doc_id >= 600")
-    da, db, dm = str(root / "a"), str(root / "b"), str(root / "m")
-    cap = search.SEARCH_DRIVER_CAP
-    search.SEARCH_DRIVER_CAP = 1 << 40 if request.param == "driver" else -1
-    try:
-        build_index(a, da, CFG)
-        build_index(b, db, CFG)
-        metrics = merge_indexes(spark, da, db, dm)
-    finally:
-        search.SEARCH_DRIVER_CAP = cap
+    merged = {}
+    for p in PLACEMENTS:
+        da, db, dm = (str(root / f"{x}-{p}") for x in ("a", "b", "m"))
+        with placed(p):
+            build_index(a, da, CFG)
+            build_index(b, db, CFG)
+            merged[p] = dm, merge_indexes(spark, da, db, dm)
     raw = {r["doc_id"]: r["content"]
            for r in corpus.select("doc_id", "content").collect()}
-    return dm, metrics, raw
+    return merged, raw
 
 
 def test_merged_stats(merged_setup):
-    dm, metrics, raw = merged_setup
+    merged, raw = merged_setup
     oidx = pure.OracleIndex.build(raw)
-    assert metrics["n_docs"] == 900
-    with open(os.path.join(dm, "stats.json")) as f:
-        stats = json.load(f)
-    assert stats["avgdl"] == pytest.approx(oidx.avgdl, rel=1e-12)
+    for dm, metrics in merged.values():
+        assert metrics["n_docs"] == 900
+        with open(os.path.join(dm, "stats.json")) as f:
+            stats = json.load(f)
+        assert stats["avgdl"] == pytest.approx(oidx.avgdl, rel=1e-12)
 
 
 @pytest.mark.parametrize("mode", ["taat", "wand"])
 def test_merged_search_equals_union_oracle(spark, merged_setup, mode):
-    dm, _, raw = merged_setup
+    merged, raw = merged_setup
     oidx = pure.OracleIndex.build(raw)
-    si = SegmentIndex(spark, dm)
-    for q in ["getUser listNode hashSort", "mapList cacheIndex shard_chunk",
-              "value_count totalDelta sendRecv"]:
-        terms = si.analyze_query(q)
-        expected = oidx.search(terms, 25)
-        got = si.search(q, 25, mode=mode).collect()
-        assert [r["doc_id"] for r in got] == [d for d, _ in expected]
-        for r, (_, s) in zip(got, expected):
-            assert r["score"] == pytest.approx(s, abs=1e-9)
+    for dm, _ in merged.values():
+        si = SegmentIndex(spark, dm)
+        for q in ["getUser listNode hashSort",
+                  "mapList cacheIndex shard_chunk",
+                  "value_count totalDelta sendRecv"]:
+            terms = si.analyze_query(q)
+            expected = oidx.search(terms, 25)
+            got = si.search(q, 25, mode=mode).collect()
+            assert [r["doc_id"] for r in got] == [d for d, _ in expected]
+            for r, (_, s) in zip(got, expected):
+                assert r["score"] == pytest.approx(s, abs=1e-9)
 
 
 def test_merge_rejects_overlapping_ids(spark, tmp_path):
@@ -130,58 +133,62 @@ def test_incremental_stream_equals_cold_build(spark, tmp_path):
 def test_merged_phrase_search_equals_cold_build(spark, merged_setup, tmp_path):
     """Positional sidecars survive the merge re-encode: phrase results over
     merged(A, B) equal phrase results over a cold build of A ∪ B."""
-    dm, _, raw = merged_setup
+    merged, raw = merged_setup
     corpus = assign_doc_ids(source_files(spark, 900, seed=11, partitions=4),
                             num_partitions=4)
     cold = str(tmp_path / "cold_for_phrase")
     build_index(corpus, cold, CFG, resume=False)
-    si_m = SegmentIndex(spark, dm)
     si_c = SegmentIndex(spark, cold)
-    for phrase in (["node", "cursor"], ["shard", "group"], ["close", "node"]):
-        a = si_m.search_phrase(phrase, 25).collect()
-        b = si_c.search_phrase(phrase, 25).collect()
-        assert [(r["doc_id"], r["score"]) for r in a] == \
-               [(r["doc_id"], r["score"]) for r in b]
-        assert a, f"fixture phrase {phrase} should match some docs"
+    for dm, _ in merged.values():
+        si_m = SegmentIndex(spark, dm)
+        for phrase in (["node", "cursor"], ["shard", "group"],
+                       ["close", "node"]):
+            a = si_m.search_phrase(phrase, 25).collect()
+            b = si_c.search_phrase(phrase, 25).collect()
+            assert [(r["doc_id"], r["score"]) for r in a] == \
+                   [(r["doc_id"], r["score"]) for r in b]
+            assert a, f"fixture phrase {phrase} should match some docs"
 
 
-def test_merged_term_vectors_serves_forward_index(spark, tmp_path,
-                                                  write_placement):
+def test_merged_term_vectors_serves_forward_index(spark, tmp_path, placed):
     """ADVICE fix: merging two with_term_vectors indexes must carry the
     forward index through — term_vectors()/keywords_tf_idf() on the merged
     index must work and match a cold build over the union corpus. Also:
     merging a with_term_vectors index with a without one must be rejected
-    (stats flag mismatch), not silently produce a broken index."""
+    (stats flag mismatch), not silently produce a broken index. Checked
+    in both write placements."""
     cfg = IndexConfig(n_buckets=4, doc_range=64, block_size=16,
                       with_term_vectors=True)
+    cfg_no = IndexConfig(n_buckets=4, doc_range=64, block_size=16,
+                         with_term_vectors=False)
     corpus = assign_doc_ids(source_files(spark, 300, seed=23, partitions=2),
                             num_partitions=2).persist()
     a = corpus.filter("doc_id < 200")
     b = corpus.filter("doc_id >= 200")
-    da, db, dm, dc = (str(tmp_path / x) for x in ("a", "b", "m", "cold"))
-    build_index(a, da, cfg)
-    build_index(b, db, cfg)
-    merge_indexes(spark, da, db, dm)
-    build_index(corpus, dc, cfg)
+    for p in PLACEMENTS:
+        da, db, dm, dc, dn, dx = (str(tmp_path / f"{x}-{p}") for x in
+                                  ("a", "b", "m", "cold", "n", "x"))
+        with placed(p):
+            build_index(a, da, cfg)
+            build_index(b, db, cfg)
+            merge_indexes(spark, da, db, dm)
+            build_index(corpus, dc, cfg)
 
-    sm, sc = SegmentIndex(spark, dm), SegmentIndex(spark, dc)
-    ids = [5, 150, 250]
-    tv_m = sorted(map(tuple, sm.term_vectors(ids).collect()))
-    tv_c = sorted(map(tuple, sc.term_vectors(ids).collect()))
-    assert tv_m == tv_c and len(tv_m) > 0
+            sm, sc = SegmentIndex(spark, dm), SegmentIndex(spark, dc)
+            ids = [5, 150, 250]
+            tv_m = sorted(map(tuple, sm.term_vectors(ids).collect()))
+            tv_c = sorted(map(tuple, sc.term_vectors(ids).collect()))
+            assert tv_m == tv_c and len(tv_m) > 0
 
-    kw_m = sorted(map(tuple, sm.keywords_tf_idf(ids, min_tf=1, min_df=1,
-                                                top_n=5).collect()))
-    kw_c = sorted(map(tuple, sc.keywords_tf_idf(ids, min_tf=1, min_df=1,
-                                                top_n=5).collect()))
-    assert kw_m == kw_c and len(kw_m) > 0
+            kw_m = sorted(map(tuple, sm.keywords_tf_idf(
+                ids, min_tf=1, min_df=1, top_n=5).collect()))
+            kw_c = sorted(map(tuple, sc.keywords_tf_idf(
+                ids, min_tf=1, min_df=1, top_n=5).collect()))
+            assert kw_m == kw_c and len(kw_m) > 0
 
-    cfg_no = IndexConfig(n_buckets=4, doc_range=64, block_size=16,
-                         with_term_vectors=False)
-    dn = str(tmp_path / "n")
-    build_index(b, dn, cfg_no)
-    with pytest.raises(ValueError, match="with_term_vectors"):
-        merge_indexes(spark, da, dn, str(tmp_path / "x"))
+            build_index(b, dn, cfg_no)
+            with pytest.raises(ValueError, match="with_term_vectors"):
+                merge_indexes(spark, da, dn, dx)
     corpus.unpersist()
 
 
