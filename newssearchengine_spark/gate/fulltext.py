@@ -1489,8 +1489,8 @@ def ft_bool_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     [bool(must=[join, merge])], must_not = [customer]. The booster
     child's BM25 sum counts ONLY for docs containing BOTH its terms —
     the per-child match gate a flat term-set bool can't express. Plan:
-    one complete score relation per leaf off the pruned segment scan,
-    one union + hash aggregation per bool node, shared ranked tail."""
+    the clause rows of every leaf off the pruned segment scan, one
+    numpy evaluator of the whole tree, shared ranked tail."""
     si = _gate_index(spark, sf_dir)
     node = {
         "must": [[_BN_MUST1],
@@ -2586,8 +2586,8 @@ def ft_bool_boosted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2.5), one should clause by 0.5, the other unboosted — ES clause
     semantics (each clause's score is the summed BM25 of its matched
     tokens x its boost; the match set is unchanged). Runs through
-    es_search onto the single-scan bool-tree compiler with weighted
-    leaves (plans/search.py:_bool_tree_rel)."""
+    es_search onto the bool tree's numpy evaluator with weighted
+    leaves (plans/search.py:_bool_tree)."""
     from ..plans.dsl import es_search
 
     si = _gate_index(spark, sf_dir)
@@ -2733,7 +2733,7 @@ def ft_bool_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (tf = adjacency occ, idf over the phrase df — the engine's
     phrase convention) joins the tree's single clause-row union; the
     should term adds its BM25 partial where present. Engine path:
-    es_search -> search_bool_tree -> _bool_tree_rel phrase leaves
+    es_search -> search_bool_tree -> _bool_tree phrase leaves
     (_phrase_scores)."""
     from ..plans.dsl import es_search
 

@@ -423,7 +423,7 @@ def _bool_to_tree(si, bspec: dict) -> dict:
         if ck == "match_phrase":
             # phrase clause inside bool (ES composes these freely):
             # compiles to a phrase LEAF — its complete scored relation
-            # joins the tree's clause-row union (search.py phrase_leaf);
+            # joins the tree's clause-row union (search.py _bool_tree);
             # scoring = the engine's phrase convention, so
             # bool{must:[match_phrase]} == search_phrase (pytest-pinned)
             v = next(iter(cs.values()))
@@ -439,7 +439,7 @@ def _bool_to_tree(si, bspec: dict) -> dict:
             # trailing-prefix phrase clause inside bool: the last
             # analyzed token expands against the dictionary (bounded
             # like ES max_expansions), the leaf matches fixed-terms-
-            # then-any-expansion (search.py phrase_leaf with alts)
+            # then-any-expansion (search.py _bool_tree, with alts)
             v = next(iter(cs.values()))
             mx = (int(v.get("max_expansions", 50))
                   if isinstance(v, dict) else 50)
@@ -595,7 +595,7 @@ def _query_match_set(index, q: dict):
     if kind == "match_all":
         return None
     if kind == "bool":
-        rel = index._bool_tree_rel(_bool_to_tree(index, spec))
+        rel = index._bool_tree(_bool_to_tree(index, spec))
         if rel is None:
             return index.spark.createDataFrame([], "doc_id bigint")
         return rel.select("doc_id")
@@ -611,11 +611,7 @@ def _query_match_set(index, q: dict):
     if kind in ("term", "terms", "range", "exists"):
         from .search import _meta_filter_pred
 
-        if kind == "exists":
-            mc = [("exists", spec["field"], None)]
-        else:
-            col, sp = next(iter(spec.items()))
-            mc = [(kind, col, sp)]
+        _, mc = index._parse_filters([q])
         return (index.doc_store().filter(_meta_filter_pred(mc))
                 .select("doc_id"))
     if kind == "terms_set":
@@ -820,24 +816,20 @@ def _query_scores_full(indexes, q: dict):
     combines knn with the query disjunctively over the query's FULL
     match set (not its top-size page), so a doc ranked past `size` on
     text alone can still enter the combined top hits. The relation is a
-    LocalFrame when the query side ran in a driver regime (score_all's,
-    or a bool tree's local form)."""
+    LocalFrame when the query side ran on the driver (score_all's or
+    _bool_tree's driver placement)."""
     import numpy as np
 
     from ..operators.similarity import _round_half_up
-    from .search import _score_rows
 
     kind, spec = next(iter(q.items()))
     si = (next(iter(indexes.values()))
           if isinstance(indexes, dict) else indexes)
     if kind == "bool":
-        rel, local = si._bool_tree(_bool_to_tree(si, spec))
-        if rel is None:
+        out = si._bool_tree(_bool_to_tree(si, spec))
+        if out is None:
             return si, si._empty(TOPK_SCHEMA)
-        rel = rel.select("doc_id", F.round(F.col("score"), 6).alias("score"))
-        return si, (LocalFrame(si.spark, _score_rows(rel.collect()),
-                               TOPK_SCHEMA) if local else rel)
-    if kind in ("match", "query_string", "multi_match"):
+    elif kind in ("match", "query_string", "multi_match"):
         if kind == "match":
             field, text = _field_text(spec)
             if isinstance(indexes, dict) and field in indexes:
@@ -855,14 +847,14 @@ def _query_scores_full(indexes, q: dict):
                     "hybrid knn+query supports OR text queries")
             text = parts[0]
         out = si.score_all(text)
-        if not isinstance(out, LocalFrame):
-            return si, out.select(
-                "doc_id", F.round("score", 6).alias("score"))
-        pdf = out.toPandas()
-        return si, LocalFrame(si.spark, pdf.assign(score=_round_half_up(
-            pdf["score"].to_numpy(np.float64), 6)), TOPK_SCHEMA)
-    raise ValueError(f"hybrid knn+query: unsupported query kind {kind} "
-                     "(match / query_string / multi_match / bool)")
+    else:
+        raise ValueError(f"hybrid knn+query: unsupported query kind {kind} "
+                         "(match / query_string / multi_match / bool)")
+    if not isinstance(out, LocalFrame):
+        return si, out.select("doc_id", F.round("score", 6).alias("score"))
+    pdf = out.toPandas()
+    return si, LocalFrame(si.spark, pdf.assign(score=_round_half_up(
+        pdf["score"].to_numpy(np.float64), 6)), TOPK_SCHEMA)
 
 
 def _page_offset(body: dict, size: int) -> int:
@@ -1111,7 +1103,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             # bool match set from the complete tree relation (the same
             # source _count and es_aggs scope to)
             si = one()
-            rel = si._bool_tree_rel(_bool_to_tree(si, spec))
+            rel = si._bool_tree(_bool_to_tree(si, spec))
             s = si._exclude_dead(si.doc_store())
             s = (s.filter(F.lit(False)) if rel is None
                  else s.join(rel.select("doc_id"), "doc_id", "left_semi"))
@@ -1885,49 +1877,21 @@ def es_search(indexes, body: dict, size: int = 10, *,
             return si._empty()
         return si.search_bool_tree(node, k=size)
 
-    if kind == "exists":
-        # whole-query exists: every live doc with a non-null value in
-        # the doc-store column (the filter-context clause promoted to a
-        # query, like term/terms/range above)
-        field = spec["field"] if isinstance(spec, dict) else str(spec)
-        return one()._exclude_dead(
-            one().doc_store().filter(F.col(field).isNotNull()))
-
-    if kind == "term":
-        field, val = _field_text(spec)
-        # exact keyword-field lookup -> doc-store filter (the reference's
-        # url -> _id translation); returns the matching doc rows.
+    if kind in ("term", "terms", "range", "exists"):
+        # a filter-context metadata clause promoted to a whole query (ES
+        # constant-score): every live doc row it admits — for term, the
+        # exact keyword lookup (the reference's url -> _id translation).
         # Tombstoned docs never match (the ES 404 on a deleted id).
-        return one()._exclude_dead(
-            one().doc_store().filter(F.col(field) == val))
+        from .search import _meta_filter_pred
 
-    if kind == "terms":
-        # multi-value keyword lookup: {"terms": {field: [v1, v2, ...]}}
-        field, vals = next(iter(spec.items()))
+        _, mc = one()._parse_filters([q])
         return one()._exclude_dead(
-            one().doc_store().filter(F.col(field).isin(list(vals))))
+            one().doc_store().filter(_meta_filter_pred(mc)))
 
     if kind == "ids":
         # {"ids": {"values": [...]}} -> doc-store point lookups
         # (get_docs already excludes tombstones — the ES 404)
         return one().get_docs([int(v) for v in spec.get("values", [])])
-
-    if kind == "range":
-        # top-level range over a doc-store column (the filter-context
-        # range shape promoted to a whole query, ES constant-score):
-        # {"range": {col: {"gte": a, "lt": b}}} -> matching doc rows
-        field, cond = next(iter(spec.items()))
-        ops = {"gte": "__ge__", "gt": "__gt__", "lte": "__le__",
-               "lt": "__lt__"}
-        pred = None
-        for op, bound in cond.items():
-            if op not in ops:
-                raise ValueError(f"unsupported range op: {op}")
-            p = getattr(F.col(field), ops[op])(F.lit(bound))
-            pred = p if pred is None else (pred & p)
-        if pred is None:
-            raise ValueError("empty range condition")
-        return one()._exclude_dead(one().doc_store().filter(pred))
 
     if kind == "wrapper":
         # ES wrapper query: a base64-encoded JSON query smuggled through
@@ -2291,7 +2255,7 @@ def es_count(indexes, body: dict) -> DataFrame:
         # flat bodies included — count it directly, no ranking pass
         si = (next(iter(indexes.values()))
               if isinstance(indexes, dict) else indexes)
-        rel = si._bool_tree_rel(_bool_to_tree(si, spec))
+        rel = si._bool_tree(_bool_to_tree(si, spec))
         if rel is None:
             rel = si.spark.createDataFrame([], "doc_id bigint, score double")
         rel = si._exclude_dead(rel.select("doc_id"))
@@ -2309,11 +2273,7 @@ def es_count(indexes, body: dict) -> DataFrame:
 
         si = (next(iter(indexes.values()))
               if isinstance(indexes, dict) else indexes)
-        if kind == "exists":
-            mc = [("exists", spec["field"], None)]
-        else:
-            col, sp = next(iter(spec.items()))
-            mc = [(kind, col, sp)]
+        _, mc = si._parse_filters([q])
         rel = si._exclude_dead(
             si.doc_store().filter(_meta_filter_pred(mc))
             .select("doc_id"))
@@ -2627,7 +2587,7 @@ def es_aggs(index: SegmentIndex, body: dict) -> DataFrame:
         if kind == "bool":
             # bool scope: the complete single-scan tree relation is the
             # match set (same source es_count uses)
-            rel = index._bool_tree_rel(_bool_to_tree(index, spec))
+            rel = index._bool_tree(_bool_to_tree(index, spec))
             if rel is None:
                 store = store.filter(F.lit(False))
             else:
@@ -2742,7 +2702,7 @@ def es_aggs(index: SegmentIndex, body: dict) -> DataFrame:
             named = {}
             for bname, fq in aspec["filters"].items():
                 if isinstance(fq, dict) and "bool" in fq:
-                    rel = index._bool_tree_rel(
+                    rel = index._bool_tree(
                         _bool_to_tree(index, fq["bool"]))
                     m = (store.select("doc_id").filter(F.lit(False))
                          if rel is None
@@ -2792,7 +2752,7 @@ def es_aggs(index: SegmentIndex, body: dict) -> DataFrame:
                 if isinstance(fq, dict) and "bool" in fq:
                     # bool bucket predicate: membership from the
                     # complete tree relation
-                    rel = index._bool_tree_rel(
+                    rel = index._bool_tree(
                         _bool_to_tree(index, fq["bool"]))
                     s = (store.filter(F.lit(False)) if rel is None
                          else store.join(rel.select("doc_id"),

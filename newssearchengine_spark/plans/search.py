@@ -56,14 +56,16 @@ PHRASE_CAND_SCHEMA = "doc_id bigint, occ bigint, dl bigint"
 
 #: The one query-placement cap (SegmentIndex._driver_ok). Every
 #: per-doc_part scorer — search, search_many, score_all, the phrase
-#: paths, flat and nested bool, search_mixed — runs on the driver on a
-#: warm handle when the PROVEN read volume (Σdf of the terms whose
-#: postings are read, Σcf of those whose positions are read, n_docs when
-#: the doc store is read — all known from the dictionary before any
-#: read) fits the cap: the terms' segment rows come from a driver-local
-#: pyarrow read of their bucket directories (no Spark job) and the SAME
-#: closure runs per doc_part. Above the cap, cold, or in wand mode the
-#: closure runs in its one distributed applyInPandas plan. 2^19 postings
+#: paths, flat bool, search_mixed, the nested bool tree's numpy
+#: evaluator — and the metadata filters' doc-store read run on the
+#: driver on a warm handle when the PROVEN read volume (Σdf of the terms
+#: whose postings are read, Σcf of those whose positions are read,
+#: n_docs when the doc store is read — all known from the dictionary
+#: before any read) fits the cap: the terms' segment rows and the doc
+#: store come from driver-local pyarrow reads (no Spark job, no JVM
+#: call) and the SAME closure runs on the driver. Above the cap, cold,
+#: or in wand mode the closure runs in its one distributed
+#: applyInPandas plan. 2^19 postings
 #: decode to ~24 B/posting of int64 numpy (docs+tfs+dls) ≈ 13 MB
 #: transient — fixed-width and bounded. The calibration below was
 #: measured when the driver regime still gathered its rows with one
@@ -109,32 +111,56 @@ DELETED_ISIN_CAP = 1 << 14
 DELETED_DRIVER_BYTES_CAP = 1 << 28
 
 
-def _meta_filter_pred(meta_clauses: list[tuple]):
-    """Catalyst predicate for ES filter-context metadata clauses
-    (term / terms / range over doc-store columns). Returned Column is
-    applied directly to the doc_store scan, so it pushes down to parquet
-    (row-group stats prune; `.explain` shows PushedFilters)."""
+def _meta_filter_pred(meta_clauses: list[tuple], schema=None):
+    """The one compiler of ES filter-context metadata clauses (term /
+    terms / range / exists over doc-store columns, ANDed), with two
+    outputs of the same clauses: a Catalyst Column (the default), applied
+    directly to the distributed doc_store scan so it pushes down to
+    parquet (row-group stats prune; `.explain` shows PushedFilters); or,
+    given the doc store's pyarrow `schema`, a pyarrow.compute expression
+    for the driver's read (SegmentIndex._doc_ids), which prunes row
+    groups the same way and makes no JVM call. A string value compared
+    with a non-string column is cast to the column's type, as Catalyst
+    casts it ("300" matches 300; "300.5" on an integer column raises in
+    both). A malformed clause raises ValueError before either is
+    built."""
+    for kind, col, spec in meta_clauses:
+        if kind == "terms" and not isinstance(spec, (list, tuple)):
+            # ES rejects it; list("py") would filter on ["p", "y"]
+            raise ValueError(f"[terms] query on [{col}] needs an array "
+                             f"of values, got {spec!r}")
+        if kind == "range":
+            bad = sorted(set(spec) - {"gte", "gt", "lte", "lt"})
+            if bad or not spec:
+                raise ValueError(f"unsupported range op: {bad[0]}" if bad
+                                 else "empty range condition")
+        elif kind not in ("term", "terms", "exists"):
+            raise ValueError(f"unsupported metadata filter kind: {kind}")
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def lit(col, v):
+        if (schema is None or not isinstance(v, str)
+                or pa.types.is_string(schema.field(col).type)):
+            return v
+        return pa.scalar(v).cast(schema.field(col).type)
+
     conds = []
     for kind, col, spec in meta_clauses:
-        c = F.col(col)
+        c = F.col(col) if schema is None else pc.field(col)
         if kind == "term":
             # ES accepts both {"term": {f: v}} and {"term": {f:
             # {"value": v}}} — unwrap the long form
             v = spec.get("value") if isinstance(spec, dict) else spec
-            conds.append(c == v)
+            conds.append(c == lit(col, v))
         elif kind == "terms":
-            conds.append(c.isin(list(spec)))
+            conds.append(c.isin([lit(col, v) for v in spec]))
         elif kind == "exists":
-            conds.append(c.isNotNull())
-        elif kind == "range":
+            conds.append(c.isNotNull() if schema is None else c.is_valid())
+        else:
             ops = {"gte": c.__ge__, "gt": c.__gt__,
                    "lte": c.__le__, "lt": c.__lt__}
-            for op, v in spec.items():
-                if op not in ops:
-                    raise ValueError(f"unsupported range op: {op}")
-                conds.append(ops[op](v))
-        else:
-            raise ValueError(f"unsupported metadata filter kind: {kind}")
+            conds += [ops[op](lit(col, v)) for op, v in spec.items()]
     out = conds[0]
     for c in conds[1:]:
         out = out & c
@@ -358,6 +384,73 @@ def _make_groups_taat(groups: list[list[list[str]]],
     return score_group
 
 
+def _make_tree_eval(root: dict):
+    """The nested bool tree's one evaluator (SegmentIndex._bool_tree
+    builds `root`, a normalized node): a numpy function of the tree's
+    clause rows (doc_id, cid, score) to the (doc_id, score) rows of the
+    docs the tree matches. The driver calls it once over all rows; above
+    the cap it runs per doc_part in applyInPandas — doc ranges are
+    disjoint, so per-part results are complete.
+
+    np.bincount gives each doc's match flag and score sum per clause; a
+    clause's rows sum in (doc_id, cid, score) order, whatever order they
+    arrive in. Then the tree recurses with Lucene semantics: a node
+    matches iff every must and filter child matches, no must_not child
+    does and at least ES's effective msm of its should children do (an
+    unsatisfiable msm matches nothing); its score is the sum, in child
+    order, of its matching must+should children's scores times its
+    boost, a weighted leaf scaling its clause sum."""
+
+    def evaluate(pdf: pd.DataFrame) -> pd.DataFrame:
+        doc = pdf["doc_id"].to_numpy(np.int64)
+        cid = pdf["cid"].to_numpy(np.int64)
+        sc = pdf["score"].to_numpy(np.float64)
+        o = np.lexsort((sc, cid, doc))
+        ids, inv = np.unique(doc[o], return_inverse=True)
+        cid, sc, n = cid[o], sc[o], ids.size
+        sums: dict = {}
+        flags: dict = {}
+
+        def leaf(c):
+            if c not in sums:
+                sel = cid == c
+                sums[c] = (np.bincount(inv[sel], minlength=n) > 0,
+                           np.bincount(inv[sel], weights=sc[sel],
+                                       minlength=n))
+            return sums[c]
+
+        def matched(x):
+            if isinstance(x, tuple):
+                return leaf(x[0])[0]
+            if id(x) not in flags:
+                sh = [matched(c) for c in x["should"]]
+                m = np.full(n, x["msm"] <= len(sh))
+                for c in x["must"] + x["filter"]:
+                    m &= matched(c)
+                for c in x["must_not"]:
+                    m &= ~matched(c)
+                # ES default: with no must/filter, >= 1 should must match
+                eff = x["msm"] or (0 if x["must"] or x["filter"] else 1)
+                if eff and sh:
+                    m &= np.sum(sh, axis=0) >= eff
+                flags[id(x)] = m
+            return flags[id(x)]
+
+        def score(x):
+            if isinstance(x, tuple):
+                s = leaf(x[0])[1]
+                return s * x[1] if len(x) == 2 else s
+            total = np.zeros(n)
+            for c in x["must"] + x["should"]:
+                total = total + np.where(matched(c), score(c), 0.0)
+            return total * x["boost"] if x["boost"] != 1.0 else total
+
+        m = matched(root)
+        return pd.DataFrame({"doc_id": ids[m], "score": score(root)[m]})
+
+    return evaluate
+
+
 #: Spark SQL type -> (its type, the dtype a JVM frame's toPandas() gives)
 _DDL_TYPES = {"bigint": (LongType(), np.int64),
               "double": (DoubleType(), np.float64),
@@ -437,13 +530,6 @@ class LocalFrame(ClassicDataFrame):
             cols.append(vals)
         names = list(self._pdf.columns)
         return [_create_row(names, r) for r in zip(*cols)]
-
-
-def _score_rows(rows) -> pd.DataFrame:
-    """Collected (doc_id, score) rows as a typed pandas frame."""
-    return pd.DataFrame({
-        "doc_id": np.array([r[0] for r in rows], dtype=np.int64),
-        "score": np.array([r[1] for r in rows], dtype=np.float64)})
 
 
 def _rank_topk(scored: DataFrame, k: int, *cols: str) -> DataFrame:
@@ -886,10 +972,12 @@ class SegmentIndex:
 
     def _round_cut(self, cand, k: int) -> DataFrame:
         """_cut_topk over scores rounded 6 dp HALF_UP: _round_half_up on
-        the driver, Catalyst's F.round — the same values — in a
-        distributed plan."""
+        the driver (a pandas frame or a LocalFrame's rows), Catalyst's
+        F.round — the same values — in a distributed plan."""
         from ..operators.similarity import _round_half_up
 
+        if isinstance(cand, LocalFrame):
+            cand = cand.toPandas()
         if isinstance(cand, pd.DataFrame):
             cand = cand.assign(score=_round_half_up(
                 cand["score"].to_numpy(np.float64), 6))
@@ -1156,7 +1244,7 @@ class SegmentIndex:
     def _phrase_scores(self, plan, frame: bool = True):
         """COMPLETE (doc_id, score double) relation of a phrase plan
         (_phrase_plan) — the phrase analog of score_all, consumed by
-        _phrase_topk, the bool-tree compiler's phrase leaves (ES
+        _phrase_topk, the bool tree's phrase leaves (ES
         match_phrase — and, with last_alts, match_phrase_prefix — inside
         bool bodies) and the phrase DisMax. Scoring is the engine's
         phrase convention (tf = occurrence count — sloppy
@@ -1459,7 +1547,10 @@ class SegmentIndex:
         must contain >= 1 of its tokens — ES match OR-default); a
         {"term"|"terms"|"range": {col: spec}} dict is a METADATA clause
         over doc-store columns. A match clause analyzing to nothing is a
-        no-op (same leniency as the bool must adapter in plans/dsl.py)."""
+        no-op (same leniency as the bool must adapter in plans/dsl.py).
+        The long form {"match": {field: {"query": text, ...}}} takes
+        `operator` ("and" makes one clause per token) and `boost` (a
+        no-op in filter context); any other option raises ValueError."""
         filt_clauses: list[list[str]] = []
         meta_clauses: list[tuple] = []
         for f in (filter or []):
@@ -1473,8 +1564,23 @@ class SegmentIndex:
                 fk, fs = next(iter(f.items()))
                 if fk == "match":
                     _, text = next(iter(fs.items()))
-                    toks = sorted(set(self.analyze_query(text)))
-                    if toks:
+                    op = "or"
+                    if isinstance(text, dict):
+                        bad = sorted(set(text) - {"query", "operator",
+                                                  "boost"})
+                        if bad or "query" not in text:
+                            raise ValueError(
+                                "unsupported match option in filter "
+                                f"context: {bad or 'no query'}")
+                        op = str(text.get("operator", "or")).lower()
+                        if op not in ("or", "and"):
+                            raise ValueError(
+                                f"unsupported match operator: {op}")
+                        text = text["query"]
+                    toks = sorted(set(self.analyze_query(str(text))))
+                    if op == "and":
+                        filt_clauses += [[t] for t in toks]
+                    elif toks:
                         filt_clauses.append(toks)
                 elif fk in ("term", "terms", "range"):
                     col, spec = next(iter(fs.items()))
@@ -1527,13 +1633,16 @@ class SegmentIndex:
         metadata filter adds the doc ids it admits, per part. Placement
         is _driver_ok over the scanned terms' Σdf, plus n_docs with a
         metadata filter: on a warm handle under SEARCH_DRIVER_CAP the pass
-        runs on the driver over pyarrow reads (_doc_store_local for the
-        metadata columns, filtered by the same Catalyst predicates) and
-        the result is a LocalFrame — no Spark job. Above it the pass is
-        one applyInPandas plan, cogrouped with the
-        pushed-down doc_store (doc_part, doc_id) stream when a metadata
-        filter is present, then the Catalyst round + top-k tail. Both
-        placements give identical rows (pytest-pinned)."""
+        runs on the driver over pyarrow reads — the admitted ids come
+        from the doc store read with _meta_filter_pred's pyarrow
+        expression (_doc_ids) — and the result is a LocalFrame, with no
+        Spark job and no JVM call. Above it the pass is one
+        applyInPandas plan, cogrouped with the pushed-down doc_store
+        (doc_part, doc_id) stream when a metadata filter is present, then
+        the Catalyst round + top-k tail. A must_not-only bool and a
+        metadata-only filter are the equivalent search_bool_tree nodes,
+        placed the same way. Both placements give identical rows
+        (pytest-pinned)."""
         if not _raw and self.n_deleted():
             return self._live(k, lambda kk: self.search_bool(
                 must=must, should=should, must_not=must_not, k=kk,
@@ -1559,12 +1668,8 @@ class SegmentIndex:
             # excluded set, at score 0 (pure exclusion runs in filter
             # context). Order = the engine's all-equal-scores
             # convention, doc_id asc.
-            excl = (self._term_docs(must_not).select("doc_id")
-                    .distinct())
-            return _rank_topk(
-                self.doc_store().select("doc_id")
-                .join(excl, "doc_id", "left_anti")
-                .select("doc_id", F.lit(0.0).alias("score")), k)
+            return self.search_bool_tree({"must_not": [must_not]}, k,
+                                         _raw=True)
         if msm > len(should):
             # ES returns an empty hit set when minimum_should_match
             # exceeds the distinct should terms — adapter-submitted
@@ -1572,11 +1677,10 @@ class SegmentIndex:
             return self._empty()
         constraints = must_clauses + filt_clauses
         if not constraints and not should and not must_not and meta_clauses:
-            # pure metadata filter (no text terms anywhere): one Catalyst
-            # path — pushed-down doc_store scan, TakeOrderedAndProject
-            return _rank_topk(
-                self.doc_store().filter(_meta_filter_pred(meta_clauses))
-                .select("doc_id", F.lit(0.0).alias("score")), k)
+            # pure metadata filter (no text terms anywhere): the tree's
+            # filter-only node, every admitted doc at score 0
+            return self.search_bool_tree({"filter": list(filter)}, k,
+                                         _raw=True)
         scoring = sorted(set(must_terms) | set(should))
         filt_terms = sorted({t for c in filt_clauses for t in c})
         dfs = self.term_dfs(sorted(set(scoring) | set(filt_terms)))
@@ -1606,14 +1710,7 @@ class SegmentIndex:
         )
         cols = ["doc_part", "term", "docs", "tfs", "dls"]
         if self._driver_ok(scan_terms, doc_store=bool(meta_clauses)):
-            allowed = None
-            if meta_clauses:
-                rows = (self.spark.createDataFrame(
-                    self._doc_store_local([meta_clauses]))
-                    .filter(_meta_filter_pred(meta_clauses))
-                    .select("doc_id").collect())
-                allowed = np.sort(np.array([r[0] for r in rows],
-                                           dtype=np.int64))
+            allowed = self._doc_ids(meta_clauses) if meta_clauses else None
             return self._round_cut(self._per_part_local(
                 scorer, scan_terms, cols, allowed), k)
         seg = self._by_part(self._scan(scan_terms, cols))
@@ -1714,31 +1811,23 @@ class SegmentIndex:
         doc at score 0 (ES match_all-with-exclusions). Unsatisfiable
         msm (> its node's should count) empties that node, never errors.
 
-        Plan (Spark-first, ONE scan + ONE shuffle for the WHOLE tree,
-        any depth): every distinct term clause in the tree shares a
-        single pruned segment scan emitting per-term BM25 partials
-        (_term_scores), fanned to its clauses by a broadcast term->
-        clause map join; metadata filter clauses ride the same union as
-        pushed-down doc_store id streams. ONE hash aggregation per
-        query produces each clause's match flag and score sum per doc,
-        and the ENTIRE node tree — every level — compiles to Catalyst
-        column expressions over those flags (matched = musts AND
-        filters AND NOT must_nots AND >= msm shoulds; score = sum of
-        matching scoring children, a nested child gated by its own
-        matched expression). No per-node aggregation, no per-leaf
-        re-scan. At 100x scale a nested tree still scores every posting
-        of its scoring terms exactly once; the per-part candidate
-        pruning of _make_bool_taat stays on the flat paths, which the
-        DSL adapter still routes to whenever a body has no nested bool.
-        Rounded 6dp before the (score desc, doc_id asc) top-k cut — the
-        shared ranked-method tail. Driver regime (_tree_flags_local):
-        when the tree's read
+        Plan (_bool_tree): the tree's clause rows — (doc_id, cid, score)
+        for every term clause (one pruned segment scan whose per-term
+        BM25 partials fan out to the clauses holding the term), every
+        phrase clause (_phrase_scores), every metadata filter group
+        (its admitted doc ids) and, when a must_not-only node needs
+        them, every doc id — feed ONE numpy evaluator (_make_tree_eval):
+        per-doc match flags and score sums by np.bincount, then the
+        whole tree, every level, as array expressions. A tree whose read
         volume (Σdf of its term leaves, Σdf + Σcf of its phrase leaves,
         n_docs when a meta filter or must_not-only node reads the doc
-        store) fits SEARCH_DRIVER_CAP on a warm index, the clause rows
-        come from pyarrow reads, the flags are aggregated in numpy, the
-        SAME tree expressions filter and score a local relation and
-        _cut_topk ranks it — no Spark job.
+        store) fits SEARCH_DRIVER_CAP on a warm index reads its rows
+        with pyarrow and evaluates them on the driver once, returning a
+        LocalFrame — no Spark job and no JVM call. Above the cap the
+        SAME evaluator runs in one applyInPandas per doc_part over the
+        union of the distributed clause relations (doc ranges are
+        disjoint, so per-part results are complete). Rounded 6dp before
+        the (score desc, doc_id asc) top-k cut (_round_cut).
 
         Reference parity: the reference's ES backend accepts nested bool
         bodies natively (es.search callers, e.g.
@@ -1748,14 +1837,7 @@ class SegmentIndex:
         if not _raw and self.n_deleted():
             return self._live(k, lambda kk: self.search_bool_tree(
                 node, kk, _raw=True))
-        rel, local = self._bool_tree(node)
-        if rel is None:
-            return self._empty()
-        rounded = rel.select("doc_id", F.round("score", 6).alias("score"))
-        # the driver regime's projection over a local relation: its
-        # collect() is evaluated on the driver (ConvertToLocalRelation)
-        return self._cut_topk(
-            _score_rows(rounded.collect()) if local else rounded, k)
+        return self._round_cut(self._bool_tree(node), k)
 
     def _term_scores(self, terms: list[str],
                      idf_override: dict[str, float] | None = None
@@ -1778,7 +1860,7 @@ class SegmentIndex:
                       idf_override: dict[str, float] | None = None):
         """(live terms, per-doc_part closure emitting their (term, doc_id,
         score) BM25 partials) — _term_scores's scorer, shared with the
-        bool tree's driver regime."""
+        bool tree's term leaves."""
         terms = sorted(set(terms))
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
@@ -1812,21 +1894,12 @@ class SegmentIndex:
 
         return terms, emit
 
-    def _bool_tree_rel(self, node: dict):
-        """Complete (doc_id, score) relation of a bool tree, or None for
-        a tree with no effective clause (every child leniency-dropped,
-        same no-op rule as the flat adapters). See search_bool_tree for
-        semantics and _bool_tree for the compiler."""
-        return self._bool_tree(node)[0]
-
     def _bool_tree(self, node: dict):
-        """(relation, local) of a bool tree — the single-scan/single-
-        shuffle compiler: clause rows -> one aggregation -> the tree as
-        expressions. local = the driver regime built it: a projection
-        over a local relation whose collect() runs no Spark job."""
-        from functools import reduce
-        from operator import and_, or_
-
+        """COMPLETE (doc_id, score) relation of a bool tree — a
+        LocalFrame when it runs on the driver — or None for a tree with
+        no effective clause (every child leniency-dropped, same no-op
+        rule as the flat adapters) or no clause row. See
+        search_bool_tree for the semantics and the plan."""
         def term_clause(c) -> list:
             toks = sorted({c} if isinstance(c, str) else set(c))
             return [t for t in toks if t]
@@ -1835,25 +1908,20 @@ class SegmentIndex:
         cid_of: dict[tuple, int] = {}   # dedup identical clauses
         metas: list[list[tuple]] = []   # meta clause groups
 
-        def term_leaf(toks):
-            key = tuple(toks)
+        def leaf(key):
+            """(cid,) of a term clause's token tuple or a phrase key."""
             if key not in cid_of:
                 cid_of[key] = len(cids)
                 cids.append(key)
-            return ("t", cid_of[key])
+            return (cid_of[key],)
 
         _PHRASE_KEY = "\x00phrase"  # impossible as an analyzed token
 
-        def phrase_leaf(toks, slop, alts=()):
-            key = (_PHRASE_KEY, tuple(toks), int(slop), tuple(alts))
-            if key not in cid_of:
-                cid_of[key] = len(cids)
-                cids.append(key)
-            return ("t", cid_of[key])
-
         def norm(nd: dict):
             """Normalize to {"must"/"should"/"must_not"/"filter":
-            [("t",i) | ("meta",j) | node], "msm": int}; None = no-op."""
+            [leaf | node], "msm": int, "boost": float}; None = no-op. A
+            leaf is (cid,) or, weighted, (cid, boost); meta filter group
+            j is the leaf (-(j+1),)."""
             out = {"must": [], "should": [], "must_not": [],
                    "filter": [],
                    "msm": int(nd.get("minimum_should_match", 0)),
@@ -1882,8 +1950,9 @@ class SegmentIndex:
                     if not toks and not alts:
                         return None
                     w = float(c.get("boost", 1.0))
-                    leaf = phrase_leaf(toks, c.get("slop", 0), alts)
-                    return leaf + (w,) if w != 1.0 else leaf
+                    x = leaf((_PHRASE_KEY, tuple(toks),
+                              int(c.get("slop", 0)), alts))
+                    return x + (w,) if w != 1.0 else x
                 if isinstance(c, dict) and "terms" in c:
                     # weighted term clause {"terms": [...], "boost": w}
                     # (ES per-clause boost on a match/term clause): the
@@ -1893,12 +1962,12 @@ class SegmentIndex:
                     if not toks:
                         return None
                     w = float(c.get("boost", 1.0))
-                    leaf = term_leaf(toks)
-                    return leaf + (w,) if w != 1.0 else leaf
+                    x = leaf(tuple(toks))
+                    return x + (w,) if w != 1.0 else x
                 if isinstance(c, dict):
                     return norm(c)
                 toks = term_clause(c)
-                return term_leaf(toks) if toks else None
+                return leaf(tuple(toks)) if toks else None
 
             for role in ("must", "should", "must_not"):
                 for c in (nd.get(role) or []):
@@ -1925,10 +1994,10 @@ class SegmentIndex:
             if plain:
                 fcl, mcl = self._parse_filters(plain)
                 for toks in fcl:
-                    out["filter"].append(term_leaf(toks))
+                    out["filter"].append(leaf(tuple(toks)))
                 if mcl:
                     metas.append(mcl)
-                    out["filter"].append(("meta", len(metas) - 1))
+                    out["filter"].append((-len(metas),))
             if not (out["must"] or out["should"] or out["must_not"]
                     or out["filter"]):
                 return None
@@ -1936,11 +2005,11 @@ class SegmentIndex:
 
         root = norm(node)
         if root is None:
-            return None, False
+            return None
 
         # a node whose only children are must_nots matches every OTHER
         # doc (ES match_all-with-exclusions) — those docs may have no
-        # clause row at all, so the union needs a doc_store row source
+        # clause row at all, so every doc id joins the rows
         def needs_all(x) -> bool:
             if isinstance(x, tuple):
                 return False
@@ -1951,206 +2020,93 @@ class SegmentIndex:
                        ("must", "should", "must_not", "filter")
                        for c in x[role])
 
-        # ---- clause rows: ONE scan + fan-out to the clauses + meta
-        # streams (+ one phrase relation per distinct phrase clause)
-        fan = [(t, i) for i, key in enumerate(cids)
-               if not (key and key[0] == _PHRASE_KEY) for t in key]
-        all_terms = sorted({t for t, _ in fan})
-        # None = can't match: the phrase flag stays null
+        fan = pd.DataFrame(
+            [(t, i) for i, key in enumerate(cids)
+             if not (key and key[0] == _PHRASE_KEY) for t in key],
+            columns=["term", "cid"])
+        # a phrase whose plan is None can't match: its cid has no row
         phrases = [(i, self._phrase_plan([t for t in key[1] if t],
                                          key[2], list(key[3]) or None))
                    for i, key in enumerate(cids)
                    if key and key[0] == _PHRASE_KEY]
         phrases = [(i, p) for i, p in phrases if p is not None]
         match_all = needs_all(root)
-        local = self._driver_ok(all_terms,
-                                [t for _, p in phrases for t in p[0]],
+        live, emit = self._term_emitter(sorted(set(fan["term"])))
+        local = self._driver_ok(live, [t for _, p in phrases for t in p[0]],
                                 bool(metas) or match_all)
-        g = (self._tree_flags_local if local else self._tree_flags)(
-            fan, all_terms, phrases, metas, match_all, len(cids))
-        if g is None:
-            return None, False
 
-        # ---- the tree as Catalyst expressions over the flags. Each
-        # node's match expression is built once and reused where score()
-        # gates on it: every Column costs py4j round-trips.
-        built: dict[int, object] = {}
+        def tagged(rel, cid: int):
+            """(doc_id, score) rows as the clause rows of `cid`."""
+            if local:
+                return rel.assign(cid=cid)[["doc_id", "cid", "score"]]
+            return rel.select("doc_id", F.lit(cid).cast("bigint").alias(
+                "cid"), "score")
 
-        def matched(x):
-            if id(x) not in built:
-                built[id(x)] = match_expr(x)
-            return built[id(x)]
+        def admitted(mcl, cid: int):
+            """The doc ids a meta clause group admits (all, without one)
+            as score-0 clause rows of `cid`."""
+            if local:
+                ids = pd.DataFrame({"doc_id": self._doc_ids(mcl)})
+                return tagged(ids.assign(score=0.0), cid)
+            store = self.doc_store()
+            if mcl:
+                store = store.filter(_meta_filter_pred(mcl))
+            return tagged(store.select(
+                F.col("doc_id").cast("bigint").alias("doc_id"),
+                F.lit(0.0).alias("score")), cid)
 
-        def match_expr(x):
-            if isinstance(x, tuple):
-                kind, i = x[0], x[1]
-                col = f"_m{i}" if kind == "t" else f"_f{i}"
-                return F.coalesce(F.col(col), F.lit(0)) == 1
-            sh = [matched(c) for c in x["should"]]
-            msm = x["msm"]
-            if msm > len(sh):
-                return F.lit(False)  # ES: unsatisfiable msm, not error
-            conds = ([matched(c) for c in x["must"]]
-                     + [matched(c) for c in x["filter"]]
-                     + [~matched(c) for c in x["must_not"]])
-            # ES default: with no must/filter, >= 1 should must match
-            eff = msm if msm > 0 else (
-                0 if (x["must"] or x["filter"]) else (1 if sh else 0))
-            if eff == 1 and sh:
-                conds.append(reduce(or_, sh))
-            elif eff > 1:
-                conds.append(reduce(
-                    lambda a, b: a + b,
-                    [c.cast("int") for c in sh]) >= F.lit(eff))
-            return reduce(and_, conds) if conds else F.lit(True)
-
-        def score(x):
-            if isinstance(x, tuple):
-                kind, i = x[0], x[1]
-                if kind != "t":
-                    return F.lit(0.0)
-                base = F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
-                # weighted leaf: (kind, i, boost)
-                return base * F.lit(x[2]) if len(x) == 3 else base
-            kids = x["must"] + x["should"]
-            if not kids:
-                return F.lit(0.0)
-            total = reduce(
-                lambda a, b: a + b,
-                [F.when(matched(c), score(c)).otherwise(0.0)
-                 for c in kids])
-            w = x.get("boost", 1.0)
-            return total * F.lit(w) if w != 1.0 else total
-
-        return (g.filter(matched(root))
-                .select("doc_id", score(root).alias("score")), local)
-
-    def _tree_flags(self, fan, all_terms, phrases, metas, match_all: bool,
-                    n_cids: int):
-        """A bool tree's clause rows and their ONE aggregation: per doc,
-        the `_m<cid>` match flag and `_s<cid>` score sum of every clause
-        and the `_f<j>` flag of every meta filter group — or None when no
-        row source remains. Distributed: ONE pruned scan of the term
-        partials fanned to their clauses by a broadcast term->cid map,
-        the phrase relations, and pushed-down doc_store id streams."""
-        parts = []
-        if all_terms:
-            fan_df = self.spark.createDataFrame(fan, "term string, cid int")
-            parts.append(
-                self._term_scores(all_terms)
-                .join(F.broadcast(fan_df), "term")
-                .select("doc_id", "cid", "score"))
-        for i, plan in phrases:
-            rel = self._phrase_scores(plan)
-            if rel is not None:
-                parts.append(rel.select(
-                    "doc_id", F.lit(i).cast("int").alias("cid"),
-                    "score"))
-        for j, mcl in enumerate(metas):
-            parts.append(
-                self.doc_store().filter(_meta_filter_pred(mcl))
-                .select("doc_id", F.lit(-(j + 1)).alias("cid"),
-                        F.lit(0.0).alias("score")))
-        if match_all:
-            parts.append(self.doc_store().select(
-                "doc_id", F.lit(-1000000).alias("cid"),
-                F.lit(0.0).alias("score")))
-        if not parts:
-            return None
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        aggs = []
-        for i in range(n_cids):
-            c = F.col("cid") == i
-            aggs.append(F.max(F.when(c, 1)).alias(f"_m{i}"))
-            aggs.append(F.sum(F.when(c, F.col("score")))
-                        .alias(f"_s{i}"))
-        for j in range(len(metas)):
-            aggs.append(F.max(F.when(F.col("cid") == -(j + 1), 1))
-                        .alias(f"_f{j}"))
-        return u.groupBy("doc_id").agg(*aggs)
-
-    def _tree_flags_local(self, fan, all_terms, phrases, metas,
-                          match_all: bool, n_cids: int):
-        """The driver regime of _tree_flags: the same clause rows from
-        pyarrow reads (term partials by _term_emitter's closure, phrase
-        scores) aggregated in numpy (per-doc sums in row order) into ONE
-        local relation — no Spark job. Absent clauses read 0, which the
-        tree expressions coalesce their nulls to. A meta filter or
-        must_not-only node reads the doc store (_doc_store_local): every
-        doc gets a row, its meta columns ride along, and the SAME
-        Catalyst predicates set the `_f<j>` flags as a projection over
-        the local relation."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+        def emit_cids(pdf: pd.DataFrame) -> pd.DataFrame:
+            return emit(pdf).merge(fan, on="term")[["doc_id", "cid",
+                                                    "score"]]
 
         rows = []
-        if all_terms:
-            live, emit = self._term_emitter(all_terms)
-            part = (self._per_part_local(
-                emit, live, ["doc_part", "term", "docs", "tfs", "dls"])
-                if live else None)
-            if part is None:
-                part = pd.DataFrame(columns=["term", "doc_id", "score"])
-            rows.append(part.merge(pd.DataFrame(fan, columns=["term", "cid"]),
-                                   on="term")[["doc_id", "cid", "score"]])
+        if live:
+            rows.append(self._per_part(
+                emit_cids, live, ["doc_part", "term", "docs", "tfs", "dls"],
+                "doc_id bigint, cid bigint, score double", local))
         for i, plan in phrases:
-            sc = self._phrase_scores(plan, frame=False)
-            if sc is not None:
-                rows.append(sc.assign(cid=i))
-        if metas or match_all:
-            store = self._doc_store_local(metas)
-            rows.append(pd.DataFrame({
-                "doc_id": store["doc_id"].to_numpy().astype(np.int64),
-                "cid": -1000000, "score": 0.0}))
+            sc = self._phrase_scores(plan, frame=not local)
+            rows.append(None if sc is None else tagged(sc, i))
+        rows += [admitted(mcl, -(j + 1)) for j, mcl in enumerate(metas)]
+        if match_all:
+            rows.append(admitted((), len(cids)))  # a cid no leaf reads
+        rows = [r for r in rows if r is not None]
         if not rows:
             return None
-        u = pd.concat(rows, ignore_index=True)
-        ids, inv = np.unique(u["doc_id"].to_numpy(np.int64),
-                             return_inverse=True)
-        cid = u["cid"].to_numpy(np.int64)
-        score = u["score"].to_numpy(np.float64)
-        flags = {"doc_id": pa.array(ids)}
-        for i in range(n_cids):
-            sel = cid == i
-            flags[f"_m{i}"] = pa.array(
-                (np.bincount(inv[sel], minlength=ids.size) > 0)
-                .astype(np.int32))
-            flags[f"_s{i}"] = pa.array(np.bincount(
-                inv[sel], weights=score[sel], minlength=ids.size))
-        if metas:
-            at = pc.index_in(flags["doc_id"],
-                             value_set=store["doc_id"].cast(pa.int64()))
-            flags.update({c: store[c].take(at)
-                          for c in store.column_names[1:]})
-        g = self.spark.createDataFrame(pa.table(flags))
-        if not metas:
-            return g
-        return g.select("*", *[F.when(_meta_filter_pred(mcl), 1)
-                               .alias(f"_f{j}")
-                               for j, mcl in enumerate(metas)])
+        evaluate = _make_tree_eval(root)
+        if local:
+            return LocalFrame(self.spark, evaluate(
+                pd.concat(rows, ignore_index=True)), TOPK_SCHEMA)
+        u = rows[0]
+        for r in rows[1:]:
+            u = u.unionByName(r)
+        doc_range = int(self.stats["doc_range"])
+        return self._by_part(u.withColumn(
+            "doc_part", (F.col("doc_id") / doc_range).cast("bigint"))
+        ).applyInPandas(evaluate, TOPK_SCHEMA)
 
-    def _doc_store_local(self, metas: list):
-        """The doc store's doc_id and the columns of `metas` (meta-clause
-        groups), read on the driver with pyarrow: the rows a
-        driver-placed metadata filter evaluates _meta_filter_pred over,
-        as a local relation (no Spark job)."""
-        import pyarrow.parquet as pq
+    def _doc_ids(self, meta_clauses=()) -> np.ndarray:
+        """Sorted ids of the doc-store rows every metadata clause admits
+        (every row without one), read on the driver with pyarrow: the
+        filter is _meta_filter_pred's pyarrow expression, pushed to
+        parquet row groups — no Spark job and no JVM call."""
+        import pyarrow.dataset as ds
 
-        cols = sorted({c for mcl in metas for _, c, _ in mcl} - {"doc_id"})
-        return pq.read_table(os.path.join(self.index_dir, "doc_store"),
-                             columns=["doc_id"] + cols)
+        store = ds.dataset(os.path.join(self.index_dir, "doc_store"),
+                           format="parquet", partitioning="hive")
+        t = store.to_table(columns=["doc_id"], filter=(
+            _meta_filter_pred(meta_clauses, store.schema)
+            if meta_clauses else None))
+        return np.sort(t.column("doc_id").to_numpy().astype(np.int64))
 
     def _match_rel(self, query):
         """The COMPLETE (doc_id, score) match relation the
         boosting/function_score tails consume: a bool-tree dict's
-        (_bool_tree_rel), else the OR-disjunction's score_all (placed by
+        (_bool_tree), else the OR-disjunction's score_all (both placed by
         _driver_ok). None when nothing can match — an empty driver-placed
         relation, told apart with no Spark job."""
-        if isinstance(query, dict):
-            return self._bool_tree_rel(query)
-        rel = self.score_all(query)
+        rel = (self._bool_tree(query) if isinstance(query, dict)
+               else self.score_all(query))
         return None if isinstance(rel, LocalFrame) and not rel.count() else rel
 
     def search_boosting(self, positive, negative, k: int, *,
@@ -2827,7 +2783,7 @@ def search_dismax_bool(field_indexes: dict, groups, k: int, *,
     doc enters the result iff >= 1 field matches.
 
     Plan: per field, the COMPLETE group relation via the single-scan
-    tree compiler (_bool_tree_rel: one pruned scan + one aggregation
+    tree evaluator (_bool_tree: one pruned scan + one evaluation
     per field — bounded by each field's most selective clause, the
     conjunction selectivity the flat bool paths prove), then the
     full_outer DisMax combine + shared Catalyst tail (_combine_dismax,
@@ -2864,7 +2820,7 @@ def search_dismax_bool(field_indexes: dict, groups, k: int, *,
             continue
         node = ({"must": gs[0]} if len(gs) == 1 else
                 {"should": [{"must": g} for g in gs]})
-        rel = si._bool_tree_rel(node)
+        rel = si._bool_tree(node)
         if rel is None:
             continue
         rel = si._exclude_dead(rel)

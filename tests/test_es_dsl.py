@@ -2470,3 +2470,68 @@ def test_multi_match_cross_fields(spark, two_field):
         es_search(idxs, {"query": {"multi_match": {
             "type": "cross_fields", "fields": ["title", "text"],
             "query": text, "operator": "and"}}}, size=5)
+
+
+def test_long_form_match_in_filter_context(two_field):
+    """A long-form {"match": {field: {"query": ...}}} in filter context
+    equals its short form: in a flat and a nested bool filter, a
+    function_score function's filter and a `filters` agg bucket.
+    operator "and" requires every token, a boost is a no-op (filters
+    never score), and any other option is rejected by name."""
+    from newssearchengine_spark.plans.dsl import es_aggs
+
+    _, idxs = two_field
+    si = idxs["text"]
+
+    def rows(body, size=50):
+        return [tuple(r) for r in es_search(si, body, size=size).collect()]
+
+    def flat(filt):
+        return {"query": {"bool": {"must": [{"match": {"text": "node"}}],
+                                   "filter": filt}}}
+
+    def nested(filt):
+        return {"query": {"bool": {
+            "must": [{"bool": {"should": [{"match": {"text": "node"}},
+                                          {"match": {"text": "shard"}}]}}],
+            "filter": filt}}}
+
+    short = [{"match": {"text": "cursor"}}]
+    longf = [{"match": {"text": {"query": "cursor"}}}]
+    boosted = [{"match": {"text": {"query": "cursor", "boost": 3.0}}}]
+    both = [{"match": {"text": "cursor"}}, {"match": {"text": "stream"}}]
+    anded = [{"match": {"text": {"query": "cursor stream",
+                                 "operator": "and"}}}]
+    for shape in (flat, nested):
+        want = rows(shape(short))
+        assert want
+        assert rows(shape(longf)) == want == rows(shape(boosted))
+        want = rows(shape(both))
+        assert want and rows(shape(anded)) == want
+
+    def fscore(filt):
+        return {"query": {"function_score": {
+            "query": {"match": {"text": "node cursor"}},
+            "functions": [{"filter": filt, "weight": 2.0}]}}}
+
+    want = rows(fscore({"match": {"text": "shard"}}))
+    assert want
+    assert rows(fscore({"match": {"text": {"query": "shard"}}})) == want
+    assert rows(fscore({"match": {"text": {
+        "query": "shard", "operator": "and", "boost": 2}}})) == want
+
+    def buckets(filt):
+        return {r["key"]: r["doc_count"] for r in es_aggs(si, {
+            "query": {"match": {"text": "node cursor"}},
+            "aggs": {"b": {"filters": {"filters": {"f": filt}}}}}).collect()}
+
+    want = buckets({"match": {"text": "shard"}})
+    assert want["f"] > 0
+    assert buckets({"match": {"text": {"query": "shard"}}}) == want
+
+    with pytest.raises(ValueError, match="fuzziness"):
+        es_search(si, flat([{"match": {"text": {"query": "cursor",
+                                                "fuzziness": 1}}}]))
+    with pytest.raises(ValueError, match="fuzziness"):
+        es_search(si, fscore({"match": {"text": {"query": "shard",
+                                                 "fuzziness": 1}}}))

@@ -13,8 +13,8 @@ boost and percentage/negative msm forms.
 
 The oracle here re-derives matched/score recursively from the raw body
 and OracleIndex BM25 — it shares no code with the adapter
-(plans/dsl.py:_bool_to_tree) or the tree compiler
-(plans/search.py:_bool_tree_rel), so agreement is two independent
+(plans/dsl.py:_bool_to_tree) or the tree evaluator
+(plans/search.py:_bool_tree), so agreement is two independent
 implementations of the published semantics, not an identity.
 
 Reference parity: the reference's ES backend accepts arbitrarily nested
@@ -26,6 +26,8 @@ surface with randomized depth.
 
 from __future__ import annotations
 
+import operator
+import os
 import random
 
 import pytest
@@ -95,10 +97,11 @@ def _maybe_boost(rng: random.Random, spec: dict) -> dict:
     return spec
 
 
-def _gen_clause(rng: random.Random, vocab: list[str], depth: int) -> dict:
+def _gen_clause(rng: random.Random, vocab: list[str], depth: int,
+                metas: dict | None = None) -> dict:
     r = rng.random()
     if depth < 2 and r < 0.22:
-        return {"bool": _gen_bool(rng, vocab, depth + 1)}
+        return {"bool": _gen_bool(rng, vocab, depth + 1, metas)}
     if r < 0.5:
         spec = {"query": _gen_text(rng, vocab)}
         p = rng.random()
@@ -112,10 +115,13 @@ def _gen_clause(rng: random.Random, vocab: list[str], depth: int) -> dict:
     return {"match": {"text": _gen_text(rng, vocab)}}
 
 
-def _gen_filter(rng: random.Random, vocab: list[str], depth: int) -> dict:
+def _gen_filter(rng: random.Random, vocab: list[str], depth: int,
+                metas: dict | None = None) -> dict:
+    if metas and rng.random() < 0.4:
+        return _gen_meta(rng, metas)
     r = rng.random()
     if depth < 2 and r < 0.2:
-        return {"bool": _gen_bool(rng, vocab, depth + 1)}
+        return {"bool": _gen_bool(rng, vocab, depth + 1, metas)}
     if r < 0.5:
         spec = {"query": _gen_text(rng, vocab)}
         if rng.random() < 0.5:
@@ -126,7 +132,30 @@ def _gen_filter(rng: random.Random, vocab: list[str], depth: int) -> dict:
     return {"match": {"text": _gen_text(rng, vocab)}}
 
 
-def _gen_bool(rng: random.Random, vocab: list[str], depth: int = 0) -> dict:
+def _gen_meta(rng: random.Random, metas: dict) -> dict:
+    """A metadata filter over the doc store: term / terms on `repo`
+    (term in its short or long form), range / exists on `content_len`
+    (bounds drawn from its values, some of them floats)."""
+    repos, lens = metas["repo"], metas["content_len"]
+    r = rng.random()
+    if r < 0.3:
+        v = rng.choice(repos)
+        return {"term": {"repo": {"value": v} if rng.random() < 0.5 else v}}
+    if r < 0.55:
+        return {"terms": {"repo": rng.sample(repos, rng.randint(1, 3))}}
+    if r < 0.9:
+        lo, hi = sorted(rng.sample(lens, 2))
+        ops = rng.choice([("gte",), ("lt",), ("gte", "lt"), ("gt", "lte")])
+        bounds = {"gte": lo, "gt": lo + 0.5, "lt": hi + 0.5, "lte": hi}
+        return {"range": {"content_len": {op: bounds[op] for op in ops}}}
+    return {"exists": {"field": rng.choice(["content_len", "repo"])}}
+
+
+def _gen_bool(rng: random.Random, vocab: list[str], depth: int = 0,
+              metas: dict | None = None) -> dict:
+    """A random bool body; with `metas` (value pools, _store_values)
+    filter lists also draw metadata filters (_gen_meta). Without it the
+    draws are the pinned seeds' ones."""
     while True:
         out: dict = {}
         for role, lo, hi, gen in (("must", 0, 2, _gen_clause),
@@ -135,7 +164,8 @@ def _gen_bool(rng: random.Random, vocab: list[str], depth: int = 0) -> dict:
                                   ("filter", 0, 2, _gen_filter)):
             n = rng.randint(lo, hi)
             if n:
-                out[role] = [gen(rng, vocab, depth) for _ in range(n)]
+                out[role] = [gen(rng, vocab, depth, metas)
+                             for _ in range(n)]
         if not out:
             continue
         if out.get("should") and rng.random() < 0.4:
@@ -185,9 +215,42 @@ def _as_list(v):
     return v if isinstance(v, list) else [v]
 
 
+def _store_values(si) -> dict:
+    """doc_id -> {repo, content_len}, read from the index's doc store
+    (the metadata filters' oracle input)."""
+    import pandas as pd
+
+    store = pd.read_parquet(os.path.join(si.index_dir, "doc_store"),
+                            columns=["doc_id", "repo", "content_len"])
+    return {int(d): {"repo": r, "content_len": int(n)}
+            for d, r, n in zip(store["doc_id"], store["repo"],
+                               store["content_len"])}
+
+
+def _meta_pools(store: dict) -> dict:
+    """_gen_meta's value pools: the distinct repos and content lengths."""
+    return {c: sorted({v[c] for v in store.values()})
+            for c in ("repo", "content_len")}
+
+
 class _Oracle:
-    def __init__(self, si, oidx, dt):
-        self.si, self.oidx, self.dt = si, oidx, dt
+    def __init__(self, si, oidx, dt, store: dict | None = None):
+        self.si, self.oidx, self.dt, self.store = si, oidx, dt, store
+
+    def meta(self, kind: str, spec: dict, d: int) -> bool:
+        """A metadata filter over the doc store's values."""
+        if kind == "exists":
+            return self.store[d].get(spec["field"]) is not None
+        col, v = next(iter(spec.items()))
+        x = self.store[d][col]
+        if kind == "term":
+            return x == (v["value"] if isinstance(v, dict) else v)
+        if kind == "terms":
+            return x in v
+        assert kind == "range"
+        cmp = {"gte": operator.ge, "gt": operator.gt,
+               "lte": operator.le, "lt": operator.lt}
+        return all(cmp[op](x, b) for op, b in v.items())
 
     def clause(self, c: dict, d: int):
         """-> (matched, score) or None when the clause is a lenient
@@ -221,6 +284,9 @@ class _Oracle:
         return len(hit) >= max(1, msm), score
 
     def filter_clause(self, f: dict, d: int):
+        kind, spec = next(iter(f.items()))
+        if kind in ("term", "terms", "range", "exists"):
+            return self.meta(kind, spec, d)
         r = self.clause(f, d)
         return None if r is None else r[0]
 
@@ -293,6 +359,65 @@ def test_random_bool_trees_match_python_oracle(fuzz_index):
     # agree it is empty — but most value is in non-empty match sets)
     assert n_nonempty >= N_BODIES // 3
     assert n_nested >= 3
+
+
+META_SEED = 0x3E7A
+
+
+def test_random_bool_trees_with_meta_filters(fuzz_index, monkeypatch):
+    """Random bool bodies whose filter lists, at any depth, also draw
+    metadata filters (term / terms on repo, range / exists on
+    content_len) vs the recursive oracle over the doc store's values.
+    Every body runs in the default placement (the driver, under
+    SEARCH_DRIVER_CAP) and in the distributed plan forced by
+    SEARCH_DRIVER_CAP=-1, which must give the same rows."""
+    import newssearchengine_spark.plans.search as S
+
+    si, oidx, dt, raw, _repo = fuzz_index
+    vocab = _vocab(si, oidx)
+    store = _store_values(si)
+    metas = _meta_pools(store)
+    rng = random.Random(META_SEED)
+    orc = _Oracle(si, oidx, dt, store)
+
+    def has_meta(spec) -> bool:
+        return any(
+            has_meta(c["bool"]) if "bool" in c
+            else role == "filter" and "match" not in c
+            for role in ("must", "should", "must_not", "filter")
+            for c in _as_list(spec.get(role, [])))
+
+    n_meta = n_nonempty = 0
+    for i in range(N_BODIES):
+        bspec = _gen_bool(rng, vocab, metas=metas)
+        body = {"query": {"bool": bspec}}
+        got = sorted(tuple(r) for r in
+                     es_search(si, body, size=len(raw) + 10).collect())
+        monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
+        dist = sorted(tuple(r) for r in
+                      es_search(si, body, size=len(raw) + 10).collect())
+        monkeypatch.undo()
+        assert got == dist, f"body #{i} (seed {META_SEED:#x}) placements " \
+            f"differ:\n{bspec}"
+        got = {d: sc for _, d, sc in got}
+        root_boost = float(bspec.get("boost", 1.0))
+        want = {}
+        for d in raw:
+            r = orc.node(bspec, d)
+            if r is not None and r[0]:
+                want[d] = round(r[1] * root_boost, 6)
+        assert sorted(got) == sorted(want), (
+            f"body #{i} (seed {META_SEED:#x}) match-set mismatch:\n{bspec}\n"
+            f"engine-only={sorted(set(got) - set(want))[:5]} "
+            f"oracle-only={sorted(set(want) - set(got))[:5]}")
+        for d, sc in got.items():
+            assert sc == pytest.approx(want[d], abs=2e-6), (
+                f"body #{i} (seed {META_SEED:#x}) score mismatch doc {d}"
+                f"\n{bspec}")
+        n_meta += has_meta(bspec)
+        n_nonempty += bool(want)
+    assert n_meta >= N_BODIES // 3
+    assert n_nonempty >= N_BODIES // 4
 
 
 def test_random_query_string_grammars_match_python_oracle(fuzz_index):

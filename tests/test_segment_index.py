@@ -1070,8 +1070,10 @@ REGIME_BATCH = {"a": ["node", "cursor"], "b": ["shard", "group", "stream"],
                 "c": ["node", "cursor"]}
 # one call per driver-regime path beyond plain search: phrase at slop 0
 # and > 0, the serve benchmark's nested bool (nested should + should +
-# a `term: lang` filter), a bool with a phrase leaf, a must_not-only node
-# and search_many with duplicate bodies at k 100/300
+# a `term: lang` filter), a bool with a phrase leaf, a must_not-only node,
+# search_many with duplicate bodies at k 100/300, and the metadata filter
+# kinds inside trees: terms, range (gte + a float lt), exists, the
+# long-form term, a meta filter in a nested must_not and a filter-only tree
 REGIME_CALLS = [
     lambda si: si.search_phrase(["node", "cursor"], 20),
     lambda si: si.search_phrase(["shard", "group"], 20, slop=2),
@@ -1085,13 +1087,29 @@ REGIME_CALLS = [
     lambda si: si.search_bool_tree({"must_not": [["node", "cursor"]]}, 20),
     lambda si: si.search_many(REGIME_BATCH, 100),
     lambda si: si.search_many(REGIME_BATCH, 300),
+    lambda si: si.search_bool_tree(
+        {"should": [["node", "shard"]],
+         "filter": [{"terms": {"lang": ["py", "go"]}}]}, 20),
+    lambda si: si.search_bool_tree(
+        {"must": [["cursor"]],
+         "filter": [{"range": {"content_len": {"gte": 300,
+                                               "lt": 2500.5}}}]}, 20),
+    lambda si: si.search_bool_tree(
+        {"should": [["stream"]], "filter": [{"exists": {"field": "lang"}}]},
+        20),
+    lambda si: si.search_bool_tree(
+        {"must": [["group"]], "filter": [{"term": {"lang": {"value": "py"}}}]},
+        20),
+    lambda si: si.search_bool_tree(
+        {"must": [["node", "shard"]],
+         "must_not": [{"filter": [{"term": {"lang": "py"}}]}]}, 20),
+    lambda si: si.search_bool_tree(
+        {"filter": [{"term": {"lang": "go"}}, ["stream"]]}, 20),
 ]
-# the nested-bool tree's expressions still run in Catalyst over a local
-# relation: no Spark job, but JVM calls
-TREE_CALLS = REGIME_CALLS[2:5]
 # flat bool (must + should + must_not, must + msm + must_not, filter term
 # clauses, a zero-filled filter, a meta filter with and without msm, a
-# zero-filled meta filter), query_string AND and search_mixed
+# zero-filled meta filter, must_not only, metadata filters only),
+# query_string AND and search_mixed
 FLAT_CALLS = [
     lambda si: si.search_bool(must=["node", "cursor"], should=["shard"],
                               must_not=["stream"], k=20),
@@ -1108,14 +1126,15 @@ FLAT_CALLS = [
                               filter=[{"term": {"lang": "py"}}], k=20),
     lambda si: si.search_bool(should=["zzz_absent"],
                               filter=[{"term": {"lang": "py"}}], k=20),
+    lambda si: si.search_bool(must_not=["proto", "stream"], k=20),
+    lambda si: si.search_bool(
+        filter=[{"term": {"lang": "go"}},
+                {"range": {"content_len": {"gte": 200}}}], k=20),
     lambda si: es_search(si, {"query": {"query_string": {
         "query": "node AND cursor"}}}, size=20),
     lambda si: si.search_mixed(
         [[["node"], ["cursor"]], [["shard"], ["stream"]]], k=20),
 ]
-# a meta filter's predicates run in Catalyst over the doc store's local
-# relation: no Spark job, but JVM calls
-META_CALLS = FLAT_CALLS[4:7]
 
 
 @pytest.fixture(scope="module")
@@ -1182,34 +1201,29 @@ def test_search_driver_and_distributed_regimes_identical(
 
 def test_search_driver_regime_runs_no_spark_job(
         spark, index_dir, tombstoned_dir, py4j_commands):
-    """A driver-regime search, phrase, nested bool, search_many, flat
-    bool (with or without a meta filter), query_string AND or
-    search_mixed on a warm index reads its postings (and doc-store
-    columns) with pyarrow and returns a LocalFrame: neither the call nor
-    collect() launches a Spark job, with or without tombstones. Empty
-    answers (an absent phrase term, an unsatisfiable msm, a batch of
-    absent terms) are empty LocalFrames, job-free too. Except for the
-    nested-bool tree (TREE_CALLS and the empty tree call), whose
-    expressions still run in Catalyst, and the meta filters
-    (META_CALLS), whose predicates do, neither the call nor collect()
-    makes a JVM call."""
+    """A driver-regime search, phrase, nested bool (metadata filters
+    included), search_many, flat bool (with or without a meta filter),
+    query_string AND or search_mixed on a warm index reads its postings
+    (and doc-store columns) with pyarrow and returns a LocalFrame:
+    neither the call nor collect() launches a Spark job or makes a JVM
+    call, with or without tombstones. Empty answers (an absent phrase
+    term, an unsatisfiable msm, a batch of absent terms) are empty
+    LocalFrames, job-free and JVM-free too."""
     import time
 
-    tree_empty = lambda si: si.search_bool_tree(  # noqa: E731
-        {"should": [["node"]], "minimum_should_match": 2}, 10)
     empty_calls = [
         lambda si: si.search_phrase(["node", "zzz_absent"], 10),
         lambda si: si.search_bool(should=["node", "cursor"], k=10,
                                   minimum_should_match=3),
-        tree_empty,
+        lambda si: si.search_bool_tree(
+            {"should": [["node"]], "minimum_should_match": 2}, 10),
         lambda si: si.search_many({"a": ["zzz_absent"]}, 10),
     ]
 
     def rows(call, si):
         n = py4j_commands()
         out = call(si).collect()
-        if call not in TREE_CALLS + META_CALLS and call is not tree_empty:
-            assert py4j_commands() == n
+        assert py4j_commands() == n
         return out
 
     sc = spark.sparkContext
@@ -1230,6 +1244,67 @@ def test_search_driver_regime_runs_no_spark_job(
         time.sleep(1.0)  # let the listener bus deliver any job start
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         si.close()
+
+
+def test_meta_filter_admitted_ids_match_pandas(spark, index_dir,
+                                               monkeypatch):
+    """Each metadata filter kind admits, in both placements, exactly
+    the doc-store rows a pandas evaluation of the doc store admits: the
+    driver reads them with _meta_filter_pred's pyarrow expression, the
+    distributed plan filters the doc-store scan with its Catalyst
+    predicate. A filter-only search_bool returns every admitted doc at
+    score 0, so its rows are the admitted set. A string value against an
+    integer column is cast to it in both."""
+    import pandas as pd
+
+    import newssearchengine_spark.plans.search as S
+
+    store = pd.read_parquet(os.path.join(index_dir, "doc_store"))
+    n = len(store)
+    cl = store["content_len"]
+    cases = [
+        ({"term": {"lang": "py"}}, store["lang"] == "py"),
+        ({"term": {"lang": {"value": "go"}}}, store["lang"] == "go"),
+        ({"terms": {"lang": ["py", "rs"]}}, store["lang"].isin(["py", "rs"])),
+        ({"range": {"content_len": {"gte": 300, "lt": 1200.5}}},
+         (cl >= 300) & (cl < 1200.5)),
+        ({"range": {"content_len": {"gt": 500.5, "lte": 2000}}},
+         (cl > 500.5) & (cl <= 2000)),
+        ({"exists": {"field": "commit"}}, store["commit"].notna()),
+        # a string value against an integer column is cast to it
+        ({"range": {"content_len": {"gte": "300"}}}, cl >= 300),
+        ({"term": {"content_len": str(cl.iloc[0])}}, cl == cl.iloc[0]),
+    ]
+    si = SegmentIndex(spark, index_dir).warm()
+    for clause, mask in cases:
+        want = sorted(int(d) for d in store["doc_id"][mask])
+        assert 0 < len(want) < n or "exists" in clause, clause
+        for cap in (S.SEARCH_DRIVER_CAP, -1):
+            monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", cap)
+            rows = si.search_bool(filter=[clause], k=n + 1).collect()
+            assert sorted(r["doc_id"] for r in rows) == want, (clause, cap)
+            assert {r["score"] for r in rows} == {0.0}
+        monkeypatch.undo()
+    si.close()
+
+
+def test_terms_filter_needs_an_array(spark, index_dir):
+    """ES rejects a non-array `terms` value; iterating it would filter a
+    string on its characters (or a lookup dict on its keys) and silently
+    match nothing. _meta_filter_pred raises before any read, for every
+    caller."""
+    si = SegmentIndex(spark, index_dir)
+    for spec in ("py", {"index": "users", "id": "2", "path": "langs"}):
+        with pytest.raises(ValueError, match="array"):
+            si.search_bool(filter=[{"terms": {"lang": spec}}], k=10)
+        with pytest.raises(ValueError, match="array"):
+            es_search(si, {"query": {"bool": {
+                "must": [{"bool": {"should": [
+                    {"match": {"content": "node"}}]}}],
+                "filter": [{"terms": {"lang": spec}}]}}}, size=10)
+        with pytest.raises(ValueError, match="array"):
+            es_search(si, {"query": {"terms": {"lang": spec}}}, size=10)
+    si.close()
 
 
 MIXED_BATCH = [

@@ -8,7 +8,9 @@ verify determinism; this tool hunts beyond them).
     python tools/fuzz_sweep.py exp   [--seeds 11000:11001] [--per 120]
     python tools/fuzz_sweep.py write [--seeds 13000:13010] [--per 6]
 
-The bool and qs sweeps run every drawn body in both placements — the
+The bool sweep draws test_es_fuzz's bool bodies with metadata filters
+(term / terms on repo, range / exists on content_len) in their filter
+lists. The bool and qs sweeps run every drawn body in both placements — the
 default (driver under SEARCH_DRIVER_CAP on a warm handle), then the
 distributed plan forced by SEARCH_DRIVER_CAP=-1 — and count a
 disagreement between them as a failure before checking the oracle.
@@ -96,12 +98,14 @@ def sweep_bool(seeds, per) -> int:
     spark = _spark()
     T, si, raw, oidx, dt = _fuzz_fixture(spark)
     vocab = T._vocab(si, oidx)
-    orc = T._Oracle(si, oidx, dt)
+    store = T._store_values(si)
+    metas = T._meta_pools(store)
+    orc = T._Oracle(si, oidx, dt, store)
     fails = 0
     for seed in seeds:
         rng = random.Random(seed)
         for i in range(per):
-            bspec = T._gen_bool(rng, vocab)
+            bspec = T._gen_bool(rng, vocab, metas=metas)
             rows, same = _both_placements(lambda: es_search(
                 si, {"query": {"bool": bspec}}, size=len(raw) + 10))
             if not same:
