@@ -612,8 +612,8 @@ def _query_match_set(index, q: dict):
         from .search import _meta_filter_pred
 
         _, mc = index._parse_filters([q])
-        return (index.doc_store().filter(_meta_filter_pred(mc))
-                .select("doc_id"))
+        pred = _meta_filter_pred(mc, index._store_schema())
+        return index.doc_store().filter(pred).select("doc_id")
     if kind == "terms_set":
         # membership form of the ranked kind: distinct-term count per
         # doc vs its (per-doc or constant) minimum, no scoring pass
@@ -1113,7 +1113,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             fc, mc = si._parse_filters([q])
             s = si._exclude_dead(si.doc_store())
             if mc:
-                s = s.filter(_meta_filter_pred(mc))
+                s = s.filter(_meta_filter_pred(mc, si._store_schema()))
             for toks in fc:
                 s = s.join(
                     si._term_docs(toks).select("doc_id").distinct(),
@@ -1886,7 +1886,8 @@ def es_search(indexes, body: dict, size: int = 10, *,
 
         _, mc = one()._parse_filters([q])
         return one()._exclude_dead(
-            one().doc_store().filter(_meta_filter_pred(mc)))
+            one().doc_store().filter(
+                _meta_filter_pred(mc, one()._store_schema())))
 
     if kind == "ids":
         # {"ids": {"values": [...]}} -> doc-store point lookups
@@ -2275,7 +2276,7 @@ def es_count(indexes, body: dict) -> DataFrame:
               if isinstance(indexes, dict) else indexes)
         _, mc = si._parse_filters([q])
         rel = si._exclude_dead(
-            si.doc_store().filter(_meta_filter_pred(mc))
+            si.doc_store().filter(_meta_filter_pred(mc, si._store_schema()))
             .select("doc_id"))
         return rel.agg(F.count(F.lit(1)).cast("bigint").alias("count"))
     if kind == "match_all":
@@ -2602,7 +2603,8 @@ def es_aggs(index: SegmentIndex, body: dict) -> DataFrame:
             else:
                 col, sp = next(iter(spec.items()))
                 mc = [(kind, col, sp)]
-            store = store.filter(_meta_filter_pred(mc))
+            store = store.filter(
+                _meta_filter_pred(mc, index._store_schema()))
         elif kind in ("match", "query_string", "multi_match"):
             if kind == "match":
                 _, text = _field_text(spec)
@@ -2712,7 +2714,8 @@ def es_aggs(index: SegmentIndex, body: dict) -> DataFrame:
                     fc, mc = index._parse_filters([fq])
                     m = store
                     if mc:
-                        m = m.filter(_meta_filter_pred(mc))
+                        m = m.filter(_meta_filter_pred(
+                            mc, index._store_schema()))
                     for toks in fc:
                         m = m.join(index._term_docs(toks)
                                    .select("doc_id").distinct(),
@@ -2766,7 +2769,8 @@ def es_aggs(index: SegmentIndex, body: dict) -> DataFrame:
                 fc, mc = index._parse_filters([fq])
                 s = store
                 if mc:
-                    s = s.filter(_meta_filter_pred(mc))
+                    s = s.filter(_meta_filter_pred(
+                        mc, index._store_schema()))
                 for toks in fc:
                     s = s.join(
                         index._term_docs(toks).select("doc_id").distinct(),

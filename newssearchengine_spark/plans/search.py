@@ -44,7 +44,8 @@ from ..oracle import pure
 from ..config import AnalyzerConfig
 from .delete import dead_ids, tombstone_dir, tombstone_listing
 from .index_build import (TERM_STATS_SCHEMA, TERM_VECTORS_SCHEMA,
-                          term_bucket)
+                          term_bucket, write_on_driver)
+from .reader import ResidentReader
 
 TOPK_SCHEMA = "doc_id bigint, score double"
 RANKED_SCHEMA = "rank bigint, doc_id bigint, score double"
@@ -98,6 +99,20 @@ PHRASE_CAND_SCHEMA = "doc_id bigint, occ bigint, dl bigint"
 #: from 721k characters), and a token is at least one unit of volume:
 #: ≲ 300 B per unit, ≲ 160 MB transient at the cap. Setting it to -1
 #: forces every read AND write onto Spark.
+#: The same write rule bounds the RESIDENT READER (SegmentIndex._resident):
+#: a warm handle whose index could be rewritten on the driver holds its
+#: dictionary, segment rows (positions included) and doc store in driver
+#: memory as Arrow tables plus an 8-byte search key per term and segment
+#: row, one copy per open handle until close(). Measured at load (Arrow
+#: allocation + traced Python/numpy memory): 29 B per unit of volume on
+#: the perfbench serve index (1.6 MB for 54.6k units), 43 B on its
+#: ingest slice (0.19 MB for 4.5k units), and 150 B on the worst
+#: dictionary case, every token a distinct 9-letter term without
+#: positions (one dictionary row and one segment row per token): 79 MB
+#: at the cap (524k units). The doc store adds its rows' width per doc —
+#: 84 B bare, 373 B with four path-like meta columns — and a doc counts
+#: as one unit however wide its meta columns are, as in a driver
+#: compaction.
 SEARCH_DRIVER_CAP = 1 << 19
 
 # Tombstone exclusion regimes (plans.delete): dead ids inline as an isin
@@ -111,19 +126,24 @@ DELETED_ISIN_CAP = 1 << 14
 DELETED_DRIVER_BYTES_CAP = 1 << 28
 
 
-def _meta_filter_pred(meta_clauses: list[tuple], schema=None):
+def _meta_filter_pred(meta_clauses: list[tuple], schema,
+                      arrow: bool = False):
     """The one compiler of ES filter-context metadata clauses (term /
     terms / range / exists over doc-store columns, ANDed), with two
     outputs of the same clauses: a Catalyst Column (the default), applied
     directly to the distributed doc_store scan so it pushes down to
     parquet (row-group stats prune; `.explain` shows PushedFilters); or,
-    given the doc store's pyarrow `schema`, a pyarrow.compute expression
-    for the driver's read (SegmentIndex._doc_ids), which prunes row
-    groups the same way and makes no JVM call. A string value compared
-    with a non-string column is cast to the column's type, as Catalyst
-    casts it ("300" matches 300; "300.5" on an integer column raises in
-    both). A malformed clause raises ValueError before either is
-    built."""
+    with `arrow`, a pyarrow.compute expression for the driver's read
+    (SegmentIndex._doc_ids), which prunes row groups the same way and
+    makes no JVM call. `schema` is the doc store's pyarrow schema
+    (SegmentIndex._store_schema). A string value compared with a numeric
+    column is parsed as a number, as ES parses it, so it behaves exactly
+    like the same value given as a number: a range bound "300.5" on an
+    integer column is 300.5, a term "300" or "300.0" is 300. A term or
+    terms value with a decimal part on an integer column, or a value
+    that is not a number, raises ValueError (ES's 400). Against another
+    non-string column a string is cast to the column's type. A malformed
+    clause raises ValueError before either output is built."""
     for kind, col, spec in meta_clauses:
         if kind == "terms" and not isinstance(spec, (list, tuple)):
             # ES rejects it; list("py") would filter on ["p", "y"]
@@ -139,28 +159,47 @@ def _meta_filter_pred(meta_clauses: list[tuple], schema=None):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    def lit(col, v):
-        if (schema is None or not isinstance(v, str)
-                or pa.types.is_string(schema.field(col).type)):
+    def lit(kind, col, v):
+        i = schema.get_field_index(col)
+        t = schema.field(i).type if i >= 0 else pa.string()
+        if not isinstance(v, str) or pa.types.is_string(t):
             return v
-        return pa.scalar(v).cast(schema.field(col).type)
+        if not (pa.types.is_integer(t) or pa.types.is_floating(t)):
+            return pa.scalar(v).cast(t) if arrow else v
+        try:
+            x = float(v)
+        except ValueError:
+            raise ValueError(f"[{kind}] value [{v}] on numeric field "
+                             f"[{col}] is not a number") from None
+        if not pa.types.is_integer(t):
+            return x
+        try:
+            return int(v)
+        except ValueError:
+            pass
+        if x.is_integer():
+            return int(x)
+        if kind != "range":
+            raise ValueError(f"[{kind}] value [{v}] on integer field "
+                             f"[{col}] has a decimal part")
+        return x
 
     conds = []
     for kind, col, spec in meta_clauses:
-        c = F.col(col) if schema is None else pc.field(col)
+        c = pc.field(col) if arrow else F.col(col)
         if kind == "term":
             # ES accepts both {"term": {f: v}} and {"term": {f:
             # {"value": v}}} — unwrap the long form
             v = spec.get("value") if isinstance(spec, dict) else spec
-            conds.append(c == lit(col, v))
+            conds.append(c == lit(kind, col, v))
         elif kind == "terms":
-            conds.append(c.isin([lit(col, v) for v in spec]))
+            conds.append(c.isin([lit(kind, col, v) for v in spec]))
         elif kind == "exists":
-            conds.append(c.isNotNull() if schema is None else c.is_valid())
+            conds.append(c.is_valid() if arrow else c.isNotNull())
         else:
             ops = {"gte": c.__ge__, "gt": c.__gt__,
                    "lte": c.__le__, "lt": c.__lt__}
-            conds += [ops[op](lit(col, v)) for op, v in spec.items()]
+            conds += [ops[op](lit(kind, col, v)) for op, v in spec.items()]
     out = conds[0]
     for c in conds[1:]:
         out = out & c
@@ -549,8 +588,13 @@ class SegmentIndex:
     def __init__(self, spark: SparkSession, index_dir: str, cache: bool = True):
         """cache=True pins the segment and term-stats tables in executor
         memory after first touch — the "warm engine" of the BASELINE p95
-        metric. cache=False scans parquet per query (directory pruning on
-        bucket + term pushdown keep that cheap too)."""
+        metric — and, when the index is small enough to be rewritten on
+        the driver (index_build.write_on_driver over stats.json's n_docs
+        and total_tokens), serves every driver read from one resident
+        reader (plans.reader.ResidentReader), loaded by warm() or the
+        first read. cache=False, or an index over that cap, scans parquet
+        per query (directory pruning on bucket + term pushdown keep that
+        cheap too)."""
         self.spark = spark
         self.index_dir = index_dir
         with open(os.path.join(index_dir, "stats.json")) as f:
@@ -590,6 +634,10 @@ class SegmentIndex:
         # published as ONE tuple so a concurrent reader never pairs a new
         # listing with a stale id set
         self._tomb_memo: tuple = (None, (0, None, None))
+        # the resident reader, published by one assignment once loaded
+        self._reader = None
+        self._reader_lock = threading.Lock()
+        self._store_schema_memo = None
         if cache:
             self._tstats = self._tstats.persist()
             self._segments = self._segments.persist()
@@ -606,11 +654,14 @@ class SegmentIndex:
 
     def close(self) -> None:
         """Release every cache this handle pinned (hot segments, term
-        stats, the lazy positional sidecar). Long-lived sessions that
-        open many indexes (e.g. per-field DisMax over rotating indexes)
-        call this when an index is retired; the handle stays usable —
-        subsequent queries re-read parquet uncached."""
-        if self._cache:
+        stats, the lazy positional sidecar, the resident reader).
+        Long-lived sessions that open many indexes (e.g. per-field DisMax
+        over rotating indexes) call this when an index is retired; the
+        handle stays usable — subsequent queries re-read parquet
+        uncached."""
+        with self._reader_lock:
+            cached, self._cache, self._reader = self._cache, False, None
+        if cached:
             self._segments.unpersist()
             self._tstats.unpersist()
             with self._pos_lock:
@@ -621,7 +672,6 @@ class SegmentIndex:
         if dead_df is not None:  # distributed-dead regime relation
             dead_df.unpersist()
             self._tomb_memo = (None, (0, None, None))
-        self._cache = False
 
     def _read_or_empty(self, path: str, schema: str):
         """Parquet read with an explicit schema so empty/absent directories
@@ -639,22 +689,26 @@ class SegmentIndex:
         return pure.analyze(text, self.analyzer)
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Global df per query term.
+        """Global df per query term (0 for a term not in the index).
 
-        Fast path: a DRIVER-LOCAL pyarrow read of the term_stats parquet,
-        pruned to the terms' bucket partitions with the term predicate
-        pushed to row groups (files are term-sorted). This is the Lucene
-        term-dictionary-lookup shape — a local index structure, not a
-        cluster job. The same read memoizes each term's cf (the driver
-        regimes' position volume). Results memoize on the handle
-        (repeat queries skip the read entirely).
-        Falls back to a pruned Spark scan if pyarrow/local-FS access is
-        unavailable (e.g. a remote object-store index).
+        On a resident handle the terms resolve against the reader's
+        sorted dictionary arrays with np.searchsorted — the Lucene
+        in-memory terms index, no file opened. Otherwise a DRIVER-LOCAL
+        pyarrow read of the term_stats parquet, pruned to the terms'
+        bucket partitions with the term predicate pushed to row groups
+        (files are term-sorted), memoized on the handle with each term's
+        cf (the driver placement's position volume), so repeat queries
+        skip the read. That read falls back to a pruned Spark scan if
+        pyarrow/local-FS access is unavailable (e.g. a remote
+        object-store index).
         """
         return {t: s[0] for t, s in self._term_stats(terms).items()}
 
     def _term_stats(self, terms) -> dict[str, tuple[int, int]]:
-        """(df, cf) per term, memoized on the handle — term_dfs's read."""
+        """(df, cf) per term — term_dfs's lookup."""
+        reader = self._resident()
+        if reader is not None:
+            return reader.term_stats(terms)
         missing = [t for t in terms if t not in self._term_cache]
         if missing:
             cols = ["term", "df", "cf"]
@@ -686,8 +740,9 @@ class SegmentIndex:
     def _per_part_local(self, fn, terms: list[str], cols: list[str],
                         allowed=None) -> pd.DataFrame | None:
         """The driver form of `_by_part(seg).applyInPandas(fn, ...)`: the
-        SAME per-doc_part closure over a pyarrow read of the terms'
-        segment rows. With `allowed` (sorted doc ids a metadata filter
+        SAME per-doc_part closure over the terms' segment rows
+        (_read_buckets: the resident reader's, or a pyarrow read). With
+        `allowed` (sorted doc ids a metadata filter
         admits) it is the driver form of the cogroup with the admitted
         (doc_part, doc_id) stream: fn(segment rows, admitted rows) runs
         for every part either side holds. None when no part was read."""
@@ -707,7 +762,7 @@ class SegmentIndex:
     def _per_part(self, fn, terms: list[str], cols: list[str], schema: str,
                   local: bool, positions: bool = False):
         """One per-doc_part closure, two placements: on the driver
-        (`local`, decided by _driver_ok) over a pyarrow read — a pandas
+        (`local`, decided by _driver_ok) over _read_buckets — a pandas
         frame, None when no row was read — else applyInPandas over the
         pruned distributed scan (_scan), a DataFrame of `schema`. The
         same closure over the same rows gives the same frame."""
@@ -731,11 +786,18 @@ class SegmentIndex:
 
     def _read_buckets(self, table: str, terms: list[str],
                       columns: list[str]) -> pd.DataFrame:
-        """Driver-local pyarrow read of the rows of `table` (term_stats or
-        segments) whose term is in `terms`: only the terms' bucket=<b>
-        directories are opened, and the term predicate is pushed to
-        row groups (files are term-sorted). No Spark job; repeat reads
-        are served from the OS page cache."""
+        """The rows of `table` (term_stats or segments) whose term is in
+        `terms`, read on the driver with no Spark job. A resident
+        handle's segment rows come from memory: each term's row range
+        of the reader's (term, doc_part)-sorted table, taken and
+        converted to pandas once. Otherwise a pyarrow read opens only
+        the terms' bucket=<b> directories and pushes the term predicate
+        to row groups (files are term-sorted); repeat reads are served
+        from the OS page cache. The placements' closures sort or key
+        their rows by term, so the row order does not reach a result."""
+        reader = self._resident() if table == "segments" else None
+        if reader is not None:
+            return reader.segment_rows(terms, columns)
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -756,15 +818,43 @@ class SegmentIndex:
     def warm(self, positions: bool = False) -> "SegmentIndex":
         """Materialize the cached segment + term-stats tables (one pass) so
         first queries don't pay lazy cache population — the 'warm engine'
-        precondition of the p95 metric (BASELINE.md). positions=True also
-        warms the positional sidecar cache (phrase-serving deployments);
-        the default leaves it lazy so pure-disjunction sessions never
-        touch position blobs."""
+        precondition of the p95 metric (BASELINE.md) — and load the
+        resident reader when the index qualifies (_resident), so no
+        request opens a parquet file. positions=True also warms the
+        positional sidecar cache (phrase-serving deployments); the
+        default leaves it lazy so pure-disjunction sessions never touch
+        position blobs in executor memory."""
         self._segments.count()
         self._tstats.count()
         if positions and self.stats.get("with_positions"):
             self._pos_segments().count()
+        self._resident()
         return self
+
+    def _resident(self) -> "ResidentReader | None":
+        """The handle's resident reader, or None. A handle holds its
+        index in memory when it is warm (cache=True, not closed) and the
+        index is small enough to be rewritten on the driver —
+        index_build.write_on_driver over stats.json's n_docs,
+        total_tokens, with_positions and with_term_vectors, i.e.
+        SEARCH_DRIVER_CAP, checked on every call, so a cap lowered later
+        (-1 forces every read onto Spark) bypasses a loaded reader. The
+        reader is built completely under a lock and published by one
+        assignment, so concurrent first readers load it once and never
+        see half of it."""
+        st = self.stats
+        if not (self._cache and write_on_driver(
+                int(st["n_docs"]), int(st["total_tokens"]),
+                st.get("with_positions", False),
+                st.get("with_term_vectors", False))):
+            return None
+        reader = self._reader
+        if reader is None:
+            with self._reader_lock:
+                if self._reader is None and self._cache:
+                    self._reader = ResidentReader(self.index_dir)
+                reader = self._reader
+        return reader
 
     def doc_store(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.index_dir, "doc_store"))
@@ -956,19 +1046,21 @@ class SegmentIndex:
     def _cut_topk(self, cand, k: int) -> DataFrame:
         """The one top-k cut of both placements: (doc_id, score) rows
         ordered by score desc, doc_id asc, the first k numbered 0.. as
-        `rank`. A pandas frame (the driver placement) is cut into a
-        LocalFrame — no Spark job and no JVM call; a DataFrame (a
-        distributed plan) takes _rank_topk; None (no row read) is an
-        empty result."""
+        `rank`. A pandas frame (the driver placement) is ranked by one
+        np.lexsort((doc_id, -score)) over its columns — a NaN score
+        sorts last — and cut into a LocalFrame, with no Spark job and no
+        JVM call; a DataFrame (a distributed plan) takes _rank_topk;
+        None (no row read) is an empty result."""
         if cand is None:
             return self._empty()
         if isinstance(cand, DataFrame):
             return _rank_topk(cand, k)
-        cand = (cand.sort_values(["score", "doc_id"], ascending=[False, True],
-                                 kind="mergesort")
-                .head(k).reset_index(drop=True))
-        cand.insert(0, "rank", np.arange(len(cand), dtype=np.int64))
-        return LocalFrame(self.spark, cand)
+        doc = cand["doc_id"].to_numpy(np.int64)
+        score = cand["score"].to_numpy(np.float64)
+        top = np.lexsort((doc, -score))[:k]
+        return LocalFrame(self.spark, pd.DataFrame({
+            "rank": np.arange(top.size, dtype=np.int64),
+            "doc_id": doc[top], "score": score[top]}))
 
     def _round_cut(self, cand, k: int) -> DataFrame:
         """_cut_topk over scores rounded 6 dp HALF_UP: _round_half_up on
@@ -1717,7 +1809,8 @@ class SegmentIndex:
         if not meta_clauses:
             return self._round_cut(seg.applyInPandas(scorer, TOPK_SCHEMA), k)
         doc_range = int(self.stats["doc_range"])
-        allowed = (self.doc_store().filter(_meta_filter_pred(meta_clauses))
+        pred = _meta_filter_pred(meta_clauses, self._store_schema())
+        allowed = (self.doc_store().filter(pred)
                    .select((F.col("doc_id") / doc_range).cast("bigint")
                            .alias("doc_part"), "doc_id"))
         return self._round_cut(seg.cogroup(self._by_part(allowed))
@@ -2050,7 +2143,8 @@ class SegmentIndex:
                 return tagged(ids.assign(score=0.0), cid)
             store = self.doc_store()
             if mcl:
-                store = store.filter(_meta_filter_pred(mcl))
+                store = store.filter(_meta_filter_pred(
+                    mcl, self._store_schema()))
             return tagged(store.select(
                 F.col("doc_id").cast("bigint").alias("doc_id"),
                 F.lit(0.0).alias("score")), cid)
@@ -2087,17 +2181,38 @@ class SegmentIndex:
 
     def _doc_ids(self, meta_clauses=()) -> np.ndarray:
         """Sorted ids of the doc-store rows every metadata clause admits
-        (every row without one), read on the driver with pyarrow: the
-        filter is _meta_filter_pred's pyarrow expression, pushed to
-        parquet row groups — no Spark job and no JVM call."""
-        import pyarrow.dataset as ds
+        (every row without one), on the driver — no Spark job and no JVM
+        call. The filter is _meta_filter_pred's pyarrow expression: on a
+        resident handle Table.filter applies it to the reader's doc
+        store, otherwise a pyarrow read pushes it to parquet row
+        groups."""
+        reader = self._resident()
+        if reader is not None and reader.store is not None:
+            t = reader.store
+            if meta_clauses:
+                t = t.filter(_meta_filter_pred(meta_clauses, t.schema,
+                                               arrow=True))
+        else:
+            import pyarrow.dataset as ds
 
-        store = ds.dataset(os.path.join(self.index_dir, "doc_store"),
-                           format="parquet", partitioning="hive")
-        t = store.to_table(columns=["doc_id"], filter=(
-            _meta_filter_pred(meta_clauses, store.schema)
-            if meta_clauses else None))
+            store = ds.dataset(os.path.join(self.index_dir, "doc_store"),
+                               format="parquet", partitioning="hive")
+            t = store.to_table(columns=["doc_id"], filter=(
+                _meta_filter_pred(meta_clauses, store.schema, arrow=True)
+                if meta_clauses else None))
         return np.sort(t.column("doc_id").to_numpy().astype(np.int64))
+
+    def _store_schema(self):
+        """The doc store's pyarrow schema: the column types
+        _meta_filter_pred parses string values against (one footer read,
+        memoized)."""
+        if self._store_schema_memo is None:
+            import pyarrow.dataset as ds
+
+            self._store_schema_memo = ds.dataset(
+                os.path.join(self.index_dir, "doc_store"),
+                format="parquet", partitioning="hive").schema
+        return self._store_schema_memo
 
     def _match_rel(self, query):
         """The COMPLETE (doc_id, score) match relation the
@@ -2305,8 +2420,8 @@ class SegmentIndex:
                 mem = r if mem is None else mem.join(r, "doc_id",
                                                      "left_semi")
             if mc:
-                r = (self.doc_store().filter(_meta_filter_pred(mc))
-                     .select("doc_id"))
+                pred = _meta_filter_pred(mc, self._store_schema())
+                r = self.doc_store().filter(pred).select("doc_id")
                 mem = r if mem is None else mem.join(r, "doc_id",
                                                      "left_semi")
             rel = rel.join(mem.withColumn(f"f{i}", F.lit(True)),

@@ -131,3 +131,29 @@ def test_local_frame_builds_its_jvm_frame_once_under_threads(
     assert len(seen) == 8 and all(j is seen[0] for j in seen)
     assert len(made) == 1
     assert lf.filter(F.col("doc_id") > 4).count() == 2
+
+
+@pytest.mark.parametrize("k", [0, 3, 10, 100])
+def test_cut_topk_equals_pandas_sort(spark, k):
+    """The driver placement's top-k cut ranks with one np.lexsort in the
+    order a stable pandas sort gives — score desc, doc_id asc, a NaN
+    score last — over ties, -0.0/0.0 and NaNs, into a ranked
+    LocalFrame."""
+    from types import SimpleNamespace
+
+    from newssearchengine_spark.plans.search import SegmentIndex
+
+    rng = np.random.default_rng(k)
+    score = rng.choice([2.5, 1.0, 0.0, -0.0, -1.5, NAN], size=40)
+    cand = pd.DataFrame({"doc_id": rng.permutation(40).astype(np.int64),
+                         "score": score})
+    want = (cand.sort_values(["score", "doc_id"], ascending=[False, True],
+                             kind="mergesort").head(k))
+    out = SegmentIndex._cut_topk(SimpleNamespace(spark=spark), cand, k)
+    assert isinstance(out, LocalFrame)
+    got = out.toPandas()
+    assert list(got.columns) == ["rank", "doc_id", "score"]
+    assert got["rank"].tolist() == list(range(len(want)))
+    assert got["doc_id"].tolist() == want["doc_id"].tolist()
+    assert np.array_equal(got["score"].to_numpy(), want["score"].to_numpy(),
+                          equal_nan=True)

@@ -873,10 +873,11 @@ def test_hot_cache_excludes_positions(spark, corpus, index_dir,
 
 def test_close_releases_all_caches(spark, corpus, tmp_path):
     """close() drops every cache the handle pinned (hot + term stats +
-    the lazily-persisted positional sidecar) and the handle remains
-    usable uncached. Built over its OWN index dir: the CacheManager
-    dedupes identical plans, so a shared fixture index would alias other
-    handles' cache entries and hide this handle's."""
+    the lazily-persisted positional sidecar + the resident reader) and
+    the handle remains usable uncached, loading no reader again. Built
+    over its OWN index dir: the CacheManager dedupes identical plans, so
+    a shared fixture index would alias other handles' cache entries and
+    hide this handle's."""
     index_dir = str(tmp_path / "own_idx")
     build_index(corpus.limit(80), index_dir, CFG, resume=False)
     def cached_ids() -> set:
@@ -890,13 +891,16 @@ def test_close_releases_all_caches(spark, corpus, tmp_path):
     # may asynchronously drop OTHER tests' dereferenced caches mid-test
     before = cached_ids()
     si = SegmentIndex(spark, index_dir).warm()
+    assert si._reader is not None
     si.search_phrase(["node", "cursor"], 5).count()  # pins the pos cache
     assert cached_ids() - before  # this handle pinned something new
     top = si.search(["node", "cursor"], 5).collect()
     si.close()
+    assert si._reader is None
     assert not (cached_ids() - before)  # everything it pinned is gone
     again = si.search(["node", "cursor"], 5).collect()
     assert [tuple(r) for r in again] == [tuple(r) for r in top]
+    assert si._reader is None
 
 
 def test_bool_filter_context(spark, corpus, index_dir, oracle, monkeypatch):
@@ -1254,7 +1258,9 @@ def test_meta_filter_admitted_ids_match_pandas(spark, index_dir,
     distributed plan filters the doc-store scan with its Catalyst
     predicate. A filter-only search_bool returns every admitted doc at
     score 0, so its rows are the admitted set. A string value against an
-    integer column is cast to it in both."""
+    integer column is parsed as a number in both, as ES parses it: a
+    fractional range bound compares as that number, an integral term
+    value ("300.0" too) matches the integer."""
     import pandas as pd
 
     import newssearchengine_spark.plans.search as S
@@ -1274,6 +1280,12 @@ def test_meta_filter_admitted_ids_match_pandas(spark, index_dir,
         # a string value against an integer column is cast to it
         ({"range": {"content_len": {"gte": "300"}}}, cl >= 300),
         ({"term": {"content_len": str(cl.iloc[0])}}, cl == cl.iloc[0]),
+        ({"range": {"content_len": {"gte": "300.5"}}}, cl >= 300.5),
+        ({"range": {"content_len": {"gt": "500", "lte": "2000.5"}}},
+         (cl > 500) & (cl <= 2000.5)),
+        ({"term": {"content_len": f"{cl.iloc[0]}.0"}}, cl == cl.iloc[0]),
+        ({"terms": {"content_len": [str(cl.iloc[0]), int(cl.iloc[1])]}},
+         cl.isin([cl.iloc[0], cl.iloc[1]])),
     ]
     si = SegmentIndex(spark, index_dir).warm()
     for clause, mask in cases:
@@ -1305,6 +1317,240 @@ def test_terms_filter_needs_an_array(spark, index_dir):
         with pytest.raises(ValueError, match="array"):
             es_search(si, {"query": {"terms": {"lang": spec}}}, size=10)
     si.close()
+
+
+def test_numeric_string_on_integer_column_errors(spark, index_dir,
+                                                 monkeypatch,
+                                                 py4j_commands):
+    """ES parses a string value against a numeric field as a number: a
+    term/terms value with a decimal part on an integer column is a 400
+    ("has a decimal part"), and so is a value that is not a number in
+    any kind. In both placements _meta_filter_pred raises ValueError,
+    not a pyarrow or Spark cast error — on the driver before any JVM
+    call."""
+    import newssearchengine_spark.plans.search as S
+
+    cases = [({"term": {"content_len": "300.5"}}, "decimal part"),
+             ({"terms": {"content_len": ["300", "300.5"]}}, "decimal part"),
+             ({"term": {"content_len": {"value": "abc"}}}, "not a number"),
+             ({"range": {"content_len": {"gte": "abc"}}}, "not a number")]
+    si = SegmentIndex(spark, index_dir).warm()
+    for cap in (S.SEARCH_DRIVER_CAP, -1):
+        monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", cap)
+        n = py4j_commands()
+        for clause, msg in cases:
+            with pytest.raises(ValueError, match=msg):
+                si.search_bool(should=["node"], filter=[clause], k=10)
+            with pytest.raises(ValueError, match=msg):
+                es_search(si, {"query": {"bool": {
+                    "must": [{"bool": {"should": [
+                        {"match": {"content": "node"}}]}}],
+                    "filter": [clause]}}}, size=10)
+        assert py4j_commands() == n or cap < 0
+    monkeypatch.undo()
+    si.close()
+
+
+@pytest.fixture(scope="module")
+def merged_dir(spark, corpus, tmp_path_factory):
+    """The fixture corpus built as two indexes split mid-doc_part and
+    merged."""
+    from newssearchengine_spark.plans.merge import merge_indexes
+
+    root = tmp_path_factory.mktemp("merged")
+    a, b, out = (str(root / n) for n in ("a", "b", "m"))
+    meta = ("repo", "path", "commit", "lang")
+    build_index(corpus.filter("doc_id < 700"), a, CFG, meta_cols=meta)
+    build_index(corpus.filter("doc_id >= 700"), b, CFG, meta_cols=meta)
+    merge_indexes(spark, a, b, out)
+    return out
+
+
+def _sorted_rows(pdf):
+    """A segment frame's rows in (term, doc_part) order, list cells as
+    lists."""
+    import numpy as np
+
+    pdf = pdf.sort_values(["term", "doc_part"], kind="mergesort")
+    return [tuple(v.tolist() if isinstance(v, np.ndarray) else v
+                  for v in row) for row in pdf.itertuples(index=False)]
+
+
+def test_resident_reader_equals_pruned_reads(spark, index_dir,
+                                             tombstoned_dir, merged_dir):
+    """A resident handle's dictionary, segment rows (scoring columns,
+    and positions) and doc-store filters give exactly what a
+    non-resident handle's pruned pyarrow reads give, on a clean index
+    with several doc_parts, a tombstoned one and a merged one."""
+    import numpy as np
+    import pandas as pd
+
+    from newssearchengine_spark.plans.search import _SCORE_COLS
+
+    metas = [{"term": {"lang": "py"}}, {"term": {"lang": {"value": "go"}}},
+             {"terms": {"lang": ["py", "rs"]}},
+             {"range": {"content_len": {"gte": 300, "lt": 1200.5}}},
+             {"range": {"content_len": {"gt": "500.5"}}},
+             {"exists": {"field": "commit"}}]
+    for d in (index_dir, tombstoned_dir, merged_dir):
+        res = SegmentIndex(spark, d).warm()
+        pruned = SegmentIndex(spark, d, cache=False)
+        assert res._reader is not None and pruned._resident() is None
+        vocab = sorted(pd.read_parquet(os.path.join(d, "term_stats"))["term"])
+        terms = vocab[::3] + ["zzz_absent"]
+        got = res._term_stats(terms)
+        assert got == pruned._term_stats(terms)
+        assert got["zzz_absent"] == (0, 0) and got[vocab[0]][0] > 0
+        parts = set()
+        for cols in (list(_SCORE_COLS), ["doc_part", "term", "docs", "tfs",
+                                         "dls", "positions"]):
+            a = res._read_buckets("segments", terms, cols)
+            b = pruned._read_buckets("segments", terms, cols)
+            assert list(a.columns) == cols
+            assert list(a.dtypes) == list(b.dtypes)
+            assert len(a) and _sorted_rows(a) == _sorted_rows(b)
+            parts |= set(a["doc_part"].tolist())
+        assert len(parts) > 1
+        for clause in metas:
+            mc = res._parse_filters([clause])[1]
+            ids = res._doc_ids(mc)
+            assert ids.size and np.array_equal(ids, pruned._doc_ids(mc))
+        assert np.array_equal(res._doc_ids(), pruned._doc_ids())
+        res.close()
+
+
+def test_cold_handle_first_touch_under_threads(spark, index_dir,
+                                               monkeypatch):
+    """Threads that first touch a cold handle at once share one reader
+    load, and each reply equals the serial reply of a warm handle."""
+    import sys
+    import threading
+    import time
+
+    import newssearchengine_spark.plans.search as S
+
+    bodies = [{"query": {"match": {"content": "node cursor"}}},
+              {"query": {"match_phrase": {"content": "node cursor"}}},
+              {"query": {"bool": {
+                  "must": [{"match": {"content": "shard"}}],
+                  "filter": [{"term": {"lang": "py"}}]}}},
+              {"query": {"prefix": {"content": "get"}}}]
+    ref = SegmentIndex(spark, index_dir).warm()
+    want = [es_search(ref, b, size=20).collect() for b in bodies]
+    ref.close()
+    loads = []
+
+    class Slow(S.ResidentReader):
+        def __init__(self, index_dir):
+            loads.append(index_dir)
+            time.sleep(0.2)  # every thread arrives mid-load
+            super().__init__(index_dir)
+
+    monkeypatch.setattr(S, "ResidentReader", Slow)
+    si = SegmentIndex(spark, index_dir)
+    n = 8
+    barrier = threading.Barrier(n)
+    got: dict = {}
+
+    def client(i):
+        barrier.wait()
+        got[i] = es_search(si, bodies[i % len(bodies)], size=20).collect()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(n)]
+    try:
+        for t in threads:
+            t.start()
+    finally:
+        for t in threads:
+            t.join(timeout=120)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(got) == list(range(n))
+    for i in range(n):
+        assert got[i] == want[i % len(bodies)], i
+    assert loads == [index_dir]
+    si.close()
+
+
+def test_uncached_handle_never_loads_a_reader(spark, index_dir):
+    """cache=False keeps the pruned per-request reads: no reader loads,
+    whatever the request."""
+    si = SegmentIndex(spark, index_dir, cache=False).warm()
+    assert si.search(REGIME_QUERIES[0], 10).collect()
+    assert es_search(si, {"query": {"prefix": {"content": "get"}}},
+                     size=10).collect()
+    assert si._reader is None and si._resident() is None
+
+
+def test_warm_request_opens_no_parquet_file(spark, index_dir, monkeypatch):
+    """After warm(), a driver-placed request of any kind answers from
+    the resident reader: opening a parquet file or dataset raises."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    si = SegmentIndex(spark, index_dir).warm(positions=True)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("a warm request opened parquet")
+
+    for mod, name in ((pq, "read_table"), (pq, "ParquetFile"),
+                      (pq, "ParquetDataset"), (ds, "dataset")):
+        monkeypatch.setattr(mod, name, refuse)
+    for q in REGIME_QUERIES:
+        assert si.search(q, 10).collect()
+    for call in REGIME_CALLS + FLAT_CALLS:
+        assert call(si).collect()
+    monkeypatch.undo()
+    si.close()
+
+
+def test_non_resident_handle_equals_resident(spark, index_dir,
+                                             tombstoned_dir, monkeypatch):
+    """With SEARCH_DRIVER_CAP below the index's volume (so no reader
+    loads) but above every call's read volume, each call still runs on
+    the driver — no Spark job — from pruned pyarrow reads, and its rows
+    equal the resident handle's, on a clean and a tombstoned index. A
+    cap lowered after a reader loaded bypasses that reader."""
+    import time
+
+    import newssearchengine_spark.plans.search as S
+
+    def run(si):
+        rows = [si.search(q, 20).collect() for q in REGIME_QUERIES]
+        rows += [sorted(call(si).collect())
+                 for call in REGIME_CALLS + FLAT_CALLS]
+        return [[tuple(r) for r in rs] for rs in rows]
+
+    sc = spark.sparkContext
+    for i, d in enumerate((index_dir, tombstoned_dir)):
+        res = SegmentIndex(spark, d).warm()
+        assert res._reader is not None
+        want = run(res)
+        # a cap lowered after the load bypasses the loaded reader
+        monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
+        assert res._resident() is None and res._reader is not None
+        monkeypatch.undo()
+        res.close()
+        st = res.stats
+        vol = int(st["n_docs"]) + int(st["total_tokens"]) * (
+            1 + bool(st.get("with_positions"))
+            + bool(st.get("with_term_vectors")))
+        monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", vol - 1)
+        si = SegmentIndex(spark, d).warm()
+        assert si._reader is None
+        group = f"non-resident-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            got = run(si)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        time.sleep(1.0)  # let the listener bus deliver any job start
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert got == want
+        monkeypatch.undo()
+        si.close()
 
 
 MIXED_BATCH = [
