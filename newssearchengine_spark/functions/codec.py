@@ -3,35 +3,48 @@
 This is the structure Lucene builds inside ES for the reference's index
 mapping (/root/reference/wapo/index_es.py:93-114): per-term sorted doc-id
 lists, delta-encoded and byte-compressed, with per-block maxima for
-block-max WAND pruning. All encode/decode is vectorized numpy — bulk
-operations over whole posting lists, no per-value Python in the hot path
-beyond a <=9-iteration byte-position loop.
+block-max WAND pruning.
 
-Layout per term (all little-endian-free, pure varbyte streams):
-  doc_ids : varbyte(delta(doc_ids))         (doc_ids strictly increasing)
+Layout per run — one segment chunk, a (bucket, doc_part, term) row —
+as pure varbyte streams (little-endian 7-bit groups, MSB = continuation):
+  doc_ids : varbyte(delta(doc_ids))         (strictly increasing; the
+                                             first value absolute)
   tfs     : varbyte(tf - 1)                 (tf >= 1)
   dls     : varbyte(dl)                     (per-posting doc length)
-Block metadata (block = block_size postings):
+  positions: per posting, varbyte(first position, then gaps) — every
+             posting restarts, so no state crosses a posting boundary
+Block metadata (block = block_size postings of one run):
   block_last_doc : int64[ n_blocks ]        (last doc id per block)
   block_max_tfn  : float32[ n_blocks ]      (max tf-norm upper bound per
                                              block, rounded UP one ulp so
                                              pruning is rank-safe)
+
+No value carries state across a run either, so a column of runs is
+coded as ONE stream: the writers (index_build's encoder, compaction's
+rewrite, merge's remerge) decode a whole batch of chunks with one
+vb_decode of their concatenated blobs (decode_runs — doc ids restored by
+a segmented prefix sum), filter or re-sort the flat postings, and encode
+all of them with one varbyte pass cut at the run boundaries
+(encode_runs, pyarrow arrays with one element per run). The one-run
+calls (encode_postings, decode_postings, encode_positions,
+decode_positions) are those functions on a single run.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 # -- Catalyst (codegen) counterpart of the per-posting positions encoder --
-# The per-TERM positions blob is, by construction (encode_positions), the
-# doc-order concatenation of per-POSTING independent varbyte runs: within
-# one doc the first position is absolute and the rest are gaps, so no state
-# crosses a posting boundary. That makes the packing shuffle-commutable:
-# each (doc, term) row can pack its own positions into binary BEFORE the
-# segment shuffle — in whole-stage codegen, no Python — and the encoder
-# merely byte-joins the blobs in doc order. At dim build scale this swaps
-# the shuffled representation from array<int> (4+ bytes/position plus
-# UnsafeArray headers) to ~1 byte/position varbyte.
+# A run's positions blob is the posting-order concatenation of independent
+# per-posting varbyte pieces (within one doc the first position is
+# absolute and the rest are gaps). That makes the packing
+# shuffle-commutable: each (doc, term) row can pack its own positions into
+# binary BEFORE the segment shuffle — in whole-stage codegen, no Python —
+# and the encoder decodes the joined pieces with the rest of its batch.
+# At dim build scale this swaps the shuffled representation from
+# array<int> (4+ bytes/position plus UnsafeArray headers) to ~1
+# byte/position varbyte.
 
 
 def _vb_hex(d):
@@ -70,161 +83,251 @@ def positions_pack_expr(pos):
 _THRESH = np.array([1 << (7 * k) for k in range(1, 10)], dtype=np.uint64)
 
 
+def _offsets(counts) -> np.ndarray:
+    """Run r of `counts` spans [offs[r], offs[r + 1]); offs[0] = 0."""
+    offs = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=offs[1:])
+    return offs
+
+
+def _vb_bytes(values) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized varbyte encode -> (uint8 buffer, byte offsets: value i
+    is buffer[offs[i]:offs[i + 1]], offs[0] = 0)."""
+    a = np.ascontiguousarray(values, dtype=np.uint64)
+    # exact byte count per value: 1 + number of thresholds <= value
+    nb = 1 + np.searchsorted(_THRESH, a, side="right")
+    offs = _offsets(nb)
+    starts = offs[:-1]
+    out = np.zeros(int(offs[-1]), dtype=np.uint8)
+    for k in range(int(nb.max()) if a.size else 0):
+        mask = nb > k
+        byte = ((a[mask] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
+        cont = (nb[mask] - 1 > k).astype(np.uint8) << 7
+        out[starts[mask] + k] = byte | cont
+    return out, offs
+
+
 def vb_encode(values: np.ndarray) -> bytes:
     """Vectorized varbyte encode of a uint64 array.
 
     MSB of each byte = continuation (1 = more bytes follow). Little-endian
     7-bit groups.
     """
-    a = np.ascontiguousarray(values, dtype=np.uint64)
-    if a.size == 0:
-        return b""
-    # exact byte count per value: 1 + number of thresholds <= value
-    nb = 1 + (a[:, None] >= _THRESH[None, :]).sum(axis=1)
-    ends = np.cumsum(nb)
-    starts = ends - nb
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    max_nb = int(nb.max())
-    for k in range(max_nb):
-        mask = nb > k
-        byte = ((a[mask] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nb[mask] - 1 > k).astype(np.uint8) << 7
-        out[starts[mask] + k] = byte | cont
-    return out.tobytes()
+    return _vb_bytes(values)[0].tobytes()
+
+
+def _vb_values(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """varbyte decode of a uint8 buffer -> (uint64 values, index of each
+    value's last byte)."""
+    ends = np.flatnonzero((b & 0x80) == 0)
+    starts = np.empty_like(ends)
+    if ends.size:
+        starts[0] = 0
+        starts[1:] = ends[:-1] + 1
+    lengths = ends - starts + 1
+    vals = np.zeros(ends.size, dtype=np.uint64)
+    for k in range(int(lengths.max()) if ends.size else 0):
+        mask = lengths > k
+        vals[mask] |= (b[starts[mask] + k] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(7 * k)
+    return vals, ends
 
 
 def vb_decode(buf: bytes) -> np.ndarray:
     """Vectorized varbyte decode -> uint64 array."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    ends = np.flatnonzero((b & 0x80) == 0)
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    vals = np.zeros(ends.size, dtype=np.uint64)
-    for k in range(int(lengths.max())):
-        mask = lengths > k
-        vals[mask] |= (b[starts[mask] + k] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(7 * k)
-    return vals
+    return _vb_values(np.frombuffer(buf, dtype=np.uint8))[0]
 
 
-def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-                    *, k1: float, b: float, avgdl: float,
-                    block_size: int) -> tuple[bytes, bytes, bytes, np.ndarray, np.ndarray]:
-    """Sorted postings -> (docs_blob, tfs_blob, dls_blob, block_last, block_max_tfn).
-
-    tf-norm upper bound per block uses the BM25 tf saturation
-    tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)) — multiply by idf at query time.
-    """
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    order_ok = doc_ids[:-1] < doc_ids[1:]
-    if doc_ids.size > 1 and not bool(order_ok.all()):
-        raise ValueError("doc_ids must be strictly increasing")
-    tfs = np.asarray(tfs, dtype=np.int64)
-    dls = np.asarray(dls, dtype=np.int64)
-
-    deltas = np.empty_like(doc_ids)
-    if doc_ids.size:
-        deltas[0] = doc_ids[0]
-        deltas[1:] = np.diff(doc_ids)
-    docs_blob = vb_encode(deltas.astype(np.uint64))
-    tfs_blob = vb_encode((tfs - 1).astype(np.uint64))
-    dls_blob = vb_encode(dls.astype(np.uint64))
-    return (docs_blob, tfs_blob, dls_blob,
-            *block_meta(doc_ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
-                        block_size=block_size))
+def _joined(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """A column of blobs (None reads as empty) -> (their concatenation as
+    uint8, byte offsets: blob r is [offs[r], offs[r + 1]))."""
+    if isinstance(blobs, list) and len(blobs) == 1:
+        # one run (the read path's per-chunk decode): no copy at all
+        buf = np.frombuffer(blobs[0] or b"", np.uint8)
+        return buf, np.array([0, buf.size], dtype=np.int64)
+    arr = pa.array(blobs, pa.large_binary(), from_pandas=True)
+    n = len(arr)
+    offs = np.frombuffer(arr.buffers()[1], np.int64, n + 1, 8 * arr.offset)
+    data = arr.buffers()[2]
+    buf = (np.frombuffer(data, np.uint8)[offs[0]:offs[-1]] if data is not None
+           else np.empty(0, np.uint8))
+    return buf, offs - offs[0]
 
 
-def block_meta(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-               *, k1: float, b: float, avgdl: float,
-               block_size: int) -> tuple[np.ndarray, np.ndarray]:
-    """(block_last, block_max_tfn) of sorted postings — encode_postings'
-    block metadata, alone for a rewrite whose postings (so blobs) are
-    unchanged but whose avgdl moved."""
+def _blob_array(buf: np.ndarray, offs: np.ndarray) -> pa.Array:
+    """uint8 buffer + byte offsets -> binary array, element r the bytes
+    buf[offs[r]:offs[r + 1]] (no copy per element)."""
+    return pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(), offs.size - 1,
+        [None, pa.py_buffer(np.ascontiguousarray(offs, np.int64)),
+         pa.py_buffer(np.ascontiguousarray(buf))])
+
+
+def _cut(values, counts) -> pa.Array:
+    """varbyte of `values` cut into runs of `counts` values each."""
+    buf, offs = _vb_bytes(values)
+    return _blob_array(buf, offs[_offsets(counts)])
+
+
+def _segmented_cumsum(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Running sum of `deltas` restarting at every run of `counts` values.
+    One cumsum over all runs in uint64 (two's-complement wraparound),
+    then each run's carried-in base subtracted: the difference is exact
+    even where the sum across runs overflows, because every run's own
+    sum fits int64."""
+    cs = np.cumsum(deltas, dtype=np.uint64)
+    if counts.size == 1:  # one run: nothing to subtract
+        return cs.view(np.int64)
+    base = np.concatenate((np.zeros(1, np.uint64), cs))[_offsets(counts)[:-1]]
+    return (cs - np.repeat(base, counts)).view(np.int64)
+
+
+def decode_runs(docs, tfs, dls) -> tuple[np.ndarray, np.ndarray, np.ndarray,
+                                         np.ndarray]:
+    """Columns of per-run blobs (encode_runs' docs / tfs / dls) ->
+    (doc_ids, tfs, dls, counts): every run's postings in run order,
+    int64, run r holding counts[r] of them."""
+    buf, offs = _joined(docs)
+    deltas, ends = _vb_values(buf)
+    counts = (np.array([ends.size]) if offs.size == 2  # one run
+              else np.diff(np.searchsorted(ends, offs)))
+    ids = _segmented_cumsum(deltas, counts)
+    tf = _vb_values(_joined(tfs)[0])[0].astype(np.int64) + 1
+    dl = _vb_values(_joined(dls)[0])[0].astype(np.int64)
+    return ids, tf, dl, counts
+
+
+def _block_meta(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                    counts: np.ndarray, *, k1: float, b: float, avgdl: float,
+                    block_size: int) -> tuple[pa.Array, pa.Array]:
+    """(block_last, block_max_tfn) list arrays, one element per run: a run
+    is cut into blocks of block_size postings; a block's bound is its max
+    tf-norm as float32 rounded up one ulp, so it never underestimates."""
+    counts = np.asarray(counts, dtype=np.int64)
     tfn = tf_norm(np.asarray(tfs, np.float64), np.asarray(dls, np.float64),
                   k1=k1, b=b, avgdl=avgdl)
-    n = len(doc_ids)
-    n_blocks = (n + block_size - 1) // block_size
-    block_last = np.empty(n_blocks, dtype=np.int64)
-    block_max = np.empty(n_blocks, dtype=np.float32)
-    for i in range(n_blocks):
-        lo, hi = i * block_size, min((i + 1) * block_size, n)
-        block_last[i] = doc_ids[hi - 1]
-        # round up one ulp so the float32 bound never underestimates
-        block_max[i] = np.nextafter(
-            np.float32(tfn[lo:hi].max()), np.float32(np.inf)
-        )
-    return block_last, block_max
+    nb = -(-counts // block_size)
+    first = _offsets(nb)
+    run_lo = _offsets(counts)[:-1]
+    lo = (np.repeat(run_lo, nb)
+          + (np.arange(first[-1]) - np.repeat(first[:-1], nb)) * block_size)
+    hi = np.minimum(lo + block_size, np.repeat(run_lo + counts, nb))
+    last = np.asarray(doc_ids, np.int64)[hi - 1]
+    # the blocks tile the postings in order, so reduceat's segments
+    # [lo[i], lo[i + 1]) are exactly the blocks
+    mx = (np.maximum.reduceat(tfn, lo) if lo.size
+          else np.empty(0, np.float64))
+    mx = np.nextafter(mx.astype(np.float32), np.float32(np.inf))
+    offs = pa.array(first.astype(np.int32))
+    return (pa.ListArray.from_arrays(offs, pa.array(last, pa.int64())),
+            pa.ListArray.from_arrays(offs, pa.array(mx, pa.float32())))
 
 
-def decode_postings(docs_blob: bytes, tfs_blob: bytes, dls_blob: bytes
-                    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inverse of encode_postings -> (doc_ids int64, tfs int64, dls int64)."""
-    deltas = vb_decode(docs_blob).astype(np.int64)
-    doc_ids = np.cumsum(deltas)
-    tfs = vb_decode(tfs_blob).astype(np.int64) + 1
-    dls = vb_decode(dls_blob).astype(np.int64)
-    return doc_ids, tfs, dls
+def encode_runs(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                counts: np.ndarray, *, k1: float, b: float, avgdl: float,
+                block_size: int) -> dict[str, pa.Array]:
+    """Postings in runs (counts[r] of them in run r, doc ids strictly
+    increasing within a run) -> the segment columns docs, tfs, dls,
+    block_last and block_max: pyarrow arrays with one element per run.
+
+    One varbyte pass per stream over every run, cut at the run
+    boundaries. The tf-norm bound uses the BM25 saturation
+    tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)) — multiply by idf at query time.
+    """
+    ids = np.asarray(doc_ids, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    dls = np.asarray(dls, dtype=np.int64)
+    counts = np.asarray(counts, dtype=np.int64)
+    deltas = np.empty_like(ids)
+    if ids.size:
+        deltas[0] = ids[0]
+        deltas[1:] = ids[1:] - ids[:-1]
+    starts = _offsets(counts)[:-1][counts > 0]
+    inner = np.ones(ids.size, dtype=bool)
+    inner[starts] = False
+    if (deltas[inner] <= 0).any():
+        raise ValueError("doc_ids must be strictly increasing")
+    deltas[starts] = ids[starts]
+    last, mx = _block_meta(ids, tfs, dls, counts, k1=k1, b=b, avgdl=avgdl,
+                           block_size=block_size)
+    return {"docs": _cut(deltas.astype(np.uint64), counts),
+            "tfs": _cut((tfs - 1).astype(np.uint64), counts),
+            "dls": _cut(dls.astype(np.uint64), counts),
+            "block_last": last, "block_max": mx}
 
 
-def encode_positions(flat_pos: np.ndarray, tfs: np.ndarray) -> bytes:
-    """Per-posting token positions -> one varbyte blob.
+def encode_positions_runs(flat_pos: np.ndarray, tfs: np.ndarray,
+                          counts: np.ndarray) -> pa.Array:
+    """Per-posting token positions -> one positions blob per run.
 
-    `flat_pos` is the concatenation (doc order) of each posting's strictly
-    increasing position list; `tfs` gives the per-posting list lengths
-    (positions-per-doc == tf by construction). Within each doc the
-    positions are delta-encoded (first absolute, rest gaps); the per-doc
+    `flat_pos` is the concatenation (posting order) of each posting's
+    strictly increasing position list; `tfs` gives the per-posting list
+    lengths (positions-per-doc == tf by construction) and `counts` the
+    postings per run. Within each posting the positions are
+    delta-encoded (first absolute, rest gaps); the per-posting
     boundaries are NOT stored — the decoder re-derives them from tfs,
-    which the postings blob already carries. This is the Lucene positional
-    posting shape ES stores for the reference's `term_vector: 'yes'`
-    mapping (/root/reference/wapo/index_es.py:99).
+    which the postings blob already carries. This is the Lucene
+    positional posting shape ES stores for the reference's
+    `term_vector: 'yes'` mapping (the reference's wapo/index_es.py:99).
     """
     flat_pos = np.asarray(flat_pos, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
     if flat_pos.size != int(tfs.sum()):
         raise ValueError("flat positions length must equal sum(tfs)")
-    if flat_pos.size == 0:
-        return b""
     deltas = np.empty_like(flat_pos)
-    deltas[0] = flat_pos[0]
-    deltas[1:] = flat_pos[1:] - flat_pos[:-1]
-    starts = np.r_[0, np.cumsum(tfs)[:-1]]
-    deltas[starts] = flat_pos[starts]  # absolute restart at each doc
+    if flat_pos.size:
+        deltas[0] = flat_pos[0]
+        deltas[1:] = flat_pos[1:] - flat_pos[:-1]
+    first = _offsets(tfs)
+    starts = first[:-1][tfs > 0]
+    deltas[starts] = flat_pos[starts]  # absolute restart at each posting
     if (deltas < 0).any():
         raise ValueError("positions must be strictly increasing per doc")
-    return vb_encode(deltas.astype(np.uint64))
+    return _cut(deltas.astype(np.uint64), np.diff(first[_offsets(counts)]))
 
 
-def pack_positions(flat_pos: np.ndarray, tfs: np.ndarray) -> list[bytes]:
-    """encode_positions cut per posting: blob i holds posting i's
+def decode_positions_runs(blobs, tfs: np.ndarray) -> np.ndarray:
+    """Inverse of encode_positions_runs over a column of runs' blobs ->
+    flat int64 positions (len sum(tfs)), tfs the postings' tfs in run
+    order: one decode, one segmented prefix sum over the postings."""
+    deltas = _vb_values(_joined(blobs)[0])[0]
+    return _segmented_cumsum(deltas, np.asarray(tfs, dtype=np.int64))
+
+
+def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                    *, k1: float, b: float, avgdl: float,
+                    block_size: int) -> tuple[bytes, bytes, bytes, np.ndarray, np.ndarray]:
+    """One run of sorted postings -> (docs_blob, tfs_blob, dls_blob,
+    block_last, block_max_tfn)."""
+    enc = encode_runs(doc_ids, tfs, dls, [len(doc_ids)], k1=k1, b=b,
+                      avgdl=avgdl, block_size=block_size)
+    return (enc["docs"][0].as_py(), enc["tfs"][0].as_py(),
+            enc["dls"][0].as_py(),
+            enc["block_last"].values.to_numpy(),
+            enc["block_max"].values.to_numpy())
+
+
+def decode_postings(docs_blob: bytes, tfs_blob: bytes, dls_blob: bytes
+                    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Inverse of encode_postings -> (doc_ids int64, tfs int64, dls int64)."""
+    return decode_runs([docs_blob], [tfs_blob], [dls_blob])[:3]
+
+
+def encode_positions(flat_pos: np.ndarray, tfs: np.ndarray) -> bytes:
+    """One run's positions -> its blob (encode_positions_runs)."""
+    return encode_positions_runs(flat_pos, tfs, [len(tfs)])[0].as_py()
+
+
+def pack_positions(flat_pos: np.ndarray, tfs: np.ndarray) -> pa.Array:
+    """encode_positions cut per posting: element i holds posting i's
     positions, bit-identical to positions_pack_expr on its array (the
     driver-placed build's form of the pre-shuffle pack). Their
-    doc-order concatenation is encode_positions(flat_pos, tfs)."""
-    blob = encode_positions(flat_pos, tfs)
-    # a varbyte value ends at the byte whose continuation bit is clear;
-    # a posting ends with its tf-th value
-    ends = np.flatnonzero((np.frombuffer(blob, np.uint8) & 0x80) == 0) + 1
-    cut = np.r_[0, ends[np.cumsum(np.asarray(tfs, np.int64)) - 1]]
-    return [blob[a:b] for a, b in zip(cut[:-1].tolist(), cut[1:].tolist())]
+    posting-order concatenation is encode_positions(flat_pos, tfs)."""
+    return encode_positions_runs(flat_pos, tfs, np.ones(len(tfs), np.int64))
 
 
 def decode_positions(blob: bytes, tfs: np.ndarray) -> np.ndarray:
-    """Inverse of encode_positions -> flat int64 positions (len sum(tfs)).
-
-    Segmented prefix-sum: a full cumsum, then subtract each doc's carried-in
-    base (the cumsum value just before the doc's first delta) — fully
-    vectorized, no per-doc loop.
-    """
-    tfs = np.asarray(tfs, dtype=np.int64)
-    deltas = vb_decode(blob).astype(np.int64)
-    if deltas.size == 0:
-        return np.empty(0, dtype=np.int64)
-    flat = np.cumsum(deltas)
-    starts = np.r_[0, np.cumsum(tfs)[:-1]]
-    bases = np.r_[0, flat[starts[1:] - 1]] if starts.size > 1 else np.zeros(1, np.int64)
-    return flat - np.repeat(bases, tfs)
+    """Inverse of encode_positions -> flat int64 positions (len sum(tfs))."""
+    return decode_positions_runs([blob], tfs)
 
 
 def tf_norm(tfs: np.ndarray, dls: np.ndarray, *, k1: float, b: float,

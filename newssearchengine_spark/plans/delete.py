@@ -20,11 +20,13 @@ missing docs are re-added via single-doc upserts, wapo/index_es.py:187-192
 
 - ``compact_index`` physically expunges tombstones into a new index dir:
   each (bucket, doc_part, term) chunk drops its dead postings and
-  re-encodes under the NEW avgdl (the ``_make_rewriter`` closure),
-  term_stats re-aggregate from the rewritten segments, and the doc store
-  / term vectors drop the dead set. The output is identical (rank AND
-  score) to a from-scratch build over the live corpus — pytest-pinned in
-  tests/test_delete.py. Two placements of the same closure
+  re-encodes under the NEW avgdl (the ``_make_rewriter`` closure: a
+  whole batch of chunks decoded at once, one np.isin against the dead
+  ids, every surviving chunk re-encoded to the bytes a fresh build
+  writes), term_stats re-aggregate from the rewritten segments, and the
+  doc store / term vectors drop the dead set. The output is identical
+  (rank AND score) to a from-scratch build over the live corpus —
+  pytest-pinned in tests/test_delete.py. Two placements of the same closure
   (index_build.write_on_driver): when the input's n_docs and
   total_tokens (stats.json, scaled by positions and term vectors) prove
   the volume fits SEARCH_DRIVER_CAP and the dead ids fit the driver
@@ -45,19 +47,16 @@ import uuid
 import zlib
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codec import (block_meta, decode_positions, decode_postings,
-                               encode_positions, encode_postings)
 from .index_build import (SEGMENT_ARROW, SEGMENT_SCHEMA, TERM_VECTORS_ARROW,
                           TERM_VECTORS_SCHEMA, _atomic_write_json,
                           _manifest_path, bucket_expr, frame_table,
-                          read_frame, write_on_driver, write_segments,
-                          write_table)
+                          read_frame, segment_postings, segment_rows,
+                          write_on_driver, write_segments, write_table)
 
 TOMBSTONE_DIR = "tombstones"
 
@@ -160,48 +159,32 @@ def _dead_relation(spark: SparkSession, index_dir: str) -> DataFrame | None:
 def _make_rewriter(stats: dict, avgdl: float):
     """Compaction's chunk rewrite, for mapInPandas over segment rows
     joined with their doc_part's `dead_ids` (None when the part lost
-    nothing) — or called with [frame] on the driver: drop the dead
-    postings (and their positions) and re-encode, recompute every
-    chunk's block-max bounds under the new avgdl, and drop chunks left
-    empty."""
-    k1, b = float(stats["k1"]), float(stats["b"])
-    block_size = int(stats["block_size"])
+    nothing) — or called on the driver with [segment frame] and the
+    whole dead set. Per batch: decode every chunk at once, drop the
+    postings of one np.isin against the dead ids (positions with them),
+    and re-encode what is left under the new avgdl (segment_rows) —
+    chunks left empty drop out. A doc id lives in exactly one doc_part,
+    so testing every posting against the union of the batch's dead
+    lists drops exactly what each part's own list would."""
+    params = dict(k1=float(stats["k1"]), b=float(stats["b"]), avgdl=avgdl,
+                  block_size=int(stats["block_size"]))
     with_positions = bool(stats.get("with_positions", False))
-    out_cols = [c.strip().split(" ")[0] for c in SEGMENT_SCHEMA.split(",")]
 
-    def rewrite(batches):
+    def rewrite(batches, dead=None):
         for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                ids, tfs, dls = decode_postings(r.docs, r.tfs, r.dls)
-                keep = (~np.isin(ids, np.asarray(r.dead_ids, dtype=np.int64))
-                        if isinstance(r.dead_ids, (list, np.ndarray))
-                        and len(r.dead_ids) else None)
-                if keep is None or keep.all():
-                    # no posting dropped: the blobs stand, only the
-                    # block-max bounds move with avgdl
-                    enc = (r.docs, r.tfs, r.dls,
-                           *block_meta(ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
-                                       block_size=block_size))
-                    pos_b = r.positions if with_positions else None
-                elif not keep.any():
-                    continue
-                else:
-                    if with_positions:
-                        flat = decode_positions(r.positions or b"", tfs)
-                        per_post = np.split(flat, np.cumsum(tfs)[:-1])
-                        kept = [p for p, kp in zip(per_post, keep) if kp]
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    enc = encode_postings(ids, tfs, dls, k1=k1, b=b,
-                                          avgdl=avgdl, block_size=block_size)
-                    pos_b = (encode_positions(np.concatenate(kept), tfs)
-                             if with_positions else None)
-                rows.append(
-                    (int(r.bucket), int(r.doc_part), r.term,
-                     int(ids.size), int(tfs.sum()), *enc[:3],
-                     enc[3].tolist(), enc[4].astype(np.float32).tolist(),
-                     pos_b))
-            yield pd.DataFrame(rows, columns=out_cols)
+            if dead is None:
+                lists = pdf["dead_ids"][~pdf["doc_part"].duplicated()]
+                gone = np.concatenate([np.empty(0, np.int64),
+                                       *lists.dropna()]).astype(np.int64)
+            else:
+                gone = dead
+            (bucket, part, codes, terms, ids, tfs, dls,
+             pos) = segment_postings(pdf, with_positions)
+            keep = ~np.isin(ids, gone)
+            yield segment_rows(
+                bucket[keep], part[keep], codes[keep], terms, ids[keep],
+                tfs[keep], dls[keep],
+                None if pos is None else pos[np.repeat(keep, tfs)], **params)
 
     return rewrite
 
@@ -266,15 +249,9 @@ def _compact_local(index_dir: str, out_dir: str, stats: dict,
     write_table(live, os.path.join(out_dir, "doc_store"))
     avgdl = total_tokens / n_docs if n_docs else 0.0
 
-    doc_range = int(stats["doc_range"])
-    parts = dead // doc_range
-    cuts = np.flatnonzero(np.diff(parts)) + 1
-    per_part = dict(zip(parts[np.r_[0, cuts]].tolist() if dead.size else [],
-                        np.split(dead, cuts)))
     seg = read_frame(os.path.join(index_dir, "segments"), SEGMENT_ARROW,
                      "bucket")
-    seg["dead_ids"] = [per_part.get(p) for p in seg["doc_part"]]
-    (out,) = _make_rewriter(stats, avgdl)([seg])
+    (out,) = _make_rewriter(stats, avgdl)([seg], dead)
     write_segments(out, out_dir, int(stats["n_buckets"]))
     if stats.get("with_term_vectors", False):
         tv = read_frame(os.path.join(index_dir, "term_vectors"),

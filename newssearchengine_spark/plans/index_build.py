@@ -4,19 +4,22 @@ The write path of the engine — what ES does invisibly when the reference
 bulk-loads (/root/reference/wapo/index_es.py:131-185): analyze every doc,
 build per-term sorted posting lists, compress, persist.
 
-Two placements, one rule (write_on_driver): the fingerprint aggregate that
-every build runs also sums the characters of the text. Characters bound
+Two placements, one rule (write_on_driver): the fingerprint that every
+build computes also sums the characters of the text. Characters bound
 tokens, so n_docs + chars x (1 + positions + term vectors) bounds the
 rows the build produces before any data is read. When that volume fits
 plans.search.SEARCH_DRIVER_CAP the build runs on the driver (ES's small
-in-memory flush): the input is gathered with one Spark job, analyzed by
-the analyzer's pandas batch function, and encoded by the SAME
-_make_encoder closure per (bucket, doc_part) group; at most 2 Spark jobs
-in all. Above the cap it is the Spark plan:
+in-memory flush): the input is gathered, analyzed by the analyzer's
+pandas batch function, and encoded by the SAME _make_encoder closure,
+once over each wave's rows. A local relation (docs.isLocal(), e.g.
+createDataFrame of a pandas frame) is gathered by a collect() that Spark
+answers without a job and fingerprinted from those rows: 0 Spark jobs
+in all. Any other input costs the fingerprint aggregate and the gather,
+one job each: at most 2. Above the cap it is the Spark plan:
 
   corpus --analyze (codegen exprs)--> (doc_id, term, tf, dl)
          --ONE shuffle on (term_bucket, doc_part)--> groupBy.applyInPandas
-         --numpy delta+varbyte encode + block-max--> segment rows
+         --run-batched delta+varbyte encode + block-max--> segment rows
          --dynamic-partition-overwrite parquet write, partitionBy(bucket)-->
          index_dir/segments/bucket=<b>/...
          + per-bucket lineage manifest (the resume checkpoint)
@@ -52,8 +55,10 @@ import contextlib
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -62,12 +67,15 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import IndexConfig
 from ..functions.analysis import (_analyze_py_batch, doc_term_freqs,
                                   doc_term_positions)
-from ..functions.codec import (encode_postings, pack_positions,
-                               positions_pack_expr)
+from ..functions.codec import (decode_positions_runs, decode_runs,
+                               encode_positions_runs, encode_runs,
+                               pack_positions, positions_pack_expr)
 
 SEGMENT_SCHEMA = (
     "bucket int, doc_part bigint, term string, df bigint, cf bigint, "
@@ -191,19 +199,40 @@ def term_bucket(term: str, n_buckets: int) -> int:
     return zlib.crc32(term.encode("utf-8")) % n_buckets
 
 
+_CONF_LOCK = threading.Lock()
+_CONF_HELD: dict = {}
+
+
 @contextlib.contextmanager
+def _session_conf(spark, key: str, value: str):
+    """Set a session-wide SQL conf for the block. Builds on other threads
+    share the session, so the setting is reference-counted under one
+    module lock: the first entry saves the session's value and sets
+    `value`, the last exit restores the saved value — two overlapping
+    builds never restore each other's setting."""
+    slot = (spark._jsparkSession.hashCode(), key)
+    with _CONF_LOCK:
+        held = _CONF_HELD.get(slot)
+        if held is None:
+            held = _CONF_HELD[slot] = [0, spark.conf.get(key)]
+            spark.conf.set(key, value)
+        held[0] += 1
+    try:
+        yield
+    finally:
+        with _CONF_LOCK:
+            held[0] -= 1
+            if not held[0]:
+                del _CONF_HELD[slot]
+                spark.conf.set(key, held[1])
+
+
 def _one_job_per_action(spark):
     """AQE submits every shuffle stage of a plan as a Spark job of its
     own (the fingerprint aggregate alone would be two). The build's
     driver-bound actions — the fingerprint and the driver placement's
     gather — run with it off: one job each, whatever the input plan."""
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    return _session_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
 def input_fingerprint(docs: DataFrame, text_col: str) -> tuple[str, int, int]:
@@ -219,6 +248,43 @@ def input_fingerprint(docs: DataFrame, text_col: str) -> tuple[str, int, int]:
             F.sum(F.length(F.col(text_col)).cast("bigint")).alias("chars"),
         ).collect()[0]
     return f"{row['n']}:{row['s']}", int(row["n"]), int(row["chars"] or 0)
+
+
+def gathered_fingerprint(got: pa.Table) -> tuple[str, int, int]:
+    """input_fingerprint's (fingerprint, n_docs, chars) computed from the
+    gathered input (_gather's sha256 and content_len) — the same string,
+    "n:None" when no content is non-null, since resume keys on it."""
+    sha = got.column("sha256").drop_null().to_pylist()
+    s = sum(zlib.crc32(h.encode()) for h in sha) if sha else None
+    chars = pc.sum(got.column("content_len")).as_py() or 0
+    return f"{got.num_rows}:{s}", got.num_rows, int(chars)
+
+
+def _gather(docs: DataFrame, text_col: str, id_col: str,
+            meta_cols) -> pa.Table:
+    """The driver placement's input as one arrow table: doc_id, the meta
+    columns, the doc store's content_len and sha256, and the text. A
+    local relation (docs.isLocal(): rows already in the driver's JVM) of
+    flat column types is answered by collect(), which Spark serves
+    without a job; any other input by one toArrow job."""
+    sel = docs.select(
+        F.col(id_col).alias("doc_id"), *[F.col(c) for c in meta_cols],
+        F.length(F.col(text_col)).alias("content_len"),
+        F.sha2(F.col(text_col), 256).alias("sha256"),
+        F.col(text_col).alias("__text"),
+    )
+    if docs.isLocal() and all(
+            isinstance(f.dataType, T.AtomicType)
+            and not isinstance(f.dataType, T.DatetimeType)
+            for f in sel.schema):
+        rows = sel.collect()
+        schema = to_arrow_schema(sel.schema)
+        cols = list(zip(*rows)) or [()] * len(schema)
+        return pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, schema)],
+            schema=schema)
+    with _one_job_per_action(docs.sparkSession):
+        return sel.toArrow()
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:
@@ -250,72 +316,97 @@ def completed_buckets(index_dir: str, fingerprint: str) -> set[int]:
     return done
 
 
-def _make_encoder(cfg: IndexConfig, avgdl: float):
-    """Closure for groupBy(bucket, doc_part).applyInPandas: encode every
-    term's postings in the group. Vectorized numpy per term; the only loop
-    is over distinct terms in the group (bounded by vocab / n_buckets)."""
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-    block_size = cfg.block_size
+def segment_rows(bucket, doc_part, codes, terms, ids, tfs, dls, flat_pos,
+                 *, k1: float, b: float, avgdl: float,
+                 block_size: int) -> pd.DataFrame:
+    """Postings in any order -> segment rows, one per (bucket, doc_part,
+    term) chunk. Posting i belongs to the chunk (bucket[i], doc_part[i],
+    terms[codes[i]]) — codes index the sorted distinct terms — and its
+    positions are its tfs[i] values of flat_pos (in posting order; None
+    without positions). One sort by (bucket, term, doc_part, doc_id), the
+    positions moved with their posting through one gather index, and one
+    encode_runs over all the chunks: the write path's shared tail."""
+    bucket, doc_part, codes, ids, tfs, dls = (
+        np.asarray(x, dtype=np.int64)
+        for x in (bucket, doc_part, codes, ids, tfs, dls))
+    order = np.lexsort((ids, doc_part, codes, bucket))
+    pos_at = np.cumsum(tfs) - tfs  # each posting's first position
+    bucket, doc_part, codes, ids, tfs, dls, pos_at = (
+        x[order] for x in (bucket, doc_part, codes, ids, tfs, dls, pos_at))
+    new = np.ones(ids.size, dtype=bool)
+    new[1:] = ((bucket[1:] != bucket[:-1]) | (codes[1:] != codes[:-1])
+               | (doc_part[1:] != doc_part[:-1]))
+    starts = np.flatnonzero(new)
+    counts = np.diff(np.append(starts, ids.size))
+    enc = encode_runs(ids, tfs, dls, counts, k1=k1, b=b, avgdl=avgdl,
+                      block_size=block_size)
+    positions = None
+    if flat_pos is not None:
+        pos = np.asarray(flat_pos, dtype=np.int64)[
+            np.repeat(pos_at - (np.cumsum(tfs) - tfs), tfs)
+            + np.arange(int(tfs.sum()))]
+        positions = encode_positions_runs(pos, tfs, counts).to_numpy(
+            zero_copy_only=False)
+    return pd.DataFrame({
+        "bucket": bucket[starts].astype(np.int32),
+        "doc_part": doc_part[starts],
+        "term": np.asarray(terms, dtype=object)[codes[starts]],
+        "df": counts,
+        "cf": (np.add.reduceat(tfs, starts) if starts.size
+               else np.empty(0, np.int64)),
+        **{c: a.to_numpy(zero_copy_only=False) for c, a in enc.items()},
+        "positions": positions,
+    })
 
+
+def segment_postings(seg: pd.DataFrame, with_positions: bool) -> tuple:
+    """Segment rows -> their postings, segment_rows' arguments: (bucket,
+    doc_part, codes, terms, ids, tfs, dls, flat_pos) with every chunk
+    decoded in one decode_runs (and one positions decode)."""
+    ids, tfs, dls, counts = decode_runs(seg["docs"], seg["tfs"], seg["dls"])
+    run = np.repeat(np.arange(len(seg)), counts)
+    codes, terms = pd.factorize(seg["term"], sort=True)
+    return (seg["bucket"].to_numpy()[run], seg["doc_part"].to_numpy()[run],
+            codes[run], terms, ids, tfs, dls,
+            decode_positions_runs(seg["positions"], tfs) if with_positions
+            else None)
+
+
+def _make_encoder(cfg: IndexConfig, avgdl: float):
+    """Closure for groupBy(bucket, doc_part).applyInPandas — or called
+    once with a whole wave's analyzed rows on the driver: every
+    (bucket, doc_part, term) chunk's postings sorted and encoded in one
+    segment_rows pass, no loop over terms. The rows' positions arrive
+    varbyte-packed per posting (positions_pack_expr ran pre-shuffle, in
+    codegen; pack_positions on the driver) and are decoded as one
+    stream."""
+    params = dict(k1=cfg.bm25.k1, b=cfg.bm25.b, avgdl=avgdl,
+                  block_size=cfg.block_size)
     with_positions = cfg.with_positions
 
+    # no annotations: pyspark cannot classify the two-arg (key, pdf)
+    # grouped-map signature from hints and warns on any annotated fn
     def encode_group(key, pdf):
-        bucket, doc_part = int(key[0]), int(key[1])
-        pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-        terms = pdf["term"].to_numpy()
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        dls = pdf["dl"].to_numpy(dtype=np.int64)
-        poss = pdf["positions"].to_numpy() if with_positions else None
-        bounds = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-        starts = np.r_[0, bounds]
-        ends = np.r_[bounds, terms.size]
-        rows = []
-        for s, e in zip(starts, ends):
-            docs_b, tfs_b, dls_b, blast, bmax = encode_postings(
-                ids[s:e], tfs[s:e], dls[s:e],
-                k1=k1, b=b, avgdl=avgdl, block_size=block_size,
-            )
-            if with_positions:
-                # rows arrive with their positions ALREADY varbyte-packed
-                # (positions_pack_expr ran pre-shuffle, in codegen); the
-                # per-term blob is just the doc-order concatenation —
-                # bit-identical to encode_positions on the flat list
-                pos_b = b"".join(poss[s:e])
-            else:
-                pos_b = None
-            rows.append(
-                (bucket, doc_part, terms[s], int(e - s), int(tfs[s:e].sum()),
-                 docs_b, tfs_b, dls_b, blast.tolist(),
-                 bmax.astype(np.float32).tolist(), pos_b)
-            )
-        return pd.DataFrame(
-            rows,
-            columns=["bucket", "doc_part", "term", "df", "cf",
-                     "docs", "tfs", "dls", "block_last", "block_max",
-                     "positions"],
-        )
+        tfs = pdf["tf"].to_numpy(np.int64)
+        codes, terms = pd.factorize(pdf["term"], sort=True)
+        return segment_rows(
+            pdf["bucket"], pdf["doc_part"], codes, terms, pdf["doc_id"],
+            tfs, pdf["dl"],
+            decode_positions_runs(pdf["positions"], tfs) if with_positions
+            else None, **params)
 
     return encode_group
 
 
-def _analyze_local(docs: DataFrame, cfg: IndexConfig, text_col: str,
-                   id_col: str, meta_cols) -> tuple[pd.DataFrame, pa.Table]:
-    """The driver placement's analysis. The input is gathered with one
-    Spark job (the doc store's content_len and sha256 computed in it) and
+def _analyze_local(got: pa.Table, cfg: IndexConfig
+                   ) -> tuple[pd.DataFrame, pa.Table]:
+    """The driver placement's analysis of the gathered input (_gather),
     tokenized by the analyzer's pandas batch function — the one the
     news/german Spark plans run, tested equal to analyze_expr in code
     mode. Returns the (doc_id, term, tf, dl[, positions], bucket,
     doc_part) rows the Spark plan shuffles — positions varbyte-packed
     per row exactly as positions_pack_expr packs them — and the doc
     store table, dl included."""
-    with _one_job_per_action(docs.sparkSession):
-        got = docs.select(
-            F.col(id_col).alias("doc_id"), *[F.col(c) for c in meta_cols],
-            F.length(F.col(text_col)).alias("content_len"),
-            F.sha2(F.col(text_col), 256).alias("sha256"),
-            F.col(text_col).alias("__text"),
-        ).toArrow()
     toks = _analyze_py_batch(got.column("__text").to_pandas(), cfg.analyzer)
     lens = toks.map(len).to_numpy(dtype=np.int64)
     store = got.drop_columns(["__text"]).append_column(
@@ -343,7 +434,8 @@ def _analyze_local(docs: DataFrame, cfg: IndexConfig, text_col: str,
         "dl": lens[doc[first]].astype(np.int32),
     })
     if cfg.with_positions:
-        rows["positions"] = pack_positions(pos[order], tfs)
+        rows["positions"] = pack_positions(pos[order], tfs).to_numpy(
+            zero_copy_only=False)
     buckets = np.array([term_bucket(t, cfg.n_buckets) for t in uniq],
                        dtype=np.int32)
     rows["bucket"] = buckets[codes[first]]
@@ -430,20 +522,28 @@ def build_index(
     def mark(name):
         phases[name] = round(time.time() - t_start - sum(phases.values()), 3)
 
-    fp, n_docs, chars = input_fingerprint(docs, text_col)
+    # a local relation's rows are on the driver already: gather them
+    # (no job) and fingerprint them there
+    got = (_gather(docs, text_col, id_col, meta_cols) if docs.isLocal()
+           else None)
+    fp, n_docs, chars = (gathered_fingerprint(got) if got is not None
+                         else input_fingerprint(docs, text_col))
     mark("fingerprint")
     local = write_on_driver(n_docs, chars, cfg.with_positions,
                             cfg.with_term_vectors)
 
     # ---- analyze once; reuse for stats, doc store, and segments ----
     if local:
-        tf, store = _analyze_local(docs, cfg, text_col, id_col, meta_cols)
+        tf, store = _analyze_local(
+            got if got is not None
+            else _gather(docs, text_col, id_col, meta_cols), cfg)
         total_tokens = int(tf["tf"].sum())
     else:
         analyze = doc_term_positions if cfg.with_positions else doc_term_freqs
         tf = analyze(docs, text_col=text_col, id_col=id_col,
                      cfg=cfg.analyzer).persist()
         total_tokens = tf.agg(F.sum(F.col("tf").cast("bigint"))).collect()[0][0] or 0
+    got = None  # above the cap the Spark plan reads the input itself
     avgdl = float(total_tokens) / n_docs if n_docs else 0.0
     mark("analyze")
 
@@ -553,11 +653,12 @@ def build_index(
             (F.col("doc_id") / cfg.doc_range).cast("bigint").alias("doc_part"),
             *keyed_cols,
         )
-        old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                  "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     built = 0
-    try:
+    with contextlib.ExitStack() as stack:
+        if not local:
+            stack.callback(tf.unpersist)
+            stack.enter_context(_session_conf(
+                spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"))
         waves = np.array_split(np.array(pending, dtype=int), max(1, n_waves))
         for wave in waves:
             wave = [int(x) for x in wave]
@@ -573,11 +674,6 @@ def build_index(
             _write_manifests(index_dir, wave, counts, fp, t_wave)
             mark(f"manifests_wave{built}")
             built += len(wave)
-    finally:
-        if not local:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           old_mode)
-            tf.unpersist()
 
     return {
         "n_docs": n_docs,
@@ -592,26 +688,24 @@ def build_index(
 
 
 def _segments_local(tf: pd.DataFrame, encoder, wave, seg_dir: str) -> dict:
-    """One wave on the driver: the encoder closure per (bucket, doc_part)
-    group of the analyzed rows, each bucket's rows written into
-    bucket=<b> (a bucket with no rows left without a directory, as the
-    Spark write leaves it). Returns the wave's manifest counts."""
+    """One wave on the driver: the encoder closure once over the wave's
+    analyzed rows, each bucket's rows written into bucket=<b> (a bucket
+    with no rows left without a directory, as the Spark write leaves
+    it). Returns the wave's manifest counts."""
     os.makedirs(seg_dir, exist_ok=True)  # as the Spark write leaves it
-    sub = tf[tf["bucket"].isin(wave)]
-    parts: dict[int, list] = {}
-    for key, grp in sub.groupby(["bucket", "doc_part"], sort=True):
-        parts.setdefault(int(key[0]), []).append(encoder(key, grp))
+    seg = encoder(None, tf[tf["bucket"].isin(wave)])
+    rows = seg["bucket"].to_numpy()  # segment_rows sorts by bucket first
     counts = {}
-    for bkt in wave:
+    for bkt, lo, hi in zip(wave, np.searchsorted(rows, wave, "left"),
+                           np.searchsorted(rows, wave, "right")):
         bdir = os.path.join(seg_dir, f"bucket={bkt}")
-        if bkt not in parts:
+        if lo == hi:
             shutil.rmtree(bdir, ignore_errors=True)
             continue
-        seg = pd.concat(parts[bkt], ignore_index=True).sort_values(
-            ["term", "doc_part"], kind="mergesort")
-        write_table(frame_table(seg, SEGMENT_ARROW).drop_columns(["bucket"]),
+        part = seg.iloc[lo:hi]
+        write_table(frame_table(part, SEGMENT_ARROW).drop_columns(["bucket"]),
                     bdir)
-        counts[bkt] = _bucket_counts(seg)
+        counts[bkt] = _bucket_counts(part)
     return counts
 
 

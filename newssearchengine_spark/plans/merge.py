@@ -14,17 +14,21 @@ Semantics that make this more than a file concat:
   from-scratch build over the union corpus; asserted in tests).
 - chunks with the same (bucket, term, doc_part) from both sides are
   merge-sorted into one chunk by the ``_make_remerger`` closure (doc-id
-  spaces must be disjoint — validated).
+  spaces must be disjoint — validated): every chunk is decoded, each
+  chunk's postings sorted by doc id with one lexsort, and every chunk
+  re-encoded with the run-batched codec — a chunk present on one side
+  only is re-encoded too, to the same bytes (varbyte is deterministic).
 - skew story is unchanged: the unit of work is (bucket, doc_part), so hot
   terms stay chunked across doc ranges.
 
 Two placements of the same closure (index_build.write_on_driver): when
 both sides' n_docs and total_tokens (stats.json, scaled by positions and
 term vectors) prove the merged volume fits SEARCH_DRIVER_CAP, the merge
-runs on the driver over pyarrow reads, grouping with pandas, and writes
-each table to a hidden temp directory renamed into place
-(index_build.write_table) — no Spark job. Above it, one Spark shuffle on
-(bucket, doc_part) runs the closure in applyInPandas.
+runs on the driver over pyarrow reads, the closure called once over
+both sides' whole segment tables, and writes each table to a hidden
+temp directory renamed into place (index_build.write_table) — no Spark
+job. Above it, one Spark shuffle on (bucket, doc_part) runs the closure
+in applyInPandas.
 """
 
 from __future__ import annotations
@@ -41,69 +45,29 @@ import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codec import (block_meta, decode_positions, decode_postings,
-                               encode_positions, encode_postings)
 from .index_build import (SEGMENT_ARROW, SEGMENT_SCHEMA, TERM_STATS_SCHEMA,
                           TERM_VECTORS_ARROW, TERM_VECTORS_SCHEMA,
                           _atomic_write_json, _manifest_path, bucket_expr,
-                          frame_table, read_frame, write_on_driver,
-                          write_segments, write_table)
+                          frame_table, read_frame, segment_postings,
+                          segment_rows, write_on_driver, write_segments,
+                          write_table)
 
 
 def _make_remerger(stats: dict, avgdl: float):
-    """The merge's per-(bucket, doc_part) closure: a term's chunks from
-    both sides decoded, merge-sorted by doc id (positions kept with
-    their posting) and re-encoded; every chunk's block-max bounds
-    recomputed under the merged avgdl."""
-    k1, b = stats["k1"], stats["b"]
-    block_size = stats["block_size"]
+    """The merge's closure, per (bucket, doc_part) group in applyInPandas
+    or once over both sides' whole segment tables on the driver: decode
+    every chunk at once, merge-sort each term's postings from both
+    sides by doc id (segment_rows' one lexsort; positions move with
+    their posting) and re-encode them, block-max bounds under the
+    merged avgdl."""
+    params = dict(k1=stats["k1"], b=stats["b"], avgdl=avgdl,
+                  block_size=stats["block_size"])
     with_positions = bool(stats.get("with_positions", False))
 
     # no annotations: pyspark cannot classify the two-arg (key, pdf)
     # grouped-map signature from hints and warns on any annotated fn
     def remerge(key, pdf):
-        bucket, doc_part = int(key[0]), int(key[1])
-        pdf = pdf.sort_values("term", kind="mergesort")
-        terms = pdf["term"].to_numpy()
-        docs, tfs_c, dls_c = (pdf[c].to_numpy() for c in ("docs", "tfs", "dls"))
-        poss = pdf["positions"].to_numpy() if with_positions else None
-        bounds = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-        rows = []
-        for lo, hi in zip(np.r_[0, bounds], np.r_[bounds, terms.size]):
-            if lo == hi:  # an empty group
-                continue
-            if hi - lo == 1:
-                # one side holds the term here: its blobs stand, only
-                # the block-max bounds move with avgdl
-                ids, tfs, dls = decode_postings(docs[lo], tfs_c[lo], dls_c[lo])
-                enc = (docs[lo], tfs_c[lo], dls_c[lo],
-                       *block_meta(ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
-                                   block_size=block_size))
-                pos_b = poss[lo] if with_positions else None
-            else:
-                ids_l, tfs_l, dls_l, pos_l = [], [], [], []
-                for j in range(lo, hi):
-                    i, t, d = decode_postings(docs[j], tfs_c[j], dls_c[j])
-                    ids_l.append(i); tfs_l.append(t); dls_l.append(d)
-                    if with_positions:
-                        flat = decode_positions(poss[j] or b"", t)
-                        # split back into per-posting lists so doc
-                        # reordering keeps each doc's positions with it
-                        pos_l.extend(np.split(flat, np.cumsum(t)[:-1]))
-                order = np.argsort(np.concatenate(ids_l), kind="mergesort")
-                ids, tfs, dls = (np.concatenate(x)[order]
-                                 for x in (ids_l, tfs_l, dls_l))
-                enc = encode_postings(ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
-                                      block_size=block_size)
-                pos_b = (encode_positions(
-                    np.concatenate([pos_l[j] for j in order]), tfs)
-                    if with_positions else None)
-            rows.append(
-                (bucket, doc_part, terms[lo], int(ids.size), int(tfs.sum()),
-                 *enc[:3], enc[3].tolist(), enc[4].astype(np.float32).tolist(),
-                 pos_b)
-            )
-        return pd.DataFrame(rows, columns=SEGMENT_ARROW.names)
+        return segment_rows(*segment_postings(pdf, with_positions), **params)
 
     return remerge
 
@@ -194,7 +158,7 @@ def merge_indexes(spark: SparkSession, index_a: str, index_b: str,
 def _merge_local(index_a: str, index_b: str, out_dir: str, stats: dict,
                  remerge) -> None:
     """The driver placement: pyarrow reads of both sides, the remerge
-    closure per (bucket, doc_part) group of their union, write_table
+    closure once over their union, write_table
     writes; term_stats are summed from the merged segments."""
     sides = (index_a, index_b)
     store_a, store_b = (pq.read_table(os.path.join(d, "doc_store"))
@@ -214,11 +178,7 @@ def _merge_local(index_a: str, index_b: str, out_dir: str, stats: dict,
 
     seg = pd.concat([read_frame(os.path.join(d, "segments"), SEGMENT_ARROW,
                                 "bucket") for d in sides], ignore_index=True)
-    out = [remerge(key, grp)
-           for key, grp in seg.groupby(["bucket", "doc_part"], sort=True)]
-    write_segments(pd.concat(out, ignore_index=True) if out
-                   else pd.DataFrame(columns=SEGMENT_ARROW.names),
-                   out_dir, int(stats["n_buckets"]))
+    write_segments(remerge(None, seg), out_dir, int(stats["n_buckets"]))
 
 
 def _merge_spark(spark: SparkSession, store, index_a: str, index_b: str,

@@ -1,4 +1,6 @@
-"""Posting codec: varbyte/delta roundtrips + block-max bound safety."""
+"""Posting codec: varbyte/delta roundtrips + block-max bound safety, and
+the run-batched encode/decode equal to a per-run reference byte for
+byte."""
 
 from __future__ import annotations
 
@@ -6,7 +8,9 @@ import numpy as np
 import pytest
 
 from newssearchengine_spark.functions.codec import (
+    decode_positions,
     decode_postings,
+    encode_positions,
     encode_postings,
     tf_norm,
     vb_decode,
@@ -180,3 +184,163 @@ def test_positions_pack_expr_matches_numpy(spark, seed):
     joined = b"".join(got[i] for i in range(len(lists)))
     assert joined == encode_positions(np.concatenate(lists), tfs)
     assert np.array_equal(decode_positions(joined, tfs), np.concatenate(lists))
+
+
+# ---- the run-batched codec against a per-run reference ---------------------
+
+def _vb_py(values) -> bytes:
+    """Pure-Python varbyte: the byte-for-byte reference."""
+    out = bytearray()
+    for v in values:
+        v = int(v)
+        while v >= 0x80:
+            out.append(v & 0x7F | 0x80)
+            v >>= 7
+        out.append(v)
+    return bytes(out)
+
+
+def _ref_postings(ids, tfs, dls, *, k1, b, avgdl, block_size):
+    """One run encoded posting by posting and block by block: (docs, tfs,
+    dls, block_last, block_max)."""
+    deltas = [int(ids[0])] + [int(y - x) for x, y in zip(ids, ids[1:])] \
+        if len(ids) else []
+    tfn = tf_norm(np.asarray(tfs, np.float64), np.asarray(dls, np.float64),
+                  k1=k1, b=b, avgdl=avgdl)
+    last, mx = [], []
+    for lo in range(0, len(ids), block_size):
+        hi = min(lo + block_size, len(ids))
+        last.append(int(ids[hi - 1]))
+        mx.append(np.nextafter(np.float32(tfn[lo:hi].max()),
+                               np.float32(np.inf)))
+    return (_vb_py(deltas), _vb_py(t - 1 for t in tfs), _vb_py(dls), last,
+            np.array(mx, dtype=np.float32))
+
+
+def _ref_positions(lists) -> bytes:
+    """One run's positions: per posting, first absolute then gaps."""
+    return b"".join(_vb_py([int(p[0])] + np.diff(p).tolist()) for p in lists)
+
+
+def _draw_runs(rng, dfs, id_hi, tf_hi):
+    """One run of postings per df: distinct sorted ids below id_hi (a
+    small bound widens to 2 x df), tfs in [1, tf_hi], doc lengths."""
+    runs = []
+    for df in dfs:
+        if id_hi < 1 << 20:
+            ids = rng.choice(max(id_hi, 2 * df), size=df, replace=False)
+        else:
+            ids = np.unique(rng.integers(0, id_hi, size=df))
+        ids = np.sort(ids).astype(np.int64)
+        runs.append((ids, rng.integers(1, tf_hi + 1, size=ids.size),
+                     rng.integers(0, 50_000, size=ids.size)))
+    return runs
+
+
+RUN_SHAPES = [
+    # (block_size, dfs per run, id bound, tf bound)
+    (4, [0], 100, 3),
+    (4, [1], 100, 3),
+    (8, [0, 1, 8, 9, 24, 0], 1 << 40, 1000),
+    (128, [128, 129, 384, 1], 1 << 40, 1000),
+    (16, [5, 0, 0, 17, 3], 1 << 20, 1),
+]
+
+
+@pytest.mark.parametrize("shape", range(len(RUN_SHAPES)))
+def test_encode_runs_equal_per_run_reference(shape):
+    from newssearchengine_spark.functions.codec import decode_runs, encode_runs
+
+    bs, dfs, id_hi, tf_hi = RUN_SHAPES[shape]
+    rng = np.random.default_rng(900 + shape)
+    runs = _draw_runs(rng, dfs, id_hi, tf_hi)
+    counts = np.array([r[0].size for r in runs], np.int64)
+    flat = [np.concatenate([r[k] for r in runs]) for k in range(3)]
+    k1, b, avgdl = 1.2, 0.75, 321.5
+    enc = encode_runs(*flat, counts, k1=k1, b=b, avgdl=avgdl, block_size=bs)
+    assert all(len(a) == len(runs) for a in enc.values())
+    for r, (ids, tfs, dls) in enumerate(runs):
+        want = _ref_postings(ids, tfs, dls, k1=k1, b=b, avgdl=avgdl,
+                             block_size=bs)
+        assert enc["docs"][r].as_py() == want[0]
+        assert enc["tfs"][r].as_py() == want[1]
+        assert enc["dls"][r].as_py() == want[2]
+        assert enc["block_last"][r].as_py() == want[3]
+        got_max = enc["block_max"][r].values.to_numpy()
+        # bit-equal to the per-block loop, and never below the true max
+        assert np.array_equal(got_max.view(np.uint32), want[4].view(np.uint32))
+        tfn = tf_norm(tfs.astype(np.float64), dls.astype(np.float64),
+                      k1=k1, b=b, avgdl=avgdl)
+        for i, m in enumerate(got_max):
+            assert float(m) >= tfn[i * bs:(i + 1) * bs].max()
+    ids, tfs, dls, got_counts = decode_runs(enc["docs"].to_pylist(),
+                                            enc["tfs"].to_pylist(),
+                                            enc["dls"].to_pylist())
+    assert np.array_equal(got_counts, counts)
+    for got, want in zip((ids, tfs, dls), flat):
+        assert got.dtype == np.int64 and np.array_equal(got, want)
+
+
+def test_decode_runs_prefix_sum_wraps_exactly():
+    """Every run's first id is absolute, so the one cumsum across runs
+    overflows int64 here (3 x ~2^62); subtracting each run's carried-in
+    base must still give the exact ids."""
+    from newssearchengine_spark.functions.codec import decode_runs, encode_runs
+
+    top = (1 << 63) - 1
+    runs = [np.array([top - 10, top - 3, top], np.int64),
+            np.array([1 << 62, (1 << 62) + 1], np.int64),
+            np.array([top - 1], np.int64),
+            np.array([0, 5], np.int64)]
+    ids = np.concatenate(runs)
+    counts = np.array([r.size for r in runs])
+    ones = np.ones(ids.size, np.int64)
+    enc = encode_runs(ids, ones, ones, counts, k1=1.2, b=0.75, avgdl=1.0,
+                      block_size=2)
+    got, _, _, got_counts = decode_runs(enc["docs"], enc["tfs"], enc["dls"])
+    assert np.array_equal(got, ids) and np.array_equal(got_counts, counts)
+    for r, run in enumerate(runs):
+        assert decode_postings(enc["docs"][r].as_py(), enc["tfs"][r].as_py(),
+                               enc["dls"][r].as_py())[0].tolist() == run.tolist()
+
+
+def test_encode_runs_rejects_unsorted_run():
+    from newssearchengine_spark.functions.codec import encode_runs
+
+    ones = np.ones(4, np.int64)
+    # a drop in id across a run boundary is fine, inside a run is not
+    encode_runs(np.array([5, 9, 1, 2]), ones, ones, [2, 2], k1=1.2, b=0.75,
+                avgdl=1.0, block_size=2)
+    with pytest.raises(ValueError):
+        encode_runs(np.array([5, 9, 9, 12]), ones, ones, [1, 3], k1=1.2,
+                    b=0.75, avgdl=1.0, block_size=2)
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_positions_runs_equal_per_run_reference(seed):
+    """Positions of several runs (empty runs among them) coded as one
+    stream equal each run's own blob, and decode back across runs."""
+    from newssearchengine_spark.functions.codec import (
+        decode_positions_runs, encode_positions_runs, pack_positions)
+
+    rng = np.random.default_rng(950 + seed)
+    runs = []
+    for _ in range(int(rng.integers(1, 9))):
+        n_post = int(rng.choice([0, 1, int(rng.integers(2, 12))]))
+        runs.append([np.sort(rng.choice(int(hi), size=int(rng.integers(1, 40)),
+                                        replace=False)).astype(np.int64)
+                     for hi in rng.choice([64, 5000, 1 << 33], size=n_post)])
+    lists = [p for run in runs for p in run]
+    tfs = np.array([p.size for p in lists], np.int64)
+    flat = np.concatenate(lists) if lists else np.empty(0, np.int64)
+    counts = np.array([len(run) for run in runs], np.int64)
+    blobs = encode_positions_runs(flat, tfs, counts)
+    assert blobs.to_pylist() == [_ref_positions(run) for run in runs]
+    assert np.array_equal(decode_positions_runs(blobs.to_pylist(), tfs), flat)
+    assert pack_positions(flat, tfs).to_pylist() == \
+        [_ref_positions([p]) for p in lists]
+    for run, blob in zip(runs, blobs.to_pylist()):
+        t = np.array([p.size for p in run], np.int64)
+        want = np.concatenate(run) if run else np.empty(0, np.int64)
+        assert np.array_equal(decode_positions(blob, t), want)
+        assert encode_positions(want, t) == blob

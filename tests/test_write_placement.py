@@ -2,16 +2,20 @@
 SEARCH_DRIVER_CAP run on the driver (index_build.write_on_driver) and
 must write what the Spark plans write — every table's Spark-visible
 schema and rows, stats.json and the manifests — within a Spark-job
-budget (a build ≤ 2 jobs, compaction and merge 0), and a failed driver
-write must leave readers the previous table or none."""
+budget (a build ≤ 2 jobs, 0 from a local relation; compaction and merge
+0), and a failed driver write must leave readers the previous table or
+none."""
 
 from __future__ import annotations
 
 import glob
 import json
 import os
+import sys
+import threading
 import time
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -154,22 +158,149 @@ def _jobs(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _local_frame(spark, rows):
+    """The rows as a local relation (createDataFrame of a pandas frame)."""
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["doc_id", "lang", "content"]), SCHEMA)
+    assert df.isLocal()
+    return df
+
+
 def test_driver_writes_job_budget(spark, texts, tmp_path):
     """At the default cap a small build runs 2 Spark jobs (fingerprint,
-    gather); an id-list delete, the compaction and the merge run none."""
+    gather), and none from a local relation, whose rows the driver
+    gathers and fingerprints without a job; an id-list delete, the
+    compaction and the merge run none."""
     cfg = IndexConfig(n_buckets=4, doc_range=64, block_size=8)
     df = spark.createDataFrame(_rows(texts, 80), SCHEMA).persist()
     df.count()
-    d = {k: str(tmp_path / k) for k in "abcm"}
+    d = {k: str(tmp_path / k) for k in "abcml"}
     assert _jobs(spark, lambda: build_index(
         df.filter("doc_id < 60"), d["a"], cfg, meta_cols=("lang",))) <= 2
     assert _jobs(spark, lambda: build_index(
         df.filter("doc_id >= 60"), d["b"], cfg, meta_cols=("lang",))) <= 2
+    local = _local_frame(spark, _rows(texts, 80)[60:])
+    assert _jobs(spark, lambda: build_index(
+        local, d["l"], cfg, meta_cols=("lang",))) == 0
+    assert _snapshot(spark, d["l"]) == _snapshot(spark, d["b"])
     assert _jobs(spark, lambda: delete_docs(spark, d["a"], [3, 4])) == 0
     assert _jobs(spark, lambda: compact_index(spark, d["a"], d["c"])) == 0
     assert _jobs(spark, lambda: merge_indexes(spark, d["c"], d["b"],
                                               d["m"])) == 0
     df.unpersist()
+
+
+FP_CASES = {
+    "null": [(0, "py", None)],
+    "all-null": [(0, "py", None), (1, "go", None)],
+    "empty": [(0, "py", "")],
+    "non-ascii": [(0, "go", SPECIAL[2]), (1, None, "ascii only")],
+    "zero-rows": [],
+}
+
+
+@pytest.mark.parametrize("case", list(FP_CASES) + ["corpus"])
+def test_gathered_fingerprint_equals_spark_aggregate(spark, texts, tmp_path,
+                                                     case):
+    """The driver's fingerprint of a local relation's gathered rows is the
+    string input_fingerprint's Spark aggregate builds (resume keys on
+    it), and the driver build from the local relation writes what the
+    build from the same rows as a non-local input writes."""
+    rows = FP_CASES.get(case) or _rows(texts, 40)
+    local = _local_frame(spark, rows)
+    other = spark.createDataFrame(rows, SCHEMA)
+    assert not other.isLocal()
+    got = index_build.gathered_fingerprint(
+        index_build._gather(local, "content", "doc_id", ("lang",)))
+    assert got == index_build.input_fingerprint(other, "content")
+    if case == "corpus":
+        cfg = IndexConfig(n_buckets=4, doc_range=16, block_size=4,
+                          with_term_vectors=True)
+        a, b = str(tmp_path / "local"), str(tmp_path / "other")
+        build_index(local, a, cfg, meta_cols=("lang",))
+        build_index(other, b, cfg, meta_cols=("lang",))
+        assert _snapshot(spark, a) == _snapshot(spark, b)
+
+
+def test_concurrent_builds_restore_session_conf(spark, texts, tmp_path,
+                                                monkeypatch):
+    """The build's session-wide toggles (AQE off for its driver-bound
+    actions, dynamic partition overwrite for its Spark writes) are
+    reference-counted: two threads entering A, B and leaving A, B keep
+    the setting until the last one leaves and end on the session's
+    original values; eight threads churning the toggle always see it
+    set; and two Spark-placed builds run at once leave the session as
+    it was."""
+    keys = {"spark.sql.adaptive.enabled": index_build._one_job_per_action,
+            "spark.sql.sources.partitionOverwriteMode":
+            lambda s: index_build._session_conf(
+                s, "spark.sql.sources.partitionOverwriteMode", "dynamic")}
+    before = {k: spark.conf.get(k) for k in keys}
+    for key, toggle in keys.items():
+        steps = [threading.Event() for _ in range(4)]
+        seen = {}
+
+        def run(me, enter_after, leave_after, done_enter, done_leave):
+            if enter_after is not None:
+                steps[enter_after].wait()
+            with toggle(spark):
+                steps[done_enter].set()
+                steps[leave_after].wait()
+                seen[me] = spark.conf.get(key)
+            steps[done_leave].set()
+
+        # A enters (0), B enters (1), A leaves (2), B leaves (3)
+        pair = [threading.Thread(target=run, args=("a", None, 1, 0, 2)),
+                threading.Thread(target=run, args=("b", 0, 2, 1, 3))]
+        for t in pair:
+            t.start()
+        for t in pair:
+            t.join(30)
+        assert steps[3].is_set()
+        assert seen["a"] != before[key] and seen["b"] == seen["a"], key
+        assert spark.conf.get(key) == before[key], key
+
+    # stress: more threads than cores, a short switch interval; inside
+    # the toggle every thread must see the toggled value
+    wrong, switch = [], sys.getswitchinterval()
+
+    def churn():
+        for _ in range(15):
+            with index_build._one_job_per_action(spark):
+                if spark.conf.get("spark.sql.adaptive.enabled") != "false":
+                    wrong.append(1)
+
+    sys.setswitchinterval(1e-5)
+    try:
+        crowd = [threading.Thread(target=churn) for _ in range(8)]
+        for t in crowd:
+            t.start()
+        for t in crowd:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in crowd) and not wrong
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+    monkeypatch.setattr(search, "SEARCH_DRIVER_CAP", -1)
+    cfg = IndexConfig(n_buckets=2, doc_range=64, block_size=8)
+    errors = []
+
+    def build(lo, hi, name):
+        try:
+            build_index(spark.createDataFrame(_rows(texts, hi)[lo:], SCHEMA),
+                        str(tmp_path / name), cfg)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=build, args=(0, 20, "x")),
+               threading.Thread(target=build, args=(20, 40, "y"))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert {k: spark.conf.get(k) for k in keys} == before
 
 
 def _fail_on_call(monkeypatch, n):

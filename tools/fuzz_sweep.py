@@ -7,6 +7,7 @@ verify determinism; this tool hunts beyond them).
     python tools/fuzz_sweep.py slop  [--seeds 5000:5006] [--per 10]
     python tools/fuzz_sweep.py exp   [--seeds 11000:11001] [--per 120]
     python tools/fuzz_sweep.py write [--seeds 13000:13010] [--per 6]
+    python tools/fuzz_sweep.py codec [--seeds 17000:17100] [--per 20]
 
 The bool sweep draws test_es_fuzz's bool bodies with metadata filters
 (term / terms on repo, range / exists on content_len) in their filter
@@ -21,6 +22,13 @@ vectors and a delete fraction per seed, runs build -> delete -> compact
 the two, diffs the merged tables against a fresh build of the live
 union, and checks `--per` top-k queries over the merged index against
 oracle/pure.py.
+The codec sweep (no Spark) draws `--per` run sets per seed at the codec's
+edge shapes — empty runs, df of 1, block_size, block_size + 1 and
+3 x block_size, ids up to 2^40 and 2^62 (the cross-run prefix sum
+overflows there), tf up to 1,000 — and checks the run-batched encode
+against tests/test_codec.py's per-run reference byte for byte, block_max
+bit for bit and never below the true max, and the decode round trip;
+the runs' positions the same way.
 
 Prints one line per mismatch and a final `SWEEP DONE fails=N`.
 The round-5 closing sweep of these three (plus an msearch variant)
@@ -406,15 +414,83 @@ def sweep_write(seeds, per) -> int:
     return fails
 
 
+def sweep_codec(seeds, per) -> int:
+    import numpy as np
+
+    import test_codec as TC
+    from newssearchengine_spark.functions.codec import (
+        decode_positions_runs, decode_runs, encode_positions_runs,
+        encode_runs, tf_norm)
+
+    fails = 0
+    for seed in seeds:
+        rng = np.random.default_rng(seed)
+        for j in range(per):
+            bs = int(rng.choice([1, 2, 4, 16, 128]))
+            dfs = [int(rng.choice([0, 1, bs, bs + 1, 3 * bs,
+                                   int(rng.integers(1, 4 * bs + 2))]))
+                   for _ in range(int(rng.integers(0, 10)))]
+            runs = TC._draw_runs(rng, dfs,
+                                 int(rng.choice([1 << 7, 1 << 20, 1 << 40,
+                                                 1 << 62])),
+                                 int(rng.choice([1, 3, 1000])))
+            runs = [r for r in runs if r[0].size or rng.random() < 0.5]
+            counts = np.array([r[0].size for r in runs], np.int64)
+            flat = [np.concatenate([r[k] for r in runs] + [np.empty(0, int)])
+                    .astype(np.int64) for k in range(3)]
+            k1, b = 1.2, 0.75
+            avgdl = float(rng.uniform(1.0, 500.0))
+            label = f"seed={seed} #{j} bs={bs} dfs={counts.tolist()}"
+            enc = encode_runs(*flat, counts, k1=k1, b=b, avgdl=avgdl,
+                              block_size=bs)
+            for r, (ids, tfs, dls) in enumerate(runs):
+                want = TC._ref_postings(ids, tfs, dls, k1=k1, b=b,
+                                        avgdl=avgdl, block_size=bs)
+                got_max = enc["block_max"][r].values.to_numpy()
+                tfn = tf_norm(tfs.astype(float), dls.astype(float), k1=k1,
+                              b=b, avgdl=avgdl)
+                bound_ok = all(float(m) >= tfn[i * bs:(i + 1) * bs].max()
+                               for i, m in enumerate(got_max))
+                if (enc["docs"][r].as_py() != want[0]
+                        or enc["tfs"][r].as_py() != want[1]
+                        or enc["dls"][r].as_py() != want[2]
+                        or enc["block_last"][r].as_py() != want[3]
+                        or not np.array_equal(got_max.view(np.uint32),
+                                              want[4].view(np.uint32))
+                        or not bound_ok):
+                    fails += 1
+                    print(f"CODEC ENCODE {label}: run {r} differs")
+            got = decode_runs(enc["docs"], enc["tfs"], enc["dls"])
+            if not (all(np.array_equal(g, w) for g, w in zip(got, flat))
+                    and np.array_equal(got[3], counts)):
+                fails += 1
+                print(f"CODEC DECODE {label}: round trip differs")
+            # positions: tf positions per posting, runs as above
+            hi = int(rng.choice([64, 5000, 1 << 33]))
+            lists = [[np.sort(rng.choice(max(hi, 2 * int(t)), size=int(t),
+                                         replace=False)).astype(np.int64)
+                      for t in r[1]] for r in runs]
+            pos = np.concatenate([p for run in lists for p in run]
+                                 + [np.empty(0, np.int64)])
+            blobs = encode_positions_runs(pos, flat[1], counts)
+            if (blobs.to_pylist() != [TC._ref_positions(run) for run in lists]
+                    or not np.array_equal(
+                        decode_positions_runs(blobs, flat[1]), pos)):
+                fails += 1
+                print(f"CODEC POSITIONS {label}: differs")
+    return fails
+
+
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("what", choices=["bool", "qs", "slop", "exp", "write"])
+    ap.add_argument("what",
+                    choices=["bool", "qs", "slop", "exp", "write", "codec"])
     ap.add_argument("--seeds", default="")
     ap.add_argument("--per", type=int, default=0)
     args = ap.parse_args()
     defaults = {"bool": ("1000:1012", 8), "qs": ("3000:3020", 6),
                 "slop": ("5000:5006", 10), "exp": ("11000:11001", 120),
-                "write": ("13000:13010", 6)}
+                "write": ("13000:13010", 6), "codec": ("17000:17100", 20)}
     srange, per = defaults[args.what]
     if args.seeds:
         srange = args.seeds
@@ -422,7 +498,8 @@ def main():
         per = args.per
     lo, hi = (int(x) for x in srange.split(":"))
     fails = {"bool": sweep_bool, "qs": sweep_qs, "slop": sweep_slop,
-             "exp": sweep_exp, "write": sweep_write}[args.what](
+             "exp": sweep_exp, "write": sweep_write,
+             "codec": sweep_codec}[args.what](
                  range(lo, hi), per)
     print(f"SWEEP DONE fails={fails}")
     sys.exit(1 if fails else 0)
