@@ -25,7 +25,9 @@ rewrite, merge's remerge) decode a whole batch of chunks with one
 vb_decode of their concatenated blobs (decode_runs — doc ids restored by
 a segmented prefix sum), filter or re-sort the flat postings, and encode
 all of them with one varbyte pass cut at the run boundaries
-(encode_runs, pyarrow arrays with one element per run). The one-run
+(encode_runs, pyarrow arrays with one element per run). The readers
+(plans.search's per-doc_part closures) decode each part's rows the same
+way, from an Arrow column in place on the driver. The one-run
 calls (encode_postings, decode_postings, encode_positions,
 decode_positions) are those functions on a single run.
 """
@@ -139,14 +141,27 @@ def vb_decode(buf: bytes) -> np.ndarray:
 
 def _joined(blobs) -> tuple[np.ndarray, np.ndarray]:
     """A column of blobs (None reads as empty) -> (their concatenation as
-    uint8, byte offsets: blob r is [offs[r], offs[r + 1]))."""
+    uint8, byte offsets: blob r is [offs[r], offs[r + 1])). An Arrow
+    binary column (an Arrow table's, as the driver reads segment rows)
+    is read in place, with no copy of its bytes."""
     if isinstance(blobs, list) and len(blobs) == 1:
         # one run (the read path's per-chunk decode): no copy at all
         buf = np.frombuffer(blobs[0] or b"", np.uint8)
         return buf, np.array([0, buf.size], dtype=np.int64)
-    arr = pa.array(blobs, pa.large_binary(), from_pandas=True)
+    if isinstance(blobs, pa.ChunkedArray):
+        blobs = (blobs.chunk(0) if blobs.num_chunks == 1
+                 else blobs.combine_chunks())
+    arr = (blobs if isinstance(blobs, pa.Array)
+           else pa.array(blobs, pa.large_binary(), from_pandas=True))
     n = len(arr)
-    offs = np.frombuffer(arr.buffers()[1], np.int64, n + 1, 8 * arr.offset)
+    if arr.null_count == n:  # no row (or a null-typed column of nulls)
+        return np.empty(0, np.uint8), np.zeros(n + 1, np.int64)
+    if arr.null_count:  # a null's slot may span bytes: read it as empty
+        arr = arr.fill_null(pa.scalar(b"", arr.type))
+    width = np.dtype(np.int64 if pa.types.is_large_binary(arr.type)
+                     else np.int32)
+    offs = np.frombuffer(arr.buffers()[1], width, n + 1,
+                         width.itemsize * arr.offset).astype(np.int64)
     data = arr.buffers()[2]
     buf = (np.frombuffer(data, np.uint8)[offs[0]:offs[-1]] if data is not None
            else np.empty(0, np.uint8))

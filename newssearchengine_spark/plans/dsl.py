@@ -755,7 +755,6 @@ def _knn_local(index, vectors: DataFrame, secs: list[dict], qside, *,
     sums in section order (the query side last), rounded 6 dp, cut to
     `size` by `_cut_topk`."""
     import numpy as np
-    import pandas as pd
 
     from ..operators.hnsw import driver_candidates, driver_graph
     from ..operators.similarity import (_fold_dot, _fold_norm,
@@ -796,18 +795,16 @@ def _knn_local(index, vectors: DataFrame, secs: list[dict], qside, *,
         parts.append((dv.ids[pos][top],
                       ks[top] * boost if boost != 1.0 else ks[top]))
     if qside is not None:
-        qs = qside[1].toPandas()
-        if qdead is not None:
-            qs = qs[~np.isin(qs["doc_id"].to_numpy(np.int64), qdead)]
-        parts.append((qs["doc_id"].to_numpy(np.int64),
-                      qs["score"].to_numpy(np.float64)))
+        qs = qside[1]._cols
+        live = (slice(None) if qdead is None
+                else ~np.isin(qs["doc_id"], qdead))
+        parts.append((qs["doc_id"][live], qs["score"][live]))
     ids = np.unique(np.concatenate([p[0] for p in parts]))
     acc = np.zeros(ids.size)
     for pid, val in parts:  # ids within a part are unique
         acc[np.searchsorted(ids, pid)] += val
-    return index._cut_topk(
-        pd.DataFrame({"doc_id": ids, "score": _round_half_up(acc, 6)}),
-        size)
+    return index._cut_topk({"doc_id": ids, "score": _round_half_up(acc, 6)},
+                           size)
 
 
 def _query_scores_full(indexes, q: dict):
@@ -852,9 +849,10 @@ def _query_scores_full(indexes, q: dict):
                          "(match / query_string / multi_match / bool)")
     if not isinstance(out, LocalFrame):
         return si, out.select("doc_id", F.round("score", 6).alias("score"))
-    pdf = out.toPandas()
-    return si, LocalFrame(si.spark, pdf.assign(score=_round_half_up(
-        pdf["score"].to_numpy(np.float64), 6)), TOPK_SCHEMA)
+    cols = out._cols
+    return si, LocalFrame(si.spark, {
+        "doc_id": cols["doc_id"],
+        "score": _round_half_up(cols["score"], 6)}, TOPK_SCHEMA)
 
 
 def _page_offset(body: dict, size: int) -> int:
@@ -907,9 +905,9 @@ def es_search(indexes, body: dict, size: int = 10, *,
 
     ES pagination: a top-level `from` in the body (or a `from_` key)
     skips that many hits — the engine evaluates top-(from+size) and
-    drops the first `from` ranks, re-ranking from 0 like an ES page (in
-    pandas when the page is a LocalFrame). A negative `size` or `from`
-    raises ES's 400 reason as ValueError before any plan.
+    drops the first `from` ranks, re-ranking from 0 like an ES page (on
+    its numpy columns when the page is a LocalFrame). A negative `size`
+    or `from` raises ES's 400 reason as ValueError before any plan.
 
     Driver-regime answers come back as a LocalFrame
     (plans.search.LocalFrame): collect()/toPandas()/count() run no
@@ -984,12 +982,11 @@ def es_search(indexes, body: dict, size: int = 10, *,
                          vectors=vectors, vec_id_col=vec_id_col, ann=ann)
         if "rank" not in page.columns:  # term lookup has no rank order
             raise ValueError("from/size pagination needs a ranked query")
-        if isinstance(page, LocalFrame):  # ranked: `rank` comes first
-            pdf = page.toPandas()
-            pdf = pdf[pdf["rank"] >= offset]
-            return LocalFrame(page.sparkSession,
-                              pdf.assign(rank=pdf["rank"] - offset),
-                              page.schema)
+        if isinstance(page, LocalFrame):
+            keep = page._cols["rank"] >= offset
+            cols = {c: v[keep] for c, v in page._cols.items()}
+            cols["rank"] = cols["rank"] - offset
+            return LocalFrame(page.sparkSession, cols, page.schema)
         return page.filter(F.col("rank") >= offset).select(
             (F.col("rank") - offset).alias("rank"),
             *[c for c in page.columns if c != "rank"],
@@ -2381,9 +2378,11 @@ def es_msearch(indexes, bodies: list[dict], size: int = 10, *,
     sort's sort-column output) are rejected: one relation, one schema.
     A negative `size` or body `from` is ES's 400 (ValueError), raised
     before any body runs. When every part is a LocalFrame (each body
-    ran in a driver regime) the parts combine in pandas, in part order,
-    into one LocalFrame — no Spark job and no JVM call, except
+    ran in a driver regime) the parts' numpy columns concatenate, in
+    part order, into one LocalFrame — no Spark job and no JVM call, except
     composition; otherwise they union as DataFrames."""
+    import numpy as np
+
     if not bodies:
         raise ValueError("msearch needs at least one body")
     for b in bodies:
@@ -2442,17 +2441,18 @@ def es_msearch(indexes, bodies: list[dict], size: int = 10, *,
                 "score) responses — run highlight/sort bodies through "
                 "es_search directly")
         if isinstance(out, LocalFrame):
-            pdf = out.toPandas()[["rank", "doc_id", "score"]]
-            pdf.insert(0, "query_id", qid)
-            outs.append(LocalFrame(out.sparkSession, pdf, MANY_SCHEMA))
+            outs.append(LocalFrame(out.sparkSession, {
+                **out._cols, "query_id": np.full(out.count(), qid, object)},
+                MANY_SCHEMA))
         else:
             outs.append(out.select(
                 F.lit(qid).alias("query_id"), "rank", "doc_id", "score"))
     if all(isinstance(o, LocalFrame) for o in outs):
-        import pandas as pd
-
-        return LocalFrame(outs[0].sparkSession, pd.concat(
-            [o.toPandas() for o in outs], ignore_index=True), MANY_SCHEMA)
+        if len(outs) == 1:
+            return outs[0]
+        return LocalFrame(outs[0].sparkSession, {
+            c: np.concatenate([o._cols[c] for o in outs])
+            for c in outs[0]._cols}, MANY_SCHEMA)
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o)

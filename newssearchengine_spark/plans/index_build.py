@@ -64,6 +64,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -168,18 +169,16 @@ def write_table(table: pa.Table, path: str,
 
 
 def read_frame(path: str, schema: pa.Schema, col: str) -> pd.DataFrame:
-    """Driver-local pyarrow read of a table written partitioned by `col`
-    into one frame with `schema`'s columns, `col` restored from the
-    `<col>=<value>` directory names (the files do not hold it)."""
-    frames = []
+    """Driver-local read of a table written partitioned by `col` into one
+    frame with `schema`'s columns: one pyarrow dataset read with hive
+    partitioning, `col` restored as int64 from the `<col>=<value>`
+    directory names (the files do not hold it)."""
     if os.path.isdir(path):
-        for e in sorted(os.scandir(path), key=lambda e: e.name):
-            if e.name.startswith(col + "="):
-                frames.append(pq.read_table(e.path).to_pandas().assign(
-                    **{col: int(e.name.split("=", 1)[1])}))
-    if not frames:
-        return pd.DataFrame({n: pd.Series(dtype=object) for n in schema.names})
-    return pd.concat(frames, ignore_index=True)[schema.names]
+        data = ds.dataset(path, format="parquet", partitioning=ds.partitioning(
+            pa.schema([(col, pa.int64())]), flavor="hive"))
+        if data.files:
+            return data.to_table(columns=schema.names).to_pandas()
+    return pd.DataFrame({n: pd.Series(dtype=object) for n in schema.names})
 
 
 def frame_table(pdf: pd.DataFrame, schema: pa.Schema) -> pa.Table:

@@ -12,8 +12,9 @@ without a lock.
   a lookup is a search over the term column's UTF-8 bytes (_Utf8).
 - Segments: one Arrow table, positions included, sorted by (term,
   doc_part) — the order a driver build writes each bucket file in. A
-  request searches each term's row range the same way, takes the rows
-  and converts them to pandas once.
+  request searches each term's row range the same way and takes the
+  rows, in (doc_part, term) order, as one Arrow table: the scorers
+  decode its blob columns in place, one part at a time.
 - Doc store: one Arrow table, filtered per request with the same
   pyarrow expression the parquet read pushes down.
 
@@ -28,7 +29,6 @@ import os
 from bisect import bisect_left, bisect_right
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
 
@@ -109,6 +109,7 @@ class ResidentReader:
         ).sort_by([("term", "ascending"),
                    ("doc_part", "ascending")]).combine_chunks()
         self._seg_terms = _Utf8(self.segments.column("term"))
+        self._seg_parts = self.segments.column("doc_part").to_numpy()
         self.store = _load(os.path.join(index_dir, "doc_store"), None)
 
     def term_stats(self, terms) -> dict[str, tuple[int, int]]:
@@ -118,10 +119,13 @@ class ResidentReader:
                 else (0, 0)
                 for t, (lo, hi) in zip(terms, self._terms.ranges(terms))}
 
-    def segment_rows(self, terms, columns) -> pd.DataFrame:
-        """The `columns` of every segment row of `terms`, in (term,
-        doc_part) order."""
+    def segment_rows(self, terms, columns) -> pa.Table:
+        """The `columns` of every segment row of `terms`, in (doc_part,
+        term) order."""
         spans = self._seg_terms.ranges(sorted(set(terms)))
         idx = np.concatenate([np.arange(lo, hi, dtype=np.int64)
                               for lo, hi in spans] + [np.empty(0, np.int64)])
-        return self.segments.select(list(columns)).take(idx).to_pandas()
+        # the spans are term-sorted, so a stable sort by part keeps term
+        # order within each part
+        idx = idx[np.argsort(self._seg_parts[idx], kind="stable")]
+        return self.segments.select(list(columns)).take(idx)

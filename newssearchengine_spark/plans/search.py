@@ -10,7 +10,13 @@ es.search(size=k) (/root/reference/wapo/experiments/ranking.py:128-139):
   (doc ranges are disjoint doc sets, so per-range scores are complete)
   --global orderBy(score desc, doc_id asc).limit(k)--> final top-k
 
-Two scorer modes, asserted identical in tests:
+Every per-doc_part closure decodes its part's rows in one pass
+(_Part: one decode_runs over the blob columns, one
+decode_positions_runs over positions) and works on per-term slices of
+the flat arrays, with idf spread over the postings by np.repeat — on
+the driver over Arrow slices of the resident reader's rows, above the
+cap over applyInPandas's frames. Two scorer modes, asserted identical
+in tests:
   taat — exact term-at-a-time: vectorized numpy accumulation
          (decode -> idf*tf_norm -> np.add.at per doc). The default.
   wand — block-max WAND: doc-at-a-time pivoting with per-block score
@@ -32,18 +38,20 @@ import threading
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType, _create_row)
 
-from ..functions.codec import (decode_positions, decode_postings, lucene_idf,
-                               tf_norm)
+from ..functions.codec import (decode_positions_runs, decode_runs,
+                               lucene_idf, tf_norm)
 from ..oracle import pure
 from ..config import AnalyzerConfig
 from .delete import dead_ids, tombstone_dir, tombstone_listing
-from .index_build import (TERM_STATS_SCHEMA, TERM_VECTORS_SCHEMA,
+from .index_build import (SEGMENT_ARROW, TERM_STATS_ARROW,
+                          TERM_STATS_SCHEMA, TERM_VECTORS_SCHEMA,
                           term_bucket, write_on_driver)
 from .reader import ResidentReader
 
@@ -218,16 +226,89 @@ def _field_value_factor(field: str, factor: float, modifier: str,
     return F.sqrt(v) if modifier == "sqrt" else v
 
 
+def _pylist(col) -> list:
+    """A column (a pandas Series or an Arrow array) as a Python list."""
+    return col.to_pylist() if hasattr(col, "to_pylist") else col.tolist()
+
+
+class _Part:
+    """One doc_part's segment rows (applyInPandas's pandas frame, or a
+    slice of the driver's Arrow table) decoded in one pass, rows in term
+    order: decode_runs over the blob columns and, with `positions`,
+    decode_positions_runs. Term terms[r] holds postings [offs[r],
+    offs[r + 1]) of the flat ids / tfs / dls. Closures work on per-term
+    slices, so every float64 op and accumulation order is a per-row
+    decode's."""
+
+    def __init__(self, rows, positions: bool = False):
+        terms = _pylist(rows["term"])
+        order = sorted(range(len(terms)), key=terms.__getitem__)
+        if order != list(range(len(terms))):
+            rows = rows.take(order)
+            terms = [terms[i] for i in order]
+        self.rows, self.terms = rows, terms
+        self.at = {t: r for r, t in enumerate(terms)}
+        self.ids, self.tfs, self.dls, self.counts = decode_runs(
+            rows["docs"], rows["tfs"], rows["dls"])
+        self.offs = np.concatenate(([0], np.cumsum(self.counts)))
+        if positions:
+            self.pos = decode_positions_runs(rows["positions"], self.tfs)
+            self.poffs = np.concatenate(([0], np.cumsum(self.tfs)))
+
+    def span(self, t: str) -> slice:
+        """Term t's postings."""
+        r = self.at[t]
+        return slice(self.offs[r], self.offs[r + 1])
+
+    def rep(self, per_term) -> np.ndarray:
+        """One value per term (term order) spread over its postings."""
+        return np.repeat(per_term, self.counts)
+
+    def has(self, terms) -> np.ndarray:
+        """Whether each posting's term is in `terms`."""
+        return self.rep(np.array([t in terms for t in self.terms], bool))
+
+    def idf(self, idf_map: dict) -> np.ndarray:
+        """Each posting's term idf."""
+        return self.rep([idf_map[t] for t in self.terms])
+
+    def term_col(self) -> np.ndarray:
+        """Each posting's term, as an object column."""
+        return self.rep(np.array(self.terms, dtype=object))
+
+    def positions(self, t: str) -> np.ndarray:
+        """Term t's positions, posting after posting."""
+        s = self.span(t)
+        return self.pos[self.poffs[s.start]:self.poffs[s.stop]]
+
+
+def _concat(outs: list):
+    """Per-part results (dicts of numpy columns) as one; None for none."""
+    if len(outs) <= 1:
+        return outs[0] if outs else None
+    return {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
+
+
+def _frames(fn):
+    """A part closure (numpy columns out) as applyInPandas's function."""
+    return lambda pdf: pd.DataFrame(fn(pdf))
+
+
+def _no_rows(schema) -> dict:
+    """Zero rows of a flat DDL schema, as typed numpy columns."""
+    return {f.name: np.empty(0, _DDL_TYPES[f.dataType.simpleString()][1])
+            for f in _struct(schema).fields}
+
+
 def _make_bool_taat(must_clauses: list[list[str]], must_not: list[str],
                     should: list[str], msm: int, scoring_terms: list[str],
                     idf_map: dict[str, float], *, k1: float, b: float,
-                    avgdl: float, k: int | None, cogrouped: bool = False,
-                    zero_fill: bool = False):
+                    avgdl: float, k: int | None, zero_fill: bool = False):
     """Combined constraint-intersection + candidate-restricted scoring for
     flat bool, one closure for both placements (on the driver under
     SEARCH_DRIVER_CAP, else one applyInPandas pass): per doc_part it (a)
-    decodes every scanned term's postings ONCE, (b) intersects the bool
-    constraints into a candidate doc set, (c)
+    decodes every scanned term's postings in one pass, (b) intersects
+    the bool constraints into a candidate doc set, (c)
     accumulates BM25 over the scoring terms restricted to candidates — in
     sorted-term order, so surviving docs' float64 sums are bit-identical
     to score_all / _scores_for_docs — and (d) cuts to a margin-safe
@@ -240,12 +321,13 @@ def _make_bool_taat(must_clauses: list[list[str]], must_not: list[str],
     relation (the ES WAND-across-the-combined-scorer contract, SURVEY
     §2.4, expressed as intersection-first pruning).
 
-    `cogrouped=True` returns a two-frame fn for
-    `seg.cogroup(allowed)`-style applyInPandas: the right frame carries
-    the doc_ids admitted by a metadata filter (ES filter context) for
-    this doc_part; candidates intersect it (or START from it when there
-    are no term constraint clauses — an ES bool whose only constraints
-    are filters matches every admitted doc).
+    The closure's optional second argument `allowed` holds the sorted
+    doc_ids a metadata filter (ES filter context) admits in this
+    doc_part — the driver's _doc_ids, or the right frame of
+    `seg.cogroup(allowed)` above the cap; candidates intersect it (or
+    START from it when there are no term constraint clauses — an ES
+    bool whose only constraints are filters matches every admitted
+    doc).
 
     `zero_fill=True` (set when the TRUE must set is empty but filter
     clauses exist) emits candidates matching no scoring term with score
@@ -255,19 +337,23 @@ def _make_bool_taat(must_clauses: list[list[str]], must_not: list[str],
     positive (lucene idf > 0, tf_norm > 0), so zero-score docs rank
     below every scored doc and tie among themselves on doc_id asc:
     emitting only the k smallest zero-score doc_ids per part is exact."""
+    scoring = set(scoring_terms)
 
-    def _score(pdf: pd.DataFrame, allowed) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                              "score": pd.Series([], dtype=np.float64)})
-        decoded: dict[str, tuple] = {}
-        for row in pdf.itertuples(index=False):
-            decoded[row.term] = decode_postings(row.docs, row.tfs, row.dls)
+    def score(rows, allowed=None) -> dict:
+        part = _Part(rows)
+        ids = part.ids
+
+        def union(terms):
+            arrs = [ids[part.span(t)] for t in terms if t in part.at]
+            return (None if not arrs else arrs[0] if len(arrs) == 1
+                    else np.unique(np.concatenate(arrs)))
+
+        empty = _no_rows(TOPK_SCHEMA)
         cur = None
         for clause in must_clauses:
-            arrs = [decoded[t][0] for t in clause if t in decoded]
-            if not arrs:
+            cd = union(clause)
+            if cd is None:
                 return empty  # no clause term in this range -> no matches
-            cd = arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
             cur = cd if cur is None else cur[np.isin(cur, cd)]
             if cur.size == 0:
                 return empty
@@ -280,12 +366,11 @@ def _make_bool_taat(must_clauses: list[list[str]], must_not: list[str],
                 return empty
         if cur is None:
             # pure-should: candidates = docs matching >= 1 should term
-            arrs = [decoded[t][0] for t in should if t in decoded]
-            if not arrs:
+            cur = union(should)
+            if cur is None:
                 return empty
-            cur = arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
         if msm > 0:
-            arrs = [decoded[t][0] for t in should if t in decoded]
+            arrs = [ids[part.span(t)] for t in should if t in part.at]
             if len(arrs) < msm:
                 return empty
             uniq, cnt = np.unique(np.concatenate(arrs), return_counts=True)
@@ -293,34 +378,24 @@ def _make_bool_taat(must_clauses: list[list[str]], must_not: list[str],
             if cur.size == 0:
                 return empty
         for t in must_not:
-            if t in decoded and cur.size:
-                cur = cur[~np.isin(cur, decoded[t][0])]
+            if t in part.at and cur.size:
+                cur = cur[~np.isin(cur, ids[part.span(t)])]
         if cur.size == 0:
             return empty
-        all_ids, all_scores = [], []
-        for t in scoring_terms:  # pre-sorted: deterministic accumulation
-            if t not in decoded:
-                continue
-            ids, tfs, dls = decoded[t]
-            keep = np.isin(ids, cur)
-            if not keep.any():
-                continue
-            contrib = idf_map[t] * tf_norm(
-                tfs[keep].astype(np.float64), dls[keep].astype(np.float64),
-                k1=k1, b=b, avgdl=avgdl,
-            )
-            all_ids.append(ids[keep])
-            all_scores.append(contrib)
-        if not all_ids:
-            if not zero_fill:
-                return empty
-            uniq = np.empty(0, dtype=np.int64)
-            acc = np.empty(0, dtype=np.float64)
-        else:
-            ids = np.concatenate(all_ids)
-            uniq, inv = np.unique(ids, return_inverse=True)
+        # the scoring terms' candidate postings, in term order
+        keep = part.has(scoring) & np.isin(ids, cur)
+        if keep.any():
+            contrib = part.rep([idf_map.get(t, 0.0) for t in part.terms])[
+                keep] * tf_norm(part.tfs[keep].astype(np.float64),
+                                part.dls[keep].astype(np.float64),
+                                k1=k1, b=b, avgdl=avgdl)
+            uniq, inv = np.unique(ids[keep], return_inverse=True)
             acc = np.zeros(uniq.size)
-            np.add.at(acc, inv, np.concatenate(all_scores))
+            np.add.at(acc, inv, contrib)
+        elif zero_fill:
+            uniq, acc = np.empty(0, dtype=np.int64), np.empty(0)
+        else:
+            return empty
         if zero_fill:
             # cur is ascending (posting decode order / np.unique /
             # order-preserving masks), so cur-minus-scored's first k
@@ -336,25 +411,9 @@ def _make_bool_taat(must_clauses: list[list[str]], must_not: list[str],
             kth = np.partition(acc, uniq.size - k)[uniq.size - k]
             keep = acc >= kth - 1e-6
             uniq, acc = uniq[keep], acc[keep]
-        return pd.DataFrame({"doc_id": uniq, "score": acc})
+        return {"doc_id": uniq, "score": acc}
 
-    if cogrouped:
-        def score_cogroup(left: pd.DataFrame,
-                          right: pd.DataFrame) -> pd.DataFrame:
-            if not len(right):  # no doc in this part passes the filter
-                return pd.DataFrame({
-                    "doc_id": pd.Series([], dtype=np.int64),
-                    "score": pd.Series([], dtype=np.float64),
-                })
-            return _score(
-                left, np.sort(right["doc_id"].to_numpy(np.int64)))
-
-        return score_cogroup
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(pdf, None)
-
-    return score_group
+    return score
 
 
 def _make_groups_taat(groups: list[list[list[str]]],
@@ -366,50 +425,39 @@ def _make_groups_taat(groups: list[list[list[str]]],
     tokens restricted to those candidates, then sum the group partials
     per doc — Lucene BooleanQuery-of-conjunctions semantics, where a
     token occurring in several matched groups contributes once PER
-    GROUP. Postings decode once per term; accumulation order is (group
-    order, sorted tokens within group) — deterministic. The same
+    GROUP. Postings decode in one pass per part; accumulation order is
+    (group order, sorted tokens within group) — deterministic. The same
     margin-safe per-part top-k cut as _make_bool_taat bounds the
     emitted relation (proof there)."""
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                              "score": pd.Series([], dtype=np.float64)})
-        decoded: dict[str, tuple] = {}
-        for row in pdf.itertuples(index=False):
-            decoded[row.term] = decode_postings(row.docs, row.tfs, row.dls)
+    def score_group(rows) -> dict:
+        part = _Part(rows)
+        ids = part.ids
+        tfn = part.idf(idf_map) * tf_norm(
+            part.tfs.astype(np.float64), part.dls.astype(np.float64),
+            k1=k1, b=b, avgdl=avgdl)
         all_ids, all_scores = [], []
         for clauses in groups:
             cur = None
-            dead = False
             for clause in clauses:
-                arrs = [decoded[t][0] for t in clause if t in decoded]
+                arrs = [ids[part.span(t)] for t in clause if t in part.at]
                 if not arrs:
-                    dead = True  # a required clause absent from this range
+                    cur = None  # a required clause absent from this range
                     break
                 cd = (arrs[0] if len(arrs) == 1
                       else np.unique(np.concatenate(arrs)))
                 cur = cd if cur is None else cur[np.isin(cur, cd)]
                 if cur.size == 0:
-                    dead = True
                     break
-            if dead or cur is None or cur.size == 0:
+            if cur is None or cur.size == 0:
                 continue
-            for t in sorted({t for c in clauses for t in c}):
-                if t not in decoded:
-                    continue
-                ids, tfs, dls = decoded[t]
-                keep = np.isin(ids, cur)
-                if not keep.any():
-                    continue
-                contrib = idf_map[t] * tf_norm(
-                    tfs[keep].astype(np.float64),
-                    dls[keep].astype(np.float64),
-                    k1=k1, b=b, avgdl=avgdl,
-                )
-                all_ids.append(ids[keep])
-                all_scores.append(contrib)
+            # the group's tokens' candidate postings, in term order
+            toks = {t for c in clauses for t in c}
+            keep = part.has(toks) & np.isin(ids, cur)
+            all_ids.append(ids[keep])
+            all_scores.append(tfn[keep])
         if not all_ids:
-            return empty
+            return _no_rows(TOPK_SCHEMA)
         ids = np.concatenate(all_ids)
         uniq, inv = np.unique(ids, return_inverse=True)
         acc = np.zeros(uniq.size)
@@ -418,7 +466,7 @@ def _make_groups_taat(groups: list[list[list[str]]],
             kth = np.partition(acc, uniq.size - k)[uniq.size - k]
             keep = acc >= kth - 1e-6
             uniq, acc = uniq[keep], acc[keep]
-        return pd.DataFrame({"doc_id": uniq, "score": acc})
+        return {"doc_id": uniq, "score": acc}
 
     return score_group
 
@@ -426,10 +474,10 @@ def _make_groups_taat(groups: list[list[list[str]]],
 def _make_tree_eval(root: dict):
     """The nested bool tree's one evaluator (SegmentIndex._bool_tree
     builds `root`, a normalized node): a numpy function of the tree's
-    clause rows (doc_id, cid, score) to the (doc_id, score) rows of the
-    docs the tree matches. The driver calls it once over all rows; above
-    the cap it runs per doc_part in applyInPandas — doc ranges are
-    disjoint, so per-part results are complete.
+    clause rows (doc_id, cid, score columns) to the (doc_id, score)
+    columns of the docs the tree matches. The driver calls it once over
+    all rows; above the cap it runs per doc_part in applyInPandas — doc
+    ranges are disjoint, so per-part results are complete.
 
     np.bincount gives each doc's match flag and score sum per clause; a
     clause's rows sum in (doc_id, cid, score) order, whatever order they
@@ -440,10 +488,10 @@ def _make_tree_eval(root: dict):
     order, of its matching must+should children's scores times its
     boost, a weighted leaf scaling its clause sum."""
 
-    def evaluate(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc = pdf["doc_id"].to_numpy(np.int64)
-        cid = pdf["cid"].to_numpy(np.int64)
-        sc = pdf["score"].to_numpy(np.float64)
+    def evaluate(rows) -> dict:
+        doc = np.asarray(rows["doc_id"], np.int64)
+        cid = np.asarray(rows["cid"], np.int64)
+        sc = np.asarray(rows["score"], np.float64)
         o = np.lexsort((sc, cid, doc))
         ids, inv = np.unique(doc[o], return_inverse=True)
         cid, sc, n = cid[o], sc[o], ids.size
@@ -485,15 +533,16 @@ def _make_tree_eval(root: dict):
             return total * x["boost"] if x["boost"] != 1.0 else total
 
         m = matched(root)
-        return pd.DataFrame({"doc_id": ids[m], "score": score(root)[m]})
+        return {"doc_id": ids[m], "score": score(root)[m]}
 
     return evaluate
 
 
-#: Spark SQL type -> (its type, the dtype a JVM frame's toPandas() gives)
-_DDL_TYPES = {"bigint": (LongType(), np.int64),
-              "double": (DoubleType(), np.float64),
-              "string": (StringType(), object)}
+#: Spark SQL type -> (its type, the dtype a JVM frame's toPandas() gives,
+#: its Arrow type)
+_DDL_TYPES = {"bigint": (LongType(), np.int64, pa.int64()),
+              "double": (DoubleType(), np.float64, pa.float64()),
+              "string": (StringType(), object, pa.string())}
 
 
 def _struct(schema) -> StructType:
@@ -506,35 +555,34 @@ def _struct(schema) -> StructType:
 
 
 class LocalFrame(ClassicDataFrame):
-    """A driver regime's result: its rows stay a pandas frame on the
-    driver, and the DataFrame API reads them without a JVM call.
+    """A driver regime's result: its rows stay typed numpy columns on the
+    driver (`cols`: a dict of arrays or a pandas frame, one entry per
+    schema column), and the DataFrame API reads them without a JVM call.
 
-    collect(), toPandas(), count(), columns and schema answer from the
-    pandas rows with today's frame's types: collect() gives Rows of
-    Python int/float/str with a NaN read as None (the null an Arrow
-    conversion makes of it), toPandas() gives int64/float64/object
-    columns, empty frames included. Any other DataFrame method composes
-    the frame (filter/select/join/unionByName/F.broadcast/persist…): it
-    reads `_jdf`, which builds the JVM half once, from an Arrow table
-    (a local relation, so its collect() runs no Spark job either)."""
+    collect(), toPandas(), count(), columns and schema answer from them
+    with today's frame's types: collect() gives Rows of Python
+    int/float/str with a NaN read as None (the null an Arrow conversion
+    makes of it), toPandas() gives a new int64/float64/object frame,
+    empty frames included. Any other DataFrame method composes the frame
+    (filter/select/join/unionByName/F.broadcast/persist…): it reads
+    `_jdf`, which builds the JVM half once, from an Arrow table (a local
+    relation, so its collect() runs no Spark job either)."""
 
     def __new__(cls, *args, **kwargs):
         # pyspark's DataFrame.__new__ takes (jdf, session) and calls
         # __init__ itself
         return object.__new__(cls)
 
-    def __init__(self, spark: SparkSession, pdf: pd.DataFrame,
-                 schema=RANKED_SCHEMA):
+    def __init__(self, spark: SparkSession, cols, schema=RANKED_SCHEMA):
         self._session = spark
         self._sc = spark._sc
         self.is_cached = False
         self._support_repr_html = False
         self._local_schema = _struct(schema)
-        names = [f.name for f in self._local_schema.fields]
-        self._pdf = pd.DataFrame({
-            f.name: pdf[f.name].to_numpy(
-                _DDL_TYPES[f.dataType.simpleString()][1])
-            for f in self._local_schema.fields}, columns=names)
+        self._cols = {
+            f.name: np.asarray(cols[f.name],
+                               _DDL_TYPES[f.dataType.simpleString()][1])
+            for f in self._local_schema.fields}
         self._jdf_lock = threading.Lock()
         self._built = None
 
@@ -542,11 +590,14 @@ class LocalFrame(ClassicDataFrame):
     def _jdf(self):
         with self._jdf_lock:
             if self._built is None:
-                import pyarrow as pa
-
+                table = pa.Table.from_arrays(
+                    [pa.array(a, _DDL_TYPES[f.dataType.simpleString()][2],
+                              from_pandas=True)
+                     for a, f in zip(self._cols.values(),
+                                     self._local_schema.fields)],
+                    names=list(self._cols))
                 self._built = self._session.createDataFrame(
-                    pa.Table.from_pandas(self._pdf, preserve_index=False),
-                    self._local_schema)._jdf
+                    table, self._local_schema)._jdf
             return self._built
 
     @property
@@ -554,20 +605,19 @@ class LocalFrame(ClassicDataFrame):
         return self._local_schema
 
     def count(self) -> int:
-        return len(self._pdf)
+        return len(next(iter(self._cols.values())))
 
     def toPandas(self) -> pd.DataFrame:
-        return self._pdf.copy()
+        return pd.DataFrame(self._cols, copy=True)
 
     def collect(self) -> list[Row]:
         cols = []
-        for c in self._pdf.columns:
-            arr = self._pdf[c].to_numpy()
+        for arr in self._cols.values():
             vals = arr.astype(object)
             if arr.dtype.kind == "f":
                 vals[np.isnan(arr)] = None
             cols.append(vals)
-        names = list(self._pdf.columns)
+        names = list(self._cols)
         return [_create_row(names, r) for r in zip(*cols)]
 
 
@@ -713,12 +763,12 @@ class SegmentIndex:
         if missing:
             cols = ["term", "df", "cf"]
             try:
-                pdf = self._read_buckets("term_stats", missing, cols)
+                t = self._read_buckets("term_stats", missing, cols)
+                rows = zip(*(t.column(c).to_pylist() for c in cols))
             except Exception:
-                pdf = (self._tstats.filter(F.col("term").isin(missing))
-                       .select(*cols).toPandas())
-            got = {t: (int(d), int(c))
-                   for t, d, c in zip(pdf["term"], pdf["df"], pdf["cf"])}
+                rows = (self._tstats.filter(F.col("term").isin(missing))
+                        .select(*cols).collect())
+            got = {t: (int(d), int(c)) for t, d, c in rows}
             for t in missing:
                 self._term_cache[t] = got.get(t, (0, 0))
         return {t: self._term_cache[t] for t in terms}
@@ -738,38 +788,42 @@ class SegmentIndex:
         return vol <= SEARCH_DRIVER_CAP
 
     def _per_part_local(self, fn, terms: list[str], cols: list[str],
-                        allowed=None) -> pd.DataFrame | None:
+                        allowed=None) -> dict | None:
         """The driver form of `_by_part(seg).applyInPandas(fn, ...)`: the
-        SAME per-doc_part closure over the terms' segment rows
-        (_read_buckets: the resident reader's, or a pyarrow read). With
-        `allowed` (sorted doc ids a metadata filter
-        admits) it is the driver form of the cogroup with the admitted
-        (doc_part, doc_id) stream: fn(segment rows, admitted rows) runs
-        for every part either side holds. None when no part was read."""
-        pdf = self._read_buckets("segments", terms, cols)
+        SAME per-doc_part closure over zero-copy slices of the terms'
+        segment rows (_read_buckets, in (doc_part, term) order), cut at
+        the numpy boundaries of doc_part. With `allowed` (sorted doc ids
+        a metadata filter admits) it is the driver form of the cogroup
+        with the admitted (doc_part, doc_id) stream: fn(segment rows,
+        admitted ids) runs for every part either side holds. The parts'
+        numpy columns, concatenated; None when no part was read."""
+        rows = self._read_buckets("segments", terms, cols)
+        part = rows.column("doc_part").to_numpy()
+        keys = np.unique(part)
+        if allowed is not None:
+            apart = allowed // int(self.stats["doc_range"])
+            keys = np.union1d(keys, apart)
+        parts = [rows.slice(a, b - a) for a, b in zip(
+            *(np.searchsorted(part, keys, side).tolist()
+              for side in ("left", "right")))]
         if allowed is None:
-            outs = [fn(g) for _, g in pdf.groupby("doc_part", sort=True)]
-        else:
-            right = pd.DataFrame({
-                "doc_part": allowed // int(self.stats["doc_range"]),
-                "doc_id": allowed})
-            lg = dict(list(pdf.groupby("doc_part")))
-            rg = dict(list(right.groupby("doc_part")))
-            outs = [fn(lg.get(p, pdf.iloc[:0]), rg.get(p, right.iloc[:0]))
-                    for p in sorted(set(lg) | set(rg))]
-        return pd.concat(outs, ignore_index=True) if outs else None
+            return _concat([fn(p) for p in parts])
+        lo, hi = (np.searchsorted(apart, keys, side)
+                  for side in ("left", "right"))
+        return _concat([fn(p, allowed[a:b])
+                        for p, a, b in zip(parts, lo, hi)])
 
     def _per_part(self, fn, terms: list[str], cols: list[str], schema: str,
                   local: bool, positions: bool = False):
         """One per-doc_part closure, two placements: on the driver
-        (`local`, decided by _driver_ok) over _read_buckets — a pandas
-        frame, None when no row was read — else applyInPandas over the
+        (`local`, decided by _driver_ok) over _read_buckets — numpy
+        columns, None when no row was read — else applyInPandas over the
         pruned distributed scan (_scan), a DataFrame of `schema`. The
-        same closure over the same rows gives the same frame."""
+        same closure over the same rows gives the same columns."""
         if local:
             return self._per_part_local(fn, terms, cols)
         return self._by_part(self._scan(terms, cols, positions)
-                             ).applyInPandas(fn, schema)
+                             ).applyInPandas(_frames(fn), schema)
 
     def _scan(self, terms, cols, positions: bool = False) -> DataFrame:
         """The pruned segment scan the distributed plans read: only the
@@ -785,20 +839,18 @@ class SegmentIndex:
                 .select(*cols))
 
     def _read_buckets(self, table: str, terms: list[str],
-                      columns: list[str]) -> pd.DataFrame:
+                      columns: list[str]) -> pa.Table:
         """The rows of `table` (term_stats or segments) whose term is in
-        `terms`, read on the driver with no Spark job. A resident
-        handle's segment rows come from memory: each term's row range
-        of the reader's (term, doc_part)-sorted table, taken and
-        converted to pandas once. Otherwise a pyarrow read opens only
-        the terms' bucket=<b> directories and pushes the term predicate
-        to row groups (files are term-sorted); repeat reads are served
-        from the OS page cache. The placements' closures sort or key
-        their rows by term, so the row order does not reach a result."""
+        `terms`, read on the driver with no Spark job, as one Arrow
+        table (segment rows in (doc_part, term) order). A resident
+        handle's segment rows come from memory: each term's row range of
+        the reader's (term, doc_part)-sorted table, taken once. Otherwise
+        a pyarrow read opens only the terms' bucket=<b> directories and
+        pushes the term predicate to row groups (files are term-sorted);
+        repeat reads are served from the OS page cache."""
         reader = self._resident() if table == "segments" else None
         if reader is not None:
             return reader.segment_rows(terms, columns)
-        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -812,8 +864,12 @@ class SegmentIndex:
                     bdir, columns=columns,
                     filters=pc.field("term").isin(terms)))
         if not parts:
-            return pd.DataFrame(columns=columns)
-        return pa.concat_tables(parts).to_pandas()
+            schema = SEGMENT_ARROW if table == "segments" else TERM_STATS_ARROW
+            return pa.schema([schema.field(c) for c in columns]).empty_table()
+        rows = pa.concat_tables(parts)
+        return (rows.sort_by([("doc_part", "ascending"),
+                              ("term", "ascending")])
+                if table == "segments" else rows)
 
     def warm(self, positions: bool = False) -> "SegmentIndex":
         """Materialize the cached segment + term-stats tables (one pass) so
@@ -922,11 +978,12 @@ class SegmentIndex:
         only state every pre-delete caller sees) short-circuits.
 
         With the dead ids on the driver and k+T <= DELETED_ISIN_CAP, the
-        over-fetched rows are read as pandas (a LocalFrame's own rows,
-        with no JVM call), the dead ones dropped against the sorted id
-        array and the rest re-ranked in a LocalFrame — a driver regime
-        result stays job-free. Otherwise a Spark window re-ranks the
-        excluded relation."""
+        over-fetched rows are read as numpy columns (a LocalFrame's own,
+        with no JVM call), the dead ones dropped with np.isin against
+        the sorted id array, the rest kept in (query_id, rank) order and
+        renumbered from 0 within each query_id, in a LocalFrame — a
+        driver regime result stays job-free. Otherwise a Spark window
+        re-ranks the excluded relation."""
         T, ids, _ = self._tombstones()
         if not T:
             return run(k)
@@ -934,12 +991,22 @@ class SegmentIndex:
         cols = out.columns
         keys = ["query_id"] if "query_id" in cols else []
         if ids is not None and k + T <= DELETED_ISIN_CAP:
-            pdf = out.toPandas()
-            pdf = pdf[~np.isin(pdf["doc_id"].to_numpy(np.int64), ids)]
-            pdf = pdf.sort_values(keys + ["rank"], kind="mergesort")
-            pdf["rank"] = (pdf.groupby(keys).cumcount() if keys
-                           else np.arange(len(pdf)))
-            return LocalFrame(self.spark, pdf[pdf["rank"] < k], out.schema)
+            got = (out._cols if isinstance(out, LocalFrame) else
+                   {c: v.to_numpy() for c, v in out.toPandas().items()})
+            live = ~np.isin(np.asarray(got["doc_id"], np.int64), ids)
+            got = {c: v[live] for c, v in got.items()}
+            q = (np.unique(got["query_id"], return_inverse=True)[1] if keys
+                 else np.zeros(int(live.sum()), np.int64))
+            order = np.lexsort((np.asarray(got["rank"], np.int64), q))
+            q = q[order]
+            first = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+            rank = np.arange(q.size) - np.repeat(
+                first, np.diff(np.r_[first, q.size]))
+            top = order[rank < k]
+            return LocalFrame(self.spark, {**{c: v[top] for c, v in
+                                              got.items()},
+                                           "rank": rank[rank < k]},
+                              out.schema)
         out = self._exclude_dead(out)
         w = (Window.partitionBy(*keys) if keys else Window).orderBy(
             F.asc("rank"))
@@ -1040,41 +1107,40 @@ class SegmentIndex:
         """An empty result (flat DDL `schema`): a LocalFrame over typed
         zero-row columns — no Spark job and no JVM call, except
         composition."""
-        return LocalFrame(self.spark, pd.DataFrame(
-            columns=[f.split()[0] for f in schema.split(",")]), schema)
+        return LocalFrame(self.spark, _no_rows(schema), schema)
 
     def _cut_topk(self, cand, k: int) -> DataFrame:
         """The one top-k cut of both placements: (doc_id, score) rows
         ordered by score desc, doc_id asc, the first k numbered 0.. as
-        `rank`. A pandas frame (the driver placement) is ranked by one
-        np.lexsort((doc_id, -score)) over its columns — a NaN score
-        sorts last — and cut into a LocalFrame, with no Spark job and no
-        JVM call; a DataFrame (a distributed plan) takes _rank_topk;
-        None (no row read) is an empty result."""
+        `rank`. Driver columns (the driver placement's numpy columns, or
+        a pandas frame) are ranked by one np.lexsort((doc_id, -score)) —
+        a NaN score sorts last — and cut into a LocalFrame, with no
+        Spark job and no JVM call; a DataFrame (a distributed plan) takes
+        _rank_topk; None (no row read) is an empty result."""
         if cand is None:
             return self._empty()
         if isinstance(cand, DataFrame):
             return _rank_topk(cand, k)
-        doc = cand["doc_id"].to_numpy(np.int64)
-        score = cand["score"].to_numpy(np.float64)
+        doc = np.asarray(cand["doc_id"], np.int64)
+        score = np.asarray(cand["score"], np.float64)
         top = np.lexsort((doc, -score))[:k]
-        return LocalFrame(self.spark, pd.DataFrame({
+        return LocalFrame(self.spark, {
             "rank": np.arange(top.size, dtype=np.int64),
-            "doc_id": doc[top], "score": score[top]}))
+            "doc_id": doc[top], "score": score[top]})
 
     def _round_cut(self, cand, k: int) -> DataFrame:
         """_cut_topk over scores rounded 6 dp HALF_UP: _round_half_up on
-        the driver (a pandas frame or a LocalFrame's rows), Catalyst's
+        the driver (driver columns or a LocalFrame's), Catalyst's
         F.round — the same values — in a distributed plan."""
         from ..operators.similarity import _round_half_up
 
         if isinstance(cand, LocalFrame):
-            cand = cand.toPandas()
-        if isinstance(cand, pd.DataFrame):
-            cand = cand.assign(score=_round_half_up(
-                cand["score"].to_numpy(np.float64), 6))
-        elif cand is not None:
+            cand = cand._cols
+        if isinstance(cand, DataFrame):
             cand = cand.select("doc_id", F.round("score", 6).alias("score"))
+        elif cand is not None:
+            cand = {"doc_id": cand["doc_id"], "score": _round_half_up(
+                np.asarray(cand["score"], np.float64), 6)}
         return self._cut_topk(cand, k)
 
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
@@ -1314,7 +1380,7 @@ class SegmentIndex:
         return sorted(set(fixed) | set(alts or ())), matcher
 
     def _phrase_cands(self, scan_terms: list[str], matcher):
-        """(doc_id, occ, dl) candidates of a phrase plan: a pandas frame
+        """(doc_id, occ, dl) candidates of a phrase plan: numpy columns
         when the driver placement reads the positional rows (_driver_ok
         on Σdf + Σcf of the scan terms — no Spark job), else the
         distributed per-part matcher plan."""
@@ -1322,8 +1388,7 @@ class SegmentIndex:
         cand = self._per_part(matcher, scan_terms, cols, PHRASE_CAND_SCHEMA,
                               self._driver_ok(pos_terms=scan_terms),
                               positions=True)
-        return (pd.DataFrame(columns=["doc_id", "occ", "dl"])
-                if cand is None else cand)
+        return _no_rows(PHRASE_CAND_SCHEMA) if cand is None else cand
 
     def _phrase_topk(self, plan, *, k: int) -> DataFrame:
         """Score + top-k a phrase plan (_phrase_plan): _phrase_scores in
@@ -1346,7 +1411,7 @@ class SegmentIndex:
 
         Placed like _phrase_cands. On the driver the candidates score in
         numpy with no Spark job — None when no doc contains the phrase,
-        else a LocalFrame, or with frame=False the pandas frame as is.
+        else a LocalFrame, or with frame=False its numpy columns.
         Above the cap the relation stays distributed and the phrase df
         comes from an in-plan count aggregation cross-joined back (the
         matcher subtree may evaluate twice — accepted for the rare
@@ -1368,16 +1433,15 @@ class SegmentIndex:
                  / (F.col("occ")
                     + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
                  ).alias("score"))
-        dfp = float(len(cand))
+        dfp = float(len(cand["doc_id"]))
         if dfp == 0:
             return None
         idf = float(np.log1p((n_docs - dfp + 0.5) / (dfp + 0.5)))
-        occ = cand["occ"].to_numpy(np.float64)
+        occ = cand["occ"].astype(np.float64)
         sc = (idf * (occ * (k1 + 1.0))
-              / (occ + k1 * (1.0 - b + b * cand["dl"].to_numpy(np.float64)
+              / (occ + k1 * (1.0 - b + b * cand["dl"].astype(np.float64)
                              / avgdl)))
-        out = pd.DataFrame({
-            "doc_id": cand["doc_id"].to_numpy(np.int64), "score": sc})
+        out = {"doc_id": cand["doc_id"], "score": sc}
         return LocalFrame(self.spark, out, TOPK_SCHEMA) if frame else out
 
     def score_all(self, query) -> DataFrame:
@@ -1399,9 +1463,9 @@ class SegmentIndex:
                               self._driver_ok(terms))
         if cand is None:
             return self._empty(TOPK_SCHEMA)
-        if isinstance(cand, pd.DataFrame):
-            return LocalFrame(self.spark, cand, TOPK_SCHEMA)
-        return cand
+        if isinstance(cand, DataFrame):
+            return cand
+        return LocalFrame(self.spark, cand, TOPK_SCHEMA)
 
     def _full_scorer(self, query) -> tuple[list[str], object]:
         """(terms present in the dictionary, their no-cut taat scorer)."""
@@ -1430,8 +1494,7 @@ class SegmentIndex:
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
         if not terms or doc_ids.size == 0:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
+            return pd.DataFrame(_no_rows(TOPK_SCHEMA))
         n_docs = float(self.stats["n_docs"])
         avgdl = float(self.stats["avgdl"])
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
@@ -1448,7 +1511,7 @@ class SegmentIndex:
         scorer = _make_scorer(idf_map, k1=k1, b=b, avgdl=avgdl, k=None,
                               mode="taat", only_docs=only)
         return self._by_part(seg).applyInPandas(
-            scorer, TOPK_SCHEMA).toPandas()
+            _frames(scorer), TOPK_SCHEMA).toPandas()
 
     def term_vectors(self, doc_ids: list[int]) -> DataFrame:
         """Per-doc term vectors (doc_id, term, tf, dl) for the requested
@@ -1613,24 +1676,9 @@ class SegmentIndex:
         """(term, doc_id) membership relation for the given terms — the
         raw postings-doc sets, decoded from the pruned segment scan (the
         set-operand form bool constraints consume)."""
-        seg = self._scan(sorted(set(terms)),
-                         ["doc_part", "term", "docs", "tfs", "dls"])
-
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                ids, _, _ = decode_postings(row.docs, row.tfs, row.dls)
-                outs.append(pd.DataFrame({"term": row.term, "doc_id": ids}))
-            if not outs:
-                return pd.DataFrame({
-                    "term": pd.Series([], dtype=object),
-                    "doc_id": pd.Series([], dtype=np.int64),
-                })
-            return pd.concat(outs, ignore_index=True)
-
-        return self._by_part(seg).applyInPandas(
-            emit, "term string, doc_id bigint"
-        )
+        return self._per_part(_term_docs_emit, sorted(set(terms)),
+                              ["doc_part", "term", "docs", "tfs", "dls"],
+                              "term string, doc_id bigint", local=False)
 
     def _parse_filters(self, filter) -> tuple[list[list[str]], list[tuple]]:
         """Split ES filter-context clauses into (term clauses, metadata
@@ -1798,7 +1846,7 @@ class SegmentIndex:
             live_mn, [t for t in should if t in idf_map], msm,
             live_scoring, idf_map, k1=float(self.stats["k1"]),
             b=float(self.stats["b"]), avgdl=float(self.stats["avgdl"]), k=k,
-            cogrouped=bool(meta_clauses), zero_fill=zero_fill,
+            zero_fill=zero_fill,
         )
         cols = ["doc_part", "term", "docs", "tfs", "dls"]
         if self._driver_ok(scan_terms, doc_store=bool(meta_clauses)):
@@ -1807,14 +1855,18 @@ class SegmentIndex:
                 scorer, scan_terms, cols, allowed), k)
         seg = self._by_part(self._scan(scan_terms, cols))
         if not meta_clauses:
-            return self._round_cut(seg.applyInPandas(scorer, TOPK_SCHEMA), k)
+            return self._round_cut(
+                seg.applyInPandas(_frames(scorer), TOPK_SCHEMA), k)
         doc_range = int(self.stats["doc_range"])
         pred = _meta_filter_pred(meta_clauses, self._store_schema())
         allowed = (self.doc_store().filter(pred)
                    .select((F.col("doc_id") / doc_range).cast("bigint")
                            .alias("doc_part"), "doc_id"))
-        return self._round_cut(seg.cogroup(self._by_part(allowed))
-                               .applyInPandas(scorer, TOPK_SCHEMA), k)
+        return self._round_cut(
+            seg.cogroup(self._by_part(allowed)).applyInPandas(
+                lambda left, right: pd.DataFrame(scorer(
+                    left, np.sort(right["doc_id"].to_numpy(np.int64)))),
+                TOPK_SCHEMA), k)
 
     def search_mixed(self, groups, k: int, _raw: bool = False) -> DataFrame:
         """OR of AND-groups — the ES mixed AND/OR query_string shape
@@ -1950,10 +2002,12 @@ class SegmentIndex:
                               schema, local=False)
 
     def _term_emitter(self, terms: list[str],
-                      idf_override: dict[str, float] | None = None):
+                      idf_override: dict[str, float] | None = None,
+                      fan: dict[str, list[int]] | None = None):
         """(live terms, per-doc_part closure emitting their (term, doc_id,
-        score) BM25 partials) — _term_scores's scorer, shared with the
-        bool tree's term leaves."""
+        score) BM25 partials) — _term_scores's scorer; with `fan` (term ->
+        the bool tree's clause ids holding it) the tree's (doc_id, cid,
+        score) clause rows, each posting once per clause of its term."""
         terms = sorted(set(terms))
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
@@ -1966,24 +2020,26 @@ class SegmentIndex:
             idf_map.update({t: float(v) for t, v in idf_override.items()
                             if t in idf_map})
 
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                ids, tfs, dls = decode_postings(row.docs, row.tfs,
-                                                row.dls)
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                sc = (idf_map[row.term] * (tf * (k1 + 1.0))
-                      / (tf + k1 * (1.0 - b + b * dl / avgdl)))
-                outs.append(pd.DataFrame(
-                    {"term": row.term, "doc_id": ids, "score": sc}))
-            if not outs:
-                return pd.DataFrame({
-                    "term": pd.Series([], dtype=object),
-                    "doc_id": pd.Series([], dtype=np.int64),
-                    "score": pd.Series([], dtype=np.float64),
-                })
-            return pd.concat(outs, ignore_index=True)
+        def emit(rows) -> dict:
+            part = _Part(rows)
+            tf = part.tfs.astype(np.float64)
+            dl = part.dls.astype(np.float64)
+            sc = (part.idf(idf_map) * (tf * (k1 + 1.0))
+                  / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+            if fan is None:
+                return {"term": part.term_col(), "doc_id": part.ids,
+                        "score": sc}
+            pairs = [(r, c) for r, t in enumerate(part.terms)
+                     for c in fan[t]]
+            r = np.array([p[0] for p in pairs], dtype=np.int64)
+            lens = part.counts[r]
+            # the postings of each pair's term, pair after pair
+            at = (np.repeat(part.offs[r] - np.cumsum(lens) + lens, lens)
+                  + np.arange(int(lens.sum())))
+            return {"doc_id": part.ids[at],
+                    "cid": np.repeat(np.array([p[1] for p in pairs],
+                                              dtype=np.int64), lens),
+                    "score": sc[at]}
 
         return terms, emit
 
@@ -2113,10 +2169,11 @@ class SegmentIndex:
                        ("must", "should", "must_not", "filter")
                        for c in x[role])
 
-        fan = pd.DataFrame(
-            [(t, i) for i, key in enumerate(cids)
-             if not (key and key[0] == _PHRASE_KEY) for t in key],
-            columns=["term", "cid"])
+        fan: dict[str, list[int]] = {}  # term -> the clauses holding it
+        for i, key in enumerate(cids):
+            if not (key and key[0] == _PHRASE_KEY):
+                for t in key:
+                    fan.setdefault(t, []).append(i)
         # a phrase whose plan is None can't match: its cid has no row
         phrases = [(i, self._phrase_plan([t for t in key[1] if t],
                                          key[2], list(key[3]) or None))
@@ -2124,14 +2181,16 @@ class SegmentIndex:
                    if key and key[0] == _PHRASE_KEY]
         phrases = [(i, p) for i, p in phrases if p is not None]
         match_all = needs_all(root)
-        live, emit = self._term_emitter(sorted(set(fan["term"])))
+        live, emit_cids = self._term_emitter(sorted(fan), fan=fan)
         local = self._driver_ok(live, [t for _, p in phrases for t in p[0]],
                                 bool(metas) or match_all)
 
         def tagged(rel, cid: int):
             """(doc_id, score) rows as the clause rows of `cid`."""
             if local:
-                return rel.assign(cid=cid)[["doc_id", "cid", "score"]]
+                return {"doc_id": rel["doc_id"],
+                        "cid": np.full(len(rel["doc_id"]), cid, np.int64),
+                        "score": rel["score"]}
             return rel.select("doc_id", F.lit(cid).cast("bigint").alias(
                 "cid"), "score")
 
@@ -2139,8 +2198,9 @@ class SegmentIndex:
             """The doc ids a meta clause group admits (all, without one)
             as score-0 clause rows of `cid`."""
             if local:
-                ids = pd.DataFrame({"doc_id": self._doc_ids(mcl)})
-                return tagged(ids.assign(score=0.0), cid)
+                ids = self._doc_ids(mcl)
+                return tagged({"doc_id": ids, "score": np.zeros(ids.size)},
+                              cid)
             store = self.doc_store()
             if mcl:
                 store = store.filter(_meta_filter_pred(
@@ -2148,10 +2208,6 @@ class SegmentIndex:
             return tagged(store.select(
                 F.col("doc_id").cast("bigint").alias("doc_id"),
                 F.lit(0.0).alias("score")), cid)
-
-        def emit_cids(pdf: pd.DataFrame) -> pd.DataFrame:
-            return emit(pdf).merge(fan, on="term")[["doc_id", "cid",
-                                                    "score"]]
 
         rows = []
         if live:
@@ -2169,15 +2225,15 @@ class SegmentIndex:
             return None
         evaluate = _make_tree_eval(root)
         if local:
-            return LocalFrame(self.spark, evaluate(
-                pd.concat(rows, ignore_index=True)), TOPK_SCHEMA)
+            return LocalFrame(self.spark, evaluate(_concat(rows)),
+                              TOPK_SCHEMA)
         u = rows[0]
         for r in rows[1:]:
             u = u.unionByName(r)
         doc_range = int(self.stats["doc_range"])
         return self._by_part(u.withColumn(
             "doc_part", (F.col("doc_id") / doc_range).cast("bigint"))
-        ).applyInPandas(evaluate, TOPK_SCHEMA)
+        ).applyInPandas(_frames(evaluate), TOPK_SCHEMA)
 
     def _doc_ids(self, meta_clauses=()) -> np.ndarray:
         """Sorted ids of the doc-store rows every metadata clause admits
@@ -2495,37 +2551,10 @@ class SegmentIndex:
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
         idf_map = {t: float(lucene_idf(n_docs, float(dfs[t]))) for t in terms}
         want = np.array(sorted(set(int(d) for d in doc_ids)), dtype=np.int64)
-        seg = self._scan(terms, ["doc_part", "term", "docs", "tfs", "dls"])
-
-        def explain_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                ids, tfs, dls = decode_postings(row.docs, row.tfs, row.dls)
-                m = np.isin(ids, want)
-                if not m.any():
-                    continue
-                idf = idf_map[row.term]
-                part = idf * tf_norm(
-                    tfs[m].astype(np.float64), dls[m].astype(np.float64),
-                    k1=k1, b=b, avgdl=avgdl,
-                )
-                outs.append(pd.DataFrame({
-                    "doc_id": ids[m], "term": row.term,
-                    "tf": tfs[m], "dl": dls[m],
-                    "idf": idf, "partial": part,
-                }))
-            if not outs:
-                return pd.DataFrame({
-                    "doc_id": pd.Series([], dtype=np.int64),
-                    "term": pd.Series([], dtype=object),
-                    "tf": pd.Series([], dtype=np.int64),
-                    "dl": pd.Series([], dtype=np.int64),
-                    "idf": pd.Series([], dtype=np.float64),
-                    "partial": pd.Series([], dtype=np.float64),
-                })
-            return pd.concat(outs, ignore_index=True)
-
-        return self._by_part(seg).applyInPandas(explain_group, out_schema)
+        return self._per_part(
+            _make_explainer(idf_map, want, k1=k1, b=b, avgdl=avgdl), terms,
+            ["doc_part", "term", "docs", "tfs", "dls"], out_schema,
+            local=False)
 
     def search_phrase_prefix(self, phrase, k: int, *,
                              max_expansions: int = 50, slop: int = 0,
@@ -2632,13 +2661,13 @@ class SegmentIndex:
         # stage scores the batch and a per-query window takes each
         # top-k — the bounded-memory form at any batch and part count.
         local = mode == "taat" and self._driver_ok(live)
-        pdf = self._per_part(scorer, live, list(_SCORE_COLS),
+        got = self._per_part(scorer, live, list(_SCORE_COLS),
                              "query_id string, doc_id bigint, score double",
                              local)
         if not local:
             w = Window.partitionBy("query_id").orderBy(
                 F.desc("score"), F.asc("doc_id"))
-            out = (pdf.withColumn("rank",
+            out = (got.withColumn("rank",
                                   (F.row_number().over(w) - 1).cast("bigint"))
                    .filter(F.col("rank") < k)
                    .select("query_id", "rank", "doc_id", "score"))
@@ -2650,35 +2679,28 @@ class SegmentIndex:
                         F.col("alias_id").alias("query_id"), "rank",
                         "doc_id", "score"))
             return out
-        if pdf is None or not len(pdf):
+        if got is None or not len(got["doc_id"]):
             return self._empty(MANY_SCHEMA)
         # numpy merge: hash-factorize the query ids (no string sort),
         # one lexsort by (query, score desc, doc_id asc), vectorized
         # within-query ranks — a pandas sort_values over ~1M rows was
         # the measured single-threaded floor of the batch path
-        qcode, _ = pd.factorize(pdf["query_id"], sort=False)
-        scores = pdf["score"].to_numpy(np.float64)
-        doc_ids = pdf["doc_id"].to_numpy(np.int64)
+        qids, scores, doc_ids = got["query_id"], got["score"], got["doc_id"]
+        qcode, _ = pd.factorize(qids, sort=False)
         order = np.lexsort((doc_ids, -scores, qcode))
         qs = qcode[order]
         first = np.concatenate(([0], np.flatnonzero(np.diff(qs)) + 1))
         counts = np.diff(np.append(first, qs.size))
         ranks = np.arange(qs.size) - np.repeat(first, counts)
         sel = order[ranks < k]
-        top = pd.DataFrame({
-            "query_id": pdf["query_id"].to_numpy()[sel],
-            "rank": ranks[ranks < k],
-            "doc_id": doc_ids[sel],
-            "score": scores[sel],
-        })
-        if alias:
-            frames = [top]
-            for a, c in alias.items():
-                dup = top[top["query_id"] == c].copy()
-                dup["query_id"] = a
-                frames.append(dup)
-            top = pd.concat(frames, ignore_index=True)
-        return LocalFrame(self.spark, top, MANY_SCHEMA)
+        top = {"query_id": qids[sel], "rank": ranks[ranks < k],
+               "doc_id": doc_ids[sel], "score": scores[sel]}
+        dups = []
+        for a, c in alias.items():
+            m = top["query_id"] == c
+            dups.append({**{col: v[m] for col, v in top.items()},
+                         "query_id": np.full(int(m.sum()), a, object)})
+        return LocalFrame(self.spark, _concat([top] + dups), MANY_SCHEMA)
 
 
 def search_dismax(field_indexes: dict, query, k: int, *,
@@ -3129,68 +3151,53 @@ def _make_phrase_matcher(phrase: list[str], last_alts: list[str] | None = None):
     """
     POS_BITS = 33  # positions < 2^33 per doc; local doc index < 2^30
 
-    def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "doc_id": pd.Series([], dtype=np.int64),
-            "occ": pd.Series([], dtype=np.int64),
-            "dl": pd.Series([], dtype=np.int64),
-        })
-        dec: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = {}
-        for row in pdf.itertuples(index=False):
-            ids, tfs, dls = decode_postings(row.docs, row.tfs, row.dls)
-            flat = decode_positions(row.positions or b"", tfs)
-            dec[row.term] = (ids, tfs, dls, flat)
+    def match_group(rows) -> dict:
+        part = _Part(rows, positions=True)
         fixed = phrase[:-1] if last_alts is not None else phrase
-        alts = ([t for t in last_alts if t in dec]
+        alts = ([t for t in last_alts if t in part.at]
                 if last_alts is not None else None)
-        if any(t not in dec for t in fixed) or (alts is not None and not alts):
-            return empty  # a required term absent from this doc range
-        present = set(fixed) | set(alts or ([phrase[-1]]
-                                            if last_alts is None else []))
-        all_ids = np.unique(np.concatenate([dec[t][0] for t in present]))
-        keys = {}
-        for t in present:
-            ids, tfs, _, flat = dec[t]
-            loc = np.searchsorted(all_ids, ids)
-            keys[t] = (np.repeat(loc, tfs) << POS_BITS) + flat
+        if (any(t not in part.at for t in fixed)
+                or (alts is not None and not alts)):
+            # a required term absent from this doc range
+            return _no_rows(PHRASE_CAND_SCHEMA)
+
+        def dec(t):
+            s = part.span(t)
+            return part.ids[s], part.tfs[s], part.dls[s]
 
         if not fixed:
             # pure-prefix single-position phrase: occ = total positions of
-            # any alternative per doc
-            id_parts = [np.repeat(dec[t][0], dec[t][1]) for t in alts]
-            rep_ids = np.concatenate(id_parts)
-            uniq, counts = np.unique(rep_ids, return_counts=True)
-            dl_map = {}
-            for t in alts:
-                ids_t, _, dls_t, _ = dec[t]
-                for d, l in zip(ids_t.tolist(), dls_t.tolist()):
-                    dl_map.setdefault(d, l)
-            return pd.DataFrame({
-                "doc_id": uniq,
-                "occ": counts.astype(np.int64),
-                "dl": np.array([dl_map[int(d)] for d in uniq], dtype=np.int64),
-            })
+            # any alternative per doc; dl from the first alternative
+            # holding the doc
+            ids, tfs, dls = (np.concatenate(c)
+                             for c in zip(*(dec(t) for t in alts)))
+            uniq, first, inv = np.unique(ids, return_index=True,
+                                         return_inverse=True)
+            return {"doc_id": uniq,
+                    "occ": np.bincount(inv, tfs).astype(np.int64),
+                    "dl": dls[first]}
 
-        ids0, tfs0, dls0, _ = dec[fixed[0]]
+        present = set(fixed) | set(alts or [phrase[-1]])
+        all_ids = np.unique(np.concatenate([dec(t)[0] for t in present]))
+        keys = {}
+        for t in present:
+            ids, tfs, _ = dec(t)
+            loc = np.searchsorted(all_ids, ids)
+            keys[t] = (np.repeat(loc, tfs) << POS_BITS) + part.positions(t)
+
+        ids0, tfs0, dls0 = dec(fixed[0])
         k0 = keys[fixed[0]]
         mask = np.ones(k0.size, dtype=bool)
         for j, t in enumerate(fixed[1:], start=1):
             mask &= np.isin(k0 + j, keys[t])
         if alts is not None:
-            last_j = len(fixed)
             last_keys = np.concatenate([keys[t] for t in alts])
-            mask &= np.isin(k0 + last_j, last_keys)
-        if not mask.any():
-            return empty
-        occ = np.zeros(ids0.size, dtype=np.int64)
-        posting_idx = np.repeat(np.arange(ids0.size), tfs0)
-        np.add.at(occ, posting_idx[mask], 1)
+            mask &= np.isin(k0 + len(fixed), last_keys)
+        occ = np.bincount(np.repeat(np.arange(ids0.size), tfs0)[mask],
+                          minlength=ids0.size)
         sel = occ > 0
-        return pd.DataFrame({
-            "doc_id": ids0[sel],
-            "occ": occ[sel],
-            "dl": dls0[sel],
-        })
+        return {"doc_id": ids0[sel], "occ": occ[sel].astype(np.int64),
+                "dl": dls0[sel]}
 
     return match_group
 
@@ -3281,70 +3288,77 @@ def _make_sloppy_phrase_matcher(phrase: list[str], slop: int,
     Emits (doc_id, occ, dl) exactly like the exact matcher, so
     _phrase_topk's driver/distributed regimes serve both unchanged."""
 
-    def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "doc_id": pd.Series([], dtype=np.int64),
-            "occ": pd.Series([], dtype=np.int64),
-            "dl": pd.Series([], dtype=np.int64),
-        })
-        dec: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = {}
-        for row in pdf.itertuples(index=False):
-            ids, tfs, dls = decode_postings(row.docs, row.tfs, row.dls)
-            flat = decode_positions(row.positions or b"", tfs)
-            dec[row.term] = (ids, tfs, dls, flat)
+    def match_group(rows) -> dict:
+        part = _Part(rows, positions=True)
         fixed = phrase[:-1] if last_alts is not None else phrase
-        alts = ([t for t in last_alts if t in dec]
+        alts = ([t for t in last_alts if t in part.at]
                 if last_alts is not None else None)
-        if any(t not in dec for t in fixed) or (alts is not None
-                                                and not alts):
-            return empty  # a required term absent from this doc range
+        if any(t not in part.at for t in fixed) or (alts is not None
+                                                    and not alts):
+            # a required term absent from this doc range
+            return _no_rows(PHRASE_CAND_SCHEMA)
         # candidate docs: present in EVERY fixed term's postings (and,
         # prefix form, in at least one expansion's postings)
-        cand = dec[fixed[0]][0]
+        cand = part.ids[part.span(fixed[0])]
         for t in fixed[1:]:
-            cand = cand[np.isin(cand, dec[t][0])]
+            cand = cand[np.isin(cand, part.ids[part.span(t)])]
         if alts is not None and cand.size:
             alt_union = np.unique(
-                np.concatenate([dec[t][0] for t in alts]))
+                np.concatenate([part.ids[part.span(t)] for t in alts]))
             cand = cand[np.isin(cand, alt_union)]
         if not cand.size:
-            return empty
-        # per-term posting offsets for slicing flat positions per doc
-        lookup = {}
+            return _no_rows(PHRASE_CAND_SCHEMA)
+        # per term, each candidate's posting (global index into the
+        # part's postings): its positions are pos[poffs[p]:poffs[p + 1]]
+        at = {}
         for t in set(fixed) | set(alts or []):
-            ids, tfs, dls, flat = dec[t]
-            offs = np.concatenate(([0], np.cumsum(tfs)))
-            pidx = np.searchsorted(ids, cand)
-            lookup[t] = (ids, offs, pidx, flat, dls)
+            s = part.span(t)
+            p = s.start + np.searchsorted(part.ids[s], cand)
+            ok = p < s.stop
+            ok[ok] = part.ids[p[ok]] == cand[ok]
+            at[t] = (p, ok)
+        def positions(t, i):
+            p = at[t][0][i]
+            return part.pos[part.poffs[p]:part.poffs[p + 1]]
+
         occ = np.zeros(cand.size, dtype=np.int64)
         for i in range(cand.size):
-            qs = []
-            for j, t in enumerate(fixed):
-                _, offs, pidx, flat, _ = lookup[t]
-                p = pidx[i]
-                pos = flat[offs[p]:offs[p + 1]]
-                qs.append(np.sort(pos.astype(np.int64)) - j)
+            qs = [np.sort(positions(t, i)) - j for j, t in enumerate(fixed)]
             if alts is not None:
-                parts = []
-                for t in alts:
-                    ids, offs, pidx, flat, _ = lookup[t]
-                    p = pidx[i]
-                    if p < ids.size and ids[p] == cand[i]:
-                        parts.append(flat[offs[p]:offs[p + 1]])
-                qs.append(np.sort(np.concatenate(parts)
-                                  .astype(np.int64)) - len(fixed))
+                qs.append(np.sort(np.concatenate(
+                    [positions(t, i) for t in alts if at[t][1][i]]))
+                    - len(fixed))
             occ[i] = _sloppy_tf(qs, slop)
         sel = occ > 0
-        if not sel.any():
-            return empty
-        _, offs0, pidx0, _, dls0 = lookup[fixed[0]]
-        return pd.DataFrame({
-            "doc_id": cand[sel],
-            "occ": occ[sel],
-            "dl": dls0[pidx0[sel]],
-        })
+        return {"doc_id": cand[sel], "occ": occ[sel],
+                "dl": part.dls[at[fixed[0]][0][sel]]}
 
     return match_group
+
+
+def _term_docs_emit(rows) -> dict:
+    """Per-doc_part (term, doc_id) membership rows (_term_docs)."""
+    part = _Part(rows)
+    return {"term": part.term_col(), "doc_id": part.ids}
+
+
+def _make_explainer(idf_map: dict[str, float], want: np.ndarray, *,
+                    k1: float, b: float, avgdl: float):
+    """Per-doc_part explain rows (doc_id, term, tf, dl, idf, partial) of
+    the sorted doc ids `want` (SegmentIndex.explain)."""
+
+    def explain_group(rows) -> dict:
+        part = _Part(rows)
+        m = np.isin(part.ids, want)
+        idf = part.idf(idf_map)[m]
+        tfs, dls = part.tfs[m], part.dls[m]
+        return {"doc_id": part.ids[m], "term": part.term_col()[m],
+                "tf": tfs, "dl": dls, "idf": idf,
+                "partial": idf * tf_norm(tfs.astype(np.float64),
+                                         dls.astype(np.float64),
+                                         k1=k1, b=b, avgdl=avgdl)}
+
+    return explain_group
 
 
 def _make_scorer(idf_map: dict[str, float], *, k1: float, b: float,
@@ -3362,15 +3376,14 @@ def _make_scorer(idf_map: dict[str, float], *, k1: float, b: float,
     ranges are disjoint; the determinism contract makes per-part float64
     sums bit-identical to any global computation)."""
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("term", kind="mergesort")  # fixed term order
+    def score_group(rows) -> dict:
         if mode == "wand":
-            ids, scores = _wand_topk(pdf, idf_map, k1=k1, b=b, avgdl=avgdl,
+            ids, scores = _wand_topk(rows, idf_map, k1=k1, b=b, avgdl=avgdl,
                                      k=k, after=after)
         else:
-            ids, scores = _taat_topk(pdf, idf_map, k1=k1, b=b, avgdl=avgdl,
+            ids, scores = _taat_topk(rows, idf_map, k1=k1, b=b, avgdl=avgdl,
                                      k=k, only_docs=only_docs, after=after)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
+        return {"doc_id": ids, "score": scores}
 
     return score_group
 
@@ -3400,44 +3413,37 @@ def _make_multi_scorer(qterms: dict[str, list[str]], idf_map: dict[str, float],
     term order (one add.at pass per term), so float64 sums are
     bit-identical to the sparse path and to search() — pytest-pinned."""
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("term", kind="mergesort")
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        rows_by_term: dict[str, object] = {}
-        for row in pdf.itertuples(index=False):
-            ids, tfs, dls = decode_postings(row.docs, row.tfs, row.dls)
-            contrib = idf_map[row.term] * tf_norm(
-                tfs.astype(np.float64), dls.astype(np.float64),
-                k1=k1, b=b, avgdl=avgdl,
-            )
-            decoded[row.term] = (ids, contrib)
-            rows_by_term[row.term] = row
-        dense = (mode != "wand" and decoded and doc_range is not None
+    def score_group(rows) -> dict:
+        part = _Part(rows)
+        # idf * tf_norm depends only on the term: once per posting
+        contrib = part.idf(idf_map) * tf_norm(
+            part.tfs.astype(np.float64), part.dls.astype(np.float64),
+            k1=k1, b=b, avgdl=avgdl)
+        dense = (mode != "wand" and part.terms and doc_range is not None
                  and 0 < doc_range <= DENSE_RANGE_CAP)
         if dense:
-            base = int(pdf["doc_part"].iloc[0]) * doc_range
-            loc = {t: (ids - base).astype(np.int64)
-                   for t, (ids, _) in decoded.items()}
+            base = int(np.asarray(part.rows["doc_part"])[0]) * doc_range
+            loc = part.ids - base
             acc_buf = np.zeros(doc_range)
             stamp = np.full(doc_range, -1, dtype=np.int32)
         out_q: list[np.ndarray] = []
         out_ids: list[np.ndarray] = []
         out_scores: list[np.ndarray] = []
         for qi, qid in enumerate(sorted(qterms)):
-            terms = [t for t in qterms[qid] if t in decoded]
+            terms = [t for t in qterms[qid] if t in part.at]
             if not terms:
                 continue
             if mode == "wand":
-                sub = pd.DataFrame([rows_by_term[t] for t in terms])
-                ids, scores = _wand_topk(sub, idf_map, k1=k1, b=b,
-                                         avgdl=avgdl, k=k)
+                ids, scores = _wand_topk(part, idf_map, k1=k1, b=b,
+                                         avgdl=avgdl, k=k, terms=terms)
             elif dense:
                 newly = []
                 for t in terms:  # sorted order: per-doc adds term-ordered
-                    lt = loc[t]
+                    s = part.span(t)
+                    lt = loc[s]
                     # posting doc-ids are unique per term, so fancy-index
                     # += is exact here (and much faster than np.add.at)
-                    acc_buf[lt] += decoded[t][1]
+                    acc_buf[lt] += contrib[s]
                     fresh = lt[stamp[lt] != qi]
                     stamp[fresh] = qi
                     newly.append(fresh)
@@ -3453,11 +3459,11 @@ def _make_multi_scorer(qterms: dict[str, list[str]], idf_map: dict[str, float],
                 order = np.lexsort((u, -sc))[:k]
                 ids, scores = u[order] + base, sc[order]
             else:
-                ids = np.concatenate([decoded[t][0] for t in terms])
-                scores = np.concatenate([decoded[t][1] for t in terms])
+                sel = [part.span(t) for t in terms]
+                ids = np.concatenate([part.ids[s] for s in sel])
                 uniq, inv = np.unique(ids, return_inverse=True)
                 acc = np.zeros(uniq.size)
-                np.add.at(acc, inv, scores)
+                np.add.at(acc, inv, np.concatenate([contrib[s] for s in sel]))
                 order = np.lexsort((uniq, -acc))[:k]
                 ids, scores = uniq[order], acc[order]
             if ids.size:
@@ -3465,46 +3471,32 @@ def _make_multi_scorer(qterms: dict[str, list[str]], idf_map: dict[str, float],
                 out_ids.append(ids)
                 out_scores.append(scores)
         if not out_q:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype=object),
-                "doc_id": pd.Series([], dtype=np.int64),
-                "score": pd.Series([], dtype=np.float64),
-            })
-        return pd.DataFrame({
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_ids),
-            "score": np.concatenate(out_scores),
-        })
+            return _no_rows("query_id string, doc_id bigint, score double")
+        return {"query_id": np.concatenate(out_q),
+                "doc_id": np.concatenate(out_ids),
+                "score": np.concatenate(out_scores)}
 
     return score_group
 
 
-def _taat_topk(pdf: pd.DataFrame, idf_map, *, k1, b, avgdl, k,
-               only_docs=None, after=None):
-    """Exact vectorized term-at-a-time: decode all matched postings in the
-    range, accumulate idf*tf_norm per doc (term-sorted order), top-k.
+def _taat_topk(rows, idf_map, *, k1, b, avgdl, k, only_docs=None,
+               after=None):
+    """Exact vectorized term-at-a-time over one part's rows (or its
+    _Part): decode every matched posting in one pass, accumulate
+    idf*tf_norm per doc (term-sorted order), top-k.
     only_docs (sorted int64) drops non-candidate postings pre-accumulation.
     after=(score, doc_id) keeps only docs strictly after the cursor in
     (score desc, doc_id asc) order — the cut happens on the FINAL
     accumulated score, so it is exact, not heuristic."""
-    all_ids, all_scores = [], []
-    for row in pdf.itertuples(index=False):
-        ids, tfs, dls = decode_postings(row.docs, row.tfs, row.dls)
-        if only_docs is not None:
-            keep = np.isin(ids, only_docs)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            if ids.size == 0:
-                continue
-        contrib = idf_map[row.term] * tf_norm(
-            tfs.astype(np.float64), dls.astype(np.float64),
-            k1=k1, b=b, avgdl=avgdl,
-        )
-        all_ids.append(ids)
-        all_scores.append(contrib)
-    if not all_ids:
+    part = rows if isinstance(rows, _Part) else _Part(rows)
+    ids, tfs, dls, idf = part.ids, part.tfs, part.dls, part.idf(idf_map)
+    if only_docs is not None:
+        keep = np.isin(ids, only_docs)
+        ids, tfs, dls, idf = ids[keep], tfs[keep], dls[keep], idf[keep]
+    if not ids.size:
         return np.empty(0, dtype=np.int64), np.empty(0)
-    ids = np.concatenate(all_ids)
-    scores = np.concatenate(all_scores)
+    scores = idf * tf_norm(tfs.astype(np.float64), dls.astype(np.float64),
+                           k1=k1, b=b, avgdl=avgdl)
     uniq, inv = np.unique(ids, return_inverse=True)
     acc = np.zeros(uniq.size)
     np.add.at(acc, inv, scores)  # element order = term-sorted: deterministic
@@ -3555,8 +3547,8 @@ class _TermCursor:
         return float(self.block_ub[bi])
 
 
-def _wand_topk(pdf: pd.DataFrame, idf_map, *, k1, b, avgdl, k, stats=None,
-               after=None):
+def _wand_topk(rows, idf_map, *, k1, b, avgdl, k, stats=None, after=None,
+               terms=None):
     """Block-max WAND (Ding & Suel, 2011 — public algorithm): doc-at-a-time
     pivoting over per-term cursors with global and per-block upper bounds.
     Rank-safe: returns exactly the taat top-k (asserted in tests).
@@ -3565,18 +3557,23 @@ def _wand_topk(pdf: pd.DataFrame, idf_map, *, k1, b, avgdl, k, stats=None,
     idf skew lets the threshold exclude most docs (selective + hot term
     mixes). On flat-score corpora (every term in every doc) the exact
     vectorized taat path is faster — which is why taat is the default mode.
-    `stats` (optional dict) receives n_scored / n_skip_jumps / n_candidates
-    so tests can assert pruning actually happens."""
+    `terms` restricts the cursors (search_many's per-query pass);
+    `stats` (optional dict) receives n_scored / n_skip_jumps /
+    n_candidates so tests can assert pruning actually happens."""
+    part = rows if isinstance(rows, _Part) else _Part(rows)
+    tfn = part.idf(idf_map) * tf_norm(
+        part.tfs.astype(np.float64), part.dls.astype(np.float64),
+        k1=k1, b=b, avgdl=avgdl)
+    lasts = _pylist(part.rows["block_last"])
+    maxes = _pylist(part.rows["block_max"])
     cursors: list[_TermCursor] = []
-    for row in pdf.itertuples(index=False):
-        ids, tfs, dls = decode_postings(row.docs, row.tfs, row.dls)
-        idf = idf_map[row.term]
-        tfn = idf * tf_norm(tfs.astype(np.float64), dls.astype(np.float64),
-                            k1=k1, b=b, avgdl=avgdl)
-        block_last = np.asarray(row.block_last, dtype=np.int64)
-        # float32 block max was rounded up at encode; widen then scale
-        block_ub = idf * np.asarray(row.block_max, dtype=np.float64)
-        cursors.append(_TermCursor(row.term, idf, ids, tfn, block_last, block_ub))
+    for r, t in enumerate(part.terms):  # term order
+        if terms is None or t in terms:
+            s, idf = part.span(t), idf_map[t]
+            # float32 block max was rounded up at encode; widen then scale
+            cursors.append(_TermCursor(
+                t, idf, part.ids[s], tfn[s], np.asarray(lasts[r], np.int64),
+                idf * np.asarray(maxes[r], dtype=np.float64)))
     if not cursors:
         return np.empty(0, dtype=np.int64), np.empty(0)
 

@@ -344,3 +344,92 @@ def test_positions_runs_equal_per_run_reference(seed):
         want = np.concatenate(run) if run else np.empty(0, np.int64)
         assert np.array_equal(decode_positions(blob, t), want)
         assert encode_positions(want, t) == blob
+
+
+# ---- the read path's part-wide decode against the per-row decode ----------
+
+def _draw_part(rng, dfs, block_size=8, doc_range=1 << 20):
+    """One doc_part's segment rows as a pandas frame in random row order:
+    a term per df, its postings and positions encoded per row. A df of 0
+    is a degenerate row with empty blobs and a None positions blob."""
+    import pandas as pd
+
+    from newssearchengine_spark.functions.codec import encode_postings
+
+    rows = []
+    for i, (ids, tfs, dls) in enumerate(_draw_runs(rng, dfs, doc_range, 4)):
+        lists = [np.sort(rng.choice(200, size=int(t), replace=False))
+                 for t in tfs]
+        if ids.size:
+            docs, tb, db, last, mx = encode_postings(
+                ids, tfs, dls, k1=1.2, b=0.75, avgdl=40.0,
+                block_size=block_size)
+            pos = _ref_positions(lists)
+        else:
+            docs = tb = db = b""
+            last, mx = np.empty(0, np.int64), np.empty(0, np.float32)
+            pos = None
+        rows.append({"doc_part": 3, "term": f"t{i:02d}", "docs": docs,
+                     "tfs": tb, "dls": db, "block_last": last,
+                     "block_max": mx, "positions": pos})
+    cols = ["doc_part", "term", "docs", "tfs", "dls", "block_last",
+            "block_max", "positions"]
+    return pd.DataFrame(rows, columns=cols).iloc[rng.permutation(len(rows))]
+
+
+PART_SHAPES = [
+    [],                       # zero rows
+    [1],                      # one row, df 1
+    [8],                      # df at block_size
+    [1, 7, 8, 9, 17, 24],     # across block_size
+    [5, 0, 1, 0, 30],         # degenerate empty rows among them
+    [int(d) for d in np.random.default_rng(7).integers(1, 60, size=12)],
+]
+
+
+def _arrow_forms(pdf):
+    """The same rows as the read path's Arrow inputs: a table, a sliced
+    table (arrays with a non-zero offset) and large_binary blobs."""
+    import pyarrow as pa
+
+    t = pa.Table.from_pandas(pdf, preserve_index=False)
+    sliced = pa.concat_tables([t.slice(0, min(2, len(t))), t]).combine_chunks()
+    big = t.cast(pa.schema([
+        pa.field(f.name, pa.large_binary()) if pa.types.is_binary(f.type)
+        else f for f in t.schema]))
+    return [t, sliced.slice(min(2, len(t))), big]
+
+
+@pytest.mark.parametrize("shape", range(len(PART_SHAPES)))
+def test_part_decode_equals_per_row_decode(shape):
+    """A part's one-pass decode (_Part: decode_runs over the blob
+    columns, decode_positions_runs over positions) gives each term
+    exactly its row's decode_postings / decode_positions, from a pandas
+    frame and from Arrow tables (sliced and large_binary too)."""
+    from newssearchengine_spark.functions.codec import decode_runs
+    from newssearchengine_spark.plans.search import _Part
+
+    rng = np.random.default_rng(970 + shape)
+    pdf = _draw_part(rng, PART_SHAPES[shape])
+    want = {}
+    for r in pdf.itertuples(index=False):
+        ids, tfs, dls = decode_postings(r.docs, r.tfs, r.dls)
+        want[r.term] = (ids, tfs, dls,
+                        decode_positions(r.positions or b"", tfs))
+    for rows in [pdf] + _arrow_forms(pdf):
+        part = _Part(rows, positions=True)
+        assert part.terms == sorted(want)
+        assert part.ids.dtype == part.tfs.dtype == np.int64
+        for t, (ids, tfs, dls, pos) in want.items():
+            s = part.span(t)
+            assert np.array_equal(part.ids[s], ids)
+            assert np.array_equal(part.tfs[s], tfs)
+            assert np.array_equal(part.dls[s], dls)
+            assert np.array_equal(part.positions(t), pos)
+        # the column decode itself, in the rows' own order
+        ids, tfs, dls, counts = decode_runs(rows["docs"], rows["tfs"],
+                                            rows["dls"])
+        terms = list(pdf["term"])
+        assert counts.tolist() == [want[t][0].size for t in terms]
+        assert np.array_equal(ids, np.concatenate(
+            [want[t][0] for t in terms] + [np.empty(0, np.int64)]))

@@ -157,3 +157,62 @@ def test_cut_topk_equals_pandas_sort(spark, k):
     assert got["doc_id"].tolist() == want["doc_id"].tolist()
     assert np.array_equal(got["score"].to_numpy(), want["score"].to_numpy(),
                           equal_nan=True)
+
+
+@pytest.mark.parametrize("empty", [False, True], ids=["rows", "empty"])
+@pytest.mark.parametrize("case", ["ranked", "msearch"])
+def test_local_frame_from_numpy_columns_equals_pandas(spark, case, empty,
+                                                      py4j_commands):
+    """The driver placement hands LocalFrame typed numpy columns; the
+    frame equals one built from the same rows as a pandas frame: rows
+    (NaN read as None), toPandas() dtypes, count, columns, schema and a
+    composed join."""
+    schema, cols = CASES[case]
+    pdf = pd.DataFrame(cols).iloc[:0] if empty else pd.DataFrame(cols)
+    arrays = {c: pdf[c].to_numpy(object if c == "query_id" else None)
+              for c in pdf.columns}
+    a, b = LocalFrame(spark, arrays, schema), LocalFrame(spark, pdf, schema)
+    n = py4j_commands()
+    got = (a.collect(), a.toPandas(), a.count(), a.columns, a.schema)
+    want = (b.collect(), b.toPandas(), b.count(), b.columns, b.schema)
+    assert py4j_commands() == n
+    assert got[0] == want[0] and len(got[0]) == (0 if empty else 3)
+    if not empty:
+        assert None in [r["score"] for r in got[0]]
+    assert got[1].dtypes.to_dict() == want[1].dtypes.to_dict()
+    pd.testing.assert_frame_equal(got[1], want[1])
+    assert got[2:] == want[2:]
+    assert _composed(a) == _composed(b)
+
+
+def test_local_frame_of_numpy_columns_builds_jvm_frame_once(spark):
+    """Eight threads composing one LocalFrame of numpy columns at once
+    share one JVM frame, and its rows are the frame's own."""
+    import sys
+    import threading
+
+    schema, cols = CASES["msearch"]
+    lf = LocalFrame(spark, {c: np.asarray(v, object if c == "query_id"
+                                          else None)
+                            for c, v in cols.items()}, schema)
+    barrier = threading.Barrier(8)
+    seen = []
+
+    def compose():
+        barrier.wait(timeout=30)
+        seen.append(lf._jdf)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=compose) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 8 and all(j is seen[0] for j in seen)
+    assert (sorted(tuple(r) for r in lf.select("*").collect())
+            == sorted(tuple(r) for r in lf.collect()))

@@ -1166,9 +1166,10 @@ def test_search_driver_and_distributed_regimes_identical(
     a driver regime (pyarrow read + the SAME per-part closure on the
     driver under SEARCH_DRIVER_CAP on a warm index) and distributed
     plans above it, so results must be identical. Force the distributed regimes by zeroing the cap and
-    compare, including the search_after cursor cut and with_meta join,
+    compare, including the search_after cursor cut, the with_meta join,
+    score_all's complete relation and phrase-prefix (exact and sloppy),
     on a clean index and on a tombstoned one. On the tombstoned index
-    _live's pandas re-rank must also equal its Spark-window form (forced
+    _live's numpy re-rank must also equal its Spark-window form (forced
     by zeroing DELETED_ISIN_CAP)."""
     import newssearchengine_spark.plans.search as S
 
@@ -1180,6 +1181,9 @@ def test_search_driver_and_distributed_regimes_identical(
                               after=cur).collect())
         rows.append(si.search(REGIME_QUERIES[0], 5, mode="taat",
                               with_meta=True).collect())
+        rows.append(sorted(si.score_all(REGIME_QUERIES[1]).collect()))
+        rows += [si.search_phrase_prefix(["node", "c"], 20, slop=s)
+                 .collect() for s in (0, 1)]
         # ranks are in the rows, so sorting (search_many's window regime
         # returns no fixed order) still pins the ranking
         rows += [sorted(call(si).collect())
@@ -1200,6 +1204,111 @@ def test_search_driver_and_distributed_regimes_identical(
             monkeypatch.setattr(S, "DELETED_ISIN_CAP", -1)
             assert run(si, cur)[0] == driver
             monkeypatch.undo()
+        si.close()
+
+
+def test_part_closures_identical_in_both_placements(spark, index_dir,
+                                                   tombstoned_dir):
+    """Every per-doc_part closure decodes its part in one pass (_Part)
+    and gives, on the driver (_per_part_local over Arrow slices of the
+    resident rows), exactly (==) the rows it gives in applyInPandas over
+    the pruned distributed scan, on a multi-part index clean and
+    tombstoned: taat (top-k, only_docs, search_after), wand, the
+    batched scorer (dense, sparse and wand), flat bool (with msm,
+    must_not, zero fill and an admitted-id filter), the AND-group
+    scorer, the term emitter (plain and fanned to bool-tree clauses),
+    _term_docs, explain and the phrase matchers (exact, prefix, pure
+    prefix, sloppy and sloppy prefix)."""
+    import numpy as np
+
+    import newssearchengine_spark.plans.search as S
+    from newssearchengine_spark.functions.codec import lucene_idf
+
+    terms = ["cursor", "group", "node", "shard", "stream"]
+    topk = S.TOPK_SCHEMA
+    many = "query_id string, doc_id bigint, score double"
+    cand = S.PHRASE_CAND_SCHEMA
+    score_cols = list(S._SCORE_COLS)
+    cols = ["doc_part", "term", "docs", "tfs", "dls"]
+    pos_cols = cols + ["positions"]
+    for d in (index_dir, tombstoned_dir):
+        si = SegmentIndex(spark, d).warm(positions=True)
+        st = si.stats
+        prm = dict(k1=float(st["k1"]), b=float(st["b"]),
+                   avgdl=float(st["avgdl"]))
+        idf = {t: float(lucene_idf(float(st["n_docs"]), float(df)))
+               for t, df in si.term_dfs(terms).items()}
+        assert all(idf.values())
+        alts = sorted(set(si.expand_prefix("c")) - {"node", "shard"})
+        assert len(alts) > 1
+        some = np.array(sorted(
+            r["doc_id"] for r in si.search(terms, 60).collect()))
+        q = {"a": ["cursor", "node"], "b": ["group", "shard", "stream"],
+             "c": ["node"]}
+        cases = [
+            (S._make_scorer(idf, k=10, mode="taat", **prm), score_cols, topk),
+            (S._make_scorer(idf, k=None, mode="taat", only_docs=some[::2],
+                            **prm), score_cols, topk),
+            (S._make_scorer(idf, k=15, mode="taat", after=(3.0, 500),
+                            **prm), score_cols, topk),
+            (S._make_scorer(idf, k=10, mode="wand", **prm), score_cols, topk),
+            (S._make_multi_scorer(q, idf, k=12, mode="taat",
+                                  doc_range=int(st["doc_range"]), **prm),
+             score_cols, many),
+            (S._make_multi_scorer(q, idf, k=12, mode="taat", **prm),
+             score_cols, many),
+            (S._make_multi_scorer(q, idf, k=12, mode="wand", **prm),
+             score_cols, many),
+            (S._make_bool_taat([["node", "cursor"]], ["stream"], ["shard"], 0,
+                               ["cursor", "node", "shard"], idf, k=10, **prm),
+             cols, topk),
+            (S._make_bool_taat([], ["stream"], ["cursor", "node", "shard"], 2,
+                               ["cursor", "node", "shard"], idf, k=None,
+                               **prm), cols, topk),
+            (S._make_bool_taat([["group"]], [], ["node"], 0, ["node"], idf,
+                               k=10, zero_fill=True, **prm), cols, topk),
+            (S._make_groups_taat([[["node"], ["cursor"]],
+                                  [["shard", "group"], ["stream"]]], idf,
+                                 k=10, **prm), cols, topk),
+            (si._term_emitter(terms)[1], cols,
+             "term string, doc_id bigint, score double"),
+            (si._term_emitter(terms, fan={"cursor": [1], "group": [3],
+                                          "node": [0, 2], "shard": [2, 3],
+                                          "stream": [4]})[1], cols,
+             "doc_id bigint, cid bigint, score double"),
+            (S._term_docs_emit, cols, "term string, doc_id bigint"),
+            (S._make_explainer(idf, some, **prm), cols,
+             "doc_id bigint, term string, tf bigint, dl bigint, "
+             "idf double, partial double"),
+            (S._make_phrase_matcher(["node", "cursor"]), pos_cols, cand),
+            (S._make_phrase_matcher(["node", alts[0]], last_alts=alts),
+             pos_cols, cand),
+            (S._make_phrase_matcher([alts[0]], last_alts=alts), pos_cols,
+             cand),
+            (S._make_sloppy_phrase_matcher(["shard", "group"], 2), pos_cols,
+             cand),
+            (S._make_sloppy_phrase_matcher(["node", alts[0]], 3,
+                                           last_alts=alts), pos_cols, cand),
+        ]
+        for i, (fn, c, schema) in enumerate(cases):
+            read = sorted(set(terms) | set(alts)) if c == pos_cols else terms
+            drv = si._per_part(fn, read, c, schema, local=True)
+            dist = si._per_part(fn, read, c, schema, local=False,
+                                positions="positions" in c)
+            got = sorted(zip(*drv.values()))
+            assert got and got == sorted(tuple(r) for r in dist.collect()), i
+        # the admitted-id form (cogroup above the cap)
+        lang = si._doc_ids(si._parse_filters([{"term": {"lang": "py"}}])[1])
+        fn = S._make_bool_taat([], [], ["node", "shard"], 0,
+                               ["node", "shard"], idf, k=None,
+                               zero_fill=True, **prm)
+        drv = si._per_part_local(fn, ["node", "shard"], cols, lang)
+        assert drv is not None and set(drv["doc_id"]) <= set(lang)
+        want = sorted(zip(*drv.values()))
+        assert want and want == sorted(zip(*S._concat(
+            [fn(g, lang[lang // int(st["doc_range"]) == p])
+             for p, g in si._scan(["node", "shard"], cols).toPandas()
+             .groupby("doc_part")]).values()))
         si.close()
 
 
@@ -1379,9 +1488,10 @@ def _sorted_rows(pdf):
 def test_resident_reader_equals_pruned_reads(spark, index_dir,
                                              tombstoned_dir, merged_dir):
     """A resident handle's dictionary, segment rows (scoring columns,
-    and positions) and doc-store filters give exactly what a
-    non-resident handle's pruned pyarrow reads give, on a clean index
-    with several doc_parts, a tombstoned one and a merged one."""
+    and positions, as Arrow tables in (doc_part, term) order) and
+    doc-store filters give exactly what a non-resident handle's pruned
+    pyarrow reads give, on a clean index with several doc_parts, a
+    tombstoned one and a merged one."""
     import numpy as np
     import pandas as pd
 
@@ -1406,8 +1516,14 @@ def test_resident_reader_equals_pruned_reads(spark, index_dir,
                                          "dls", "positions"]):
             a = res._read_buckets("segments", terms, cols)
             b = pruned._read_buckets("segments", terms, cols)
-            assert list(a.columns) == cols
-            assert list(a.dtypes) == list(b.dtypes)
+            assert a.column_names == cols
+            assert a.schema.types == b.schema.types
+            # both in (doc_part, term) order: the order parts are cut in
+            for t in (a, b):
+                keys = list(zip(t["doc_part"].to_pylist(),
+                                t["term"].to_pylist()))
+                assert keys == sorted(keys)
+            a, b = a.to_pandas(), b.to_pandas()
             assert len(a) and _sorted_rows(a) == _sorted_rows(b)
             parts |= set(a["doc_part"].tolist())
         assert len(parts) > 1

@@ -8,6 +8,7 @@ verify determinism; this tool hunts beyond them).
     python tools/fuzz_sweep.py exp   [--seeds 11000:11001] [--per 120]
     python tools/fuzz_sweep.py write [--seeds 13000:13010] [--per 6]
     python tools/fuzz_sweep.py codec [--seeds 17000:17100] [--per 20]
+    python tools/fuzz_sweep.py read  [--seeds 19000:19100] [--per 20]
 
 The bool sweep draws test_es_fuzz's bool bodies with metadata filters
 (term / terms on repo, range / exists on content_len) in their filter
@@ -29,6 +30,13 @@ overflows there), tf up to 1,000 — and checks the run-batched encode
 against tests/test_codec.py's per-run reference byte for byte, block_max
 bit for bit and never below the true max, and the decode round trip;
 the runs' positions the same way.
+The read sweep (no Spark) draws `--per` random parts per seed — (term,
+doc_part) rows in random order at the same edge shapes, encoded with
+encode_runs / encode_positions_runs, a None positions blob on some
+empty rows — and checks the read path's part-wide decode
+(plans.search._Part over a pandas frame, an Arrow table, a sliced one
+and large_binary blobs) against each row's own decode_postings /
+decode_positions and the drawn postings.
 
 Prints one line per mismatch and a final `SWEEP DONE fails=N`.
 The round-5 closing sweep of these three (plus an msearch variant)
@@ -481,16 +489,87 @@ def sweep_codec(seeds, per) -> int:
     return fails
 
 
+def sweep_read(seeds, per) -> int:
+    import numpy as np
+    import pandas as pd
+
+    import test_codec as TC
+    from newssearchengine_spark.functions.codec import (
+        decode_positions, decode_postings, encode_positions_runs,
+        encode_runs)
+    from newssearchengine_spark.plans.search import _Part
+
+    fails = 0
+    for seed in seeds:
+        rng = np.random.default_rng(seed)
+        for j in range(per):
+            bs = int(rng.choice([1, 2, 4, 16, 128]))
+            dfs = [int(rng.choice([0, 1, bs, bs + 1, 3 * bs,
+                                   int(rng.integers(1, 4 * bs + 2))]))
+                   for _ in range(int(rng.integers(0, 10)))]
+            doc_range = int(rng.choice([1 << 10, 1 << 20]))
+            part = int(rng.integers(0, 1 << 20))
+            runs = [(ids + part * doc_range, tfs, dls) for ids, tfs, dls
+                    in TC._draw_runs(rng, dfs, doc_range,
+                                     int(rng.choice([1, 3, 50])))]
+            counts = np.array([r[0].size for r in runs], np.int64)
+            flat = [np.concatenate([r[k] for r in runs] + [np.empty(0, int)])
+                    .astype(np.int64) for k in range(3)]
+            enc = encode_runs(*flat, counts, k1=1.2, b=0.75, avgdl=40.0,
+                              block_size=bs)
+            lists = [np.sort(rng.choice(300, size=int(t), replace=False))
+                     for t in flat[1]]
+            pos = encode_positions_runs(
+                np.concatenate(lists + [np.empty(0, np.int64)]), flat[1],
+                counts).to_pylist()
+            pos = [None if not c and rng.random() < 0.5 else p
+                   for c, p in zip(counts, pos)]
+            terms = [f"w{i:03d}" for i in rng.permutation(len(runs))]
+            pdf = pd.DataFrame({
+                c: pd.Series(v, dtype=object) for c, v in [
+                    ("term", terms), ("positions", pos),
+                    *((c, enc[c].to_pylist()) for c in ("docs", "tfs",
+                                                        "dls"))]})
+            pdf.insert(0, "doc_part", np.int64(part))
+            label = f"seed={seed} #{j} bs={bs} dfs={counts.tolist()}"
+            want = {}
+            at = np.concatenate(([0], np.cumsum(counts)))
+            for r, row in enumerate(pdf.itertuples(index=False)):
+                got = decode_postings(row.docs, row.tfs, row.dls)
+                got += (decode_positions(row.positions or b"", got[1]),)
+                drawn = (*runs[r], np.concatenate(
+                    lists[at[r]:at[r + 1]] + [np.empty(0, np.int64)]))
+                if not all(np.array_equal(g, w) for g, w in zip(got, drawn)):
+                    fails += 1
+                    print(f"READ ROW {label}: row {r} decodes wrong")
+                want[row.term] = got
+            for form, rows in zip(("pandas", "arrow", "sliced", "large"),
+                                  [pdf] + TC._arrow_forms(pdf)):
+                p = _Part(rows, positions=True)
+                ok = p.terms == sorted(want) and all(
+                    np.array_equal(p.ids[p.span(t)], w[0])
+                    and np.array_equal(p.tfs[p.span(t)], w[1])
+                    and np.array_equal(p.dls[p.span(t)], w[2])
+                    and np.array_equal(p.positions(t), w[3])
+                    for t, w in want.items())
+                if not ok:
+                    fails += 1
+                    print(f"READ PART {label}: {form} part decode differs")
+    return fails
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("what",
-                    choices=["bool", "qs", "slop", "exp", "write", "codec"])
+                    choices=["bool", "qs", "slop", "exp", "write", "codec",
+                             "read"])
     ap.add_argument("--seeds", default="")
     ap.add_argument("--per", type=int, default=0)
     args = ap.parse_args()
     defaults = {"bool": ("1000:1012", 8), "qs": ("3000:3020", 6),
                 "slop": ("5000:5006", 10), "exp": ("11000:11001", 120),
-                "write": ("13000:13010", 6), "codec": ("17000:17100", 20)}
+                "write": ("13000:13010", 6), "codec": ("17000:17100", 20),
+                "read": ("19000:19100", 20)}
     srange, per = defaults[args.what]
     if args.seeds:
         srange = args.seeds
@@ -499,7 +578,7 @@ def main():
     lo, hi = (int(x) for x in srange.split(":"))
     fails = {"bool": sweep_bool, "qs": sweep_qs, "slop": sweep_slop,
              "exp": sweep_exp, "write": sweep_write,
-             "codec": sweep_codec}[args.what](
+             "codec": sweep_codec, "read": sweep_read}[args.what](
                  range(lo, hi), per)
     print(f"SWEEP DONE fails={fails}")
     sys.exit(1 if fails else 0)
