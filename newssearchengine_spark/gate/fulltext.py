@@ -603,7 +603,8 @@ def _phrase_field_ctes(expr: str, p: str, phrase: list[str],
     """Per-field phrase-BM25 CTE block (tokenize the field, count
     consecutive phrase occurrences, score with the FIELD's own
     N/avgdl/phrase-df — the engine's search_phrase convention,
-    unrounded so the DisMax combine rounds once like _combine_dismax)."""
+    unrounded so the DisMax combine rounds once, as search._dismax
+    does)."""
     n = len(phrase)
     hit = " AND ".join(f"toks[i+{j}] = '{t}'" for j, t in enumerate(phrase))
     k1, b = bm25.k1, bm25.b
@@ -2402,11 +2403,11 @@ def ft_dismax_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit ES dis_max — each sub-query carries its OWN text for its
     OWN field (title scores 'join query' at boost 1.5, text scores
     'hash window'), per-field BM25 with field-local N/avgdl/df combined
-    max + tie_breaker * (sum - max). Runs through es_search onto the
-    Fagin-pruned search_dismax with a per-field query dict over TWO real
-    segment indexes; the oracle re-expresses both analyzer pipelines,
-    per-field BM25, the boost, and the combine in one SQL. Regime parity
-    (pruned == full) pinned in tests/test_es_dsl.py."""
+    max + tie_breaker * (sum - max). Runs through es_search onto
+    search_dismax with a per-field query dict over TWO real segment
+    indexes; the oracle re-expresses both analyzer pipelines, per-field
+    BM25, the boost, and the combine in one SQL. Placement parity
+    (driver == distributed) pinned in tests/test_es_dsl.py."""
     from ..plans.dsl import es_search
 
     fidx = {"title": _gate_title_index(spark, sf_dir),
@@ -2650,7 +2651,7 @@ def ft_qs_multifield_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     score there), per-field summed BM25 x field boost, DisMax combine
     max + tie_breaker * (sum - max). Engine path: es_search ->
     search_dismax_bool -> per-field single-scan tree relations +
-    the shared _combine_dismax Catalyst tail."""
+    the multi-field family's one combine (plans.search._dismax)."""
     from ..plans.dsl import es_search
 
     fidx = {"title": _gate_title_index(spark, sf_dir),
@@ -3277,7 +3278,8 @@ def ft_mm_cross_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     field-local tf norms, per-term combine is max + tie_breaker *
     (sum - max), doc score sums over terms. Served by
     plans.search.search_cross_fields (per-field pruned scans with the
-    idf override + one hash aggregation pair)."""
+    idf override + the multi-field family's one combine, which sums the
+    terms in term order)."""
     from ..plans.dsl import es_search
 
     idxs = {"title": _gate_title_index(spark, sf_dir),

@@ -308,6 +308,26 @@ def _parse_boosts(fields: list[str]) -> tuple[list[str], dict[str, float]]:
     return names, boosts
 
 
+def _scaled(out: DataFrame, boost: float, rnd: bool = False) -> DataFrame:
+    """A ranked result with every score times `boost` (rounded 6 dp
+    HALF_UP when `rnd`); a uniform positive scale keeps the ranking. A
+    LocalFrame stays one: its numpy column is scaled (and rounded with
+    _round_half_up, the values of Catalyst's F.round), no JVM call."""
+    if boost == 1.0:
+        return out
+    if isinstance(out, LocalFrame):
+        from ..operators.similarity import _round_half_up
+
+        c = out._cols
+        sc = c["score"] * float(boost)
+        return LocalFrame(out._session, {
+            "rank": c["rank"], "doc_id": c["doc_id"],
+            "score": _round_half_up(sc, 6) if rnd else sc})
+    sc = F.col("score") * F.lit(boost)
+    return out.select("rank", "doc_id",
+                      (F.round(sc, 6) if rnd else sc).alias("score"))
+
+
 def _as_list(v):
     return v if isinstance(v, list) else [v]
 
@@ -1152,7 +1172,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             if mtype == "most_fields":
                 # ES most_fields sums the per-field scores — exactly the
                 # DisMax combine max + tb*(sum-max) at tie_breaker 1.0,
-                # so the Fagin-pruned engine path serves it unchanged
+                # so search_dismax serves it unchanged
                 tb = 1.0
             elif mtype in ("phrase", "phrase_prefix"):
                 # ES runs a match_phrase (match_phrase_prefix) per field
@@ -1177,12 +1197,8 @@ def es_search(indexes, body: dict, size: int = 10, *,
                                                   slop=slop)
                 else:
                     out = si.search_phrase(text, size, slop=slop)
-                bf = boosts.get(names[0], 1.0) if names else 1.0
-                if bf != 1.0:
-                    out = out.select(
-                        "rank", "doc_id",
-                        (F.col("score") * F.lit(bf)).alias("score"))
-                return out
+                return _scaled(out, boosts.get(names[0], 1.0)
+                               if names else 1.0)
             elif mtype == "cross_fields":
                 # ES cross_fields: TERM-centric — per-term statistics
                 # blend across fields (df = max), per-term combine is
@@ -1233,6 +1249,8 @@ def es_search(indexes, body: dict, size: int = 10, *,
             elif op == "or" and len(qtoks) > 1:
                 op, parts = "and", qtoks
         names, boosts = _parse_boosts(list(spec.get("fields") or []))
+        # a single field's boost scales its scores
+        bf = boosts.get(names[0], 1.0) if names else 1.0
         if kind == "multi_match" and mm_op == "and":
             # ES multi_match operator:'and': AND between ALL tokens the
             # field analyzer emits (multi_match has NO query_string
@@ -1252,13 +1270,8 @@ def es_search(indexes, body: dict, size: int = 10, *,
             toks = sorted(set(si.analyze_query(text)))
             if not toks:
                 return si._empty()
-            out = si.search_bool(must=[[t] for t in toks], k=size)
-            bf = boosts.get(names[0], 1.0) if names else 1.0
-            if bf != 1.0:
-                out = out.select(
-                    "rank", "doc_id",
-                    (F.col("score") * F.lit(bf)).alias("score"))
-            return out
+            return _scaled(si.search_bool(must=[[t] for t in toks],
+                                          k=size), bf)
         if op == "mixed":
             # OR of AND-groups under ES precedence. Multiple fields run
             # the best_fields shape: the WHOLE grammar per field,
@@ -1270,13 +1283,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                     tie_breaker=tb, boosts=boosts or None)
             si = one(names[0] if names else None)
             groups = [[si.analyze_query(p) for p in g] for g in parts]
-            out = si.search_mixed(groups, k=size)
-            bf = boosts.get(names[0], 1.0) if names else 1.0
-            if bf != 1.0:
-                out = out.select(
-                    "rank", "doc_id",
-                    (F.col("score") * F.lit(bf)).alias("score"))
-            return out
+            return _scaled(si.search_mixed(groups, k=size), bf)
         if op == "and":
             # pure conjunction: every AND operand is a required clause
             # (an operand's analyzed tokens keep ES match OR-semantics);
@@ -1293,26 +1300,11 @@ def es_search(indexes, body: dict, size: int = 10, *,
             clauses = [c for c in clauses if c]
             if not clauses:
                 return si._empty()
-            out = si.search_bool(must=clauses, k=size)
-            bf = boosts.get(names[0], 1.0) if names else 1.0
-            if bf != 1.0:
-                # single boosted field: scale like the OR branch does —
-                # boost > 0 preserves order, so rank/top-k are unchanged
-                out = out.select(
-                    "rank", "doc_id",
-                    (F.col("score") * F.lit(bf)).alias("score"))
-            return out
+            return _scaled(si.search_bool(must=clauses, k=size), bf)
         text = parts[0]
         if multi is None or not names or len(names) == 1:
             si = one(names[0] if names else None)
-            out = si.search(text, size, mode=mode)
-            if names and boosts.get(names[0], 1.0) != 1.0:
-                # single boosted field: scores scale by the boost
-                out = out.select(
-                    "rank", "doc_id",
-                    (F.col("score") * F.lit(boosts[names[0]]))
-                    .alias("score"))
-            return out
+            return _scaled(si.search(text, size, mode=mode), bf)
         return search_dismax({f: multi[f] for f in names}, text, size,
                              tie_breaker=tb,
                              boosts=boosts or None)
@@ -1378,12 +1370,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                     if not union:
                         return si._empty()
                     out = si.search(union, size, mode=mode)
-                if boost != 1.0:
-                    out = out.select(
-                        "rank", "doc_id",
-                        F.round(F.col("score") * F.lit(boost), 6)
-                        .alias("score"))
-                return out
+                return _scaled(out, boost, rnd=True)
             out = None
             if op == "and":
                 if msm_raw is not None:
@@ -1404,17 +1391,9 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 # msm resolved to 0: the plain OR match below (Lucene
                 # leaves the normal at-least-one bool rule in place)
             if out is not None:
-                if boost != 1.0:
-                    out = out.select(
-                        "rank", "doc_id",
-                        F.round(F.col("score") * F.lit(boost), 6)
-                        .alias("score"))
-                return out
-            if boost != 1.0:
-                return si.search(text, size, mode=mode).select(
-                    "rank", "doc_id",
-                    F.round(F.col("score") * F.lit(boost), 6)
-                    .alias("score"))
+                return _scaled(out, boost, rnd=True)
+            return _scaled(si.search(text, size, mode=mode), boost,
+                           rnd=True)
         return si.search(text, size, mode=mode)
 
     if kind == "match_phrase":
@@ -1464,13 +1443,8 @@ def es_search(indexes, body: dict, size: int = 10, *,
         bboost = float(spec.get("boost", 1.0))
 
         def _bscale(out: DataFrame) -> DataFrame:
-            # body-level bool boost scales every hit's score (rank
-            # order unchanged — uniform positive scale)
-            if bboost == 1.0:
-                return out
-            return out.select(
-                "rank", "doc_id",
-                F.round(F.col("score") * F.lit(bboost), 6).alias("score"))
+            # body-level bool boost scales every hit's score
+            return _scaled(out, bboost, rnd=True)
 
         if _bool_is_nested(spec):
             # nested bool: the general single-scan tree evaluator; flat
@@ -1797,8 +1771,8 @@ def es_search(indexes, body: dict, size: int = 10, *,
     if kind == "dis_max":
         # explicit ES dis_max: each sub-query carries its own text for
         # its own field, combined max + tie_breaker*(sum - max) — the
-        # engine's Fagin-pruned search_dismax with a per-field query
-        # dict. A per-sub-query boost rides the match spec
+        # engine's search_dismax with a per-field query dict. A
+        # per-sub-query boost rides the match spec
         # ({"match": {"f": {"query": ..., "boost": ...}}}).
         subs = spec.get("queries") or []
         if not subs:

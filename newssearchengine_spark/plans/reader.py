@@ -119,6 +119,18 @@ class ResidentReader:
                 else (0, 0)
                 for t, (lo, hi) in zip(terms, self._terms.ranges(terms))}
 
+    def prefix_terms(self, prefix: str, limit: int) -> list[str]:
+        """The dictionary's terms starting with `prefix`, by df desc then
+        term, at most `limit`. They are one range of the sorted terms:
+        no UTF-8 sequence holds the byte 0xFF, so prefix + 0xFF sorts
+        after every term that extends the prefix."""
+        p = prefix.encode()
+        lo = bisect_left(self._terms, p)
+        hi = bisect_left(self._terms, p + b"\xff", lo)
+        order = np.lexsort((np.arange(hi - lo), -self._df[lo:hi]))
+        return [self._terms[lo + i].decode()
+                for i in order[:max(limit, 0)].tolist()]
+
     def segment_rows(self, terms, columns) -> pa.Table:
         """The `columns` of every segment row of `terms`, in (doc_part,
         term) order."""

@@ -97,6 +97,11 @@ PHRASE_CAND_SCHEMA = "doc_id bigint, occ bigint, dl bigint"
 #: WAND stays distributed at EVERY size: its per-part block loop is
 #: Python-sequential and needs executor parallelism (measured 2.4-6 s
 #: driver-side vs 1.15 s distributed — rejected by measurement).
+#: A multi-field query (search_dismax, search_dismax_bool,
+#: search_dismax_phrase, search_cross_fields) proves each field's
+#: relation separately against the cap, and its one combine (_dismax)
+#: runs on the driver only when every field's relation is driver-placed:
+#: the driver then holds at most fields x the cap of proven volume.
 #: The same cap places WRITES (index_build.write_on_driver): a build,
 #: compaction or merge runs on the driver when n_docs + tokens x (1 +
 #: positions + term vectors) fits — tokens bounded by the input's
@@ -1146,9 +1151,13 @@ class SegmentIndex:
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Terms in the dictionary starting with `prefix`, ordered by
         descending df then term (ES prefix-query expansion order), capped
-        at max_expansions (the ES default 50). A pruned scan of the tiny
-        term_stats table — startsWith pushes to parquet as a range filter
-        on the sorted term column."""
+        at max_expansions (the ES default 50). A resident handle reads
+        its in-memory dictionary (no Spark job); otherwise a pruned scan
+        of the tiny term_stats table — startsWith pushes to parquet as a
+        range filter on the sorted term column."""
+        reader = self._resident()
+        if reader is not None:
+            return reader.prefix_terms(prefix, max_expansions)
         rows = (
             self._tstats
             .filter(F.col("term").startswith(prefix))
@@ -2704,28 +2713,18 @@ class SegmentIndex:
 
 
 def search_dismax(field_indexes: dict, query, k: int, *,
-                  tie_breaker: float = 0.0, prune: bool = True,
+                  tie_breaker: float = 0.0,
                   boosts: dict | None = None,
                   _raw: bool = False) -> DataFrame:
     """Multi-field best_fields retrieval over PER-FIELD segment indexes —
     the indexed form of the reference's query shape (query_string over
-    [title, text], /root/reference/wapo/experiments/ranking.py:128-139).
+    [title, text] in its wapo/experiments/ranking.py:128-139).
     Each field scores with its OWN index statistics (field-local N/avgdl/
-    df — ES DisjunctionMaxQuery semantics), combined as
-    max + tie_breaker * (sum - max), rounded 6dp before the
-    (score desc, doc_id asc) top-k cut. Exactly matches the compositional
-    operators.bm25.dismax_bm25_topk (asserted in tests) without
-    re-tokenizing any corpus.
-
-    prune=True (default) runs a Fagin-style threshold algorithm first:
-    per-field top-k' selects candidates, only they are fetched across
-    fields (scans pruned to candidate parts), and a threshold row proves
-    no excluded doc can reach the top k. The pruned result is returned
-    only when that proof holds (rounded k-th score strictly above the
-    rounded threshold, or every field exhausted); otherwise — and for
-    tie_breaker outside [0, 1], where the combine isn't monotone — the
-    exact full-relation join runs. A hot term's complete posting relation
-    therefore never feeds the full_outer join in the common case.
+    df — ES DisjunctionMaxQuery semantics): its complete score_all
+    relation, combined max + tie_breaker * (sum - max) and rounded 6dp
+    before the (score desc, doc_id asc) top-k cut (_dismax). Exactly
+    matches the compositional operators.bm25.dismax_bm25_topk (asserted
+    in tests) without re-tokenizing any corpus.
 
     field_indexes: {field_name: SegmentIndex} — one index per field.
     query: one text/term-list scored against every field (the
@@ -2735,66 +2734,86 @@ def search_dismax(field_indexes: dict, query, k: int, *,
     boosts: optional {field_name: factor >= 0} — ES field boosts
     (`title^3`): the field's BM25 scores are multiplied by the factor
     before the DisMax combine (missing fields default 1.0).
-    """
-    b = {n: float((boosts or {}).get(n, 1.0)) for n in field_indexes}
-    if any(v < 0 for v in b.values()):
+    _raw=True keeps tombstoned docs (internal probes only)."""
+    return _dismax(field_indexes, lambda n, si: si.score_all(
+        query[n] if isinstance(query, dict) else query),
+        boosts, tie_breaker, k, raw=_raw)
+
+
+def _dismax(field_indexes: dict, field_rel, boosts: dict | None,
+            tie_breaker: float, k: int, raw: bool = False) -> DataFrame:
+    """The multi-field family's one combine. field_rel(name, index)
+    gives a field's COMPLETE relation — a LocalFrame when driver-placed,
+    a DataFrame above the cap, None when the field cannot match — of
+    (doc_id, score) rows, or (term, doc_id, score) for cross_fields.
+    Docs tombstoned in ANY field's index drop out unless `raw` (exact:
+    the relations are complete). Each row's score is scaled by its
+    field's boost; per (doc, term) the fields combine max + tie_breaker
+    * (sum - max), summed in field order with 0.0 for a missing field;
+    a doc sums its terms' combines in term order; then _round_cut. With
+    every relation driver-placed (each proven by its own _driver_ok, so
+    the driver holds at most fields x the cap) and every dead set on the
+    driver, `combine` runs once there with no Spark job; otherwise in
+    one applyInPandas over the union by doc_part — a doc's rows all fall
+    in one part."""
+    bf = np.array([float((boosts or {}).get(n, 1.0)) for n in field_indexes])
+    if (bf < 0).any():
         raise ValueError("field boosts must be >= 0")
+    tb = float(tie_breaker)
+
+    def combine(rows) -> dict:
+        doc = np.asarray(rows["doc_id"], np.int64)
+        fid = np.asarray(rows["fid"], np.int64)
+        term = (np.unique(np.asarray(rows["term"], object),
+                          return_inverse=True)[1]
+                if "term" in rows else np.zeros(doc.size, np.int64))
+        ids, dinv = np.unique(doc, return_inverse=True)
+        n_t = int(term.max(initial=0)) + 1
+        pairs, pinv = np.unique(dinv * n_t + term, return_inverse=True)
+        grid = np.zeros((pairs.size, bf.size))
+        grid[pinv, fid] = np.asarray(rows["score"], np.float64) * bf[fid]
+        best = grid.max(axis=1)
+        total = grid[:, 0]
+        for j in range(1, bf.size):
+            total = total + grid[:, j]
+        blend = best + tb * (total - best)
+        # pairs are (doc, term)-sorted: add every doc's n-th term at once
+        pdoc = pairs // n_t
+        first = np.flatnonzero(np.r_[True, pdoc[1:] != pdoc[:-1]])
+        nth = np.arange(pairs.size) - np.repeat(
+            first, np.diff(np.r_[first, pairs.size]))
+        score = np.zeros(ids.size)
+        for n in range(int(nth.max(initial=-1)) + 1):
+            at = nth == n
+            score[pdoc[at]] += blend[at]
+        return {"doc_id": ids, "score": score}
+
     sis = list(field_indexes.values())
-    if not _raw and any(si.n_deleted() for si in sis):
-        # fields share one doc space; the per-index tombstone sets may
-        # overlap, so sum(T) is an upper bound on the union — still a
-        # valid over-fetch bound for the exact exclusion wrapper
-        T = sum(si.n_deleted() for si in sis)
-        out = search_dismax(field_indexes, query, k + T,
-                            tie_breaker=tie_breaker, prune=prune,
-                            boosts=boosts, _raw=True)
-        for si in sis:
-            out = si._exclude_dead(out)
-        w = Window.orderBy(F.asc("rank"))
-        return (out.withColumn(
-                    "rank", (F.row_number().over(w) - 1).cast("bigint"))
-                .filter(F.col("rank") < k)
-                .select("rank", "doc_id", "score"))
-    if prune and 0.0 <= float(tie_breaker) <= 1.0:
-        # escalation ladder (VERDICT r4 #1): when the threshold proof
-        # fails at k', retry with a wider per-field pool before paying
-        # the exact full-relation join — each rung costs bounded
-        # per-field top-k' probes, so the full fallback survives only
-        # for tie_breaker outside [0, 1] or a rounded-score plateau
-        # wider than DISMAX_KPRIME_CAP docs in every field
-        kprime = max(2 * k, DISMAX_KPRIME_FLOOR)
-        while True:
-            out = _dismax_pruned(field_indexes, query, k,
-                                 tie_breaker=float(tie_breaker), boosts=b,
-                                 kprime=kprime)
-            if out is not None:
-                return out
-            if kprime >= DISMAX_KPRIME_CAP:
-                break
-            kprime = min(kprime * 8, DISMAX_KPRIME_CAP)
-    return _dismax_full(field_indexes, query, k,
-                        tie_breaker=float(tie_breaker), boosts=b)
-
-
-def _dismax_q(query, name: str):
-    """Per-field query resolution for the DisMax family: one query for
-    every field, or {field: query} (the explicit ES dis_max kind)."""
-    return query[name] if isinstance(query, dict) else query
-
-
-def _combine_dismax(filled: DataFrame, cols: list[str],
-                    tie_breaker: float, k: int) -> DataFrame:
-    """Shared DisMax combine + top-k tail (both regimes run these exact
-    expressions, so scores and 6dp rounding are bit-identical)."""
-    best = (F.col(cols[0]) if len(cols) == 1
-            else F.greatest(*[F.col(c) for c in cols]))
-    total = None
-    for c in cols:
-        total = F.col(c) if total is None else total + F.col(c)
-    combined = F.round(
-        best + F.lit(float(tie_breaker)) * (total - best), 6
-    ).alias("score")
-    return _rank_topk(filled.select("doc_id", combined), k)
+    rels = [(i, r) for i, r in enumerate(
+        field_rel(n, si) for n, si in field_indexes.items()) if r is not None]
+    if not rels:
+        return sis[0]._empty()
+    tombs = [] if raw else [t for t in (si._tombstones() for si in sis)
+                            if t[0]]
+    if (all(isinstance(r, LocalFrame) for _, r in rels)
+            and all(t[1] is not None for t in tombs)):
+        rows = _concat([{**r._cols, "fid": np.full(r.count(), i, np.int64)}
+                        for i, r in rels])
+        if tombs:
+            live = ~np.isin(rows["doc_id"],
+                            np.concatenate([t[1] for t in tombs]))
+            rows = {c: v[live] for c, v in rows.items()}
+        return sis[0]._round_cut(combine(rows), k)
+    u = None
+    for i, r in rels:
+        r = r.withColumn("fid", F.lit(i).cast("bigint"))
+        u = r if u is None else u.unionByName(r)
+    for si in ([] if raw else sis):
+        u = si._exclude_dead(u)
+    doc_range = int(sis[0].stats["doc_range"])
+    return sis[0]._round_cut(sis[0]._by_part(u.withColumn(
+        "doc_part", (F.col("doc_id") / doc_range).cast("bigint"))
+    ).applyInPandas(_frames(combine), TOPK_SCHEMA), k)
 
 
 def search_cross_fields(field_indexes: dict, query, k: int, *,
@@ -2815,90 +2834,37 @@ def search_cross_fields(field_indexes: dict, query, k: int, *,
       field's own tf/dl/avgdl norms, scaled by its `field^boost`;
     - per-term combine across fields: max + tie_breaker * (sum - max)
       (dismaxBlendedQuery; ES default tie_breaker 0 for cross_fields);
-    - doc score: sum over terms (operator 'or'), rounded 6dp before
-      the (score desc, doc_id asc) top-k cut.
+    - doc score: sum over terms in term order (operator 'or'), rounded
+      6dp before the (score desc, doc_id asc) top-k cut.
 
     Plan: per field ONE pruned segment scan emits (term, doc_id,
-    partial) with the blended idf substituted (`_term_scores`
-    idf_override), their union feeds ONE hash aggregation pair —
-    (term, doc_id) for the cross-field blend, then doc_id for the term
-    sum. No corpus scan, no full-relation joins; the shuffle carries
-    only matching postings.
-    """
+    partial) with the blended idf (_term_emitter idf_override), then
+    _dismax. No corpus scan."""
     tb = float(tie_breaker)
     if not 0.0 <= tb <= 1.0:
         raise ValueError("cross_fields tie_breaker must be in [0, 1]")
-    bmap = {n: float((boosts or {}).get(n, 1.0)) for n in field_indexes}
-    if any(v < 0 for v in bmap.values()):
-        raise ValueError("field boosts must be >= 0")
-    sis = list(field_indexes.values())
-    if not _raw and any(si.n_deleted() for si in sis):
-        T = sum(si.n_deleted() for si in sis)
-        out = search_cross_fields(field_indexes, query, k + T,
-                                  tie_breaker=tie_breaker, boosts=boosts,
-                                  _raw=True)
-        for si in sis:
-            out = si._exclude_dead(out)
-        w = Window.orderBy(F.asc("rank"))
-        return (out.withColumn(
-                    "rank", (F.row_number().over(w) - 1).cast("bigint"))
-                .filter(F.col("rank") < k)
-                .select("rank", "doc_id", "score"))
-    si0 = sis[0]
-    terms = (si0.analyze_query(query) if isinstance(query, str)
-             else list(query))
-    terms = sorted(set(terms))
-    if not terms:
-        return si0._empty()
+    si0 = next(iter(field_indexes.values()))
+    terms = sorted(set(si0.analyze_query(query) if isinstance(query, str)
+                       else query))
     dfs_f = {n: si.term_dfs(terms) for n, si in field_indexes.items()}
     df_b = {t: max(int(dfs_f[n].get(t, 0)) for n in field_indexes)
             for t in terms}
     terms = [t for t in terms if df_b[t] > 0]
     if not terms:
         return si0._empty()
-    rels = []
-    for n, si in field_indexes.items():
+    schema = "term string, doc_id bigint, score double"
+
+    def field_rel(n, si):
         n_docs = float(si.stats["n_docs"])
         idf_o = {t: float(lucene_idf(n_docs, float(df_b[t])))
                  for t in terms if dfs_f[n].get(t, 0) > 0}
-        rel = si._term_scores(terms, idf_override=idf_o)
-        if bmap[n] != 1.0:
-            rel = rel.select(
-                "term", "doc_id",
-                (F.col("score") * F.lit(bmap[n])).alias("score"))
-        rels.append(rel)
-    allp = rels[0]
-    for r in rels[1:]:
-        allp = allp.unionByName(r)
-    per_term = (allp.groupBy("term", "doc_id")
-                .agg(F.max("score").alias("mx"),
-                     F.sum("score").alias("sm")))
-    blended = per_term.select(
-        "doc_id",
-        (F.col("mx") + F.lit(tb) * (F.col("sm") - F.col("mx")))
-        .alias("s"))
-    return _rank_topk(blended.groupBy("doc_id")
-                      .agg(F.round(F.sum("s"), 6).alias("score")), k)
-
-
-def _dismax_full(field_indexes: dict, query, k: int, *,
-                 tie_breaker: float,
-                 boosts: dict | None = None) -> DataFrame:
-    """Exact full-relation DisMax: complete per-field score relations
-    joined full_outer (the fallback regime; correct for any tie_breaker)."""
-    scored = None
-    cols = []
-    for name, si in field_indexes.items():
-        bf = float((boosts or {}).get(name, 1.0))
-        s = si.score_all(_dismax_q(query, name)).select(
-            "doc_id",
-            (F.col("score") * F.lit(bf)).alias(f"s_{name}")
-            if bf != 1.0 else F.col("score").alias(f"s_{name}"),
-        )
-        cols.append(f"s_{name}")
-        scored = s if scored is None else scored.join(s, "doc_id", "full_outer")
-    filled = scored.na.fill(0.0, cols)
-    return _combine_dismax(filled, cols, tie_breaker, k)
+        live, emit = si._term_emitter(terms, idf_override=idf_o)
+        rel = si._per_part(emit, live, ["doc_part", "term", "docs", "tfs",
+                                        "dls"], schema,
+                           si._driver_ok(live)) if live else None
+        return (LocalFrame(si.spark, rel, schema)
+                if isinstance(rel, dict) else rel)
+    return _dismax(field_indexes, field_rel, boosts, tb, k, raw=_raw)
 
 
 def search_dismax_bool(field_indexes: dict, groups, k: int, *,
@@ -2908,26 +2874,16 @@ def search_dismax_bool(field_indexes: dict, groups, k: int, *,
     """Per-field DisMax over an OR-of-AND-groups grammar — the
     multi-field `query_string` conjunction/mixed shape (ES best_fields:
     the WHOLE query parses per field, per-field scores combine
-    max + tie_breaker * (sum - max); cross_fields term splitting is
-    `search_cross_fields` — the operator-free multi_match type).
+    max + tie_breaker * (sum - max)).
 
     `groups`: list of conjunction groups, each a list of operand TEXTS
     ('a AND b OR c' = [[a, b], [c]]); each operand analyzes PER FIELD
     (field analyzers may differ) to an ES match clause (OR of its
     tokens). A field matches a doc iff the doc satisfies EVERY clause of
     >= 1 group in that field; the field score is the summed BM25 over
-    its matched groups (search_mixed semantics, field-local stats). A
-    doc enters the result iff >= 1 field matches.
-
-    Plan: per field, the COMPLETE group relation via the single-scan
-    tree evaluator (_bool_tree: one pruned scan + one evaluation
-    per field — bounded by each field's most selective clause, the
-    conjunction selectivity the flat bool paths prove), then the
-    full_outer DisMax combine + shared Catalyst tail (_combine_dismax,
-    bit-identical rounding with every other DisMax regime). Tombstones:
-    per-field relations are COMPLETE, so excluding dead ids before the
-    combine is exact — no over-fetch loop needed (unlike the top-k-fed
-    search_dismax wrapper).
+    its matched groups (search_mixed semantics, field-local stats) —
+    the COMPLETE relation of the single-scan tree evaluator
+    (_bool_tree). A doc enters the result iff >= 1 field matches.
 
     per_token=True switches the clause unit from OPERAND to TOKEN:
     every analyzed token of every operand becomes its own required
@@ -2937,14 +2893,7 @@ def search_dismax_bool(field_indexes: dict, groups, k: int, *,
     camelCase word the code analyzer splits still requires BOTH
     parts). Tokens the analyzer drops (stopwords) are not required,
     like ES."""
-    b = {n: float((boosts or {}).get(n, 1.0)) for n in field_indexes}
-    if any(v < 0 for v in b.values()):
-        raise ValueError("field boosts must be >= 0")
-    sis = list(field_indexes.values())
-    spark = sis[0].spark
-    scored = None
-    cols = []
-    for name, si in field_indexes.items():
+    def field_rel(_, si):
         if per_token:
             gs = [[[t] for t in sorted({t for p in g
                                         for t in si.analyze_query(p)})]
@@ -2953,28 +2902,10 @@ def search_dismax_bool(field_indexes: dict, groups, k: int, *,
             gs = [[si.analyze_query(p) for p in g] for g in groups]
         gs = [[c for c in g if c] for g in gs]
         gs = [g for g in gs if g]
-        if not gs:
-            continue
-        node = ({"must": gs[0]} if len(gs) == 1 else
-                {"should": [{"must": g} for g in gs]})
-        rel = si._bool_tree(node)
-        if rel is None:
-            continue
-        rel = si._exclude_dead(rel)
-        bf = b[name]
-        s = rel.select(
-            "doc_id",
-            (F.col("score") * F.lit(bf)).alias(f"s_{name}")
-            if bf != 1.0 else F.col("score").alias(f"s_{name}"),
-        )
-        cols.append(f"s_{name}")
-        scored = s if scored is None else scored.join(
-            s, "doc_id", "full_outer")
-    if scored is None:
-        return spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double")
-    filled = scored.na.fill(0.0, cols)
-    return _combine_dismax(filled, cols, float(tie_breaker), k)
+        return si._bool_tree(
+            {"must": gs[0]} if len(gs) == 1 else
+            {"should": [{"must": g} for g in gs]}) if gs else None
+    return _dismax(field_indexes, field_rel, boosts, tie_breaker, k)
 
 
 def search_dismax_phrase(field_indexes: dict, text: str, k: int, *,
@@ -2996,142 +2927,19 @@ def search_dismax_phrase(field_indexes: dict, text: str, k: int, *,
 
     Plan: per field the COMPLETE phrase relation (_phrase_scores: one
     pruned positional scan bounded by the min fixed-term df — phrases
-    are selective by construction), full_outer combine + the shared
-    Catalyst tail (_combine_dismax), so scores round bit-identically
-    with every other DisMax regime. A field where the phrase cannot
-    match (absent term / zero expansions / empty analysis) contributes
-    nothing, like an ES field with no phrase hits."""
-    b = {n: float((boosts or {}).get(n, 1.0)) for n in field_indexes}
-    if any(v < 0 for v in b.values()):
-        raise ValueError("field boosts must be >= 0")
-    sis = list(field_indexes.values())
-    spark = sis[0].spark
-    scored = None
-    cols = []
-    for name, si in field_indexes.items():
+    are selective by construction), then _dismax. A field where the
+    phrase cannot match (absent term / zero expansions / empty
+    analysis) contributes nothing, like an ES field with no phrase
+    hits."""
+    def field_rel(_, si):
         ts = si.analyze_query(text)
-        if not ts:
-            continue
-        if prefix:
-            alts = sorted(si.expand_prefix(ts[-1],
-                                           max_expansions=max_expansions))
-            if not alts:
-                continue  # zero expansions: no hits in this field
-            plan = si._phrase_plan(ts[:-1], int(slop), alts)
-        else:
-            plan = si._phrase_plan(ts, int(slop))
-        rel = None if plan is None else si._phrase_scores(plan)
-        if rel is None:
-            continue
-        rel = si._exclude_dead(rel)
-        bf = b[name]
-        s = rel.select(
-            "doc_id",
-            (F.col("score") * F.lit(bf)).alias(f"s_{name}")
-            if bf != 1.0 else F.col("score").alias(f"s_{name}"),
-        )
-        cols.append(f"s_{name}")
-        scored = s if scored is None else scored.join(
-            s, "doc_id", "full_outer")
-    if scored is None:
-        return spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double")
-    filled = scored.na.fill(0.0, cols)
-    return _combine_dismax(filled, cols, float(tie_breaker), k)
-
-
-# per-field candidate pool: large enough that the threshold proof rarely
-# fails at realistic score spreads, small enough to stay a driver-side set
-DISMAX_KPRIME_FLOOR = 64
-# escalation ceiling: a proof still failing with 2^14-deep per-field pools
-# means a rounded-score plateau wider than 16k docs — fall back to exact
-DISMAX_KPRIME_CAP = 1 << 14
-
-
-def _dismax_pruned(field_indexes: dict, query, k: int, *,
-                   tie_breaker: float,
-                   boosts: dict | None = None,
-                   kprime: int | None = None) -> "DataFrame | None":
-    """Threshold-algorithm DisMax (rank-safe pruning, VERDICT r3 #3).
-
-    1. Per field: top-k' by that field's own BM25 (k' = max(2k, 64)).
-       tau_f = the k'-th score (0 when the field exhausted under k').
-    2. Candidates C = union of the per-field pools. Any excluded doc d
-       has s_f(d) <= tau_f for every f, and max + tb*(sum-max) is
-       monotone in each coordinate for tb in [0,1], so
-       combined(d) <= T = max(tau) + tb*(sum(tau) - max(tau)).
-    3. Fetch every candidate's exact score in EVERY field (scan pruned
-       to candidate doc_parts; hot terms contribute only those blocks),
-       combine through the shared Catalyst tail with a virtual row
-       doc_id=-1 carrying the tau vector — its output IS round6(T).
-    4. Proof: >= k real candidates strictly above round6(T) (or every
-       field exhausted, i.e. C is the complete match set) -> the pruned
-       top-k equals the exact top-k. Otherwise return None (fallback).
-    """
-    names = list(field_indexes)
-    pools: dict[str, list] = {}
-    taus: dict[str, float] = {}
-    exhausted = True
-    if kprime is None:
-        kprime = max(2 * k, DISMAX_KPRIME_FLOOR)
-    cand: set[int] = set()
-    for name in names:
-        bf = float((boosts or {}).get(name, 1.0))
-        rows = field_indexes[name].search(
-            _dismax_q(query, name), kprime).collect()
-        pools[name] = rows
-        if len(rows) == kprime:
-            # boost > 0 preserves the per-field order, so the pool is
-            # still the field's true top-k'; tau moves into boosted space
-            taus[name] = float(rows[-1]["score"]) * bf
-            exhausted = False
-        else:
-            taus[name] = 0.0  # field exhausted: every match is in C
-        cand.update(r["doc_id"] for r in rows)
-    spark = next(iter(field_indexes.values())).spark
-    if not cand:
-        return spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
-    ids = np.sort(np.fromiter(cand, dtype=np.int64))
-    merged = pd.DataFrame({"doc_id": ids})
-    cols = []
-    for name in names:
-        si = field_indexes[name]
-        bf = float((boosts or {}).get(name, 1.0))
-        q = _dismax_q(query, name)
-        terms = (si.analyze_query(q) if isinstance(q, str)
-                 else list(q))
-        spdf = si._scores_for_docs(terms, ids)
-        if bf != 1.0:
-            # float64 multiply, the same IEEE op the full path's
-            # Catalyst `score * lit(bf)` performs — bit-identical
-            spdf["score"] = spdf["score"].to_numpy(np.float64) * bf
-        col = f"s_{name}"
-        cols.append(col)
-        merged = merged.merge(spdf.rename(columns={"score": col}),
-                              on="doc_id", how="left")
-    merged[cols] = merged[cols].fillna(0.0)
-    thresh = pd.DataFrame([{"doc_id": -1,
-                            **{f"s_{n}": taus[n] for n in names}}])
-    local = spark.createDataFrame(
-        pd.concat([merged, thresh], ignore_index=True),
-        "doc_id bigint, " + ", ".join(f"{c} double" for c in cols),
-    )
-    # rank over candidates + virtual row, then read both off one job
-    full = _combine_dismax(local, cols, tie_breaker, k=len(cand) + 1)
-    rows = full.collect()
-    rounded_t = next(r["score"] for r in rows if r["doc_id"] == -1)
-    real = sorted((r for r in rows if r["doc_id"] != -1),
-                  key=lambda r: (-r["score"], r["doc_id"]))
-    if not exhausted:
-        n_above = sum(1 for r in real if r["score"] > rounded_t)
-        if n_above < k:
-            return None  # threshold proof failed -> exact fallback
-    out = [(i, r["doc_id"], r["score"]) for i, r in enumerate(real[:k])]
-    return spark.createDataFrame(
-        out, "rank bigint, doc_id bigint, score double"
-    )
+        alts = (si.expand_prefix(ts[-1], max_expansions=max_expansions)
+                if ts and prefix else None)
+        # no plan for an empty analysis, an absent term or no expansion
+        plan = si._phrase_plan(ts[:-1] if prefix else ts, int(slop),
+                               alts) if ts else None
+        return None if plan is None else si._phrase_scores(plan)
+    return _dismax(field_indexes, field_rel, boosts, tie_breaker, k)
 
 
 def _make_phrase_matcher(phrase: list[str], last_alts: list[str] | None = None):

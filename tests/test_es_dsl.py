@@ -1586,11 +1586,13 @@ def test_function_score_functions_list(two_field, monkeypatch):
         si.search_function_score_fns("node", [], 5)
 
 
-def test_dis_max_per_field_texts(two_field):
+def test_dis_max_per_field_texts(two_field, monkeypatch):
     """Explicit dis_max: each sub-query's text scores its own field
     (per-field query dict through search_dismax), boosts ride the match
-    spec, and the Fagin-pruned regime matches the exact full-relation
-    regime row for row."""
+    spec, and the driver placement matches the distributed placement
+    (SEARCH_DRIVER_CAP=-1) row for row."""
+    import newssearchengine_spark.plans.search as S
+
     two, idxs = two_field
     body = {"query": {"dis_max": {
         "queries": [
@@ -1601,9 +1603,11 @@ def test_dis_max_per_field_texts(two_field):
     }}}
     got = es_search(idxs, body, size=15).collect()
     assert got
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
     full = search_dismax(
         idxs, {"title": "node stream", "text": "cursor shard"}, 15,
-        tie_breaker=0.4, boosts={"title": 2.0}, prune=False).collect()
+        tie_breaker=0.4, boosts={"title": 2.0}).collect()
+    monkeypatch.undo()
     assert [tuple(r) for r in got] == [tuple(r) for r in full]
 
     # per-field texts matter: one shared text over both fields differs
@@ -2470,6 +2474,60 @@ def test_multi_match_cross_fields(spark, two_field):
         es_search(idxs, {"query": {"multi_match": {
             "type": "cross_fields", "fields": ["title", "text"],
             "query": text, "operator": "and"}}}, size=5)
+
+
+def test_doc_dead_in_one_field_drops_from_every_multi_field_shape(
+        spark, two_field, tmp_path, monkeypatch):
+    """A doc tombstoned in ONE field's index only is gone from every
+    multi-field shape — query_string OR / AND / mixed, multi_match
+    most_fields / cross_fields / phrase / phrase_prefix — in both
+    placements, and every other hit keeps its rank order and score."""
+    import shutil
+
+    import newssearchengine_spark.plans.search as S
+    from newssearchengine_spark.plans.delete import delete_docs
+
+    _, idxs = two_field
+    f2 = ["title", "text"]
+    bodies = {
+        "qs_or": {"query_string": {"fields": f2,
+                                   "query": "node OR cursor"}},
+        "qs_and": {"query_string": {"fields": f2,
+                                    "query": "node AND cursor"}},
+        "qs_mixed": {"query_string": {"fields": f2,
+                                      "query": "node AND cursor OR zzz"}},
+        "most_fields": {"multi_match": {"fields": f2, "type": "most_fields",
+                                        "query": "node cursor"}},
+        "cross_fields": {"multi_match": {"fields": f2,
+                                         "type": "cross_fields",
+                                         "query": "node cursor"}},
+        "phrase": {"multi_match": {"fields": f2, "type": "phrase",
+                                   "query": "node cursor"}},
+        "phrase_prefix": {"multi_match": {"fields": f2,
+                                          "type": "phrase_prefix",
+                                          "query": "node curs"}},
+    }
+
+    def run(fidx):
+        return {n: [(r["doc_id"], r["score"]) for r in es_search(
+            fidx, {"query": b}, size=500).collect()]
+            for n, b in bodies.items()}
+
+    before = run(idxs)
+    # a doc every shape returns, with the phrase in its title
+    common = set.intersection(*({d for d, _ in v} for v in before.values()))
+    assert common
+    victim = min(common)
+    d = str(tmp_path / "title")
+    shutil.copytree(idxs["title"].index_dir, d)
+    delete_docs(spark, d, [victim])
+    one_dead = {"title": SegmentIndex(spark, d), "text": idxs["text"]}
+    want = {n: [r for r in v if r[0] != victim] for n, v in before.items()}
+    assert run(one_dead) == want
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
+    assert run(one_dead) == want
+    monkeypatch.undo()
+    one_dead["title"].close()
 
 
 def test_long_form_match_in_filter_context(two_field):

@@ -300,8 +300,9 @@ def test_composite_agg_single_aggregation(spark, tmp_path):
 def test_cross_fields_plan_pruned_scans_no_corpus(spark, tmp_path):
     """cross_fields reads ONLY the two fields' pruned segment scans
     (bucket partition filters + term row-group pushdown) — no doc-store
-    or corpus scan, no full-relation join; the combine is hash
-    aggregations over the unioned partials."""
+    or corpus scan, no full-relation join; the combine is ONE grouped
+    numpy function (the multi-field family's _dismax) over the unioned
+    partials, after each field's per-part emitter."""
     from newssearchengine_spark.datagen import source_files
     from newssearchengine_spark.plans.index_build import build_index
     from newssearchengine_spark.plans.search import (SegmentIndex,
@@ -326,4 +327,8 @@ def test_cross_fields_plan_pruned_scans_no_corpus(spark, tmp_path):
     assert "PartitionFilters" in p and "bucket" in p
     assert "In(term" in p                      # term pushdown both scans
     assert "SortMergeJoin" not in p and "BroadcastHashJoin" not in p
-    assert p.count("HashAggregate") >= 2       # blend + term-sum levels
+    assert "HashAggregate" not in p
+    # a per-part emitter per field holding a query term + the one combine
+    live = sum(any(si.term_dfs(["cache", "index"]).values())
+               for si in idxs.values())
+    assert live and p.count("FlatMapGroupsInPandas (") == live + 1

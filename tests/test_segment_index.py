@@ -286,15 +286,28 @@ def test_search_many_driver_equals_window(spark, index_dir, monkeypatch):
     assert a and sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_prefix_expansion_and_search(spark, index_dir, oracle):
+def test_prefix_expansion_and_search(spark, index_dir, oracle, monkeypatch):
     """Prefix expansion: df-desc order, deterministic tie-break, cap
-    honored; search_prefix == search over the manual expansion."""
+    honored, the resident dictionary's expansion == the term_stats scan
+    (SEARCH_DRIVER_CAP=-1); search_prefix == search over the manual
+    expansion."""
+    import newssearchengine_spark.plans.search as S
+
     oidx, _ = oracle
     si = SegmentIndex(spark, index_dir)
     full = si.expand_prefix("get", max_expansions=1000)
     assert full and all(t.startswith("get") for t in full)
     capped = si.expand_prefix("get", max_expansions=2)
     assert capped == full[:2]
+    cases = [("get", 1000), ("get", 2), ("c", 50), ("", 100000), ("n", 0),
+             ("zzznope", 5)]
+    resident = [si.expand_prefix(p, max_expansions=m) for p, m in cases]
+    # the empty prefix expands to the whole dictionary
+    assert len(resident[3]) == si._resident().dictionary.num_rows > 50
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
+    assert [si.expand_prefix(p, max_expansions=m)
+            for p, m in cases] == resident
+    monkeypatch.undo()
     got = si.search_prefix("get", 20, max_expansions=2).collect()
     manual = si.search(capped, 20).collect()
     assert [(r["doc_id"], r["score"]) for r in got] == [
@@ -505,51 +518,6 @@ def test_indexed_dismax_matches_compositional(spark, corpus, tmp_path):
     two.unpersist()
 
 
-def test_dismax_pruned_equals_full_and_prunes(spark, corpus, tmp_path,
-                                              monkeypatch):
-    """VERDICT r3 #3: the threshold-algorithm DisMax must (a) return
-    exactly the full-join result across queries and tie_breakers, and
-    (b) actually fetch FEWER candidate docs than the hot term's posting
-    coverage on a skewed fixture (the rank-safe pruning is real, not a
-    pass-through)."""
-    from pyspark.sql import functions as F
-
-    import newssearchengine_spark.plans.search as S
-
-    two = corpus.select(
-        "doc_id",
-        F.array_join(F.slice(F.split(F.col("content"), " "), 1, 6), " ")
-        .alias("title"),
-        F.col("content").alias("body"),
-    ).persist()
-    idxs = {}
-    for fld in ("title", "body"):
-        d = str(tmp_path / f"dmx_{fld}")
-        build_index(two, d, CFG, text_col=fld, resume=False)
-        idxs[fld] = SegmentIndex(spark, d)
-
-    fetched: list[int] = []
-    orig = S.SegmentIndex._scores_for_docs
-
-    def spy(self, terms, doc_ids):
-        fetched.append(int(doc_ids.size))
-        return orig(self, terms, doc_ids)
-
-    monkeypatch.setattr(S.SegmentIndex, "_scores_for_docs", spy)
-    for terms, tb in ([["node", "cursor", "shard"], 0.0],
-                      [["node", "cursor", "shard"], 0.3],
-                      [["value", "cursor"], 1.0]):
-        got = S.search_dismax(idxs, terms, 10, tie_breaker=tb).collect()
-        want = S.search_dismax(idxs, terms, 10, tie_breaker=tb,
-                               prune=False).collect()
-        assert got and [tuple(r) for r in got] == [tuple(r) for r in want]
-    # skew proof: 'value' is a hot body term; the pruned fetch must touch
-    # far fewer docs than its posting coverage
-    hot_df = idxs["body"].term_dfs(["value"])["value"]
-    assert hot_df > 100, "fixture must have a hot term"
-    assert fetched and max(fetched) < hot_df
-
-
 def test_bool_minimum_should_match(spark, index_dir, oracle, monkeypatch):
     """minimum_should_match: docs must match >= m DISTINCT should terms.
     Checked against the pure-oracle posting sets, and the capped pruned
@@ -593,12 +561,14 @@ def test_bool_minimum_should_match(spark, index_dir, oracle, monkeypatch):
                           minimum_should_match=2).collect() == []
 
 
-def test_dismax_field_boosts(spark, corpus, tmp_path):
+def test_dismax_field_boosts(spark, corpus, tmp_path, monkeypatch):
     """ES field boosts (title^3): per-field scores scale by the boost
-    before the combine; pruned == full; a dominant boost reorders toward
-    that field's own ranking."""
+    before the combine; the driver placement == the distributed one
+    (SEARCH_DRIVER_CAP=-1); a dominant boost reorders toward that
+    field's own ranking."""
     from pyspark.sql import functions as F
 
+    import newssearchengine_spark.plans.search as S
     from newssearchengine_spark.plans.search import search_dismax
 
     two = corpus.select(
@@ -616,8 +586,10 @@ def test_dismax_field_boosts(spark, corpus, tmp_path):
     boosts = {"title": 3.0, "body": 0.5}
     got = search_dismax(idxs, terms, 20, tie_breaker=0.2,
                         boosts=boosts).collect()
-    full = search_dismax(idxs, terms, 20, tie_breaker=0.2, boosts=boosts,
-                         prune=False).collect()
+    monkeypatch.setattr(S, "SEARCH_DRIVER_CAP", -1)
+    full = search_dismax(idxs, terms, 20, tie_breaker=0.2,
+                         boosts=boosts).collect()
+    monkeypatch.undo()
     assert got and [tuple(r) for r in got] == [tuple(r) for r in full]
     plain = search_dismax(idxs, terms, 20, tie_breaker=0.2).collect()
     assert [r["doc_id"] for r in got] != [r["doc_id"] for r in plain] or \
@@ -625,55 +597,6 @@ def test_dismax_field_boosts(spark, corpus, tmp_path):
     with pytest.raises(ValueError, match=">= 0"):
         search_dismax(idxs, terms, 5, boosts={"title": -1.0})
     two.unpersist()
-
-
-def test_dismax_threshold_proof_failure_escalates_then_falls_back(
-        spark, tmp_path, monkeypatch):
-    """When the per-field pools cannot prove exclusion, search_dismax
-    must ESCALATE k' (VERDICT r4 #1) — once the pool covers the score
-    plateau the fields exhaust and the pruned regime serves the query —
-    and only a plateau wider than DISMAX_KPRIME_CAP pays the exact
-    full-join fallback. Results identical to prune=False either way."""
-    import newssearchengine_spark.plans.search as S
-
-    # 60 IDENTICAL docs: every match scores the same, so with more
-    # matches than k' the k-th candidate can never sit STRICTLY above the
-    # threshold row — the proof must fail deterministically
-    same = spark.createDataFrame(
-        [(i, "node cursor alpha beta") for i in range(60)],
-        "doc_id bigint, body string",
-    )
-    idxs = {}
-    for fld in ("body",):
-        d = str(tmp_path / f"fb_{fld}")
-        build_index(same, d, CFG, text_col=fld, resume=False)
-        idxs[fld] = SegmentIndex(spark, d)
-    calls = []
-    orig = S._dismax_pruned
-
-    def spy(*a, **kw):
-        out = orig(*a, **kw)
-        calls.append((kw.get("kprime"), out is None))
-        return out
-
-    monkeypatch.setattr(S, "_dismax_pruned", spy)
-    monkeypatch.setattr(S, "DISMAX_KPRIME_FLOOR", 1)
-    want = S.search_dismax(idxs, ["node"], 1, tie_breaker=0.3,
-                           prune=False).collect()
-    got = S.search_dismax(idxs, ["node"], 1, tie_breaker=0.3).collect()
-    # k'=2 fails (plateau), k'=16 fails, k'=128 >= 60 docs -> exhausted
-    # -> the PRUNED regime serves; the full join never runs
-    assert [f for _, f in calls] == [True, True, False]
-    assert calls[-1][0] == 128
-    assert got and [tuple(r) for r in got] == [tuple(r) for r in want]
-    # a plateau wider than the cap: the ladder gives up and the exact
-    # full-relation fallback serves, still identical
-    calls.clear()
-    monkeypatch.setattr(S, "DISMAX_KPRIME_CAP", 4)
-    got2 = S.search_dismax(idxs, ["node"], 1, tie_breaker=0.3).collect()
-    monkeypatch.undo()
-    assert [f for _, f in calls] == [True, True]  # 2 then capped 4, both fail
-    assert got2 and [tuple(r) for r in got2] == [tuple(r) for r in want]
 
 
 def test_bool_driver_equals_distributed(spark, index_dir, monkeypatch):
@@ -1141,6 +1064,68 @@ FLAT_CALLS = [
 ]
 
 
+# two-field bodies (field `title` = each doc's first 6 words, `content`)
+# through es_search: query_string OR / AND / mixed, multi_match
+# best_fields / most_fields / cross_fields / phrase / phrase_prefix and
+# dis_max, with field boosts and tie_breakers
+MULTI_BODIES = [
+    {"query_string": {"fields": ["title", "content"],
+                      "query": "node OR cursor OR shard"}},
+    {"query_string": {"fields": ["title", "content"],
+                      "query": "node AND cursor"}},
+    {"query_string": {"fields": ["title^2", "content"],
+                      "query": "node AND cursor OR shard"}},
+    {"multi_match": {"fields": ["title", "content^0.5"],
+                     "query": "node cursor shard", "tie_breaker": 0.3}},
+    {"multi_match": {"fields": ["title", "content"], "query": "node cursor",
+                     "type": "most_fields"}},
+    {"multi_match": {"fields": ["title^2", "content"],
+                     "query": "node cursor shard", "type": "cross_fields",
+                     "tie_breaker": 0.3}},
+    {"multi_match": {"fields": ["title", "content"], "query": "node cursor",
+                     "type": "phrase"}},
+    {"multi_match": {"fields": ["title", "content"], "query": "node curs",
+                     "type": "phrase_prefix"}},
+    {"dis_max": {"queries": [
+        {"match": {"title": {"query": "node", "boost": 2.0}}},
+        {"match": {"content": "cursor shard"}}], "tie_breaker": 0.2}},
+]
+# boosted single-field bodies, one per score-scaling site of es_search:
+# multi_match phrase / phrase_prefix / operator:'and' and query_string
+# mixed / AND / OR on `field^boost` (unrounded), match boost on a plain,
+# operator:'and' and msm match and a body-level bool boost (rounded)
+BOOSTED_BODIES = [
+    {"multi_match": {"fields": ["content^2"], "query": "node cursor",
+                     "type": "phrase"}},
+    {"multi_match": {"fields": ["content^0.5"], "query": "node curs",
+                     "type": "phrase_prefix"}},
+    {"multi_match": {"fields": ["content^3"], "query": "node cursor",
+                     "operator": "and"}},
+    {"query_string": {"fields": ["content^2"],
+                      "query": "node AND cursor OR shard"}},
+    {"query_string": {"fields": ["content^1.5"], "query": "node AND cursor"}},
+    {"query_string": {"fields": ["content^2"], "query": "node OR cursor"}},
+    {"match": {"content": {"query": "node cursor", "boost": 2.0}}},
+    {"match": {"content": {"query": "node cursor", "operator": "and",
+                           "boost": 0.7}}},
+    {"match": {"content": {"query": "node cursor shard",
+                           "minimum_should_match": 2, "boost": 3.0}}},
+    {"bool": {"must": [{"match": {"content": "node"}}], "boost": 2.0}},
+]
+
+
+@pytest.fixture(scope="module")
+def title_dir(corpus, tmp_path_factory):
+    """A second field's index over the same docs: the first 6 words."""
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path_factory.mktemp("title"))
+    build_index(corpus.select("doc_id", F.array_join(F.slice(F.split(
+        F.col("content"), " "), 1, 6), " ").alias("title")), d, CFG,
+        text_col="title", resume=False)
+    return d
+
+
 @pytest.fixture(scope="module")
 def tombstoned_dir(spark, index_dir, tmp_path_factory):
     """A copy of the index with some top hits of REGIME_QUERIES deleted
@@ -1160,18 +1145,22 @@ def tombstoned_dir(spark, index_dir, tmp_path_factory):
 
 
 def test_search_driver_and_distributed_regimes_identical(
-        spark, index_dir, tombstoned_dir, monkeypatch):
+        spark, index_dir, tombstoned_dir, title_dir, monkeypatch):
     """Plain taat search, the phrase paths, the nested-bool tree,
     search_many, flat bool, query_string AND and search_mixed each have
     a driver regime (pyarrow read + the SAME per-part closure on the
     driver under SEARCH_DRIVER_CAP on a warm index) and distributed
     plans above it, so results must be identical. Force the distributed regimes by zeroing the cap and
     compare, including the search_after cursor cut, the with_meta join,
-    score_all's complete relation and phrase-prefix (exact and sloppy),
+    score_all's complete relation, phrase-prefix (exact and sloppy),
+    the two-field bodies (the tombstoned index as one field and a clean
+    title index as the other) and the boosted single-field bodies,
     on a clean index and on a tombstoned one. On the tombstoned index
     _live's numpy re-rank must also equal its Spark-window form (forced
     by zeroing DELETED_ISIN_CAP)."""
     import newssearchengine_spark.plans.search as S
+
+    title = SegmentIndex(spark, title_dir)
 
     def run(si, cur=None):
         rows = [si.search(q, 20, mode="taat").collect()
@@ -1188,6 +1177,11 @@ def test_search_driver_and_distributed_regimes_identical(
         # returns no fixed order) still pins the ranking
         rows += [sorted(call(si).collect())
                  for call in REGIME_CALLS + FLAT_CALLS]
+        rows += [es_search({"title": title, "content": si}, {"query": b},
+                           size=20).collect() for b in MULTI_BODIES]
+        rows += [es_search(si, {"query": b}, size=20).collect()
+                 for b in BOOSTED_BODIES + [{"match": {"content": {
+                     "query": "nod", "fuzziness": 1, "boost": 2.0}}}]]
         assert all(rows)
         return [[tuple(r) for r in rs] for rs in rows], cur
 
@@ -1205,6 +1199,7 @@ def test_search_driver_and_distributed_regimes_identical(
             assert run(si, cur)[0] == driver
             monkeypatch.undo()
         si.close()
+    title.close()
 
 
 def test_part_closures_identical_in_both_placements(spark, index_dir,
@@ -1313,10 +1308,12 @@ def test_part_closures_identical_in_both_placements(spark, index_dir,
 
 
 def test_search_driver_regime_runs_no_spark_job(
-        spark, index_dir, tombstoned_dir, py4j_commands):
+        spark, index_dir, tombstoned_dir, title_dir, py4j_commands):
     """A driver-regime search, phrase, nested bool (metadata filters
     included), search_many, flat bool (with or without a meta filter),
-    query_string AND or search_mixed on a warm index reads its postings
+    query_string AND or search_mixed, a two-field body (MULTI_BODIES:
+    every field's relation driver-placed, one numpy combine) or a
+    boosted single-field body on a warm index reads its postings
     (and doc-store columns) with pyarrow and returns a LocalFrame:
     neither the call nor collect() launches a Spark job or makes a JVM
     call, with or without tombstones. Empty answers (an absent phrase
@@ -1340,9 +1337,11 @@ def test_search_driver_regime_runs_no_spark_job(
         return out
 
     sc = spark.sparkContext
+    title = SegmentIndex(spark, title_dir).warm(positions=True)
     for i, d in enumerate((index_dir, tombstoned_dir)):
         si = SegmentIndex(spark, d).warm()
         assert si.search(REGIME_QUERIES[0], 10).collect()
+        multi = {"title": title, "content": si}
         group = f"driver-regime-{i}"
         sc.setJobGroup(group, group)
         try:
@@ -1350,6 +1349,12 @@ def test_search_driver_regime_runs_no_spark_job(
                 assert rows(lambda si: si.search(q, 10), si)
             for call in REGIME_CALLS + FLAT_CALLS:
                 assert rows(call, si)
+            for b in MULTI_BODIES:
+                assert rows(lambda si: es_search(multi, {"query": b}, 20),
+                            si), b
+            for b in BOOSTED_BODIES:
+                assert rows(lambda si: es_search(si, {"query": b}, 20),
+                            si), b
             for call in empty_calls:
                 assert not rows(call, si)
         finally:
@@ -1357,6 +1362,7 @@ def test_search_driver_regime_runs_no_spark_job(
         time.sleep(1.0)  # let the listener bus deliver any job start
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         si.close()
+    title.close()
 
 
 def test_meta_filter_admitted_ids_match_pandas(spark, index_dir,

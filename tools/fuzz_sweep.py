@@ -9,6 +9,7 @@ verify determinism; this tool hunts beyond them).
     python tools/fuzz_sweep.py write [--seeds 13000:13010] [--per 6]
     python tools/fuzz_sweep.py codec [--seeds 17000:17100] [--per 20]
     python tools/fuzz_sweep.py read  [--seeds 19000:19100] [--per 20]
+    python tools/fuzz_sweep.py multi [--seeds 23000:23010] [--per 8]
 
 The bool sweep draws test_es_fuzz's bool bodies with metadata filters
 (term / terms on repo, range / exists on content_len) in their filter
@@ -37,6 +38,15 @@ empty rows — and checks the read path's part-wide decode
 (plans.search._Part over a pandas frame, an Arrow table, a sliced one
 and large_binary blobs) against each row's own decode_postings /
 decode_positions and the drawn postings.
+The multi sweep draws two-field bodies over a title index (each doc's
+first 6 words) and a text index of one corpus — query_string OR / AND /
+mixed, multi_match best_fields / most_fields / cross_fields /
+operator:'and' / phrase / phrase_prefix (some sloppy) and dis_max, with
+random `field^boost` and tie_breaker in {0, 0.3, 1, 1.5} — and runs each
+on the clean pair and on a copy whose tombstones differ per field. Each
+body must give equal rows (ids exact, scores ==) in the driver placement
+and under SEARCH_DRIVER_CAP=-1, or the same ValueError in both, and no
+doc dead in either field may come back.
 
 Prints one line per mismatch and a final `SWEEP DONE fails=N`.
 The round-5 closing sweep of these three (plus an msearch variant)
@@ -558,18 +568,141 @@ def sweep_read(seeds, per) -> int:
     return fails
 
 
+def _two_field_fixture(spark):
+    """(clean {title, text} indexes, a copy of both with some docs dead in
+    title only, some in text only and some in both, the union of the
+    dead ids, each doc's title tokens, the text field's fuzz vocab)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    import test_es_fuzz as T
+    from newssearchengine_spark.datagen import source_files
+    from newssearchengine_spark.oracle import pure
+    from newssearchengine_spark.plans.delete import delete_docs
+    from newssearchengine_spark.plans.index_build import build_index
+    from newssearchengine_spark.plans.search import SegmentIndex
+    from newssearchengine_spark.sources.corpus import assign_doc_ids
+
+    docs = assign_doc_ids(source_files(spark, 300, seed=78, partitions=4),
+                          num_partitions=4)
+    two = docs.select(
+        "doc_id",
+        F.array_join(F.slice(F.split(F.col("content"), " "), 1, 6), " ")
+        .alias("title"), F.col("content").alias("text")).persist()
+    rows = two.collect()
+    root = tempfile.mkdtemp(prefix="sweep_multi_")
+    for fld in ("title", "text"):
+        build_index(two, f"{root}/{fld}", T.CFG, text_col=fld, resume=False)
+        shutil.copytree(f"{root}/{fld}", f"{root}/dead_{fld}")
+    dead = random.Random(0).sample([r["doc_id"] for r in rows], 30)
+    delete_docs(spark, f"{root}/dead_title", dead[:20])
+    delete_docs(spark, f"{root}/dead_text", dead[12:])
+    clean = {f: SegmentIndex(spark, f"{root}/{f}") for f in ("title", "text")}
+    tomb = {f: SegmentIndex(spark, f"{root}/dead_{f}")
+            for f in ("title", "text")}
+    si = clean["text"]
+    oidx = pure.OracleIndex.build({r["doc_id"]: r["text"] for r in rows},
+                                  si.analyzer)
+    titles = [si.analyze_query(r["title"]) for r in rows]
+    two.unpersist()
+    return clean, tomb, set(dead), titles, T._vocab(si, oidx)
+
+
+def _gen_multi(rng, vocab, titles) -> dict:
+    """One two-field body of a random shape."""
+    shape = rng.choice(["qs_or", "qs_and", "qs_mixed", "best_fields",
+                        "most_fields", "cross_fields", "mm_and", "phrase",
+                        "phrase_prefix", "dis_max"])
+    boosts = {f: rng.choice([1.0, 1.0, 0.5, 2.0, 3.0])
+              for f in ("title", "text")}
+    fields = [f if boosts[f] == 1.0 else f"{f}^{boosts[f]:g}"
+              for f in ("title", "text")]
+    tb = rng.choice([0.0, 0.3, 1.0, 1.5])
+    words = " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 3)))
+    if shape.startswith("qs"):
+        ops = {"qs_or": ["OR"], "qs_and": ["AND"],
+               "qs_mixed": ["AND", "OR"]}[shape]
+        q = rng.choice(vocab)
+        for _ in range(rng.randint(1, 3)):
+            q += f" {rng.choice(ops)} {rng.choice(vocab)}"
+        return {"query_string": {"fields": fields, "query": q,
+                                 "tie_breaker": tb}}
+    if shape == "dis_max":
+        return {"dis_max": {"queries": [
+            {"match": {"title": {"query": words, "boost": boosts["title"]}}},
+            {"match": {"text": " ".join(rng.sample(vocab, 2))}}],
+            "tie_breaker": tb}}
+    spec = {"fields": fields, "query": words, "tie_breaker": tb}
+    if shape == "mm_and":
+        spec["operator"] = "and"
+    else:
+        spec["type"] = shape
+    if shape.startswith("phrase"):
+        # consecutive tokens of some doc's title, so most phrases match
+        toks = rng.choice([t for t in titles if len(t) >= 2])
+        i = rng.randint(0, len(toks) - 2)
+        ph = toks[i:i + rng.randint(2, 3)]
+        if shape == "phrase_prefix":
+            ph[-1] = ph[-1][:max(2, len(ph[-1]) - rng.randint(0, 3))]
+        spec["query"] = " ".join(ph)
+        if rng.random() < 0.3:
+            spec["slop"] = rng.choice([1, 2])
+    return {"multi_match": spec}
+
+
+def sweep_multi(seeds, per) -> int:
+    import newssearchengine_spark.plans.search as S
+    from newssearchengine_spark.plans.dsl import es_search
+
+    def outcome(fidx, body):
+        try:
+            return sorted(tuple(r) for r in
+                          es_search(fidx, body, size=400).collect())
+        except ValueError as e:
+            return f"ValueError: {e}"
+
+    spark = _spark()
+    clean, tomb, dead, titles, vocab = _two_field_fixture(spark)
+    fails = hits = errors = 0
+    for seed in seeds:
+        rng = random.Random(seed)
+        for i in range(per):
+            body = {"query": _gen_multi(rng, vocab, titles)}
+            for name, fidx in (("clean", clean), ("tomb", tomb)):
+                got = outcome(fidx, body)
+                cap, S.SEARCH_DRIVER_CAP = S.SEARCH_DRIVER_CAP, -1
+                try:
+                    dist = outcome(fidx, body)
+                finally:
+                    S.SEARCH_DRIVER_CAP = cap
+                if got != dist:
+                    fails += 1
+                    print(f"MULTI PLACEMENT {name} seed={seed}#{i}: {body}")
+                elif isinstance(got, str):
+                    errors += 1
+                elif name == "tomb" and {d for _, d, _ in got} & dead:
+                    fails += 1
+                    print(f"MULTI DEAD seed={seed}#{i}: {body}")
+                else:
+                    hits += bool(got)
+    print(f"multi: {len(seeds) * per} bodies x 2 index pairs, {hits} "
+          f"non-empty, {errors} the same ValueError in both placements")
+    return fails
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("what",
                     choices=["bool", "qs", "slop", "exp", "write", "codec",
-                             "read"])
+                             "read", "multi"])
     ap.add_argument("--seeds", default="")
     ap.add_argument("--per", type=int, default=0)
     args = ap.parse_args()
     defaults = {"bool": ("1000:1012", 8), "qs": ("3000:3020", 6),
                 "slop": ("5000:5006", 10), "exp": ("11000:11001", 120),
                 "write": ("13000:13010", 6), "codec": ("17000:17100", 20),
-                "read": ("19000:19100", 20)}
+                "read": ("19000:19100", 20), "multi": ("23000:23010", 8)}
     srange, per = defaults[args.what]
     if args.seeds:
         srange = args.seeds
@@ -578,7 +711,8 @@ def main():
     lo, hi = (int(x) for x in srange.split(":"))
     fails = {"bool": sweep_bool, "qs": sweep_qs, "slop": sweep_slop,
              "exp": sweep_exp, "write": sweep_write,
-             "codec": sweep_codec, "read": sweep_read}[args.what](
+             "codec": sweep_codec, "read": sweep_read,
+             "multi": sweep_multi}[args.what](
                  range(lo, hi), per)
     print(f"SWEEP DONE fails={fails}")
     sys.exit(1 if fails else 0)
